@@ -19,7 +19,11 @@ list path otherwise. The fallback matters for exactness:
   on the Arrow path but stays NaN on the list path — so any NaN forces
   the fallback;
 * naive ``datetime``/``Decimal``/nested values have their own coercion
-  rules per path — conservatively fall back.
+  rules per path — conservatively fall back;
+* a ``date`` outside a DATE field: the stock path raises ``TypeError``,
+  while the Arrow conversion may coerce it (a TIMESTAMP field gets
+  midnight) or fail and fall back with a warning, by pyarrow version —
+  so it goes straight to the stock path.
 
 Both paths produce identical rows for None/bool/int/finite-float/str/
 bytes/date scalars (pinned by tests/test_localdf.py).
@@ -61,12 +65,17 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return spark.createDataFrame(rows, schema)
     import pandas as pd
 
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import DateType, StructType
     if isinstance(schema, StructType):
-        names = schema.fieldNames()
+        fields = schema.fields
     else:
         from pyspark.sql.types import _parse_datatype_string
-        names = _parse_datatype_string(schema).fieldNames()
+        fields = _parse_datatype_string(schema).fields
+    names = [f.name for f in fields]
+    date_ok = [isinstance(f.dataType, DateType) for f in fields]
+    if any(type(v) is _dt.date and not ok
+           for r in rows for v, ok in zip(r, date_ok)):
+        return spark.createDataFrame(rows, schema)
     if any(len(r) != len(names) for r in rows):
         # pandas would silently NULL-pad/truncate ragged tuples where
         # the stock path raises a length-mismatch error — keep the

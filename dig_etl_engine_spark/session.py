@@ -164,6 +164,22 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # instead of a code change.
         .config("spark.sql.join.preferSortMergeJoin",
                 os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"))
+        # Above 32 paths (the default threshold) a file-source read
+        # lists its directories in a Spark job, one task per path. The
+        # bucketed KG table reads its bucket dirs by explicit path from
+        # the manifest — up to 64 at the default bucket count — so
+        # every merge's touched-bucket read and every read_partitioned
+        # paid a 49-64-task "Listing leaf files and directories" job for
+        # directories the driver lists in a few ms. Measured at
+        # local[4] on a 4-core host: read_partitioned + count of a
+        # 64-bucket table 0.55 s → 0.22 s, a 100-document merge
+        # 2.5 s → 2.2 s (with the schema pass-through in the merge).
+        # 1024 keeps the listing on the driver up to that many paths;
+        # past it, a cluster-side listing is worth its scheduling cost
+        # again. Sessions the caller builds keep Spark's default and
+        # still pay the job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
     )
     for k, v in _worker_preload_confs(master).items():
         b = b.config(k, v)

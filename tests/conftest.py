@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -28,3 +29,25 @@ def sf_unit() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@contextmanager
+def jobs_in_group(spark, group: str):
+    """Run the block under job group ``group`` and fill the yielded list
+    with the descriptions of the Spark jobs it ran, oldest first (a
+    job's description, else its call site) — for tests that pin how
+    many jobs a code path launches, and which."""
+    sc = spark.sparkContext
+    jobs: list[str] = []
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    for j in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        info = store.job(j)
+        desc = info.description()
+        jobs.append(desc.get() if desc.isDefined() else info.name())

@@ -12,6 +12,7 @@ Python-worker tasks at action time).
 from __future__ import annotations
 
 import datetime as dt
+import warnings
 
 from pyspark.sql import types as T
 
@@ -109,3 +110,27 @@ def test_empty_grid_window_returns_empty_frame(spark):
                      TabularSpec(blank_row_ends_content=True))
     assert df.columns == ["h1", "h2"]
     assert df.collect() == []
+
+
+def _outcome(build):
+    """Collected rows, or the error class and message — what a caller
+    of either path observes."""
+    try:
+        return "rows", _rows(build())
+    except Exception as e:  # noqa: BLE001 — the error IS the outcome
+        return type(e).__name__, str(e)
+
+
+def test_date_in_timestamp_field_matches_stock_path(spark):
+    # a pyarrow that coerces the date to a midnight timestamp would
+    # diverge from the stock path, which raises — so local_df sends the
+    # date to the stock path without an Arrow attempt
+    rows = [(1, dt.date(2020, 1, 2)), (2, None)]
+    schema = "id INT, ts TIMESTAMP"
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = _outcome(lambda: local_df(spark, rows, schema))
+    assert not [w for w in caught if "Arrow" in str(w.message)]
+    want = _outcome(lambda: spark.createDataFrame(rows, schema))
+    assert want[0] != "rows", "stock path is expected to refuse the date"
+    assert got == want

@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,3 +111,17 @@ def test_dead_process_scratch_roots_are_reaped(tmp_path, monkeypatch):
     assert not dead.exists()          # dead pid reaped
     assert live.exists()              # malformed name untouched
     assert other_live.exists()        # live pid untouched
+
+
+def test_malformed_stream_parts_env_names_the_variable(spark, monkeypatch):
+    from dig_etl_engine_spark.queries_io import _stream_parts
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    for bad in ("", "sixteen", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", bad)
+        with pytest.raises(ValueError,
+                           match=f"SPARK_GRAFT_STREAM_PARTS={bad!r}"):
+            with _stream_parts(spark):
+                pass
+    # refused before the scope touched the session conf
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
