@@ -39,16 +39,19 @@ from pyspark.sql import DataFrame, SparkSession
 _SCALAR_OK = (bool, int, str, bytes)
 
 
-def _arrow_safe(rows) -> bool:
+def _arrow_safe(rows, date_ok) -> bool:
+    """``date_ok[i]``: field i is a DATE field, the only place a
+    ``date`` value converts alike on both paths."""
     for r in rows:
-        for v in r:
+        for v, ok in zip(r, date_ok):
             if v is None or isinstance(v, _SCALAR_OK):
                 continue
             if isinstance(v, float):
                 if math.isnan(v):
                     return False  # NaN→NULL drift on the Arrow path
                 continue
-            if type(v) is _dt.date:  # datetime subclasses date — exclude
+            # datetime subclasses date — exclude it
+            if type(v) is _dt.date and ok:
                 continue
             return False
     return True
@@ -61,10 +64,6 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     Result rows are identical to ``spark.createDataFrame(rows, schema)``
     — value classes the two paths coerce differently fall back."""
     rows = [tuple(r) for r in rows]
-    if not _arrow_safe(rows):
-        return spark.createDataFrame(rows, schema)
-    import pandas as pd
-
     from pyspark.sql.types import DateType, StructType
     if isinstance(schema, StructType):
         fields = schema.fields
@@ -72,10 +71,11 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         from pyspark.sql.types import _parse_datatype_string
         fields = _parse_datatype_string(schema).fields
     names = [f.name for f in fields]
-    date_ok = [isinstance(f.dataType, DateType) for f in fields]
-    if any(type(v) is _dt.date and not ok
-           for r in rows for v, ok in zip(r, date_ok)):
+    if not _arrow_safe(rows, [isinstance(f.dataType, DateType)
+                              for f in fields]):
         return spark.createDataFrame(rows, schema)
+    import pandas as pd
+
     if any(len(r) != len(names) for r in rows):
         # pandas would silently NULL-pad/truncate ragged tuples where
         # the stock path raises a length-mismatch error — keep the

@@ -135,12 +135,15 @@ def _stream_parts(spark: SparkSession, n: int | None = None):
     # 8-vs-16 interleaved A/B where 16 won both pairs).
     if n is None:
         raw = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "16")
-        if not raw.strip().isdecimal() or int(raw) < 1:
+        try:
+            n = int(raw)
+        except ValueError:
+            n = 0
+        if n < 1:
             raise ValueError(
                 f"SPARK_GRAFT_STREAM_PARTS={raw!r} is not a positive "
                 "integer (the stream shuffle-partition count; unset it "
                 "for the default 16)")
-        n = int(raw)
     with _STREAM_CONF_LOCK:
         ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
         old = spark.conf.get("spark.sql.shuffle.partitions")

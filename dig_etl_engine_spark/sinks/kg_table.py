@@ -1328,10 +1328,8 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     the table is laid out as ``_kb=pmod(xxhash64(key), buckets)`` partition
     directories (uniform — no skewed dirs), and the merge:
 
-      1. buckets the batch, caches it, and collects its touched bucket
-         ids (≤ ``buckets`` values — a driver-safe list); the cache
-         means the batch — and any transform upstream of it — is
-         computed once, not once for the ids and again for the write;
+      1. buckets the batch and collects its touched bucket ids (≤
+         ``buckets`` values — a driver-safe list);
       2. reads back only those partitions (partition pruning: the
          ``isin`` filter never opens untouched directories), with the
          table's schema passed in rather than re-inferred from footers;
@@ -1664,45 +1662,34 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
         b = dedupe_last_write_wins(
             stray.unionByName(b, allowMissingColumns=True),
             key_col, order_col)
-    # the batch has two consumers on a bucketed table — the touched-id
-    # collect and the staged write — and plans are lazy, so without the
-    # cache the transform upstream (zones, glossary join, kg_build)
-    # runs twice per micro-batch. persist, not localCheckpoint: the
-    # lineage stays, and the unpersist below releases the blocks on
-    # every path, which a long-running stream needs
-    cached = b.persist() if has_kb else None
-    try:
-        if has_kb:
-            touched = [r[0] for r in b.select("_kb").distinct().collect()]
-            touched_dirs = [os.path.join(target_path, live[n])
-                            for n in sorted(touched) if n in live]
-            if touched_dirs:
-                # partition pruning by construction: only the touched
-                # buckets' directories are ever opened (the pre-manifest
-                # version read a _kb=* glob and relied on Catalyst
-                # pruning an isin filter over the inferred column — same
-                # I/O, but the pruning is now structural, not
-                # optimizer-owed). The probe's schema is the table's
-                # (_align_to_table keeps it one contract across buckets),
-                # so passing it skips a footer-inference job per batch.
-                existing = (spark.read.schema(existing_all.schema)
-                            .parquet(*touched_dirs))
-                existing = existing.withColumn(
-                    "_kb", _bucket_expr(existing, key_col, buckets,
-                                        widened=widened))
-                b = dedupe_last_write_wins(
-                    existing.unionByName(b, allowMissingColumns=True),
-                    key_col, order_col)
-        token = uuid.uuid4().hex[:8]
-        staging = os.path.join(target_path, f".upsert_tmp_{token}")
-        # drop the swept-gen sidecar before the first byte of new
-        # on-disk state: a crash anywhere past this line leaves orphans
-        # AND no sidecar, so the next entry runs the full recovery sweep
-        _invalidate_swept_gen(target_path)
-        b.write.partitionBy("_kb").parquet(staging)
-    finally:
-        if cached is not None:
-            cached.unpersist()
+    if has_kb:
+        touched = [r[0] for r in b.select("_kb").distinct().collect()]
+        touched_dirs = [os.path.join(target_path, live[n])
+                        for n in sorted(touched) if n in live]
+        if touched_dirs:
+            # partition pruning by construction: only the touched
+            # buckets' directories are ever opened (the pre-manifest
+            # version read a _kb=* glob and relied on Catalyst pruning
+            # an isin filter over the inferred column — same I/O,
+            # but the pruning is now structural, not optimizer-owed).
+            # The probe's schema is the table's (_align_to_table keeps
+            # it one contract across buckets), so passing it skips a
+            # footer-inference job per batch.
+            existing = (spark.read.schema(existing_all.schema)
+                        .parquet(*touched_dirs))
+            existing = existing.withColumn(
+                "_kb", _bucket_expr(existing, key_col, buckets,
+                                    widened=widened))
+            b = dedupe_last_write_wins(
+                existing.unionByName(b, allowMissingColumns=True),
+                key_col, order_col)
+    token = uuid.uuid4().hex[:8]
+    staging = os.path.join(target_path, f".upsert_tmp_{token}")
+    # drop the swept-gen sidecar before the first byte of new on-disk
+    # state: a crash anywhere past this line leaves orphans AND no
+    # sidecar, so the next entry runs the full recovery sweep
+    _invalidate_swept_gen(target_path)
+    b.write.partitionBy("_kb").parquet(staging)
     # the tripwire set for the publish step: every staged bucket must
     # come from the batch/stray fold (= touched, computed above) — on
     # a birth write there are no incumbents to protect

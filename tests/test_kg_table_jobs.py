@@ -1,19 +1,13 @@
 """Job shape of the bucketed KG table's write and fresh-read path.
 
-A micro-batch upsert has two consumers of the transformed batch (the
-touched-bucket collect and the staged write); the batch must be cached
-between them so the transform runs once. The table's bucket dirs are
-named by the manifest, so neither the merge's touched-bucket read nor
-``read_partitioned`` may launch a Spark listing job for them.
+The table's bucket dirs are named by the manifest, so neither the
+merge's touched-bucket read nor ``read_partitioned`` may launch a Spark
+listing job for them, even past Spark's default 32-path threshold.
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.readwriter import DataFrameWriter
 
 from dig_etl_engine_spark.functions.localdf import local_df
 from dig_etl_engine_spark.sinks import kg_table
@@ -24,81 +18,29 @@ SCHEMA = "doc_id STRING, kafka_offset BIGINT, v STRING"
 BUCKETS = 64
 
 
-def _seeded_table(spark, path: str) -> None:
-    """A manifest table with every one of its 64 buckets live."""
-    rows = [(f"k{i}", 1, "base") for i in range(600)]
-    kg_table.upsert_partitioned(spark, path, local_df(spark, rows, SCHEMA),
-                                buckets=BUCKETS)
-    assert len(kg_table._live_bucket_dirs(path)) == BUCKETS
-
-
-def _counted_batch(spark, n: int):
-    """An n-row batch (half updates, half inserts) whose key passes
-    through a Python UDF that counts the rows it transforms."""
-    acc = spark.sparkContext.accumulator(0)
-
-    def tick(k):
-        acc.add(1)
-        return k
-
-    rows = [(f"k{i}" if i % 2 else f"new{i}", 10, "upd") for i in range(n)]
-    plain = local_df(spark, rows, SCHEMA)
-    return plain.withColumn("doc_id", F.udf(tick, "string")("doc_id")), \
-        acc, plain
-
-
 def _listing(jobs: list[str]) -> list[str]:
     return [j for j in jobs if j.startswith("Listing leaf files")]
 
 
-def test_upsert_transforms_once_and_lists_on_driver(spark, tmp_path):
+def test_upsert_and_fresh_read_list_on_driver(spark, tmp_path):
     path = str(tmp_path / "kg")
-    _seeded_table(spark, path)
+    rows = [(f"k{i}", 1, "base") for i in range(600)]
+    kg_table.upsert_partitioned(spark, path, local_df(spark, rows, SCHEMA),
+                                buckets=BUCKETS)
+    assert len(kg_table._live_bucket_dirs(path)) == BUCKETS
     n = 200
-    batch, acc, plain = _counted_batch(spark, n)
-    touched = {r[0] for r in plain.select(
+    # half updates, half inserts
+    batch = local_df(spark, [(f"k{i}" if i % 2 else f"new{i}", 10, "upd")
+                             for i in range(n)], SCHEMA)
+    touched = {r[0] for r in batch.select(
         F.pmod(F.xxhash64("doc_id"), F.lit(BUCKETS))).collect()}
     assert len(touched) > 32, "the touched read must exceed 32 paths"
     with jobs_in_group(spark, "kg-upsert-shape") as jobs:
         kg_table.upsert_partitioned(spark, path, batch)
-    assert acc.value == n
-    assert not _listing(jobs), jobs
+    assert jobs and not _listing(jobs), jobs
     with jobs_in_group(spark, "kg-read-shape") as jobs:
         df = kg_table.read_partitioned(spark, path)
     assert not _listing(jobs), jobs
     got = {r.doc_id: r.kafka_offset for r in df.collect()}
     assert len(got) == 600 + n // 2
     assert got["k1"] == 10 and got["k0"] == 1 and got["new0"] == 10
-
-
-def test_cached_batch_released_when_staged_write_fails(spark, tmp_path,
-                                                       monkeypatch):
-    path = str(tmp_path / "kg")
-    _seeded_table(spark, path)
-    gen = kg_table._load_manifest(path)["gen"]
-    rows_before = sorted(kg_table.read_partitioned(spark, path).collect())
-    batch, _, _ = _counted_batch(spark, 200)
-
-    def persisted() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = persisted()
-    during: set[int] = set()
-    real_parquet = DataFrameWriter.parquet
-
-    def failing_parquet(self, p, *a, **kw):
-        if os.path.basename(p).startswith(".upsert_tmp_"):
-            during.update(persisted())
-            raise OSError("injected staged-write failure")
-        return real_parquet(self, p, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
-    with pytest.raises(OSError, match="injected staged-write failure"):
-        kg_table.upsert_partitioned(spark, path, batch)
-    monkeypatch.undo()
-    cached = during - before
-    assert cached, "the batch must be cached while the staged write runs"
-    assert not cached & persisted()
-    assert kg_table._load_manifest(path)["gen"] == gen
-    assert sorted(kg_table.read_partitioned(spark, path).collect()) \
-        == rows_before

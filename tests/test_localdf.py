@@ -48,17 +48,18 @@ def test_nan_forces_fallback(spark):
     # the Arrow/object-dtype path would turn NaN into NULL — local_df
     # must detect it and take the stock path, where NaN stays NaN
     rows = [(1, float("nan")), (2, 0.5)]
-    assert not _arrow_safe(rows)
+    assert not _arrow_safe(rows, [False, False])
     out = {r["id"]: r["v"] for r in local_df(spark, rows, "id INT, v DOUBLE").collect()}
     assert out[1] != out[1]  # NaN preserved
     assert out[2] == 0.5
 
 
 def test_nested_and_datetime_fall_back(spark):
-    assert not _arrow_safe([(1, [1, 2])])
-    assert not _arrow_safe([(1, {"k": 1})])
-    assert not _arrow_safe([(1, dt.datetime(2020, 1, 1, 0, 0))])
-    assert _arrow_safe([(1, dt.date(2020, 1, 1))])
+    assert not _arrow_safe([(1, [1, 2])], [False, True])
+    assert not _arrow_safe([(1, {"k": 1})], [False, True])
+    assert not _arrow_safe([(1, dt.datetime(2020, 1, 1, 0, 0))], [False, True])
+    assert _arrow_safe([(1, dt.date(2020, 1, 1))], [False, True])
+    assert not _arrow_safe([(1, dt.date(2020, 1, 1))], [False, False])
     # fallback still produces correct rows
     rows = [(1, [1, 2]), (2, [3])]
     out = local_df(spark, rows, "id INT, xs ARRAY<INT>").collect()
