@@ -83,19 +83,18 @@ def load_index(df_or_spark, path: str) -> DataFrame:
 
 
 def _stats_root(path: str) -> str | None:
-    """Resolve the live stats epoch under ``path``.
+    """Resolve the live stats epoch under ``path``, or None when no
+    pointer names an existing epoch dir (the stats were never built).
 
-    Pointer first (v2 layout: ``path/_CURRENT`` holds ``<live>
+    The store's one on-disk format: ``path/_CURRENT`` holds ``<live>
     [<grace>]`` — the first token names the immutable
-    ``epoch_<token>/`` directory holding BOTH tables, the optional
-    second token is the previous epoch kept for in-flight readers),
-    then the legacy flat layout (``corpus/`` directly under ``path``). Because the two
-    tables live under ONE immutable epoch root and the pointer is read
-    ONCE, a reader can never mix ``corpus`` from one build with
-    ``term_df`` from another (the mixed-epoch tear of the pre-pointer
-    layout, where two unlocked reads straddled a concurrent swap) and
-    never observes a missing root mid-refresh (the pointer flip is a
-    single ``os.replace`` — see ``sinks/kg_table.commit_pointer``)."""
+    ``epoch_<token>/`` directory holding BOTH tables (``term_df/`` and
+    ``corpus/``), the optional second token is the previous epoch kept
+    for in-flight readers. Because the two tables live under ONE
+    immutable epoch root and the pointer is read ONCE, a reader can
+    never mix ``corpus`` from one build with ``term_df`` from another
+    and never observes a missing root mid-refresh (the pointer flip is
+    a single ``os.replace`` — see ``sinks/kg_table.commit_pointer``)."""
     import os
 
     from dig_etl_engine_spark.sinks.kg_table import resolve_pointer
@@ -104,8 +103,6 @@ def _stats_root(path: str) -> str | None:
     tok = payload.split()[0] if payload and payload.split() else None
     if tok and os.path.isdir(os.path.join(path, tok)):
         return os.path.join(path, tok)
-    if os.path.isdir(os.path.join(path, "corpus")):
-        return path
     return None
 
 
@@ -118,10 +115,7 @@ def _sweep_stats_epochs(path: str, keep: set[str]) -> None:
     back-to-back refresh entry's orphan sweep, can tell the grace copy
     from a crashed build's orphan: orphans are epochs named by NO
     pointer token. An in-flight reader that resolved the pre-flip
-    pointer keeps a complete root until two further builds land.
-    Legacy flat tables (``corpus/`` at the root) get the same grace —
-    their root-level tables are removed only once a previous epoch dir
-    exists to cover the window."""
+    pointer keeps a complete root until two further builds land."""
     import os
     import shutil
 
@@ -134,12 +128,6 @@ def _sweep_stats_epochs(path: str, keep: set[str]) -> None:
     for n in epochs:
         if n not in keep:
             shutil.rmtree(os.path.join(path, n), ignore_errors=True)
-    # the legacy flat layout is "the epoch before epochs existed": keep
-    # it as the grace copy for the FIRST pointer commit, drop it once a
-    # real previous epoch provides the grace instead
-    if len([n for n in epochs if n in keep]) >= 2:
-        for legacy in ("corpus", "term_df"):
-            shutil.rmtree(os.path.join(path, legacy), ignore_errors=True)
 
 
 def materialize_bm25_stats(docs: DataFrame, path: str, *,
@@ -149,10 +137,12 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
     at corpus-build time, the way the reference's Elasticsearch keeps df
     and field-length norms inside the inverted index it builds at ingest.
 
-    Two tables under one immutable epoch root
-    ``path/epoch_<token>/``, published by a pointer flip
+    The store's one on-disk format: two tables under one immutable
+    epoch root ``path/epoch_<token>/``, published by a pointer flip
     (``path/_CURRENT`` — ``sinks/kg_table.commit_pointer``, ONE atomic
-    ``os.replace``; the ES-alias-swap analog, `manager.py:237-255`):
+    ``os.replace``; the ES-alias-swap analog, `manager.py:237-255`);
+    nothing else lives under ``path`` but pointer temp files. The two
+    tables:
 
     * ``term_df`` — ``(term, df)`` for EVERY distinct token: one
       tokenize → per-doc distinct → explode → groupBy pass. Query time
@@ -235,7 +225,7 @@ def _materialize_bm25_stats_locked(docs: DataFrame, path: str, *,
     # KG table's staged-epoch flush — see kg_table.FSYNC_STAGED_DATA)
     _fsync_tree(root)
     payload = tok
-    if prev and prev != path:
+    if prev:
         payload = f"{tok} {os.path.basename(prev)}"
     commit_pointer(path, payload)
     _sweep_stats_epochs(path, set(payload.split()))
@@ -255,10 +245,8 @@ def bm25_stats_stale(docs: DataFrame, path: str, *,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> bool:
     """True when the persisted BM25 stats no longer describe ``docs``
-    (see the staleness contract on :func:`materialize_bm25_stats`).
-    Pre-signature builds (no ``corpus_sig`` column) report stale —
-    freshness can't be proven, so the maintenance job rebuilds once and
-    gains the signature. O(corpus) scan; maintenance-time only."""
+    (see the staleness contract on :func:`materialize_bm25_stats`), or
+    were never built. O(corpus) scan; maintenance-time only."""
     from pyspark.errors import AnalysisException
 
     spark = docs.sparkSession
@@ -269,7 +257,7 @@ def bm25_stats_stale(docs: DataFrame, path: str, *,
         row = spark.read.parquet(f"{root}/corpus").head()
     except AnalysisException:
         return True
-    if row is None or "corpus_sig" not in row.asDict():
+    if row is None:
         return True
     cur = docs.agg(
         _corpus_signature(id_col, text_col).alias("sig")).head()["sig"]
@@ -302,26 +290,20 @@ def refresh_bm25_stats(docs: DataFrame, path: str, *,
     needs none — it resolves the pointer once and reads both tables
     from that one immutable epoch, so a concurrent refresh can neither
     show it a missing root (the old epoch keeps serving until the flip,
-    and survives, pointer-recorded, until two further builds land) nor mix stats from
-    two corpus builds (the pre-pointer layout's two unlocked reads
-    could straddle a swap). The check→build→flip runs under the
+    and survives, pointer-recorded, until two further builds land) nor
+    mix stats from two corpus builds. The check→build→flip runs under the
     layouts' shared advisory ``table_lock`` so two overlapping
-    maintenance runs serialize instead of racing the flip; entry-time
-    recovery heals pre-pointer-era crash leftovers (``.__old__`` /
-    ``.__tmp__*`` from the retired rename-aside protocol) and sweeps
-    orphaned pointer temps and unreferenced epochs.
+    maintenance runs serialize instead of racing the flip; entry time
+    sweeps orphaned pointer temps and unreferenced epochs.
     """
+    import os
+
     from dig_etl_engine_spark.sinks.kg_table import (
-        _recover_upsert, table_lock)
+        resolve_pointer, table_lock)
 
     with table_lock(path, timeout=lock_timeout):
-        # heal pre-pointer-era crash states (path renamed aside, orphan
-        # staging roots) and drop orphaned epochs/pointer temps from a
-        # crashed pointer-era build
-        _recover_upsert(path)
-        import os
+        # drop orphaned epochs/pointer temps from a crashed build
         if os.path.isdir(path):
-            from dig_etl_engine_spark.sinks.kg_table import resolve_pointer
             payload = resolve_pointer(path) or ""
             # keep every pointer-named epoch (live + grace) — only a
             # crashed build's orphans are unreferenced
@@ -346,11 +328,15 @@ def load_bm25_stats(spark, path: str, terms: list[str]) -> tuple:
     landing between the two reads cannot mix ``n_docs``/``avgdl`` from
     one corpus build with ``df`` from another, and the flip itself
     (atomic pointer replace, old epoch kept as the pointer-recorded
-    grace copy)
-    never exposes a missing root. Legacy flat layouts (pre-pointer)
-    resolve to ``path`` itself and keep the old read path.
+    grace copy) never exposes a missing root. With no pointer naming
+    an epoch, raises ``ValueError`` naming ``path``.
     """
-    root = _stats_root(path) or path
+    root = _stats_root(path)
+    if root is None:
+        raise ValueError(
+            f"load_bm25_stats: no committed stats under {path} (no "
+            "_CURRENT pointer naming an epoch_<token>/ dir) — build them "
+            "with materialize_bm25_stats")
     row = spark.read.parquet(f"{root}/corpus").head()
     hits = (spark.read.parquet(f"{root}/term_df")
             .filter(F.col("term").isin(list(terms))).collect())

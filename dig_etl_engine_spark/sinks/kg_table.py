@@ -17,6 +17,27 @@ wins ordering uses an explicit ``order_col`` (kafka offset / batch id):
 ES's behavior is "later write replaces earlier", which in a parallel engine
 MUST be made explicit or batch-internal ordering is nondeterministic
 (SURVEY §4 R5; ``etk_worker.py:133-134`` sends synchronously per doc).
+
+On-disk format of the bucketed table (one format; every entry point
+reads and writes only this):
+
+  * ``_kg_manifest`` — the pointer-committed catalog and the table's
+    only metadata file: ``{"v": 2, "gen", "buckets", "widened": true,
+    "live": {bucket: dir}, "grace": {bucket: [[dir, gen, ts], ...]}}``.
+    ``buckets`` is the table's bucket count, fixed at birth; rows are
+    placed by ``pmod(xxhash64(widened key), buckets)``;
+  * live and grace bucket dirs — immutable hidden epochs
+    ``.kbe_<bucket>_<token>`` written by upserts and compactions, or
+    visible ``_kb=<bucket>`` dirs on a table born by
+    ``rebucket_partitioned``;
+  * ``.kg_swept_gen`` — the advisory swept-generation sidecar;
+  * ``KG_NAIVE_READ_GUARD`` — present while any live dir is hidden.
+
+A table with no manifest is flat (``create_table_if_not_exists`` /
+plain ``upsert``) and migrates on its first ``upsert_partitioned``.
+``_kb=`` dirs without a manifest, and a manifest that is not v2 with a
+bucket count and the widened hash, are retired formats: every entry
+point refuses them with a ``ValueError`` and leaves their files alone.
 """
 
 from __future__ import annotations
@@ -108,9 +129,8 @@ def commit_pointer(root: str, payload: str, *,
 
 def resolve_pointer(root: str, *, name: str = "_CURRENT") -> str | None:
     """Read the live pointer payload, or None when no pointer exists
-    (pre-pointer legacy layout, or a never-written table). Read-only —
-    never heals anything (healing is the writers' job, under their
-    lock).
+    (a never-written table). Read-only — never heals anything (healing
+    is the writers' job, under their lock).
 
     ONLY the two errnos that prove absence (ENOENT for a missing file
     or parent, ENOTDIR for a path component that is a file — both mean
@@ -118,7 +138,7 @@ def resolve_pointer(root: str, *, name: str = "_CURRENT") -> str | None:
     other OSError propagates: a transient open() failure (EMFILE under
     a busy Spark driver, EACCES, an NFS hiccup) must fail the caller's
     operation, NOT silently reclassify a pointer-committed table as
-    legacy/unborn — for the bucket manifest that demotion would make
+    unborn — for the bucket manifest that demotion would make
     the next upsert treat the table as a birth write, commit a fresh
     manifest referencing only its own batch, and sweep every
     previously committed epoch dir (silent table truncation — the
@@ -292,8 +312,8 @@ def _is_table_dir(path: str) -> bool:
     dir the caller considers a committed table)."""
     return os.path.isdir(path) and any(
         f.endswith(".parquet") or f == "_SUCCESS"
-        or f.startswith("_kb=")       # bucketed layout IS the table
-        or f == _MANIFEST             # manifest-routed bucket layout
+        or f.startswith("_kb=")       # bucket dirs (even a retired
+        or f == _MANIFEST             # layout) ARE a table: never seed
         for f in os.listdir(path))
 
 
@@ -429,10 +449,8 @@ def dedupe_last_write_wins(df: DataFrame, key_col: str = "doc_id",
 
 def _recover_upsert(target_path: str) -> None:
     """Heal the rename-aside swap window (:func:`_swap_upsert`) and
-    sweep its leftovers — called by the plain :func:`upsert` (still the
-    flat table's commit protocol) and, for PRE-r11 crash leftovers
-    only, by the BM25 stats refresh (``functions/kg.refresh_bm25_stats``
-    — its own commits are pointer-epoch now). A crash between
+    sweep its leftovers — called by the plain :func:`upsert`, the flat
+    table's commit protocol. A crash between
     the two renames leaves ``.__old__`` holding the only complete copy
     — restore it (the interrupted write replays via foreachBatch / the
     caller's retry / the next maintenance run). A crash AFTER the
@@ -475,11 +493,11 @@ def upsert(spark: SparkSession, target_path: str, batch: DataFrame, *,
     second concurrent writer merges against the committed result
     instead of silently dropping this batch (lost update)."""
     if os.path.isdir(target_path) and any(
-            f.startswith("_kb=") or f == _BUCKETS_META or f == _MANIFEST
+            f.startswith("_kb=") or f == _MANIFEST
             for f in os.listdir(target_path)):
         raise ValueError(
             f"upsert: {target_path} is a bucket-partitioned table "
-            "(_kb=/_kg_buckets layout) — use upsert_partitioned, which "
+            "(_kg_manifest / _kb= layout) — use upsert_partitioned, which "
             "preserves the layout and its O(touched) merge; the plain "
             "upsert would silently flatten it")
     with table_lock(target_path, timeout=lock_timeout):
@@ -516,23 +534,23 @@ def _swap_upsert(target_path: str, tmp: str) -> None:
 # live directories (verdict r10 item 2 — the same one-rename publication
 # primitive as the BM25 stats epochs, applied per table).
 #
-# Layout contract (manifest era): bucket data lives in IMMUTABLE epoch
-# directories named ``.kbe_<bucket>_<token>`` (dot-prefixed: invisible to
-# naive directory listings — ``read_partitioned`` is the ONLY read API;
-# a raw ``spark.read.parquet(root)`` fails loudly on a fully-epoch table
-# and silently serves stale/partial rows on an in-place-migrated one
-# whose legacy ``_kb=`` dirs still hold the unrewritten buckets — see
-# ``compact_partitioned``'s docstring); the manifest file ``_kg_manifest``
-# maps bucket id → live dir name and is replaced atomically by
-# ``commit_pointer``. A multi-bucket upsert or compaction therefore commits
-# ALL its buckets in ONE rename — there is no per-bucket between-renames
-# window where a bucket is missing, and no rollback protocol: a crash
-# before the flip leaves only unreferenced epoch dirs (recomputable,
-# swept at the next writer entry), a crash after leaves the commit fully
-# applied. Legacy tables (pre-manifest ``_kb=<n>`` dirs) keep reading
-# through the old listing path and migrate in place on their first
-# mutating entry: the initial manifest simply references the existing
-# ``_kb=<n>`` names — no data moves.
+# Layout contract: bucket data lives in IMMUTABLE directories — hidden
+# ``.kbe_<bucket>_<token>`` epochs written by upserts and compactions,
+# and the visible ``_kb=<bucket>`` dirs a ``rebucket_partitioned`` birth
+# references in place. ``read_partitioned`` is the ONLY read API: a raw
+# ``spark.read.parquet(root)`` fails loudly on a fully-epoch table and
+# silently serves stale/partial rows on a rebucketed-then-upserted one
+# whose visible ``_kb=`` dirs still hold superseded buckets (see
+# ``compact_partitioned``'s docstring). The manifest file
+# ``_kg_manifest`` is the table's ONE metadata file: it maps bucket id →
+# live dir name, records the grace copies, and carries the bucket count
+# fixed at birth (plus the ``widened: true`` hash-version token every
+# reader checks), and it is replaced atomically by ``commit_pointer``.
+# A multi-bucket upsert or compaction therefore commits ALL its buckets
+# in ONE rename — there is no per-bucket between-renames window where a
+# bucket is missing, and no rollback protocol: a crash before the flip
+# leaves only unreferenced epoch dirs (recomputable, swept at the next
+# writer entry), a crash after leaves the commit fully applied.
 #
 # Reader grace: each commit records the touched buckets' PREVIOUS dirs in
 # the manifest's ``grace`` map, each entry stamped with the committing
@@ -562,7 +580,7 @@ _MANIFEST = "_kg_manifest"
 # tax): ``.kg_swept_gen`` records the manifest generation whose commit
 # (or entry recovery) last left the table fully swept. A mutating entry
 # whose manifest generation equals the sidecar skips the whole recovery
-# scan — the legacy-heal globs, the grace prune, and the O(live dirs)
+# scan — the staging glob, the grace prune, and the O(live dirs)
 # unreferenced sweep — making steady-state upserts O(touched buckets) in
 # syscalls. The file is ADVISORY and fail-safe by construction: writers
 # UNLINK it before staging any new on-disk state (so a crashed writer's
@@ -575,8 +593,8 @@ _SWEPT_GEN = ".kg_swept_gen"
 
 # Naive-read tripwire (verdict r11 item 3): once any committed bucket
 # lives in a hidden ``.kbe_`` epoch dir, a raw ``spark.read.parquet``
-# at the table root is WRONG — on an in-place-migrated table (visible
-# legacy ``_kb=`` dirs coexisting with hidden epochs) it silently
+# at the table root is WRONG — on a rebucketed-then-upserted table
+# (visible ``_kb=`` dirs coexisting with hidden epochs) it silently
 # serves stale/partial rows, indefinitely. This visible non-parquet
 # file makes such a read fail loudly instead (Spark's footer read
 # names the file: CANNOT_READ_FILE_FOOTER .../KG_NAIVE_READ_GUARD),
@@ -597,104 +615,75 @@ _NAIVE_READ_GUARD = "KG_NAIVE_READ_GUARD"
 # does) may disable it and accept the narrower metadata-only claim.
 FSYNC_STAGED_DATA: bool = True
 
-_BUCKETS_META = "_kg_buckets"
-# Second meta token: the bucket-hash VERSION. Tables born after the r8
-# width-safe change carry "widened" (integral keys cast to BIGINT before
-# xxhash64); a meta file holding only the count — or no meta at all over
-# an existing _kb= layout — identifies a LEGACY table whose directories
-# were placed by the unwidened hash. Legacy tables keep hashing
-# unwidened FOREVER (their layout contract; switching silently would
-# misplace every narrow-keyed row and duplicate keys through the merge)
-# until rebucket_partitioned rewrites them, which always stamps the
-# widened marker.
-_HASH_WIDENED = "widened"
-
-
 # sentinel distinguishing "caller did not pass a cached manifest" from
-# "caller loaded and found none (legacy table)" — a plain None default
-# could not make that distinction
+# "caller loaded and found none (flat or unborn table)" — a plain None
+# default could not make that distinction
 _UNSET = object()
 
 
 def _load_manifest(target_path: str) -> dict | None:
-    """Parse the table's bucket manifest, or None for a pre-manifest
-    (legacy) table. Returns ``{"gen": int, "live": {bucket: dirname},
-    "grace": {bucket: [(dirname, gen_created, ts_created), ...]},
-    "buckets": int|None, "widened": bool|None}``. The bucket count and
-    hash version are duplicated here from ``_kg_buckets`` because the
-    manifest is the fsync-guaranteed artifact (``commit_pointer``): if
-    a power loss eats the meta file but not the manifest, recovering
-    the hash version from the manifest prevents a widened table from
-    being misread as legacy-unwidened — which, now that stored rows'
-    ``_kb`` is recomputed from the key, would scatter stored rows into
-    wrong buckets instead of merely duplicating batch rows (r11
-    round-close review). Read-only; a torn or unparsable manifest is
-    impossible by the pointer-commit contract, so parse errors are
-    raised, not masked — masking one would silently demote a manifest
-    table to legacy listing and resurrect swept-dir reads.
+    """Parse the table's bucket manifest, or None for a table that has
+    none (absent, flat, or a birth that crashed before its flip).
+    Returns ``{"gen": int, "live": {bucket: dirname}, "grace": {bucket:
+    [(dirname, gen_created, ts_created), ...]}, "buckets": int}``.
+    Read-only; a torn or unparsable manifest is impossible by the
+    pointer-commit contract, so parse errors are raised, not masked —
+    masking one would silently demote the table to a birth write whose
+    sweep deletes every committed dir.
 
-    Grace wire formats: v1 manifests hold one ``[dir, gen]`` pair per
-    bucket (the fixed one-generation grace); v2 holds a LIST of
-    ``[dir, gen, ts]`` entries per bucket (configurable retention —
-    see ``GRACE_RETAIN_GENERATIONS``). Both parse; writes are v2.
-    Entries with no recorded timestamp (v1, or a hand-edited v2) adopt
-    PARSE time, not 0.0: "infinitely old" would let a configured
-    ``GRACE_RETAIN_SECONDS`` window release a dir recorded seconds
-    before the upgrade while an in-flight reader inside the promised
-    window still resolves it — adopting now errs in the conservative
-    direction (retained up to one window longer), and the first v2
-    rewrite freezes the adopted value (round-12 review)."""
+    Retired formats raise ``ValueError`` naming the path and what was
+    found, for the same reason: ``_kb=`` dirs with no manifest (the
+    pre-manifest layout), and a manifest that is not v2, has no bucket
+    count, or does not declare the widened hash. No entry point reads,
+    heals or rewrites them, so their files stay exactly as found."""
     import json
 
     raw = resolve_pointer(target_path, name=_MANIFEST)
     if raw is None:
+        kb = sorted(n for n in (os.listdir(target_path)
+                                if os.path.isdir(target_path) else ())
+                    if n.startswith("_kb="))
+        if kb:
+            raise ValueError(
+                f"{target_path}: {len(kb)} _kb= bucket dir(s) "
+                f"({', '.join(kb[:3])}{', ...' if len(kb) > 3 else ''}) "
+                f"and no {_MANIFEST} — a retired pre-manifest layout "
+                "that no entry point reads or rewrites. It is a plain "
+                "partitioned parquet tree: read it with "
+                "spark.read.parquet(<root>) and upsert_partitioned the "
+                "rows into a fresh table.")
         return None
     m = json.loads(raw)
-    now = time.time()
-    adopted = False
-
-    def entries(v):
-        nonlocal adopted
-        if v and isinstance(v[0], str):          # v1: ["dir", gen]
-            adopted = True
-            return [(v[0], int(v[1]), now)]
-        out = []
-        for e in v:
-            if len(e) > 2:
-                out.append((e[0], int(e[1]), float(e[2])))
-            else:
-                adopted = True
-                out.append((e[0], int(e[1]), now))
-        return out
-
+    if m.get("v") != 2 or m.get("buckets") is None \
+            or m.get("widened") is not True:
+        raise ValueError(
+            f"{os.path.join(target_path, _MANIFEST)}: retired manifest "
+            f"format (v={m.get('v')!r}, buckets={m.get('buckets')!r}, "
+            f"widened={m.get('widened')!r}; this version reads only v=2 "
+            "with a bucket count and widened=true) — no entry point "
+            "reads or rewrites it. Read the live dirs it names with "
+            "spark.read.parquet and upsert_partitioned the rows into a "
+            "fresh table.")
     return {
-        "gen": int(m.get("gen", 0)),
-        "live": {int(k): v for k, v in m.get("live", {}).items()},
-        "grace": {int(k): entries(v)
-                  for k, v in m.get("grace", {}).items()},
-        "buckets": (int(m["buckets"])
-                    if m.get("buckets") is not None else None),
-        "widened": (bool(m["widened"])
-                    if m.get("widened") is not None else None),
-        # True when any grace entry carried NO timestamp and adopted
-        # parse time: the recovery path must REWRITE the manifest to
-        # freeze the adopted value — otherwise every parse re-adopts a
-        # fresh "now", the configured time window never starts, and a
-        # v1 table's superseded dirs are retained forever (round-12
-        # review, second pass)
-        "adopted_ts": adopted,
+        "gen": int(m["gen"]),
+        "live": {int(k): v for k, v in m["live"].items()},
+        "grace": {int(k): [(d, int(g), float(ts)) for d, g, ts in v]
+                  for k, v in m["grace"].items()},
+        "buckets": int(m["buckets"]),
     }
 
 
 def _dump_manifest(gen: int, live: dict[int, str], grace: dict[int, list],
-                   *, buckets: int | None, widened: bool | None) -> str:
+                   *, buckets: int) -> str:
     """The ONE serializer of the manifest wire format (every writer —
     commit, recovery's grace prune, rebucket's birth manifest — goes
-    through here, so a format change lands exactly once)."""
+    through here, so a format change lands exactly once). ``widened``
+    is constant: every table hashes widened keys (see
+    :func:`_bucket_expr`), and the token is what a reader checks."""
     import json
 
     return json.dumps({
-        "v": 2, "gen": gen, "buckets": buckets, "widened": widened,
+        "v": 2, "gen": gen, "buckets": buckets, "widened": True,
         "live": {str(k): v for k, v in sorted(live.items())},
         "grace": {str(k): [[d, g, ts] for d, g, ts in es]
                   for k, es in sorted(grace.items()) if es},
@@ -843,36 +832,17 @@ def _fsync_tree(root: str) -> None:
             os.close(fd)
 
 
-def _legacy_bucket_dirs(target_path: str) -> dict[int, str]:
-    """Bucket id → dir name from a pre-manifest ``_kb=<n>`` listing."""
-    out: dict[int, str] = {}
-    try:
-        names = os.listdir(target_path)
-    except OSError:
-        return out
-    for name in names:
-        if name.startswith("_kb=") and \
-                os.path.isdir(os.path.join(target_path, name)):
-            try:
-                out[int(name[4:])] = name
-            except ValueError:
-                continue
-    return out
-
-
 def _live_bucket_dirs(target_path: str) -> dict[int, str]:
-    """The table's live bucket directories: manifest when present,
-    legacy ``_kb=`` listing otherwise."""
+    """The table's live bucket directories (bucket id → dir name) from
+    its manifest; empty for a table with none."""
     m = _load_manifest(target_path)
-    if m is not None:
-        return m["live"]
-    return _legacy_bucket_dirs(target_path)
+    return m["live"] if m is not None else {}
 
 
 def _sweep_unreferenced_buckets(target_path: str, live: dict[int, str],
                                 grace: dict[int, list]) -> bool:
     """Drop bucket dirs referenced by neither the live map nor the grace
-    map, plus orphaned manifest temp files. Safe by the manifest-era
+    map, plus orphaned manifest temp files. Safe by the manifest
     invariant: every committed dir is referenced, so unreferenced =
     a crashed writer's staged epoch or a pruned grace copy — both
     recomputable/superseded. Runs under the table lock only, and only
@@ -901,9 +871,7 @@ def _sweep_unreferenced_buckets(target_path: str, live: dict[int, str],
 
 
 def _commit_buckets(target_path: str, new_dirs: dict[int, str], *,
-                    buckets: int | None = None,
-                    widened: bool | None = None,
-                    manifest=_UNSET) -> tuple[int, bool]:
+                    buckets: int, manifest=_UNSET) -> tuple[int, bool]:
     """The bucketed table's linearization point: publish ``new_dirs``
     (bucket id → epoch dir name, already fully written under
     ``target_path``) with ONE atomic manifest replace, then sweep dirs
@@ -921,14 +889,9 @@ def _commit_buckets(target_path: str, new_dirs: dict[int, str], *,
     previous dirs are kept as generation-stamped grace copies for
     in-flight readers (see the ``_MANIFEST`` doctrine above).
 
-    A legacy table migrates here in place: the initial manifest
-    references its existing ``_kb=<n>`` dirs verbatim.
-
-    ``buckets``/``widened`` stamp the table's bucket count and hash
-    version into the manifest (the fsync-guaranteed recovery source for
-    ``_kg_buckets`` — see :func:`_load_manifest`); None carries the
-    previous manifest's values forward (compaction and other writers
-    that don't rehash anything).
+    ``buckets`` is the table's bucket count, stamped into every
+    manifest: the caller passes the count the rows were placed by (the
+    previous manifest's, or the birth argument when there is none).
 
     Returns ``(generation, clean)``: callers stamp the generation into
     the swept-gen sidecar once their residue cleanup is done, and ONLY
@@ -951,8 +914,7 @@ def _commit_buckets(target_path: str, new_dirs: dict[int, str], *,
     being paid four times per entry (round-12 review, second pass)."""
     m = _load_manifest(target_path) if manifest is _UNSET else manifest
     if m is None:
-        m = {"gen": 0, "live": _legacy_bucket_dirs(target_path),
-             "grace": {}, "buckets": None, "widened": None}
+        m = {"gen": 0, "live": {}, "grace": {}}
     gen = m["gen"] + 1
     live = dict(m["live"])
     grace = {n: list(es) for n, es in m["grace"].items()}
@@ -963,22 +925,8 @@ def _commit_buckets(target_path: str, new_dirs: dict[int, str], *,
         if old is not None:
             grace.setdefault(n, []).append((old, gen, now))
     grace, released = _prune_grace(grace, gen)
-    stamp_b = buckets if buckets is not None else m["buckets"]
-    stamp_w = widened if widened is not None else m["widened"]
-    if stamp_b is None:
-        # a writer that doesn't know the hash facts (compaction) over a
-        # table whose manifest doesn't carry them yet (first manifest
-        # born from a compaction-led migration): lift them from the
-        # meta file NOW, while it still exists — otherwise the manifest
-        # is stamped None forever and the meta-loss recovery in
-        # _load_bucket_meta has nothing to recover from (r11
-        # round-close review, second pass)
-        meta = _read_meta_file(target_path)
-        if meta is not None:
-            stamp_b, stamp_w = meta
     commit_pointer(target_path, _dump_manifest(
-        gen, live, grace, buckets=stamp_b, widened=stamp_w,
-    ), name=_MANIFEST)
+        gen, live, grace, buckets=buckets), name=_MANIFEST)
     # reclaim exactly what the prune released (the flip above already
     # de-referenced them; readers within the retention window still
     # resolve pre-flip manifests whose dirs are all in live ∪ grace)
@@ -989,241 +937,73 @@ def _commit_buckets(target_path: str, new_dirs: dict[int, str], *,
     return gen, clean
 
 
-def _read_meta_file(target_path: str) -> tuple[int, bool] | None:
-    """Parse ``_kg_buckets`` → (count, widened), or None when the file
-    is absent/torn (the caller decides how to recover — manifest
-    fallback, legacy adoption, or birth)."""
-    try:
-        with open(os.path.join(target_path, _BUCKETS_META),
-                  encoding="utf-8") as fh:
-            tokens = fh.read().split()
-            return int(tokens[0]), _HASH_WIDENED in tokens[1:]
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _load_bucket_meta(target_path: str, buckets: int, *,
-                      manifest=_UNSET) -> tuple[int, bool]:
-    """The table's persisted bucket count wins over the argument — the
-    same doctrine as the minhash index's ``_load_minhash_meta``: a
-    caller passing a different ``buckets`` against an existing table
-    would silently break last-write-wins, because the merge reads the
-    batch's "touched" buckets under the NEW count while earlier copies
-    of the same keys sit in directories keyed by the OLD count — stale
-    rows survive and ``read_partitioned`` returns duplicate keys. The
-    count is fixed at table birth; change it with
-    :func:`rebucket_partitioned`. Legacy tables (pre-meta ``_kb``
-    layouts) adopt the caller's value — but only after a layout sanity
-    check: a legacy table built N-way has ``_kb`` directory values in
-    [0, N), so any on-disk ``_kb >= buckets`` proves the argument is
-    smaller than the build count and would hit the very
-    silent-duplicate-keys hole this meta file closes (and worse,
-    persist the wrong count permanently). Such calls are rejected with
-    the repair path named. (A too-LARGE argument over a sparse legacy
-    layout is undetectable from directories alone — the dirs only
-    bound the count from below — but it is also the harmless
-    direction only when equal; equal counts pass the check, and the
-    first post-adoption upsert persists the value so later drift is
-    caught exactly.)
-
-    Returns ``(buckets, widened)``: the second token records the
-    bucket-hash version (see ``_HASH_WIDENED``). A count-only meta, or
-    no meta over an existing ``_kb=`` layout, identifies a legacy
-    unwidened table; no meta and no layout is a BIRTH — new tables
-    always start width-safe."""
-    # the layout probe must consult the manifest: a manifest table's
-    # live dirs may all be hidden .kbe_ epochs, so a bare _kb= listing
-    # would misread it as a BIRTH and stamp the wrong hash version
-    # (one manifest load serves both the probe and the recovery
-    # branch; callers that already parsed it pass it in)
-    if manifest is _UNSET:
-        manifest = _load_manifest(target_path)
-    live = manifest["live"] if manifest is not None \
-        else _legacy_bucket_dirs(target_path)
-    has_kb = bool(live)
-    meta = _read_meta_file(target_path)
-    if meta is None:
-        # meta file missing/torn, but the (fsync-committed) manifest
-        # carries the same facts: recover from it and re-persist the
-        # meta — without this, a widened table that lost only its meta
-        # to a power loss would be misread as legacy-unwidened and the
-        # key recompute would scatter stored rows (r11 review)
-        if manifest is not None and manifest["buckets"] is not None:
-            if manifest["buckets"] != buckets:
-                logger.warning(
-                    "upsert_partitioned: table %s is bucketed %d-way "
-                    "(recovered from manifest; meta file was missing); "
-                    "ignoring buckets=%d argument", target_path,
-                    manifest["buckets"], buckets)
-            _persist_bucket_meta(target_path, manifest["buckets"],
-                                 widened=bool(manifest["widened"]))
-            return manifest["buckets"], bool(manifest["widened"])
-        max_kb = max(live.keys(), default=-1)
-        if max_kb >= buckets:
-            raise ValueError(
-                f"upsert_partitioned: legacy table {target_path} has no "
-                f"{_BUCKETS_META} meta but its layout holds _kb={max_kb} "
-                f">= buckets={buckets} — it was built with a larger "
-                "bucket count. Pass the original count (or run "
-                "rebucket_partitioned) instead of adopting a mismatched "
-                "one; merging under the wrong count leaves stale "
-                "duplicate keys in unread directories.")
-        # metaless: an existing _kb= layout is legacy (pre-marker hash
-        # placed its dirs); a fresh/flat-only table is a birth and
-        # starts width-safe
-        return buckets, not has_kb
-    persisted, widened = meta
-    if persisted != buckets:
-        logger.warning(
-            "upsert_partitioned: table %s is bucketed %d-way; ignoring "
-            "buckets=%d argument (rebucket_partitioned changes the count)",
-            target_path, persisted, buckets)
-    return persisted, widened
-
-
-def _persist_bucket_meta(target_path: str, buckets: int, *,
-                         widened: bool = True) -> None:
-    if _read_meta_file(target_path) == (buckets, widened):
-        return  # already says exactly this — skip the fsync+replace
-    os.makedirs(target_path, exist_ok=True)
-    tmp = os.path.join(target_path, f".{_BUCKETS_META}.tmp.{os.getpid()}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"{buckets} {_HASH_WIDENED}" if widened else str(buckets))
-        fh.flush()
-        # fsync like the manifest commit: a power loss that keeps the
-        # (fsynced) manifest but eats this file would otherwise demote
-        # a widened table to legacy-unwidened hashing on the next load
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(target_path, _BUCKETS_META))
-
-
 def _recover_partitioned_swap(target_path: str
                               ) -> tuple[dict | None, bool]:
     """Entry-time recovery for the bucketed table, shared by every
-    mutating entry point (upsert, compaction, rebucket caller). Two
-    eras, healed in order:
-
-    LEGACY (pre-manifest rename-aside protocol — these states can only
-    exist on tables last written by a pre-r11 build, or constructed by
-    hand; the manifest protocol never creates them):
-
-    * ``.upsert_old_<kb>_*`` / ``.compact_old_<kb>_*`` with ``_kb=<kb>``
-      present → that bucket's swap committed; drop the aside copy.
-    * ``.compact_tmp_<kb>_*`` with the bucket dir ABSENT → crash between
-      the two renames and the tmp holds the complete compacted copy —
-      FINISH the swap (content-identical to the original).
-    * ``.upsert_old_<kb>_*`` / ``.compact_old_<kb>_*`` with the bucket
-      dir ABSENT → crash between the two renames; roll BACK (restore
-      the original — an interrupted upsert batch replays idempotently).
-    * remaining ``.upsert_tmp_*`` / ``.compact_tmp_*`` staging →
-      recomputable; drop (after the old-dir pass, so a staged copy is
-      never adopted over a restorable original).
-
-    MANIFEST era (no rollback protocol — the flip is the linearization
-    point): prune grace entries past the retention window (see the
-    ``_MANIFEST`` doctrine), then sweep every dir the pruned manifest
-    no longer references — crashed writers' staged epochs and expired
-    grace copies alike — plus orphaned manifest temp files.
+    mutating entry point (upsert, compaction). There is no rollback
+    protocol — the manifest flip is the linearization point — so
+    recovery only sweeps: crashed writers' ``.upsert_tmp_*`` staging,
+    grace entries past the retention window (see the ``_MANIFEST``
+    doctrine), every dir the pruned manifest no longer references —
+    crashed writers' staged epochs and expired grace copies alike —
+    and orphaned manifest temp files. With no manifest yet, ``.kbe_*``
+    dirs can only be a birth publisher that crashed before its flip:
+    recomputable orphans, dropped. A retired format raises from
+    :func:`_load_manifest` before anything is touched.
 
     STEADY-STATE FAST PATH (verdict r11 item 4): when the swept-gen
     sidecar equals the manifest's generation, every commit since the
     last full sweep completed cleanly (writers unlink the sidecar
     before staging and re-stamp it only after commit+cleanup), so
-    there is nothing to heal or sweep — return after two small file
-    reads instead of five root listings plus per-dir stats. A crashed
-    writer can never leave a matching sidecar; a hand-modified table
-    can (documented limitation — the protocol's files are not a
-    defense against out-of-band edits; ``maintain.py --check`` and
+    there is nothing to sweep — return after two small file reads
+    instead of root listings plus per-dir stats. A crashed writer can
+    never leave a matching sidecar; a hand-modified table can
+    (documented limitation — the protocol's files are not a defense
+    against out-of-band edits; ``maintain.py --check`` and
     ``rebucket_partitioned`` are).
 
     Returns ``(manifest, steady)``: the table's parsed manifest as
-    this recovery left it (post-prune; None on legacy tables) for the
-    caller to REUSE instead of re-parsing — the parse is the dominant
-    fast-path cost at large bucket counts — and whether the fast path
-    was taken (a steady table provably has no stray flat files except
-    hand-planted ones, so the caller may skip its migration listdir
-    too; round-12 review, second pass).
+    this recovery left it (post-prune; None when there is none) for
+    the caller to REUSE instead of re-parsing — the parse is the
+    dominant fast-path cost at large bucket counts — and whether the
+    fast path was taken (a steady table provably has no stray flat
+    files except hand-planted ones, so the caller may skip its
+    migration listdir too).
     """
     if not os.path.isdir(target_path):
         return None, False
-    esc = glob_mod.escape(target_path)
     m = _load_manifest(target_path)
-    if m is not None and not m["adopted_ts"] \
-            and _read_swept_gen(target_path) == m["gen"] \
+    if m is not None and _read_swept_gen(target_path) == m["gen"] \
             and not _prune_grace(m["grace"], m["gen"])[1]:
         # the prune probe is pure (no filesystem) and closes the
         # time-window hole the sidecar alone would open: with
         # GRACE_RETAIN_SECONDS configured, grace entries expire by
         # CLOCK, not by generation — a non-committing entry (a nightly
         # compaction that finds nothing to rewrite) must still reclaim
-        # them, or an idle table retains superseded copies forever
-        # (round-12 review). adopted_ts forces the slow path so the
-        # adopted timestamps are frozen by a v2 rewrite below — without
-        # that, every parse re-adopts a fresh "now" and the window
-        # never starts. The guard heal runs even on the fast path: the
-        # file is advisory and can be removed out-of-band, and a
-        # read-mostly table may see no data commit for a long time.
+        # them, or an idle table retains superseded copies forever.
+        # The guard heal runs even on the fast path: the file is
+        # advisory and can be removed out-of-band, and a read-mostly
+        # table may see no data commit for a long time.
         _write_naive_read_guard(target_path, m["live"])
         return m, True
+    esc = glob_mod.escape(target_path)
     clean = True
     if m is None:
-        # legacy: finish a compact swap whose tmp is the only complete
-        # copy of its bucket
-        for tmp_ in glob_mod.glob(os.path.join(esc, ".compact_tmp_*")):
-            kbv = os.path.basename(tmp_).split("_")[2]
-            d = os.path.join(target_path, f"_kb={kbv}")
-            if not os.path.isdir(d):
-                logger.warning("kg_table recovery: completing interrupted "
-                               "compact swap for %s from %s", d, tmp_)
-                os.rename(tmp_, d)
-            else:
-                shutil.rmtree(tmp_, ignore_errors=True)
-        # legacy: restore or drop aside copies
-        for pat in (".upsert_old_*", ".compact_old_*"):
-            for old in glob_mod.glob(os.path.join(esc, pat)):
-                kbv = os.path.basename(old).split("_")[2]
-                d = os.path.join(target_path, f"_kb={kbv}")
-                if not os.path.isdir(d):
-                    logger.warning("kg_table recovery: restoring %s from "
-                                   "interrupted swap copy %s", d, old)
-                    os.rename(old, d)
-                else:
-                    shutil.rmtree(old, ignore_errors=True)
-        # epoch dirs without a manifest can only be a publisher that
-        # crashed mid-migration, before its flip — recomputable orphans
         for orphan in glob_mod.glob(os.path.join(esc, ".kbe_*")):
             shutil.rmtree(orphan, ignore_errors=True)
-        # a legacy table must never carry a swept-gen sidecar (it has
-        # no generations); one can only be hand-planted or left by a
-        # demotion — drop it so it can never mask a future sweep
-        _invalidate_swept_gen(target_path)
-    else:
-        # manifest era: the manifest-protocol never creates these, and
-        # migration healed any pre-upgrade states before the manifest
-        # was born — whatever matches now is junk (e.g. hand-planted
-        # litter), never a recovery source
-        for pat in (".compact_tmp_*", ".compact_old_*", ".upsert_old_*"):
-            for stale in glob_mod.glob(os.path.join(esc, pat)):
-                clean &= _rmtree_verified(stale)
     for stale in glob_mod.glob(os.path.join(esc, ".upsert_tmp_*")):
         clean &= _rmtree_verified(stale)
-    # manifest era: prune expired grace, sweep unreferenced dirs, then
-    # record the table as fully swept at this generation (the prune
-    # rewrite keeps the generation — only data commits advance it) —
-    # but ONLY when every removal verifiably landed: a partial rmtree
-    # must leave the sidecar unstamped so the next entry retries
-    # (round-12 review)
+    # prune expired grace, sweep unreferenced dirs, then record the
+    # table as fully swept at this generation (the prune rewrite keeps
+    # the generation — only data commits advance it) — but ONLY when
+    # every removal verifiably landed: a partial rmtree must leave the
+    # sidecar unstamped so the next entry retries
     if m is not None:
         grace, _released = _prune_grace(m["grace"], m["gen"])
-        if grace != m["grace"] or m["adopted_ts"]:
-            # a rewrite also freezes any parse-time-adopted grace
-            # timestamps into the v2 format, starting the retention
-            # clock exactly once (round-12 review, second pass)
+        if grace != m["grace"]:
             commit_pointer(target_path, _dump_manifest(
-                m["gen"], m["live"], grace,
-                buckets=m["buckets"], widened=m["widened"]),
+                m["gen"], m["live"], grace, buckets=m["buckets"]),
                 name=_MANIFEST)
-            m["adopted_ts"] = False
         m["grace"] = grace
         clean &= _sweep_unreferenced_buckets(target_path, m["live"],
                                              grace)
@@ -1234,8 +1014,7 @@ def _recover_partitioned_swap(target_path: str
 
 
 def _publish_staged_buckets(target_path: str, staging: str, token: str,
-                            *, buckets: int | None = None,
-                            widened: bool | None = None,
+                            *, buckets: int,
                             expected: set[int] | None = None,
                             manifest=_UNSET) -> None:
     """Pure-filesystem commit of :func:`upsert_partitioned`'s step 4:
@@ -1255,12 +1034,15 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
     rows read from a touched directory re-hashed into a bucket whose
     incumbent rows were never read — publishing it would REPLACE that
     bucket's live dir and silently drop those rows (reachable only on
-    a table whose stored rows violate key↔directory placement, e.g.
-    pre-r8 width-drift corruption; the pre-r11 directory-name read
-    merely duplicated such rows). Refusing BEFORE any rename leaves
+    a table whose stored rows violate key↔directory placement, e.g. a
+    data file copied into the wrong bucket dir by hand). Refusing
+    BEFORE any rename leaves
     the table untouched and the staging sweepable; the fix is
     ``rebucket_partitioned``, which rewrites every row under one
-    hash (r11 round-close review, second pass)."""
+    hash.
+
+    ``buckets`` is the count stamped into the manifest (see
+    :func:`_commit_buckets`)."""
     staged_dirs = sorted(glob_mod.glob(
         os.path.join(glob_mod.escape(staging), "_kb=*")))
     ids = [int(os.path.basename(d).split("=", 1)[1])
@@ -1272,8 +1054,8 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
                 f"upsert_partitioned: merged rows hash into bucket(s) "
                 f"{rogue} that this batch never touched — stored rows "
                 f"in the touched directories hash outside their own "
-                f"bucket (placement-invariant violation; legacy "
-                f"width-drift corruption is the known cause). "
+                f"bucket (placement-invariant violation: a data file "
+                f"was moved or written outside the table protocol). "
                 f"Publishing would silently drop those buckets' "
                 f"incumbent rows; run rebucket_partitioned on "
                 f"{target_path} to rewrite the table under one hash.")
@@ -1291,8 +1073,7 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
     clean = True
     if new_dirs:
         gen, clean = _commit_buckets(target_path, new_dirs,
-                                     buckets=buckets, widened=widened,
-                                     manifest=manifest)
+                                     buckets=buckets, manifest=manifest)
     clean &= _rmtree_verified(staging)  # _SUCCESS marker etc.
     if gen is None and clean:
         # EMPTY publish (a streaming micro-batch that delivered no
@@ -1325,8 +1106,10 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
 
     The plain :func:`upsert` rereads + rewrites the whole table per batch —
     fine for tests, quadratic over a day of micro-batches at 100 TB. Here
-    the table is laid out as ``_kb=pmod(xxhash64(key), buckets)`` partition
-    directories (uniform — no skewed dirs), and the merge:
+    rows live in one directory per bucket ``pmod(xxhash64(key),
+    buckets)`` (uniform — no skewed dirs), named by the table's
+    manifest (the on-disk format is in the module docstring), and the
+    merge:
 
       1. buckets the batch and collects its touched bucket ids (≤
          ``buckets`` values — a driver-safe list);
@@ -1354,26 +1137,30 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     after the flip it is fully applied, with the touched buckets'
     previous dirs retained as reader-grace copies for one writer
     interval. There is no rollback path and no per-bucket
-    missing-directory instant — the failure class the old rename-aside
-    swap could only narrow, the manifest removes.
+    missing-directory instant.
 
     Cost per batch is O(touched data), not O(table). Delta's MERGE is the
     production drop-in (same semantics, real commit log).
 
-    The bucket count is a TABLE property, not a call property: the first
-    partitioned write persists it (``_kg_buckets``, underscore-prefixed
-    so parquet never sees it) and later calls use the persisted value
-    regardless of the argument — see :func:`_load_bucket_meta` for the
-    silent-duplicate-keys failure this closes. Grow an outscaled table
-    with :func:`rebucket_partitioned`."""
+    The bucket count is a TABLE property, not a call property: the
+    birth write stamps it into the manifest and later calls use the
+    manifest's value regardless of the argument. Merging under a
+    different count would read the batch's "touched" buckets under the
+    NEW count while earlier copies of the same keys sit in directories
+    keyed by the OLD count — stale rows survive and
+    ``read_partitioned`` returns duplicate keys. Grow an outscaled table
+    with :func:`rebucket_partitioned`.
+
+    A retired on-disk format (``_kb=`` dirs without a manifest, or a
+    manifest that is not v2 with a bucket count and the widened hash)
+    raises ``ValueError`` before anything on disk changes."""
     with table_lock(target_path, timeout=lock_timeout):
         _upsert_partitioned_locked(spark, target_path, batch,
                                    key_col=key_col, order_col=order_col,
                                    buckets=buckets)
 
 
-def _bucket_expr(df: DataFrame, key_col: str, buckets: int, *,
-                 widened: bool = True):
+def _bucket_expr(df: DataFrame, key_col: str, buckets: int):
     """``_kb = pmod(xxhash64(key), buckets)`` with the key WIDENED to a
     canonical per-family type first (integral → BIGINT, float →
     DOUBLE; shared with the Bloom filter via ``functions/hashkey.py``).
@@ -1386,18 +1173,11 @@ def _bucket_expr(df: DataFrame, key_col: str, buckets: int, *,
     proactively). Every writer and re-bucketer of a table MUST go
     through this one expression, built from the dataframe the
     expression is APPLIED to (an expression built from another frame's
-    schema would pick the cast from the wrong dtype).
-
-    ``widened=False`` reproduces the pre-marker hash for LEGACY tables
-    whose ``_kb=`` directories were placed unwidened — their layout
-    contract is preserved exactly (see :func:`_load_bucket_meta`);
-    :func:`rebucket_partitioned` is the upgrade path (it rewrites every
-    row, so it always stamps the widened hash)."""
+    schema would pick the cast from the wrong dtype)."""
     from dig_etl_engine_spark.functions.hashkey import widen_for_hash
 
-    key = F.col(key_col)
-    if widened:
-        key = widen_for_hash(key, df.schema[key_col].dataType.simpleString())
+    key = widen_for_hash(F.col(key_col),
+                         df.schema[key_col].dataType.simpleString())
     return F.pmod(F.xxhash64(key), F.lit(buckets)).cast("int")
 
 
@@ -1504,59 +1284,52 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
 
 
 def _check_key_family(batch_df: DataFrame, table_df: DataFrame,
-                      key_col: str, *, widened: bool,
-                      frame: str = "batch") -> None:
+                      key_col: str, *, frame: str = "batch") -> None:
     """Reject a batch whose key type cannot hash-agree with the stored
-    table's: cross-family always (string vs bigint — the union would
-    silently coerce to string while the bucket hashes diverge, leaving
-    duplicate keys across partitions), and same-family width drift on
-    LEGACY (unwidened) tables, whose fix is an explicit
-    ``rebucket_partitioned`` upgrade. ``frame`` names the offending
-    frame in the diagnostic — when the check runs over the on-disk
-    stray migration frame, blaming "the batch" points the operator at
-    data no batch cast can ever fix (r9 round-close review)."""
+    table's: cross-family (string vs bigint — the union would silently
+    coerce to string while the bucket hashes diverge, leaving duplicate
+    keys across partitions). Same-family width drift is fine: the
+    widened hash maps both widths to one canonical type. ``frame``
+    names the offending frame in the diagnostic — when the check runs
+    over the on-disk stray migration frame, blaming "the batch" points
+    the operator at data no batch cast can ever fix."""
     from dig_etl_engine_spark.functions.hashkey import canonical_hash_type
 
     b_t = batch_df.schema[key_col].dataType.simpleString()
     t_t = table_df.schema[key_col].dataType.simpleString()
-    if widened:
-        ok = canonical_hash_type(b_t) == canonical_hash_type(t_t)
-    else:
-        ok = b_t == t_t
-    if not ok:
+    if canonical_hash_type(b_t) != canonical_hash_type(t_t):
         raise ValueError(
             f"upsert_partitioned: {frame} key {key_col}:{b_t} cannot "
-            f"hash-agree with the table's {key_col}:{t_t} "
-            f"({'cross-family' if widened else 'legacy unwidened table'})"
+            f"hash-agree with the table's {key_col}:{t_t} (cross-family)"
             " — the merge would bucket the same logical keys into "
-            f"different _kb= partitions and silently keep duplicates. "
-            f"Cast the {frame} key explicitly"
-            + ("" if widened else
-               ", or run rebucket_partitioned to upgrade the table to "
-               "width-safe hashing") + ".")
+            "different partitions and silently keep duplicates. "
+            f"Cast the {frame} key explicitly.")
 
 
 def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                                batch: DataFrame, *, key_col: str,
                                order_col: str, buckets: int) -> None:
     # recovery FIRST: it returns the table's parsed manifest (the one
-    # parse this entry pays — threading it through meta-load, the live
-    # map and the commit was 4 parses before, the dominant fast-path
-    # cost at large bucket counts) plus whether the fast path was
-    # taken (round-12 review, second pass)
+    # parse this entry pays — the dominant fast-path cost at large
+    # bucket counts) plus whether the fast path was taken
     m, steady = _recover_partitioned_swap(target_path)
-    buckets, widened = _load_bucket_meta(target_path, buckets,
-                                         manifest=m)
+    if m is not None and m["buckets"] != buckets:
+        logger.warning(
+            "upsert_partitioned: table %s is bucketed %d-way; ignoring "
+            "buckets=%d argument (rebucket_partitioned changes the count)",
+            target_path, m["buckets"], buckets)
+        buckets = m["buckets"]
 
     # Migration / crash-recovery: flat root *.parquet files exist when the
     # table is a create_table bootstrap, was built by the plain upsert, OR
     # a previous migration crashed between its partitioned write and its
-    # cleanup (mixed flat + _kb= layout). Fold ALL flat rows into this
-    # batch BEFORE computing touched buckets — their buckets then rewrite
-    # with the merge — and delete the flat files after the write, so the
-    # layout converges to pure _kb= dirs from any starting state. The
-    # files are read by explicit path (a whole-directory read of a mixed
-    # layout throws 'conflicting directory structures'). NOT _SUCCESS:
+    # cleanup (flat files beside a committed manifest). Fold ALL flat
+    # rows into this batch BEFORE computing touched buckets — their
+    # buckets then rewrite with the merge — and delete the flat files
+    # after the write, so the layout converges to pure bucket dirs from
+    # any starting state. The files are read by explicit path (a
+    # whole-directory read of a mixed layout throws 'conflicting
+    # directory structures'). NOT _SUCCESS:
     # the partitioned write recreates the root marker, and deleting it
     # would make the table look absent to create_table_if_not_exists.
     # A STEADY table (sidecar fast path) provably has no strays except
@@ -1565,14 +1338,10 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
     # is skipped there, keeping the steady-state write path free of
     # root listings entirely.
     flat_files: list[str] = []
-    live: dict[int, str] = {}
-    if steady:
-        live = m["live"]
-    elif os.path.isdir(target_path):
+    if not steady and os.path.isdir(target_path):
         flat_files = [f for f in os.listdir(target_path)
                       if f.endswith(".parquet")]
-        live = m["live"] if m is not None \
-            else _legacy_bucket_dirs(target_path)
+    live = m["live"] if m is not None else {}
     has_kb = bool(live)
     existing_all = None
     stray = None
@@ -1588,8 +1357,7 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
         # scripts/scaling_study.py's upsert kernel). Merge DATA is read
         # from the touched dirs only, further down, with _kb recomputed
         # from the key (exact by the writer invariant: every stored
-        # row's key hashes to its directory's bucket under the table's
-        # recorded hash version).
+        # row's key hashes to its directory's bucket).
         #
         # Fallback (r11 external review, low): probe the lowest-id live
         # dir that actually HOLDS a parquet file. The protocol never
@@ -1633,7 +1401,7 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
     _STRAY_FRAME = ("stray flat-file migration frame (on disk at the "
                     "table root, not this batch)")
     if incumbent is not None:
-        _check_key_family(batch, incumbent, key_col, widened=widened)
+        _check_key_family(batch, incumbent, key_col)
         # batch-only NEW columns are refused only when bucketed dirs
         # already exist (a per-bucket merge would leave the column in
         # touched buckets only); in the flat-bootstrap case every row
@@ -1644,13 +1412,13 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                                 target_path=target_path,
                                 allow_new=existing_all is None)
         if stray is not None and existing_all is not None:
-            _check_key_family(stray, incumbent, key_col, widened=widened,
+            _check_key_family(stray, incumbent, key_col,
                               frame=_STRAY_FRAME)
             stray = _align_to_table(
                 stray, incumbent.schema, target_path=target_path,
                 frame=_STRAY_FRAME)
 
-    kb = _bucket_expr(batch, key_col, buckets, widened=widened)
+    kb = _bucket_expr(batch, key_col, buckets)
     b = dedupe_last_write_wins(batch.withColumn("_kb", kb),
                                key_col, order_col)
     if stray is not None:
@@ -1658,7 +1426,7 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
         # stray frame itself — an expression built from another frame's
         # schema would pick the widening cast from the wrong dtype
         stray = stray.withColumn(
-            "_kb", _bucket_expr(stray, key_col, buckets, widened=widened))
+            "_kb", _bucket_expr(stray, key_col, buckets))
         b = dedupe_last_write_wins(
             stray.unionByName(b, allowMissingColumns=True),
             key_col, order_col)
@@ -1678,8 +1446,7 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
             existing = (spark.read.schema(existing_all.schema)
                         .parquet(*touched_dirs))
             existing = existing.withColumn(
-                "_kb", _bucket_expr(existing, key_col, buckets,
-                                    widened=widened))
+                "_kb", _bucket_expr(existing, key_col, buckets))
             b = dedupe_last_write_wins(
                 existing.unionByName(b, allowMissingColumns=True),
                 key_col, order_col)
@@ -1694,19 +1461,10 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
     # come from the batch/stray fold (= touched, computed above) — on
     # a birth write there are no incumbents to protect
     expected = set(touched) if has_kb else None
-    # (re-)pin the table's bucket count AND hash version BEFORE the
-    # manifest flip: idempotent, heals a manually deleted meta; a legacy
-    # table stays marked legacy (its directories were placed by the
-    # unwidened hash — only rebucket_partitioned, which rewrites every
-    # row, may flip the flag). Writing it pre-commit means a crash
-    # between the two leaves a correctly-classified table either way
-    # (meta with no manifest is simply a not-yet-committed batch).
-    _persist_bucket_meta(target_path, buckets, widened=widened)
     # m is still exact: we hold the table lock and nothing since the
     # entry recovery rewrote the manifest
     _publish_staged_buckets(target_path, staging, token,
-                            buckets=buckets, widened=widened,
-                            expected=expected, manifest=m)
+                            buckets=buckets, expected=expected, manifest=m)
     for f in flat_files:
         try:
             os.remove(os.path.join(target_path, f))
@@ -1755,16 +1513,18 @@ def compact_partitioned(spark: SparkSession, target_path: str, *,
     waits). Readers need no coordination: :func:`read_partitioned`
     resolves the manifest in one atomic pointer read. Naive directory
     listings (``spark.read.parquet`` straight at the table root) are
-    NOT the read API on a manifest table, in EITHER direction: on a
-    table whose buckets have all moved to hidden epoch dirs such a
-    read fails loudly (no visible data files), but on an
-    in-place-migrated table — visible legacy ``_kb=`` dirs coexisting
-    with hidden epochs for the rewritten buckets — it SILENTLY serves
-    stale or partial rows (the unrewritten buckets plus whatever
-    superseded visible dirs remain), with no error, indefinitely.
-    Route every reader through :func:`read_partitioned`; a one-shot
-    :func:`rebucket_partitioned` normalizes a migrated table if the
-    mixed layout bothers an external tool.
+    NOT the read API, in EITHER direction: on a table whose buckets
+    all live in hidden epoch dirs such a read fails loudly (no visible
+    data files, plus the ``KG_NAIVE_READ_GUARD`` tripwire), but on a
+    rebucketed table that was upserted or compacted since — visible
+    ``_kb=`` dirs coexisting with hidden epochs for the rewritten
+    buckets — it would SILENTLY serve stale or partial rows; the
+    tripwire makes that read fail too. Route every reader through
+    :func:`read_partitioned`; a one-shot :func:`rebucket_partitioned`
+    normalizes the layout if it bothers an external tool.
+
+    A retired on-disk format raises ``ValueError`` before anything on
+    disk changes (see :func:`_load_manifest`).
     """
     with table_lock(target_path, timeout=lock_timeout):
         return _compact_partitioned_locked(
@@ -1778,13 +1538,11 @@ def _compact_partitioned_locked(spark: SparkSession, target_path: str,
     import glob
     import math
 
-    # heal any pre-manifest-era crash states and sweep manifest-era
-    # orphans/expired grace — the shared entry recovery (its parsed
-    # manifest is reused below instead of a second parse)
+    # sweep orphans/expired grace — the shared entry recovery (its
+    # parsed manifest is reused below instead of a second parse)
     m, _steady = _recover_partitioned_swap(target_path)
 
-    live = m["live"] if m is not None \
-        else _legacy_bucket_dirs(target_path)
+    live = m["live"] if m is not None else {}
     todo: list[tuple[int, str, int]] = []
     for kb, dname in sorted(live.items()):
         d = os.path.join(target_path, dname)
@@ -1816,7 +1574,8 @@ def _compact_partitioned_locked(spark: SparkSession, target_path: str,
         _fsync_tree(os.path.join(target_path, name))
         new_dirs[kb] = name
     if new_dirs:
-        gen, clean = _commit_buckets(target_path, new_dirs, manifest=m)
+        gen, clean = _commit_buckets(target_path, new_dirs,
+                                     buckets=m["buckets"], manifest=m)
         if clean:
             _stamp_swept_gen(target_path, gen)
     return len(todo)
@@ -1835,10 +1594,11 @@ def rebucket_partitioned(spark: SparkSession, target_path: str,
 
     Protocol (single-writer maintenance op, like
     :func:`compact_partitioned`): read the whole table, rewrite under
-    the new count into a sibling staging dir (complete with its
-    ``_kg_buckets`` meta), then swap with two renames — target aside to
-    ``.rebucket_old``, staging in — and drop the old copy. Crash
-    recovery on entry: a staging dir bearing Spark's ``_SUCCESS`` marker
+    the new count into a sibling staging dir whose ``_kb=<n>`` dirs its
+    own gen-0 manifest references in place (the manifest is written
+    last, so it marks the staging complete), then swap with two renames
+    — target aside to ``.rebucket_old``, staging in — and drop the old
+    copy. Crash recovery on entry: a staging dir bearing its manifest
     with the table missing finishes the swap; a missing table with only
     the old copy restores it; stale staging dirs are swept. Returns the
     row count of the rebucketed table. Runs under :func:`table_lock`
@@ -1861,8 +1621,7 @@ def _rebucket_partitioned_locked(spark: SparkSession, target_path: str,
     for stale in glob_mod.glob(glob_mod.escape(target_path)
                                + ".rebucket_tmp.*"):
         if not os.path.isdir(target_path) and \
-                os.path.exists(os.path.join(stale, "_SUCCESS")) and \
-                os.path.exists(os.path.join(stale, _BUCKETS_META)):
+                os.path.exists(os.path.join(stale, _MANIFEST)):
             logger.warning("rebucket_partitioned: finishing interrupted "
                            "swap from %s", stale)
             os.rename(stale, target_path)
@@ -1875,22 +1634,18 @@ def _rebucket_partitioned_locked(spark: SparkSession, target_path: str,
     shutil.rmtree(old, ignore_errors=True)
 
     df = read_partitioned(spark, target_path)
-    # a rebucket rewrites EVERY row, so it is also the sanctioned
-    # upgrade path from legacy unwidened hashing: always place (and
-    # mark) the new layout with the width-safe hash
-    kb = _bucket_expr(df, key_col, new_buckets, widened=True)
+    kb = _bucket_expr(df, key_col, new_buckets)
     (df.withColumn("_kb", kb)
      .write.mode("overwrite").partitionBy("_kb").parquet(tmp))
-    _persist_bucket_meta(tmp, new_buckets, widened=True)
     # data durability before the manifest references it (the staging
     # root is about to become the table — same contract as the
     # publish path's staged-epoch flush)
     _fsync_tree(tmp)
     # a rebucketed table is born manifest-routed: reference the fresh
     # _kb= dirs in place (gen 0, no grace — the whole root swaps at once)
-    commit_pointer(tmp, _dump_manifest(
-        0, _legacy_bucket_dirs(tmp), {},
-        buckets=new_buckets, widened=True), name=_MANIFEST)
+    live = {int(n[4:]): n for n in os.listdir(tmp) if n.startswith("_kb=")}
+    commit_pointer(tmp, _dump_manifest(0, live, {}, buckets=new_buckets),
+                   name=_MANIFEST)
     n = spark.read.option("basePath", tmp) \
         .parquet(os.path.join(tmp, "_kb=*")).count()
     os.rename(target_path, old)
@@ -1900,90 +1655,56 @@ def _rebucket_partitioned_locked(spark: SparkSession, target_path: str,
 
 
 def _effective_bucket_dirs(target_path: str) -> list[str]:
-    """Read-only resolution of the bucket layout during a concurrent
-    swap (the :mod:`webdataset` ``_effective_files`` doctrine applied to
-    the KG table): a bucket is readable from its live ``_kb=<n>`` dir
-    when present, else from a swap-aside copy (``.upsert_old_<n>_*`` /
-    ``.compact_old_<n>_*``) — during the instant between a swap's two
-    renames the aside copy is the bucket's only complete epoch, and a
-    plain directory listing would silently return results missing those
-    rows. Never mutates anything (healing is the writers' job, under
-    their lock). Re-lists until two consecutive scans agree so a swap
-    progressing mid-scan can't yield a bucket twice or not at all; under
-    constant churn, returns the last consistent-per-bucket view (each
-    bucket still resolves to exactly one complete epoch).
-
-    MANIFEST tables short-circuit all of that: one pointer read yields
-    the complete live-dir set atomically — no aside resolution, no
-    stability re-listing — because committed epoch dirs never move and
-    survive as generation-stamped grace copies after being superseded
-    (see the ``_MANIFEST`` doctrine). The legacy scan below serves only
-    pre-manifest tables."""
-    m = _load_manifest(target_path)
-    if m is not None:
-        return [os.path.join(target_path, d)
-                for _, d in sorted(m["live"].items())]
-    esc = glob_mod.escape(target_path)
-
-    def scan():
-        live: dict[int, str] = {}
-        for d in glob_mod.glob(os.path.join(esc, "_kb=*")):
-            try:
-                live[int(os.path.basename(d).split("=", 1)[1])] = d
-            except ValueError:
-                continue
-        aside: dict[int, str] = {}
-        for pat in (".upsert_old_*", ".compact_old_*"):
-            for d in glob_mod.glob(os.path.join(esc, pat)):
-                try:
-                    aside.setdefault(
-                        int(os.path.basename(d).split("_")[2]), d)
-                except (ValueError, IndexError):
-                    continue
-        return live, aside
-
-    live, aside = scan()
-    for _ in range(50):
-        live2, aside2 = scan()
-        if (live2, aside2) == (live, aside):
-            break
-        live, aside = live2, aside2
-    return [d for _, d in sorted({**aside, **live}.items())]
+    """Read-only resolution of the table's live bucket dirs: one
+    pointer read of the manifest yields the complete live-dir set
+    atomically — no stability re-listing, no aside resolution — because
+    committed dirs never move and survive as generation-stamped grace
+    copies after being superseded (see the ``_MANIFEST`` doctrine).
+    Empty for a table with no manifest (flat); a retired format raises
+    (see :func:`_load_manifest`). Never mutates anything."""
+    return [os.path.join(target_path, d)
+            for _, d in sorted(_live_bucket_dirs(target_path).items())]
 
 
 def layout_report(target_path: str) -> dict:
     """Read-only layout diagnosis of a KG table for
     ``scripts/maintain.py --check`` (verdict r11 item 3): classifies
-    the era, counts visible vs hidden live dirs, and returns
-    ``findings`` — human-readable anomaly strings, empty when a naive
+    the table (``absent`` / ``flat`` / ``manifest`` / ``retired``),
+    counts visible vs hidden live dirs, and returns ``findings`` —
+    human-readable anomaly strings, empty when a naive
     ``spark.read.parquet(root)`` would be safe. Mixed layouts (hidden
-    ``.kbe_`` epochs beside visible dirs/files — the in-place-migration
-    steady state) are flagged with :func:`rebucket_partitioned` named
-    as the normalizer and the guard file's presence reported. Takes no
-    lock and mutates nothing — safe against a live ingest (the counts
-    are a snapshot; only the classification is load-bearing)."""
+    ``.kbe_`` epochs beside visible dirs/files) are flagged with
+    :func:`rebucket_partitioned` named as the normalizer and the guard
+    file's presence reported; a retired on-disk format is a finding,
+    not an error. Takes no lock and mutates nothing — safe against a
+    live ingest (the counts are a snapshot; only the classification
+    is load-bearing). A torn manifest still raises (the caller reports
+    it as unreadable)."""
+    import json
+
     report: dict = {"path": target_path, "era": "absent",
                     "findings": []}
     if not os.path.isdir(target_path):
         report["findings"].append("table directory does not exist")
         return report
     names = os.listdir(target_path)
-    m = _load_manifest(target_path)
+    try:
+        m = _load_manifest(target_path)
+    except json.JSONDecodeError:
+        raise
+    except ValueError as ex:
+        report["era"] = "retired"
+        report["findings"].append(str(ex))
+        return report
     flat = [f for f in names if f.endswith(".parquet")]
     if m is None:
-        legacy = _legacy_bucket_dirs(target_path)
-        report["era"] = "legacy" if legacy else "flat"
-        if legacy and flat:
-            report["findings"].append(
-                f"{len(flat)} stray flat parquet file(s) beside "
-                f"{len(legacy)} _kb= dirs (interrupted migration; the "
-                "next upsert_partitioned folds them in)")
+        report["era"] = "flat"
         litter = [n for n in names
-                  if n.startswith((".upsert_", ".compact_", ".kbe_"))]
+                  if n.startswith((".upsert_tmp_", ".kbe_"))]
         if litter:
             report["findings"].append(
-                f"pre-manifest crash litter: {sorted(litter)[:5]} — "
-                "healed by the next mutating entry's recovery")
+                f"crashed-writer litter: {sorted(litter)[:5]} — swept "
+                "by the next mutating entry's recovery")
         return report
     report["era"] = "manifest"
     report["gen"] = m["gen"]
@@ -2028,13 +1749,16 @@ def layout_report(target_path: str) -> dict:
 
 def read_partitioned(spark: SparkSession, target_path: str) -> DataFrame:
     """Read a partitioned KG table without the internal bucket column.
-    Reads the bucket dirs by explicit path so a crash-window mixed
-    layout (stray flat files awaiting the next upsert's migration)
-    stays readable, resolving each bucket through
-    :func:`_effective_bucket_dirs` so a concurrent upsert/compaction
-    swap never makes a bucket transiently invisible; a table mid-
-    rebucket swap (the whole dir briefly aside) reads from its
-    ``.rebucket_old`` copy."""
+    Reads the live bucket dirs the manifest names
+    (:func:`_effective_bucket_dirs` — one atomic pointer read, so a
+    concurrent upsert/compaction never makes a bucket transiently
+    invisible) by explicit path, so stray flat files awaiting the next
+    upsert's migration never mix into the read. A table with no
+    manifest is flat and reads as one parquet dir; a table mid-rebucket
+    swap (the whole dir briefly aside) reads from its
+    ``.rebucket_old`` copy, and a flat table mid plain-upsert swap from
+    its ``.__old__`` copy. A retired on-disk format raises
+    ``ValueError`` (see :func:`_load_manifest`)."""
     if not os.path.isdir(target_path):
         # mid-swap fallbacks: the retired copy is the only complete
         # table during the instant between a swap's two renames
@@ -2042,12 +1766,10 @@ def read_partitioned(spark: SparkSession, target_path: str) -> DataFrame:
             if os.path.isdir(target_path + aside):
                 target_path = target_path + aside
                 break
-    dirs = _effective_bucket_dirs(target_path) \
-        if os.path.isdir(target_path) else []
+    dirs = _effective_bucket_dirs(target_path)
     if dirs:
         # explicit per-dir roots (no basePath): no _kb partition column
-        # is inferred, and aside dirs — whose names don't parse as
-        # partitions — read identically to live ones
+        # is inferred, and hidden epoch dirs read like visible ones
         return spark.read.parquet(*dirs)
     return spark.read.parquet(target_path)
 

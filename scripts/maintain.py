@@ -56,7 +56,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--kg-table", help="bucketed KG table root (_kb= layout)")
+    ap.add_argument("--kg-table",
+                    help="bucketed KG table root (_kg_manifest layout)")
     ap.add_argument("--rebucket-kg-to", type=int, metavar="N",
                     help="also rebucket the KG table to N buckets "
                          "(growth maintenance; runs before compaction)")
@@ -73,10 +74,9 @@ def main() -> int:
                          "(default 8)")
     ap.add_argument("--bm25-stats", metavar="PATH",
                     help="persisted BM25 stats root (pointer-committed "
-                         "epoch_<token>/ dirs behind a _CURRENT file; "
-                         "legacy flat term_df/+corpus/ layouts migrate "
-                         "on first rebuild) to refresh if its corpus "
-                         "signature has drifted")
+                         "epoch_<token>/ dirs behind a _CURRENT file) "
+                         "to refresh if its corpus signature has "
+                         "drifted")
     ap.add_argument("--bm25-docs", metavar="PATH",
                     help="parquet corpus the stats describe "
                          "(required with --bm25-stats)")
@@ -87,13 +87,16 @@ def main() -> int:
     ap.add_argument("--check", metavar="PATH", action="append",
                     default=[],
                     help="read-only layout diagnosis of a KG table "
-                         "(kg_table.layout_report): flags mixed "
+                         "(kg_table.layout_report; era absent, flat, "
+                         "manifest or retired): flags mixed "
                          "visible/hidden bucket layouts that a naive "
                          "spark.read.parquet(root) cannot see "
                          "correctly, naming rebucket_partitioned as "
-                         "the normalizer; repeatable; exits 1 when "
-                         "any checked table has findings; needs no "
-                         "Spark session")
+                         "the normalizer, and retired on-disk formats "
+                         "(_kb= dirs with no _kg_manifest, a manifest "
+                         "that is not v2) that no entry point reads; "
+                         "repeatable; exits 1 when any checked table "
+                         "has findings; needs no Spark session")
     ap.add_argument("--target-file-bytes", type=int, default=128 << 20,
                     help="KG compaction target file size (default 128 MiB)")
     ap.add_argument("--lock-timeout", type=float, default=1800.0,

@@ -8,8 +8,8 @@ times ``_recover_partitioned_swap`` in two states:
     probe releases nothing: one manifest parse + one sidecar read,
     return;
   * full sweep — sidecar invalidated (what any crashed writer leaves):
-    five root globs, per-dir stats, unreferenced-dir sweep, guard
-    heal, re-stamp.
+    the staging glob, the root listing with per-dir stats, the
+    unreferenced-dir sweep, guard heal, re-stamp.
 
 The ratio is the per-batch syscall overhead the sidecar removes at the
 rebucket-as-you-grow doctrine's bucket counts. The residual fast-path
@@ -44,7 +44,7 @@ def build(root: str, n: int) -> None:
             fh.write("x")
         live[i] = d
     kg_table.commit_pointer(root, kg_table._dump_manifest(
-        5, live, {}, buckets=n, widened=True), name=kg_table._MANIFEST)
+        5, live, {}, buckets=n), name=kg_table._MANIFEST)
 
 
 def median_ms(fn, reps: int = 5) -> float:

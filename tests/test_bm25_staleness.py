@@ -30,6 +30,8 @@ def test_fresh_build_is_not_stale(spark, corpus, tmp_path):
     # row order / partitioning must not matter for the signature
     shuffled = corpus.repartition(5).orderBy(F.desc("doc_id"))
     assert bm25_stats_stale(shuffled, path) is False
+    # never-built stats are stale by definition
+    assert bm25_stats_stale(corpus, str(tmp_path / "nowhere")) is True
 
 
 def test_upsert_mutations_are_detected(spark, corpus, tmp_path):
@@ -46,69 +48,6 @@ def test_upsert_mutations_are_detected(spark, corpus, tmp_path):
         "text", F.when(F.col("doc_id") == 1, F.lit("rewritten body"))
                  .otherwise(F.col("text")))
     assert bm25_stats_stale(rewritten, path) is True
-
-
-def _build_legacy_flat_stats(spark, corpus, path, *, signed=True):
-    """Reproduce the pre-pointer on-disk layout: ``corpus/`` and
-    ``term_df/`` directly under ``path``, no ``_CURRENT`` pointer —
-    what a pre-upgrade deployment left behind."""
-    from dig_etl_engine_spark.functions.kg import _corpus_signature
-
-    toks = F.split(F.trim(F.lower(F.trim(F.col("text")))), r"\s+")
-    (corpus.select(F.explode(F.array_distinct(toks)).alias("term"))
-           .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-           .write.mode("overwrite").parquet(f"{path}/term_df"))
-    aggs = [F.count(F.lit(1)).alias("n_docs"),
-            F.avg(F.size(toks)).alias("avgdl")]
-    if signed:
-        aggs.append(_corpus_signature("doc_id", "text").alias("corpus_sig"))
-    corpus.agg(*aggs).write.mode("overwrite").parquet(f"{path}/corpus")
-
-
-def test_pre_signature_build_reports_stale(spark, corpus, tmp_path):
-    """A legacy stats table without corpus_sig can't prove freshness —
-    report stale so one rebuild upgrades it."""
-    path = str(tmp_path / "bm25")
-    _build_legacy_flat_stats(spark, corpus, path, signed=False)
-    assert bm25_stats_stale(corpus, path) is True
-    # absent stats directory is stale by definition
-    assert bm25_stats_stale(corpus, str(tmp_path / "nowhere")) is True
-
-
-def test_legacy_flat_layout_reads_and_migrates(spark, corpus, tmp_path):
-    """A pre-pointer flat layout keeps loading as-is; the first refresh
-    that rebuilds migrates it to the pointer layout, keeping the flat
-    tables as the reader-grace copy until a second epoch exists."""
-    import os
-
-    from dig_etl_engine_spark.functions.kg import (
-        _stats_root, refresh_bm25_stats)
-
-    path = str(tmp_path / "bm25")
-    _build_legacy_flat_stats(spark, corpus, path)
-    # legacy resolution: no pointer → the root itself
-    assert _stats_root(path) == path
-    n_docs, avgdl, dfs = load_bm25_stats(spark, path, ["fast"])
-    assert (n_docs, dfs["fast"]) == (3, 2)
-    # content identical → refresh is a no-op, layout stays legacy
-    assert refresh_bm25_stats(corpus, path) is False
-    assert _stats_root(path) == path
-    # drift → rebuild migrates to an epoch + pointer; the legacy flat
-    # tables survive as the grace copy (only one epoch exists so far)
-    mutated = corpus.unionByName(spark.createDataFrame(
-        [(4, "fast new doc")], "doc_id long, text string"))
-    assert refresh_bm25_stats(mutated, path) is True
-    root = _stats_root(path)
-    assert root != path and os.path.basename(root).startswith("epoch_")
-    assert os.path.isdir(os.path.join(path, "corpus"))  # grace copy
-    n_docs, _, dfs = load_bm25_stats(spark, path, ["fast"])
-    assert (n_docs, dfs["fast"]) == (4, 3)
-    # a second rebuild: a real previous epoch now covers the grace
-    # window, so the legacy flat tables are finally dropped
-    assert refresh_bm25_stats(mutated, path, force=True) is True
-    assert not os.path.isdir(os.path.join(path, "corpus"))
-    n_docs, _, dfs = load_bm25_stats(spark, path, ["fast"])
-    assert (n_docs, dfs["fast"]) == (4, 3)
 
 
 def _ranks(spark, docs, stats_path, terms):
@@ -166,34 +105,29 @@ def test_refresh_closes_staleness_loop(spark, corpus, tmp_path):
 
 
 def test_refresh_force_and_crash_recovery(spark, corpus, tmp_path):
-    """force=True rebuilds a fresh snapshot anyway; a crash between the
-    swap's two renames (only ``.__old__`` on disk) is healed on the next
-    refresh entry, and orphaned staging roots are swept."""
+    """force=True rebuilds a fresh snapshot anyway; a build that
+    crashed before its pointer flip (an unreferenced epoch dir and a
+    pointer temp file on disk) is swept by the next refresh entry,
+    which keeps the live and grace epochs the pointer names."""
     import os
     import shutil
 
     from dig_etl_engine_spark.functions.kg import refresh_bm25_stats
+    from dig_etl_engine_spark.sinks.kg_table import resolve_pointer
 
     path = str(tmp_path / "bm25")
     materialize_bm25_stats(corpus, path)
     assert refresh_bm25_stats(corpus, path, force=True) is True
     assert bm25_stats_stale(corpus, path) is False
 
-    # simulate the between-renames crash window + an orphaned staging dir
-    os.rename(path, path + ".__old__")
-    shutil.copytree(path + ".__old__", path + ".__tmp__deadbeef")
-    assert refresh_bm25_stats(corpus, path) is False  # healed, still fresh
-    assert bm25_stats_stale(corpus, path) is False
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__tmp__deadbeef")
-
-    # simulate a crash AFTER the commit rename but before the aside
-    # cleanup: target present + stale .__old__. A fresh-snapshot no-op
-    # refresh must still sweep the aside copy — without the sweep a
-    # never-stale corpus would leak the full duplicate forever
-    shutil.copytree(path, path + ".__old__")
-    assert refresh_bm25_stats(corpus, path) is False
-    assert not os.path.exists(path + ".__old__")
+    kept = resolve_pointer(path).split()
+    assert len(kept) == 2                       # live + grace
+    shutil.copytree(os.path.join(path, kept[0]),
+                    os.path.join(path, "epoch_deadbeef"))
+    with open(os.path.join(path, "._CURRENT.tmp.deadbeef"), "w") as fh:
+        fh.write("epoch_deadbeef")
+    assert refresh_bm25_stats(corpus, path) is False  # still fresh
+    assert sorted(os.listdir(path)) == sorted(["_CURRENT", *kept])
     assert bm25_stats_stale(corpus, path) is False
 
 
@@ -371,3 +305,19 @@ def test_load_path_unchanged(spark, corpus, tmp_path):
     assert n_docs == 3
     assert dfs == {"fast": 2, "absent": 0}
     assert avgdl == pytest.approx((4 + 5 + 3) / 3)
+
+
+def test_load_without_pointer_raises(spark, tmp_path):
+    """The ``_CURRENT`` pointer is the store's only format: tables with
+    no pointer naming an epoch — a flat ``corpus/`` + ``term_df/`` at
+    the root, or nothing at all — are refused with the path named."""
+    import os
+
+    for name, dirs in (("flat", ("corpus", "term_df")), ("empty", ())):
+        path = str(tmp_path / name)
+        os.makedirs(path)
+        for d in dirs:
+            os.makedirs(os.path.join(path, d))
+        with pytest.raises(ValueError, match="no committed stats") as ei:
+            load_bm25_stats(spark, path, ["fast"])
+        assert path in str(ei.value)

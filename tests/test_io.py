@@ -431,46 +431,6 @@ class TestUpsert:
         with pytest.raises(ValueError, match="hash-agree"):
             kg_table.upsert_partitioned(spark, p, bad, buckets=4)
 
-    def test_bucket_hash_version_marker_and_legacy_preservation(
-            self, spark, tmp_path):
-        """New tables stamp the 'widened' hash-version token in
-        _kg_buckets; a legacy (count-only) meta is PRESERVED across
-        upserts — the table keeps its birth hashing — and a
-        narrower-width batch against it refuses with the rebucket
-        upgrade path named; rebucket_partitioned rewrites every row and
-        flips the marker."""
-        import os
-        p = str(tmp_path / "t")
-        base = spark.createDataFrame(
-            [(i, 1, "base") for i in range(20)],
-            "doc_id long, kafka_offset long, v string")
-        kg_table.upsert_partitioned(spark, p, base, buckets=4)
-        meta = os.path.join(p, "_kg_buckets")
-        assert "widened" in open(meta).read().split()
-        # simulate a legacy table: count-only meta (its long-keyed
-        # layout is valid under both hash versions — widening is the
-        # identity for BIGINT — so only the CONTRACT changes)
-        with open(meta, "w") as fh:
-            fh.write("4")
-        b = spark.createDataFrame(
-            [(3, 9, "upd")], "doc_id long, kafka_offset long, v string")
-        kg_table.upsert_partitioned(spark, p, b, buckets=4)
-        assert open(meta).read().split() == ["4"]   # legacy preserved
-        got = {r.doc_id: r.v
-               for r in kg_table.read_partitioned(spark, p).collect()}
-        assert got[3] == "upd" and len(got) == 20
-        narrow = spark.createDataFrame(
-            [(3, 11, "x")], "doc_id int, kafka_offset long, v string")
-        with pytest.raises(ValueError, match="rebucket_partitioned"):
-            kg_table.upsert_partitioned(spark, p, narrow, buckets=4)
-        kg_table.rebucket_partitioned(spark, p, key_col="doc_id",
-                                      new_buckets=4)
-        assert "widened" in open(meta).read().split()
-        kg_table.upsert_partitioned(spark, p, narrow, buckets=4)  # now ok
-        got2 = {r.doc_id: r.v
-                for r in kg_table.read_partitioned(spark, p).collect()}
-        assert got2[3] == "x" and len(got2) == 20
-
     def test_partitioned_upsert_touches_only_batch_partitions(
             self, spark, tmp_path):
         """upsert_partitioned: merge semantics identical to upsert, but
@@ -563,9 +523,9 @@ class TestStreamingIngest:
         assert spark.read.parquet(qdir).count() == 3
 
     def test_flat_table_migrates_to_bucketed(self, spark, tmp_path):
-        """upsert_partitioned over a flat (bootstrap or legacy-upsert)
-        table folds the flat rows in and converges the layout to pure
-        _kb= dirs."""
+        """upsert_partitioned over a flat (bootstrap or plain-upsert)
+        table folds the flat rows in and converges the layout to
+        manifest-routed bucket dirs."""
         p = str(tmp_path / "t")
         schema = TestUpsert.SCHEMA
         kg_table.upsert(spark, p, spark.createDataFrame(
@@ -833,33 +793,6 @@ class TestScratchReuse:
         assert not asides, f"aside dirs never reaped: {asides}"
 
 
-def _demote_to_legacy_layout(p: str) -> None:
-    """Convert a manifest-era table back to the pre-r11 legacy layout
-    (visible ``_kb=<n>`` dirs, no manifest) — the fixture for every test
-    that exercises the legacy-protocol healing paths, which the manifest
-    protocol itself can no longer produce."""
-    import glob as _glob
-    import shutil as _shutil
-
-    m = kg_table._load_manifest(p)
-    assert m is not None
-    for n, d in m["live"].items():
-        src = os.path.join(p, d)
-        dst = os.path.join(p, f"_kb={n}")
-        if src != dst:
-            os.rename(src, dst)
-    os.remove(os.path.join(p, kg_table._MANIFEST))
-    for leftover in _glob.glob(os.path.join(_glob.escape(p), ".kbe_*")):
-        _shutil.rmtree(leftover, ignore_errors=True)
-    # pre-r11 builds wrote neither the swept-gen sidecar nor the
-    # naive-read guard — a faithful legacy fixture carries neither
-    for extra in (kg_table._SWEPT_GEN, kg_table._NAIVE_READ_GUARD):
-        try:
-            os.remove(os.path.join(p, extra))
-        except OSError:
-            pass
-
-
 class TestCompaction:
     def test_compact_fragmented_buckets(self, spark, tmp_path):
         """A bucket fragmented into many small files (the accumulation
@@ -910,11 +843,9 @@ class TestCompaction:
         assert kg_table.compact_partitioned(spark, p) == 0
 
     def test_compact_crash_litter_invisible_and_swept(self, spark, tmp_path):
-        """A crashed compaction's temp dir (dot-prefixed) must be invisible
-        to readers and swept by the next compaction run; a crash between
-        the two swap renames leaves the original under .compact_old_* for
-        manual recovery, also invisible to readers."""
-        import glob
+        """A crashed compaction's epoch dir (hidden, never referenced by
+        the manifest) must be invisible to readers and swept by the
+        next compaction run."""
         import os
         p = str(tmp_path / "t")
         b = spark.createDataFrame(
@@ -923,12 +854,13 @@ class TestCompaction:
         before = {r.doc_id for r in
                   kg_table.read_partitioned(spark, p).collect()}
 
-        # simulate a crash mid-compaction: stale temp dir with bogus
-        # data — and no swept-gen sidecar, because every real mutating
-        # writer unlinks it BEFORE staging new on-disk state (a clean
-        # sidecar with litter present is only reachable by hand-edits,
-        # which the fast path documents as out of contract)
-        stale = os.path.join(p, ".compact_tmp_0_deadbeef")
+        # simulate a crash mid-compaction: an unreferenced epoch dir
+        # with bogus data — and no swept-gen sidecar, because every
+        # real mutating writer unlinks it BEFORE staging new on-disk
+        # state (a clean sidecar with litter present is only reachable
+        # by hand-edits, which the fast path documents as out of
+        # contract)
+        stale = os.path.join(p, ".kbe_0_deadbeef")
         spark.createDataFrame([("ghost", 99, "x")], TestUpsert.SCHEMA) \
             .coalesce(1).write.parquet(stale)
         kg_table._invalidate_swept_gen(p)
@@ -937,39 +869,52 @@ class TestCompaction:
         assert got == before            # litter invisible to readers
 
         assert kg_table.compact_partitioned(spark, p) == 0
-        assert not glob.glob(os.path.join(p, ".compact_tmp_*"))  # swept
+        assert not os.path.exists(stale)           # swept
         after = {r.doc_id for r in
                  kg_table.read_partitioned(spark, p).collect()}
         assert after == before
 
-    def test_compact_completes_interrupted_swap(self, spark, tmp_path):
-        """A PRE-MANIFEST table crashed between its old protocol's two
-        swap renames: (.compact_tmp_*, .compact_old_*) on disk, bucket
-        dir missing. The next run's legacy healing must FINISH the swap
-        from the complete tmp copy — not delete it — before migrating
-        the table to the manifest."""
-        import glob
-        import os
+    def test_compact_completes_interrupted_swap(self, spark, tmp_path,
+                                                monkeypatch):
+        """A compaction killed at its manifest flip leaves the table
+        serving its exact pre-compaction state plus an unreferenced
+        epoch dir. The next run must sweep the orphan and FINISH the
+        compaction, with data identical."""
+        import shutil
         p = str(tmp_path / "t")
         b = spark.createDataFrame(
             [(f"k{i}", i, "base") for i in range(10)], TestUpsert.SCHEMA)
         kg_table.upsert_partitioned(spark, p, b, buckets=2)
-        _demote_to_legacy_layout(p)
         before = {r.doc_id for r in
                   kg_table.read_partitioned(spark, p).collect()}
+        live = kg_table._live_bucket_dirs(p)
+        d0 = os.path.join(p, live[sorted(live)[0]])
+        frag = d0 + "__frag"
+        spark.read.parquet(d0).repartition(3).write.parquet(frag)
+        shutil.rmtree(d0)
+        os.rename(frag, d0)
+        gen = kg_table._load_manifest(p)["gen"]
 
-        # simulate the mid-swap crash on bucket 0: d → old, tmp = the
-        # compacted copy (here: a byte-identical copy of the bucket)
-        d0 = sorted(glob.glob(os.path.join(p, "_kb=*")))[0]
-        kb = d0.rsplit("=", 1)[1]
-        import shutil
-        shutil.copytree(d0, os.path.join(p, f".compact_tmp_{kb}_dead"))
-        os.rename(d0, os.path.join(p, f".compact_old_{kb}_dead"))
-        assert not os.path.isdir(d0)
+        def crash(*a, **kw):
+            raise RuntimeError("killed at the manifest flip")
 
-        assert kg_table.compact_partitioned(spark, p) == 0
-        assert os.path.isdir(d0)                      # bucket restored
-        assert not glob.glob(os.path.join(p, ".compact_*"))
+        with monkeypatch.context() as mp:
+            mp.setattr(kg_table, "commit_pointer", crash)
+            with pytest.raises(RuntimeError, match="manifest flip"):
+                kg_table.compact_partitioned(spark, p, min_files=2)
+        assert kg_table._load_manifest(p)["gen"] == gen   # not applied
+        assert kg_table._live_bucket_dirs(p) == live
+        orphans = set(os.listdir(p)) - set(live.values()) - {
+            kg_table._MANIFEST, kg_table._NAIVE_READ_GUARD}
+        assert any(n.startswith(".kbe_") for n in orphans), orphans
+
+        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
+        assert kg_table._load_manifest(p)["gen"] == gen + 1
+        m = kg_table._load_manifest(p)
+        referenced = set(m["live"].values()) | {
+            d for es in m["grace"].values() for d, _, _ in es}
+        assert {n for n in os.listdir(p) if n.startswith(".kbe_")} \
+            == referenced                                # orphan swept
         after = {r.doc_id for r in
                  kg_table.read_partitioned(spark, p).collect()}
         assert after == before
@@ -1359,7 +1304,7 @@ class TestIterSamplesProperty:
 
 
 class TestBucketMetaAndRebucket:
-    """The bucket count is a table property (`_kg_buckets` meta, persisted
+    """The bucket count is a table property (stamped into the manifest
     at birth, wins over the argument) and `rebucket_partitioned` is the
     sanctioned way to change it — a mismatched argument used to silently
     leave stale key copies in old-count buckets (duplicate keys on
@@ -1376,43 +1321,17 @@ class TestBucketMetaAndRebucket:
 
     def test_mismatched_buckets_argument_is_ignored(self, spark, tmp_path):
         p = self._table(spark, tmp_path, buckets=8)
-        # upsert the same keys claiming a DIFFERENT bucket count: with the
-        # meta guard the table keeps 8-way layout and last-write-wins holds
+        # upsert the same keys claiming a DIFFERENT bucket count: the
+        # manifest's count wins, so the table keeps its 8-way layout and
+        # last-write-wins holds
         upd = spark.createDataFrame(
             [(f"k{i}", 10, "new") for i in range(40)], self.SCHEMA)
         kg_table.upsert_partitioned(spark, p, upd, buckets=16)
         rows = kg_table.read_partitioned(spark, p).collect()
         assert len(rows) == 40                     # no duplicate keys
         assert all(r.v == "new" for r in rows)
-        import glob
-        kbs = {int(d.rsplit("=", 1)[1])
-               for d in glob.glob(f"{p}/_kb=*")}
-        assert kbs <= set(range(8))                # still 8-way
-
-    def test_legacy_table_rejects_too_small_bucket_argument(
-            self, spark, tmp_path):
-        """Pre-meta legacy tables can't adopt a bucket count the _kb=
-        layout disproves: dirs hold values in [0, build_count), so any
-        _kb >= argument means the argument is smaller than the build
-        count — adopting (and persisting!) it would make the silent-
-        duplicate-keys hole permanent. Equal counts still adopt.
-        (A MANIFEST table that merely lost its meta file never reaches
-        this path — the manifest carries the true count, covered by
-        test_meta_loss_recovers_hash_version_from_manifest — so the
-        fixture must be a genuinely pre-manifest table.)"""
-        import pytest as _pytest
-        p = self._table(spark, tmp_path, buckets=8, n=200)  # fills _kb=0..7
-        _demote_to_legacy_layout(p)
-        os.remove(os.path.join(p, "_kg_buckets"))           # make it legacy
-        upd = spark.createDataFrame([("k0", 9, "new")], self.SCHEMA)
-        with _pytest.raises(ValueError, match="larger bucket count"):
-            kg_table.upsert_partitioned(spark, p, upd, buckets=4)
-        assert not os.path.exists(os.path.join(p, "_kg_buckets"))
-        # the true count adopts cleanly and re-persists the meta
-        kg_table.upsert_partitioned(spark, p, upd, buckets=8)
-        rows = {r.doc_id: r.v
-                for r in kg_table.read_partitioned(spark, p).collect()}
-        assert rows["k0"] == "new" and len(rows) == 200
+        assert kg_table._load_manifest(p)["buckets"] == 8
+        assert set(kg_table._live_bucket_dirs(p)) <= set(range(8))
 
     def test_rebucket_grows_table_layout(self, spark, tmp_path):
         import glob
@@ -1426,94 +1345,31 @@ class TestBucketMetaAndRebucket:
         after = {r.doc_id: (r.kafka_offset, r.v)
                  for r in kg_table.read_partitioned(spark, p).collect()}
         assert after == before
-        # subsequent upserts adopt the new count from the meta even with
-        # a stale default argument, and merge correctly
+        # subsequent upserts adopt the new count from the manifest even
+        # with a stale default argument, and merge correctly
         upd = spark.createDataFrame([("k0", 99, "post")], self.SCHEMA)
         kg_table.upsert_partitioned(spark, p, upd, buckets=2)
         got = {r.doc_id: r.v
                for r in kg_table.read_partitioned(spark, p).collect()}
         assert got["k0"] == "post" and len(got) == len(before)
 
-    def test_true_legacy_int_table_refuse_upgrade_merge(self, spark,
-                                                        tmp_path):
-        """End-to-end migration golden over a table whose legacy layout
-        GENUINELY diverges from the widened hash (VERDICT r8 item 6):
-        an INT-keyed table placed by the unwidened expression — where
-        xxhash64(INT) and xxhash64(BIGINT) bucket the same logical keys
-        differently — must (1) keep merging same-type batches under its
-        birth contract with no duplicate keys, (2) refuse a wider-key
-        batch with the upgrade path named, (3) relocate rows to the
-        widened layout under rebucket_partitioned, (4) then merge the
-        wider batch cleanly — aligned DOWN to the table's birth INT
-        type (the schema is a cross-bucket contract: a coerced-up
-        rewrite of only the touched buckets would leave the table
-        unreadable, the r9 _align_to_table hazard) — and (5) refuse, at
-        execution, a wider value that does not fit the birth type. The
-        earlier marker test simulates legacy on a BIGINT key, where
-        widening is the identity; this one proves the migration moves
-        rows."""
-        import glob
-
-        from pyspark.sql import functions as F
-
+    def test_int_table_aligns_wider_batches_down(self, spark, tmp_path):
+        """An INT-keyed table is the birth-type contract: a wider
+        (BIGINT) batch merges aligned DOWN to INT (the schema is a
+        cross-bucket contract: a coerced-up rewrite of only the touched
+        buckets would leave the table unreadable, the _align_to_table
+        hazard), a wider value that does not fit the
+        birth type fails at execution, and column drift is refused."""
         p = str(tmp_path / "t")
         base = spark.createDataFrame(
             [(i, 1, "base") for i in range(40)],
             "doc_id int, kafka_offset long, v string")
-        # non-vacuity: the two hash versions must place at least one of
-        # these keys differently, else the relocation assert below
-        # proves nothing
-        diverging = base.filter(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(4))
-            != F.pmod(F.xxhash64(F.col("doc_id").cast("long")),
-                      F.lit(4))).count()
-        assert diverging > 0
-        # build the TRUE legacy layout: dirs placed by the unwidened
-        # hash, count-only meta (what a pre-r8 writer left on disk)
-        (base.withColumn("_kb", kg_table._bucket_expr(
-            base, "doc_id", 4, widened=False))
-         .write.partitionBy("_kb").parquet(p))
-        with open(os.path.join(p, "_kg_buckets"), "w") as fh:
-            fh.write("4")
-
-        legacy_dirs = {d.rsplit("=", 1)[1]: d
-                       for d in glob.glob(f"{p}/_kb=*")}
-        legacy_placement = {
-            r.doc_id: r._kb
-            for r in spark.read.option("basePath", p)
-            .parquet(f"{p}/_kb=*").select("doc_id", "_kb").collect()}
-
-        # (1) same-type batch merges under the birth contract
-        b_int = spark.createDataFrame(
-            [(7, 9, "upd")], "doc_id int, kafka_offset long, v string")
-        kg_table.upsert_partitioned(spark, p, b_int, buckets=4)
-        got = {r.doc_id: r.v
-               for r in kg_table.read_partitioned(spark, p).collect()}
-        assert got[7] == "upd" and len(got) == 40   # no duplicate keys
-        meta = os.path.join(p, "_kg_buckets")
-        assert open(meta).read().split() == ["4"]   # still legacy
-
-        # (2) a wider (BIGINT) batch cannot hash-agree: refuse, naming
-        # the upgrade
+        kg_table.upsert_partitioned(spark, p, base, buckets=4)
         b_long = spark.createDataFrame(
             [(7, 11, "wide")], "doc_id long, kafka_offset long, v string")
-        with pytest.raises(ValueError, match="rebucket_partitioned"):
-            kg_table.upsert_partitioned(spark, p, b_long, buckets=4)
 
-        # (3) upgrade: every row rewritten under the widened hash
-        n = kg_table.rebucket_partitioned(spark, p, 4, key_col="doc_id")
-        assert n == 40
-        assert "widened" in open(meta).read().split()
-        new_placement = {
-            r.doc_id: r._kb
-            for r in spark.read.option("basePath", p)
-            .parquet(f"{p}/_kb=*").select("doc_id", "_kb").collect()}
-        moved = [k for k in legacy_placement
-                 if legacy_placement[k] != new_placement[k]]
-        assert moved, (legacy_dirs, new_placement)   # rows relocated
-
-        # (4) the wider batch now merges, aligned down to the birth INT
-        # type; one row per key, values right, schema unchanged
+        # the wider batch merges, aligned down to the birth INT type;
+        # one row per key, values right, schema unchanged
         kg_table.upsert_partitioned(spark, p, b_long, buckets=4)
         table = kg_table.read_partitioned(spark, p)
         assert table.schema["doc_id"].dataType.simpleString() == "int"
@@ -1523,7 +1379,7 @@ class TestBucketMetaAndRebucket:
         assert final[7] == "wide"
         assert sum(1 for r in rows if r.doc_id == 7) == 1
 
-        # (5) a wider VALUE that cannot fit the birth type fails loudly
+        # a wider VALUE that cannot fit the birth type fails loudly
         # at execution (guarded try_cast), and the failed staging write
         # leaves the table intact
         b_big = spark.createDataFrame(
@@ -1535,7 +1391,7 @@ class TestBucketMetaAndRebucket:
                 for r in kg_table.read_partitioned(spark, p).collect()} \
             == final
 
-        # (6) cross-bucket schema drift is refused for NON-key columns
+        # cross-bucket schema drift is refused for NON-key columns
         # and for batch-only new columns too (same mixed-parquet hazard)
         b_widecol = spark.createDataFrame(
             [(7, 13, "x", 1.5)],
@@ -1686,19 +1542,21 @@ class TestBucketMetaAndRebucket:
 
     def test_meta_loss_recovers_hash_version_from_manifest(
             self, spark, tmp_path):
-        """A power loss can eat the (previously un-fsynced) _kg_buckets
-        meta while the fsync-committed manifest survives. Without the
-        manifest fallback, the metaless load would classify this WIDENED
-        int-keyed table as legacy-unwidened, and the stored-row _kb
-        recompute would scatter existing rows into wrong buckets —
-        silent row loss (r11 round-close review). The manifest carries
-        buckets+hash-version precisely so this load self-heals."""
+        """The manifest is the table's only metadata: the bucket count
+        and the widened hash come from it alone. A stale ``_kg_buckets``
+        file, as older builds wrote beside the manifest (here a
+        count-only one claiming 16 unwidened buckets), is neither read
+        nor written — reading it would scatter this int-keyed table's
+        stored rows into wrong buckets (silent row loss)."""
         p = str(tmp_path / "t")
         schema = "doc_id int, v string, kafka_offset long"
         base = spark.createDataFrame(
             [(i, "base", 0) for i in range(30)], schema)
         kg_table.upsert_partitioned(spark, p, base, buckets=4)
-        os.remove(os.path.join(p, kg_table._BUCKETS_META))
+        stale = os.path.join(p, "_kg_buckets")
+        with open(stale, "w", encoding="utf-8") as fh:
+            fh.write("16")
+        stat = os.stat(stale)
         # wrong bucket-count argument too: the manifest's value must win
         kg_table.upsert_partitioned(
             spark, p, spark.createDataFrame(
@@ -1706,67 +1564,49 @@ class TestBucketMetaAndRebucket:
         got = {r.doc_id: r.v
                for r in kg_table.read_partitioned(spark, p).collect()}
         assert len(got) == 31 and got[0] == "upd" and got[99] == "new"
-        # meta re-persisted with the recovered (widened) version
-        n, widened = kg_table._load_bucket_meta(p, 16)
-        assert (n, widened) == (4, True)
-
-    def test_compaction_led_migration_stamps_hash_facts(
-            self, spark, tmp_path):
-        """A legacy table whose FIRST manifest-era write is a
-        compaction: the migration manifest must still carry the bucket
-        count + hash version (lifted from the meta file at commit
-        time), so the meta-loss recovery works for compaction-born
-        manifests too (r11 round-close review, second pass)."""
-        import glob as _glob
-        import shutil as _sh
-
-        p = str(tmp_path / "t")
-        base = spark.createDataFrame(
-            [(f"k{i}", i, "base") for i in range(30)], self.SCHEMA)
-        kg_table.upsert_partitioned(spark, p, base, buckets=2)
-        _demote_to_legacy_layout(p)
-        # fragment one bucket so the compaction commits (and migrates)
-        d0 = sorted(_glob.glob(os.path.join(p, "_kb=*")))[0]
-        frag = d0 + "__frag"
-        spark.read.parquet(d0).repartition(3).write.parquet(frag)
-        _sh.rmtree(d0)
-        os.rename(frag, d0)
-        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
-        m = kg_table._load_manifest(p)
-        assert (m["buckets"], m["widened"]) == (2, True)
-        # the full meta-loss scenario now recovers on this table too
-        os.remove(os.path.join(p, kg_table._BUCKETS_META))
-        assert kg_table._load_bucket_meta(p, 16) == (2, True)
+        assert kg_table._load_manifest(p)["buckets"] == 4
+        with open(stale, encoding="utf-8") as fh:
+            assert fh.read() == "16"                   # not rewritten
+        assert os.stat(stale).st_mtime_ns == stat.st_mtime_ns
 
     def test_placement_violation_refuses_instead_of_dropping_rows(
             self, spark, tmp_path):
-        """Stored rows that hash outside their own directory (legacy
-        width-drift corruption) must REFUSE the merge with the rebucket
-        path named — under the manifest protocol a silent publish would
-        REPLACE the mis-hashed target bucket's live dir and drop its
-        incumbent rows (the pre-r11 directory-name read merely kept
-        duplicates). Corruption model: a widened-placed INT-keyed table
-        whose meta (and manifest) are doctored to claim unwidened
-        hashing, so the merge recomputes existing rows' _kb under the
-        WRONG hash."""
-        import pytest as _pytest
+        """Stored rows that hash outside their own directory must
+        REFUSE the merge with the rebucket path named — under the
+        manifest protocol a silent publish would REPLACE the mis-hashed
+        rows' target bucket's live dir and drop its incumbent rows.
+        Corruption model: one bucket's parquet file copied by hand into
+        another live epoch dir, then a batch touching that dir."""
+        import shutil as _sh
 
         p = str(tmp_path / "t")
-        schema = "doc_id int, v string, kafka_offset long"
+        schema = "doc_id long, v string, kafka_offset long"
         base = spark.createDataFrame(
             [(i, "base", 0) for i in range(40)], schema)
         kg_table.upsert_partitioned(spark, p, base, buckets=4)
-        _demote_to_legacy_layout(p)           # drop the manifest
-        with open(os.path.join(p, kg_table._BUCKETS_META), "w",
-                  encoding="utf-8") as fh:
-            fh.write("4")                     # claim legacy UNWIDENED
-        batch = spark.createDataFrame([(0, "upd", 1)], schema)
-        with _pytest.raises(ValueError, match="placement-invariant"):
+        live = kg_table._live_bucket_dirs(p)
+        src, dst = sorted(live)[:2]
+        f = next(n for n in os.listdir(os.path.join(p, live[src]))
+                 if n.endswith(".parquet"))
+        _sh.copyfile(os.path.join(p, live[src], f),
+                     os.path.join(p, live[dst], "copied-" + f))
+        before = sorted((r.doc_id, r.v) for r in
+                        kg_table.read_partitioned(spark, p).collect())
+        gen = kg_table._load_manifest(p)["gen"]
+        key = next(k for k in range(100, 200)
+                   if spark.range(1).select(
+                       F.pmod(F.xxhash64(F.lit(k).cast("long")),
+                              F.lit(4)).cast("int").alias("b")
+                   ).collect()[0].b == dst)
+        batch = spark.createDataFrame([(key, "upd", 1)], schema)
+        with pytest.raises(ValueError, match="placement-invariant"):
             kg_table.upsert_partitioned(spark, p, batch, buckets=4)
-        # refused BEFORE any publish: the table is intact
-        got = {r.doc_id: r.v
-               for r in kg_table.read_partitioned(spark, p).collect()}
-        assert len(got) == 40 and all(v == "base" for v in got.values())
+        # refused BEFORE any publish: the table is unchanged
+        assert kg_table._load_manifest(p)["gen"] == gen
+        assert kg_table._live_bucket_dirs(p) == live
+        assert sorted((r.doc_id, r.v) for r in
+                      kg_table.read_partitioned(spark, p).collect()) \
+            == before
 
     def test_transient_pointer_read_error_fails_not_demotes(
             self, spark, tmp_path, monkeypatch):
@@ -1802,7 +1642,7 @@ class TestBucketMetaAndRebucket:
         got = {r.doc_id for r in
                kg_table.read_partitioned(spark, p).collect()}
         assert got == set(range(20))
-        # absence still reads as absence (legacy/birth tables work)
+        # absence still reads as absence (birth tables work)
         assert kg_table.resolve_pointer(
             str(tmp_path / "never_written"), name=kg_table._MANIFEST) \
             is None
@@ -1868,11 +1708,11 @@ class TestBucketMetaAndRebucket:
                 for r in kg_table.read_partitioned(spark, p).collect()} \
             == before
 
-        # state B: crash mid-staging-write — incomplete staging (no meta),
-        # table intact → stale staging swept, rebucket proceeds
+        # state B: crash mid-staging-write — incomplete staging (no
+        # manifest), table intact → stale staging swept, rebucket proceeds
         bad = p + ".rebucket_tmp.998"
         os.makedirs(bad)
-        open(os.path.join(bad, "_SUCCESS"), "w").close()  # no meta file
+        open(os.path.join(bad, "_SUCCESS"), "w").close()  # no manifest
         kg_table.rebucket_partitioned(spark, p, 4)
         assert not os.path.isdir(bad)
         assert {r.doc_id: (r.kafka_offset, r.v)
@@ -1902,21 +1742,20 @@ class TestDurabilityAndLayoutGuards:
 
     def test_naive_read_guard_trips_on_migrated_table(
             self, spark, tmp_path):
-        """An in-place-migrated table (visible legacy _kb= dirs beside
-        hidden epochs) silently serves stale/partial rows to a raw
-        spark.read.parquet(root) — the verdict-r11 hazard. The guard
-        file must make that read FAIL LOUDLY while read_partitioned
-        stays exact."""
+        """A rebucketed table (visible _kb= dirs) that is upserted again
+        gets hidden epochs beside its visible dirs, and a raw
+        spark.read.parquet(root) would silently serve stale/partial
+        rows. The guard file must make that
+        read FAIL LOUDLY while read_partitioned stays exact."""
         p = str(tmp_path / "t")
         base = self._batch(spark, [(i, "base", 0) for i in range(24)])
         kg_table.upsert_partitioned(spark, p, base, buckets=4)
-        _demote_to_legacy_layout(p)
-        # legacy tables (all dirs visible) carry no guard: a root read
-        # resolves them correctly, and poisoning it would break
-        # external tools that legitimately read never-migrated tables
+        kg_table.rebucket_partitioned(spark, p, 4)
+        # all dirs visible: no guard, and a root read resolves the
+        # table correctly (poisoning it would break external tools)
         assert not os.path.exists(
             os.path.join(p, kg_table._NAIVE_READ_GUARD))
-        # first mutating entry migrates in place → mixed layout
+        # the next upsert publishes hidden epochs → mixed layout
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(0, "upd", 1)]), buckets=4)
         m = kg_table._load_manifest(p)
@@ -2073,40 +1912,6 @@ class TestDurabilityAndLayoutGuards:
         assert kg_table._read_swept_gen(p) == \
             kg_table._load_manifest(p)["gen"]
 
-    def test_v1_grace_entries_adopt_parse_time(self, tmp_path):
-        """r12 review finding 3 (+ second pass): a v1 manifest's grace
-        entries carry no timestamp; parsing them as 'infinitely old'
-        would let a configured time window release a dir recorded
-        seconds before the upgrade. They must adopt parse time — AND
-        the next recovery must FREEZE the adopted value with a v2
-        rewrite, or every parse re-adopts a fresh 'now' and the
-        retention clock never starts (superseded dirs retained
-        forever)."""
-        import json
-        p = str(tmp_path / "t")
-        os.makedirs(p)
-        for n, d in ((0, ".kbe_0_b"), (1, ".kbe_1_a"), (0, ".kbe_0_a")):
-            os.makedirs(os.path.join(p, d), exist_ok=True)
-        v1 = json.dumps({"v": 1, "gen": 3, "buckets": 2,
-                         "widened": True,
-                         "live": {"0": ".kbe_0_b", "1": ".kbe_1_a"},
-                         "grace": {"0": [".kbe_0_a", 3]}})
-        kg_table.commit_pointer(p, v1, name=kg_table._MANIFEST)
-        before = time.time()
-        m = kg_table._load_manifest(p)
-        assert m["adopted_ts"]
-        (d, g, ts), = m["grace"][0]
-        assert (d, g) == (".kbe_0_a", 3)
-        assert before - 1.0 <= ts <= time.time() + 1.0
-        # recovery freezes: the manifest is rewritten v2 and a later
-        # parse returns a STABLE timestamp with no re-adoption
-        kg_table._recover_partitioned_swap(p)
-        m2 = kg_table._load_manifest(p)
-        assert not m2["adopted_ts"]
-        frozen = m2["grace"][0][0][2]
-        time.sleep(0.05)
-        assert kg_table._load_manifest(p)["grace"][0][0][2] == frozen
-
     def test_empty_publish_restamps_current_generation(
             self, spark, tmp_path):
         """r12 second-pass finding: a streaming micro-batch that
@@ -2126,7 +1931,7 @@ class TestDurabilityAndLayoutGuards:
         os.makedirs(staging)
         with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
             fh.write("")
-        kg_table._publish_staged_buckets(p, staging, "empt")
+        kg_table._publish_staged_buckets(p, staging, "empt", buckets=2)
         assert kg_table._read_swept_gen(p) == gen     # re-stamped
         assert not os.path.isdir(staging)
         # and through the real API: an empty batch keeps it stamped
@@ -2290,7 +2095,8 @@ class TestDurabilityAndLayoutGuards:
                        spy_rename)
             mp.setattr("dig_etl_engine_spark.sinks.kg_table.os.replace",
                        spy_replace)
-            kg_table._publish_staged_buckets(t, staging, "tok")
+            kg_table._publish_staged_buckets(t, staging, "tok",
+                                             buckets=2)
         kinds = [k for k, _ in events]
         assert kinds.count("fsync_tree") == 2          # both buckets
         last_fsync = max(i for i, k in enumerate(kinds)
@@ -2323,13 +2129,145 @@ class TestDurabilityAndLayoutGuards:
         assert rep["era"] == "manifest" and rep["live_hidden"] == 2
         assert rep["guard_present"]
         assert any("rebucket_partitioned" in f for f in rep["findings"])
-        _demote_to_legacy_layout(p)
-        rep = kg_table.layout_report(p)
-        assert rep["era"] == "legacy" and rep["findings"] == []
         kg_table.rebucket_partitioned(spark, p, 2)
         rep = kg_table.layout_report(p)
         assert rep["era"] == "manifest" and rep["live_hidden"] == 0
         assert rep["findings"] == []
+        # a flat table, and a retired format: classified, never raised
+        flat = str(tmp_path / "flat")
+        kg_table.upsert(spark, flat, self._batch(spark, [(1, "b", 0)]))
+        rep = kg_table.layout_report(flat)
+        assert rep["era"] == "flat" and rep["findings"] == []
+        retired = str(tmp_path / "retired")
+        os.makedirs(os.path.join(retired, "_kb=0"))
+        rep = kg_table.layout_report(retired)
+        assert rep["era"] == "retired"
+        assert any("_kb=" in f and retired in f for f in rep["findings"])
+
+
+class TestOnDiskFormat:
+    """The bucketed table has ONE on-disk format: the manifest is its
+    only metadata file. These tests pin the exact names at the table
+    root through a table's life, and pin that the retired formats fail
+    loudly at every entry point without touching a file."""
+
+    SCHEMA = "doc_id long, v string, kafka_offset long"
+
+    @staticmethod
+    def _snapshot(root):
+        out = {}
+        for dirpath, dirnames, filenames in os.walk(root):
+            for n in dirnames + filenames:
+                full = os.path.join(dirpath, n)
+                st = os.stat(full)
+                data = b""
+                if os.path.isfile(full):
+                    with open(full, "rb") as fh:
+                        data = fh.read()
+                out[os.path.relpath(full, root)] = (st.st_mtime_ns, data)
+        return out
+
+    def test_retired_formats_fail_loudly_and_stay_untouched(
+            self, spark, tmp_path):
+        import json
+        import shutil as _sh
+
+        batch = spark.createDataFrame([(1, "x", 1)], self.SCHEMA)
+        # a manifest table to doctor, written through the real protocol
+        born = str(tmp_path / "born")
+        kg_table.upsert_partitioned(
+            spark, born, spark.createDataFrame(
+                [(i, "b", 0) for i in range(8)], self.SCHEMA), buckets=2)
+        with open(os.path.join(born, kg_table._MANIFEST)) as fh:
+            good = json.load(fh)
+
+        def doctored(name, **changes):
+            p = str(tmp_path / name)
+            _sh.copytree(born, p)
+            m = dict(good, **changes)
+            for k in [k for k, v in changes.items() if v is None]:
+                del m[k]
+            with open(os.path.join(p, kg_table._MANIFEST), "w") as fh:
+                json.dump(m, fh)
+            return p, "retired manifest format"
+
+        # the pre-manifest layout: _kb= dirs, no manifest
+        kb_only = str(tmp_path / "kb_only")
+        for n in (0, 1):
+            d = os.path.join(kb_only, f"_kb={n}")
+            os.makedirs(d)
+            with open(os.path.join(d, "part-0.parquet"), "wb") as fh:
+                fh.write(b"rows placed by an older build")
+        with open(os.path.join(kb_only, "_kg_buckets"), "w") as fh:
+            fh.write("2")
+        cases = [(kb_only, "_kb= bucket dir"),
+                 doctored("v1", v=1),
+                 doctored("no_v", v=None),
+                 doctored("no_buckets", buckets=None),
+                 doctored("unwidened", widened=False)]
+        entry_points = [
+            lambda p: kg_table.upsert_partitioned(spark, p, batch,
+                                                  buckets=2),
+            lambda p: kg_table.compact_partitioned(spark, p),
+            lambda p: kg_table.rebucket_partitioned(spark, p, 4),
+            lambda p: kg_table.read_partitioned(spark, p),
+        ]
+        for p, found in cases:
+            before = self._snapshot(p)
+            for call in entry_points:
+                with pytest.raises(ValueError) as ei:
+                    call(p)
+                assert p in str(ei.value) and found in str(ei.value), \
+                    (p, str(ei.value))
+                assert self._snapshot(p) == before, p
+            rep = kg_table.layout_report(p)
+            assert rep["era"] == "retired", (p, rep)
+            assert any(found in f for f in rep["findings"]), rep
+            assert self._snapshot(p) == before, p
+
+    def test_root_names_pinned_through_lifecycle(self, spark, tmp_path):
+        """Birth upsert, second upsert, compaction, rebucket: after each
+        step the table root holds exactly the manifest, the swept-gen
+        sidecar, the naive-read guard while a live dir is hidden, and
+        the live and grace bucket dirs — no second metadata file."""
+        import shutil as _sh
+
+        p = str(tmp_path / "t")
+        meta = {kg_table._MANIFEST, kg_table._SWEPT_GEN}
+
+        def expect(extra):
+            m = kg_table._load_manifest(p)
+            dirs = set(m["live"].values()) | {
+                d for es in m["grace"].values() for d, _, _ in es}
+            guard = {kg_table._NAIVE_READ_GUARD} if any(
+                d.startswith(".kbe_") for d in m["live"].values()) \
+                else set()
+            assert set(os.listdir(p)) == extra | dirs | guard
+            assert "_kg_buckets" not in os.listdir(p)
+            assert m["buckets"] == 4
+            return m
+
+        kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
+            [(i, "b", 0) for i in range(16)], self.SCHEMA), buckets=4)
+        m = expect(meta)
+        assert not m["grace"]
+        kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
+            [(0, "u", 1)], self.SCHEMA), buckets=4)
+        m = expect(meta)
+        assert m["grace"]                     # the touched bucket's old dir
+        # fragment one live bucket so the compaction commits
+        d0 = os.path.join(p, m["live"][sorted(m["live"])[0]])
+        frag = d0 + "__frag"
+        spark.read.parquet(d0).repartition(3).write.parquet(frag)
+        _sh.rmtree(d0)
+        os.rename(frag, d0)
+        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
+        expect(meta)
+        kg_table.rebucket_partitioned(spark, p, 4)
+        # a rebucketed root is Spark's partitioned write plus the manifest
+        m = expect({kg_table._MANIFEST, "_SUCCESS"})
+        assert all(d.startswith("_kb=") for d in m["live"].values())
+        assert len(kg_table.read_partitioned(spark, p).collect()) == 16
 
 
 class TestEffectiveFilesView:
@@ -2603,9 +2541,9 @@ class TestSwapCrashExhaustive:
 
 
 class TestKgTableCrashSafety:
-    """Round-6 hardening of the KG upsert sinks: rename-aside swap for
-    the plain upsert, per-bucket rename-aside for the partitioned merge
-    (no dynamic-overwrite delete window), recovery sweeps, the
+    """Crash safety of the KG upsert sinks: rename-aside swap for the
+    plain upsert, the manifest commit for the partitioned merge (no
+    dynamic-overwrite delete window), recovery sweeps, the
     bucketed-table guard, the already-compact skip, and glob-metachar
     paths."""
 
@@ -2640,34 +2578,43 @@ class TestKgTableCrashSafety:
             upsert(spark, t, self._batch(spark, [9]))
 
     def test_partitioned_upsert_recovers_torn_bucket_swap(self, spark,
-                                                          tmp_path):
-        """A PRE-MANIFEST table crashed between its old protocol's two
-        swap renames (bucket aside, no live dir): the next upsert's
-        legacy healing restores the bucket, then the table migrates to
-        the manifest as part of that upsert's commit."""
+                                                          tmp_path,
+                                                          monkeypatch):
+        """An upsert killed at its manifest flip — staged buckets
+        already renamed to their epoch dirs, manifest not replaced —
+        leaves the table serving its previous state. The replayed batch
+        lands exactly once and the next entry sweeps the orphans."""
         import glob as _glob
         from dig_etl_engine_spark.sinks.kg_table import (
             _load_manifest, read_partitioned, upsert_partitioned)
         t = str(tmp_path / "kgp")
         upsert_partitioned(spark, t, self._batch(spark, range(20)),
                            buckets=4)
-        _demote_to_legacy_layout(t)
         before = {(r["doc_id"], r["kafka_offset"]) for r in
                   read_partitioned(spark, t).collect()}
-        # simulate a crash between the two renames of one bucket
-        d = sorted(_glob.glob(os.path.join(t, "_kb=*")))[0]
-        kbv = os.path.basename(d).split("=")[1]
-        os.rename(d, os.path.join(t, f".upsert_old_{kbv}_deadbeef"))
-        # plus a stale staging dir
-        os.makedirs(os.path.join(t, ".upsert_tmp_deadbeef"))
-        upsert_partitioned(spark, t, self._batch(spark, [500]),
-                           buckets=4)
+        m = _load_manifest(t)
+
+        def crash(*a, **kw):
+            raise RuntimeError("killed at the manifest flip")
+
+        batch = self._batch(spark, [0, 500], off=1000)
+        with monkeypatch.context() as mp:
+            mp.setattr(kg_table, "commit_pointer", crash)
+            with pytest.raises(RuntimeError, match="manifest flip"):
+                upsert_partitioned(spark, t, batch, buckets=4)
+        assert _load_manifest(t) == m                  # nothing applied
+        assert {(r["doc_id"], r["kafka_offset"]) for r in
+                read_partitioned(spark, t).collect()} == before
+        upsert_partitioned(spark, t, batch, buckets=4)  # the replay
         after = {(r["doc_id"], r["kafka_offset"]) for r in
                  read_partitioned(spark, t).collect()}
-        assert after == before | {(500, 500)}  # bucket restored, no loss
-        assert not _glob.glob(os.path.join(t, ".upsert_old_*"))
+        assert after == (before - {(0, 0)}) | {(0, 1000), (500, 1500)}
+        m = _load_manifest(t)
+        referenced = set(m["live"].values()) | {
+            d for es in m["grace"].values() for d, _, _ in es}
+        assert {os.path.basename(d) for d in
+                _glob.glob(os.path.join(t, ".kbe_*"))} == referenced
         assert not _glob.glob(os.path.join(t, ".upsert_tmp_*"))
-        assert _load_manifest(t) is not None  # migrated in place
 
     def test_partitioned_upsert_leaves_no_aside_dirs(self, spark,
                                                      tmp_path):
@@ -2737,13 +2684,13 @@ class TestKgTableCrashSafety:
         _recover_upsert(t)
         assert os.path.isdir(t)  # restored from .__old__
         assert not os.path.isdir(t + ".__tmp__dead")
-        # partitioned: torn bucket swap under a metachar path restores
+        # partitioned: a birth that crashed before its flip leaves
+        # staging and orphan epochs under a metachar path — swept
         t2 = str(tmp_path / "kgp[prod]")
-        os.makedirs(os.path.join(t2, ".upsert_old_3_dead"))
+        os.makedirs(os.path.join(t2, ".kbe_3_dead"))
         os.makedirs(os.path.join(t2, ".upsert_tmp_dead"))
         _recover_partitioned_swap(t2)
-        assert os.path.isdir(os.path.join(t2, "_kb=3"))
-        assert not os.path.isdir(os.path.join(t2, ".upsert_tmp_dead"))
+        assert os.listdir(t2) == []
 
 
 class TestManifestRandomCrashReplay:
@@ -2877,16 +2824,15 @@ class TestManifestRandomCrashReplay:
 
 
 class TestKgSwapCrashExhaustive:
-    """Fault-injection sweep of the KG upsert swaps, mirroring
+    """Fault-injection sweep of the KG upsert commits, mirroring
     TestSwapCrashExhaustive for the export sink: crash at EVERY mutating
-    filesystem op inside _swap_upsert / _swap_upsert_buckets, run the
+    filesystem op inside _swap_upsert / _publish_staged_buckets, run the
     entry-time recovery, and assert the table is a complete epoch —
     plain upsert: exactly the old or exactly the new table; partitioned:
-    every bucket wholly pre-merge or wholly post-merge (per-bucket
-    commit is the design — a rolled-back bucket's batch replays
-    idempotently). Then crash the recovery itself at every op and assert
-    a second, clean recovery still converges. Pure filesystem test — no
-    Spark."""
+    the touched buckets all pre-merge or all post-merge (one manifest
+    flip — a batch that did not land replays idempotently). Then crash
+    the recovery itself at every op and assert a second, clean recovery
+    still converges. Pure filesystem test — no Spark."""
 
     class _Crash(Exception):
         pass
@@ -3013,19 +2959,24 @@ class TestKgSwapCrashExhaustive:
     TOUCHED = (0, 1)
 
     def _build_part(self, root):
-        """A LEGACY table (_kb= dirs, no manifest yet — the migration
-        case, which is also the richest: the commit must build the
-        initial manifest AND publish the touched buckets in one flip)
-        plus a fully-staged upsert batch touching buckets 0 and 1."""
+        """A manifest-born table (gen-1 manifest over one ``.kbe_``
+        epoch dir per bucket) plus a fully-staged upsert batch touching
+        buckets 0 and 1."""
         import shutil as _sh
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _MANIFEST, _dump_manifest, commit_pointer)
         t = os.path.join(root, "kgp")
         _sh.rmtree(t, ignore_errors=True)
         os.makedirs(t)
+        live = {}
         for kb in self.BUCKETS:
-            d = os.path.join(t, f"_kb={kb}")
+            live[kb] = f".kbe_{kb}_birth"
+            d = os.path.join(t, live[kb])
             os.makedirs(d)
             with open(os.path.join(d, "a.parquet"), "w") as fh:
                 fh.write(f"old-{kb}")
+        commit_pointer(t, _dump_manifest(
+            1, live, {}, buckets=len(self.BUCKETS)), name=_MANIFEST)
         staging = os.path.join(t, ".upsert_tmp_tok")
         os.makedirs(staging)
         with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
@@ -3048,9 +2999,7 @@ class TestKgSwapCrashExhaustive:
         assert len(dirs) == len(self.BUCKETS), dirs
         content = {}
         for d in dirs:
-            name = os.path.basename(d)
-            kb = int(name.split("=", 1)[1].split(".")[0]) \
-                if name.startswith("_kb=") else int(name.split("_")[1])
+            kb = int(os.path.basename(d).split("_")[1])
             with open(os.path.join(d, "a.parquet")) as fh:
                 content[kb] = fh.read()
         for kb in self.BUCKETS:
@@ -3072,7 +3021,8 @@ class TestKgSwapCrashExhaustive:
             with monkeypatch.context() as mp:
                 counter = self._fault_at(mp, k)
                 try:
-                    _publish_staged_buckets(t, staging, "tok")
+                    _publish_staged_buckets(t, staging, "tok",
+                                            buckets=len(self.BUCKETS))
                     completed_clean = counter["n"] < k
                 except self._Crash:
                     pass
@@ -3085,10 +3035,8 @@ class TestKgSwapCrashExhaustive:
             from dig_etl_engine_spark.sinks.kg_table import (
                 _load_manifest)
             m = _load_manifest(t)
-            referenced = set() if m is None else \
-                set(m["live"].values()) | {d for es in
-                                           m["grace"].values()
-                                           for d, _, _ in es}
+            referenced = set(m["live"].values()) | {
+                d for es in m["grace"].values() for d, _, _ in es}
             for leftover in glob.glob(os.path.join(t, ".kbe_*")):
                 assert os.path.basename(leftover) in referenced, leftover
             k += 1
@@ -3103,7 +3051,8 @@ class TestKgSwapCrashExhaustive:
             with monkeypatch.context() as mp:
                 self._fault_at(mp, swap_k)
                 try:
-                    _publish_staged_buckets(t, staging, "tok")
+                    _publish_staged_buckets(t, staging, "tok",
+                                            buckets=len(self.BUCKETS))
                 except self._Crash:
                     pass
             for heal_k in range(1, 8):
@@ -3356,67 +3305,70 @@ class TestManifestReaderDuringSwap:
 
 
 class TestReadPartitionedTornView:
-    """read_partitioned on a LEGACY (pre-manifest) table during that
-    protocol's concurrent swap: every bucket resolves to exactly one
-    complete epoch — live dir when present, the swap's aside copy during
-    the instant between its two renames — and a table mid-rebucket reads
-    from its .rebucket_old copy. Manifest-era tables need none of this
-    aside resolution (one atomic pointer read yields the complete live
-    set — covered by TestManifestReaderDuringSwap); these tests pin the
-    legacy fallback that keeps never-migrated tables readable."""
+    """read_partitioned during a concurrent swap never loses or doubles
+    a bucket. For a bucket swap the aside copy is the manifest's grace
+    copy: a reader that resolved the live dirs before an upsert's or
+    compaction's flip keeps reading complete superseded dirs, and a
+    reader resolving after the flip sees only the new live dirs. A
+    table mid-rebucket reads from its .rebucket_old copy, a flat table
+    mid plain-upsert from its .__old__ copy."""
 
-    def _table(self, spark, tmp_path, name="kgt", legacy=False):
+    def _table(self, spark, tmp_path, name="kgt"):
         from dig_etl_engine_spark.sinks.kg_table import (
             read_partitioned, upsert_partitioned)
         t = str(tmp_path / name)
         upsert_partitioned(spark, t, spark.createDataFrame(
             [(i, f"text {i}", i) for i in range(40)],
             "doc_id LONG, text STRING, kafka_offset LONG"), buckets=4)
-        if legacy:
-            _demote_to_legacy_layout(t)
         rows = {(r["doc_id"], r["kafka_offset"]) for r in
                 read_partitioned(spark, t).collect()}
         assert len(rows) == 40
         return t, rows
 
-    def _first_bucket(self, t):
-        import glob as _glob
-        return sorted(_glob.glob(os.path.join(t, "_kb=*")))[0]
+    def _read(self, spark, dirs):
+        return {(r["doc_id"], r["kafka_offset"]) for r in
+                spark.read.parquet(*dirs).collect()}
 
     def test_upsert_swap_window_reads_aside(self, spark, tmp_path):
-        from dig_etl_engine_spark.sinks.kg_table import read_partitioned
-        t, rows = self._table(spark, tmp_path, legacy=True)
-        d = self._first_bucket(t)
-        kbv = os.path.basename(d).split("=")[1]
-        os.rename(d, os.path.join(t, f".upsert_old_{kbv}_tok"))
-        got = {(r["doc_id"], r["kafka_offset"]) for r in
-               read_partitioned(spark, t).collect()}
-        assert got == rows  # the aside copy fills the gap
-        # live dir present again: it wins over a stale aside
-        os.rename(os.path.join(t, f".upsert_old_{kbv}_tok"), d)
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _effective_bucket_dirs, upsert_partitioned)
+        t, rows = self._table(spark, tmp_path)
+        resolved = _effective_bucket_dirs(t)      # a reader mid-flight
+        upsert_partitioned(spark, t, spark.createDataFrame(
+            [(0, "upd", 100), (1, "upd", 101)],
+            "doc_id LONG, text STRING, kafka_offset LONG"), buckets=4)
+        assert _effective_bucket_dirs(t) != resolved
+        assert self._read(spark, resolved) == rows  # grace copies serve
 
     def test_compact_swap_window_reads_aside(self, spark, tmp_path):
-        from dig_etl_engine_spark.sinks.kg_table import read_partitioned
-        t, rows = self._table(spark, tmp_path, "kgc", legacy=True)
-        d = self._first_bucket(t)
-        kbv = os.path.basename(d).split("=")[1]
-        os.rename(d, os.path.join(t, f".compact_old_{kbv}_tok"))
-        got = {(r["doc_id"], r["kafka_offset"]) for r in
-               read_partitioned(spark, t).collect()}
-        assert got == rows
+        import shutil as _sh
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _effective_bucket_dirs, compact_partitioned)
+        t, rows = self._table(spark, tmp_path, "kgc")
+        d0 = _effective_bucket_dirs(t)[0]
+        spark.read.parquet(d0).repartition(3).write.parquet(d0 + "__f")
+        _sh.rmtree(d0)
+        os.rename(d0 + "__f", d0)
+        resolved = _effective_bucket_dirs(t)
+        assert compact_partitioned(spark, t, min_files=2) == 1
+        assert _effective_bucket_dirs(t) != resolved
+        assert self._read(spark, resolved) == rows
 
     def test_live_bucket_wins_over_aside(self, spark, tmp_path):
-        """Post-swap instant (new live dir in, aside not yet dropped):
-        the live epoch must win, not duplicate."""
-        import shutil as _sh
-        from dig_etl_engine_spark.sinks.kg_table import read_partitioned
-        t, rows = self._table(spark, tmp_path, "kgw", legacy=True)
-        d = self._first_bucket(t)
-        kbv = os.path.basename(d).split("=")[1]
-        _sh.copytree(d, os.path.join(t, f".upsert_old_{kbv}_tok"))
+        """Post-flip, with the superseded dir still on disk as grace:
+        the new live dir must win, not duplicate."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _effective_bucket_dirs, read_partitioned, upsert_partitioned)
+        t, rows = self._table(spark, tmp_path, "kgw")
+        before = set(_effective_bucket_dirs(t))
+        upsert_partitioned(spark, t, spark.createDataFrame(
+            [(0, "upd", 100)],
+            "doc_id LONG, text STRING, kafka_offset LONG"), buckets=4)
+        superseded = before - set(_effective_bucket_dirs(t))
+        assert superseded and all(os.path.isdir(d) for d in superseded)
         got = [(r["doc_id"], r["kafka_offset"]) for r in
                read_partitioned(spark, t).collect()]
-        assert sorted(got) == sorted(rows)  # no duplicated bucket
+        assert sorted(got) == sorted((rows - {(0, 0)}) | {(0, 100)})
 
     def test_mid_rebucket_reads_retired_copy(self, spark, tmp_path):
         from dig_etl_engine_spark.sinks.kg_table import read_partitioned
