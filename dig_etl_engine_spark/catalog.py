@@ -72,16 +72,9 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR,
     else:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # PySpark 4's per-API-call call-site capture is 61% of measured
-        # query-construction time; engine-built sessions disable it at
-        # build time (session.py — it is a STATIC conf, so a session
-        # built without it, e.g. the round driver's, keeps the default
-        # and simply pays the capture cost; the try covers exactly that
-        # CANNOT_MODIFY_STATIC_CONFIG case).
-        try:
-            spark.conf.set("spark.python.sql.dataFrameDebugging.enabled",
-                           os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"))
-        except Exception:
-            pass
+        # query-construction time. Its conf is static: engine-built
+        # sessions turn it off at build time (session.py), and sessions
+        # the caller built keep Spark's default.
         out = {}
         for name in TABLES:
             p = table_path(sf_dir, name)

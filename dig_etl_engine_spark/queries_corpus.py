@@ -42,9 +42,8 @@ from dig_etl_engine_spark.queries import register
 def _scratch_path(sf_dir: str, name: str, marker: str,
                   source_table: str = "documents") -> tuple[str, bool]:
     """(cache_dir, is_fresh) for a build-once index artifact, keyed on
-    the SOURCE table's (basename, mtime, size) — same contract as
-    `queries_search._corpus_cache_path` (rebuild when the corpus
-    regenerates; marker file gates partial writes). Key on the table the
+    the SOURCE table's (basename, mtime, size): rebuild when the corpus
+    regenerates; the marker file gates partial writes. Key on the table the
     index actually derives from: an embeddings-backed index keyed on
     documents would go silently stale if only embeddings regenerated."""
     src = os.path.join(sf_dir, f"{source_table}.parquet")

@@ -96,20 +96,23 @@ def _scratch(name: str) -> str:
 
 
 _STREAM_CONF_LOCK = threading.Lock()
+# Fixture-scale stream shuffle/state partition count, kept after an
+# 8-vs-16 interleaved A/B where 16 won both pairs.
+_STREAM_PARTS = 16
 
 
 @contextmanager
-def _stream_parts(spark: SparkSession, n: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` around a stream start: a
-    stateful stream captures the conf into its FRESH checkpoint at first
-    start and AQE never resizes stateful shuffles, so without this every
-    fixture-scale stream here runs its state store (and per-micro-batch
-    shuffles) at the 2×cores batch default — pure task overhead for a
-    few-thousand-key state. Production sizing is the opposite direction:
-    partitions ≈ distinct state keys / target-keys-per-task, set before
-    the FIRST start of the real stream. Partition count never affects
-    results (pinned registry-wide by the adversarial 7-partition
-    sweep).
+def _stream_parts(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to ``_STREAM_PARTS`` around
+    a stream start: a stateful stream captures the conf into its FRESH
+    checkpoint at first start and AQE never resizes stateful shuffles,
+    so without this every fixture-scale stream here runs its state store
+    (and per-micro-batch shuffles) at the 2×cores batch default — pure
+    task overhead for a few-thousand-key state. Production sizing is the
+    opposite direction: partitions ≈ distinct state keys /
+    target-keys-per-task, set before the FIRST start of the real stream.
+    Partition count never affects results (pinned registry-wide by the
+    adversarial 7-partition sweep).
 
     Session conf is process-global, and `streaming/ingest.py` documents
     why a bare get/set/restore races when two streams share one session
@@ -119,44 +122,26 @@ def _stream_parts(spark: SparkSession, n: int | None = None):
     the lock turns that implicit invariant into an enforced one.
 
     r12: the same scope also disables Spark 4.1's checkpoint-file
-    checksums (default-on) unless SPARK_GRAFT_CKPT_CHECKSUM=true —
-    the .crc sidecar write + await per state-delta/offset/commit file
-    was 29% of streaming task-thread samples and an interleaved A/B on
-    stream_e2e_curation measured 2.2× end-to-end (rationale and the
-    deployment trade in ``session.py``, which sets the same default
-    for sessions the engine builds itself; this scope covers sessions
-    the caller built — e.g. the round driver's correctness run)."""
-    # env read INSIDE the body (r13 review): a default-argument read is
-    # evaluated once at import time, so a malformed value would crash
-    # registry import and a post-import env change would be ignored —
-    # the knob's whole point is runtime sizing before a stream's FIRST
-    # start (production: partitions ~ distinct state keys / target
-    # keys-per-task; 16 is the fixture-scale default, kept after an
-    # 8-vs-16 interleaved A/B where 16 won both pairs).
-    if n is None:
-        raw = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "16")
-        try:
-            n = int(raw)
-        except ValueError:
-            n = 0
-        if n < 1:
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_PARTS={raw!r} is not a positive "
-                "integer (the stream shuffle-partition count; unset it "
-                "for the default 16)")
+    checksums (default-on) — the .crc sidecar write + await per
+    state-delta/offset/commit file was 29% of streaming task-thread
+    samples and an interleaved A/B on stream_e2e_curation measured 2.2×
+    end-to-end (rationale and the deployment trade in ``session.py``,
+    which sets the same default for sessions the engine builds itself;
+    this scope covers sessions the caller built — e.g. the round
+    driver's correctness run). Both confs are restored on exit."""
     with _STREAM_CONF_LOCK:
         ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
         old = spark.conf.get("spark.sql.shuffle.partitions")
         old_ck = spark.conf.get(ck, None)
         # both sets INSIDE the try: if the second set raises (a build
         # where the conf is non-modifiable, a dying session), the
-        # finally must still restore the first — otherwise the n=16
+        # finally must still restore the first — otherwise the 16
         # override leaks into every later batch query of the session
         # (r12 review).
         try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            spark.conf.set(
-                ck, os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(_STREAM_PARTS))
+            spark.conf.set(ck, "false")
             yield
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old)

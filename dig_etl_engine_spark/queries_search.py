@@ -26,22 +26,6 @@ from dig_etl_engine_spark.queries_extraction import GLOSSARY_TERMS, _glossary_df
 _GLOSSARY_VALUES_SQL = ", ".join(f"('{t}')" for t in GLOSSARY_TERMS)
 
 
-def _corpus_cache_path(sf_dir: str, name: str,
-                       marker: str = "_SUCCESS") -> tuple[str, bool]:
-    """(cache_dir, is_fresh) for a corpus-build artifact (materialized
-    index, BM25 stats). The key includes the source file's (size, mtime)
-    so a regenerated corpus rebuilds; the marker file gates partial
-    writes."""
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src) if os.path.exists(src) else None
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}" \
-          f"-{int(st.st_mtime) if st else 0}-{st.st_size if st else 0}"
-    path = os.path.join("/tmp/spark_graft_io", name, tag)
-    return path, os.path.exists(os.path.join(path, marker))
-
-
 def demo_config() -> EngineConfig:
     """Project config mirroring the reference's etk config shape:
     predicate→type (Q1, `predicate_range_mappings.json:2-29`), field fan-out
@@ -152,11 +136,12 @@ def coarse_search_rank_materialized(spark: SparkSession,
 
     from dig_etl_engine_spark.functions.kg import (
         load_index, materialize_index)
+    from dig_etl_engine_spark.queries_corpus import _scratch_path
 
     docs = load_tables(spark, sf_dir)["documents"]
     # build-once semantics, like the production index lifecycle: the
     # corpus build materializes, every query after that only reads.
-    path, fresh = _corpus_cache_path(sf_dir, "kw_index", "_SUCCESS")
+    path, fresh = _scratch_path(sf_dir, "kw_index", "_SUCCESS")
     if not fresh:
         shutil.rmtree(path, ignore_errors=True)
         materialize_index(build_keyword_index(spark, docs), path)
@@ -422,10 +407,11 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dig_etl_engine_spark.functions.kg import (
         load_bm25_stats, materialize_bm25_stats)
     from dig_etl_engine_spark.plans.weights import bm25_score_column
+    from dig_etl_engine_spark.queries_corpus import _scratch_path
 
     docs = load_tables(spark, sf_dir)["documents"]
     terms = ["hash", "window"]
-    path, fresh = _corpus_cache_path(sf_dir, "bm25_stats", "_CURRENT")
+    path, fresh = _scratch_path(sf_dir, "bm25_stats", "_CURRENT")
     if not fresh:
         # no pre-wipe: the build is lock-serialized and epoch-committed
         # (a concurrent builder's epoch must not be rmtree'd from under

@@ -4,6 +4,12 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default all cores); the
 same config block is what we would ship to a 1000-executor cluster — the
 only local-specific knob is the master URL.
 
+The builder in :func:`get_spark` is the one place the engine sets its
+Spark confs, and ``get_spark(extra_conf=...)`` is the one way to override
+any of them. Environment variables pick only the deployment's shape:
+``SPARK_MASTER``, ``SPARK_GRAFT_CPUS``, ``SPARK_DRIVER_MEM`` and
+``SPARK_GRAFT_WORKER_PRELOAD``.
+
 Key choices (rationale):
   * AQE on — runtime coalescing + skew-join handling replace hand-tuned
     partition counts at 100 TB.
@@ -31,18 +37,17 @@ _SHIP_LOCK = threading.Lock()
 
 def get_spark(app_name: str = "dig_etl_engine_spark",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    """Build (or fetch) the session. Idempotent within a process."""
+    """Build (or fetch) the session. Idempotent within a process.
+
+    ``extra_conf`` overrides any conf the builder sets below."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus or '*'}]")
-    shuffle_parts = os.environ.get(
-        "SPARK_SHUFFLE_PARTITIONS",
-        str(2 * (int(cpus) if cpus.isdigit() else (os.cpu_count() or 8))),
-    )
+    cores = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
 
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", str(2 * cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -58,13 +63,13 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # Floor the scan split count at the core count: small local files
         # otherwise produce 1-2 partitions and idle the other cores. At
         # cluster scale this floor is a no-op (file bytes dominate).
-        .config("spark.sql.files.minPartitionNum",
-                str(int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)))
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.sql.files.minPartitionNum", str(cores))
+        .config("spark.ui.enabled", "false")
         # 16g: large heaps (48g+) measurably worsen GC pause variance in
         # local mode; 16g is ample for sf0.1 broadcasts + shuffles.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # r12 (optimization round) — measured knobs, each overridable:
+        # r12 (optimization round) — measured knobs; override any of
+        # them through extra_conf:
         #
         # Checkpoint-file checksums (new default-on in Spark 4.1) write
         # and await a .crc sidecar for EVERY state-store delta, offset
@@ -77,9 +82,10 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # the guard only detects silent checkpoint corruption —
         # redundant on checksumming/replicated storage (HDFS, S3,
         # zfs/btrfs). Spark ≤ 4.0 never had it. Deployments on raw
-        # disks that want it back set SPARK_GRAFT_CKPT_CHECKSUM=true.
+        # disks that want it back pass
+        # spark.sql.streaming.checkpoint.fileChecksum.enabled=true.
         .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-                os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+                "false")
         # ContextCleaner periodic GC: the default (30min) means a
         # shorter-lived session NEVER collects the JVM-side references
         # that keep finished queries' localCheckpoint blocks, broadcast
@@ -88,8 +94,7 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # lets the weak-ref ContextCleaner reclaim the storage). 90 s
         # bounds the leak window at every scale; the System.gc() it
         # triggers is a no-op burden on a healthy heap.
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "90s"))
+        .config("spark.cleaner.periodicGC.interval", "90s")
         # PySpark 4 wraps EVERY DataFrame/Column API call in a
         # call-site-capture decorator for error enrichment: per call it
         # reads a conf over py4j, walks the Python stack, and makes two
@@ -100,12 +105,12 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # region and inside every real caller's latency budget. The
         # cost is pure driver-side Python — it scales with plan width,
         # not data, so it is the same tax on a 100 TB cluster driver.
-        # Debugging deployments re-enable with SPARK_GRAFT_DF_DEBUG=true
-        # (the python-side flag is cached at first use, so it must be
-        # set before the first DataFrame op — which builder config
-        # guarantees).
-        .config("spark.python.sql.dataFrameDebugging.enabled",
-                os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"))
+        # Debugging deployments re-enable with
+        # spark.python.sql.dataFrameDebugging.enabled=true (a static
+        # conf, and the python-side flag is cached at first use, so it
+        # must be set before the first DataFrame op — which builder
+        # config guarantees).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # r13: let AQE size the partitions of plans that POPULATE a
         # cache (default false keeps a cached plan's output partitioning
         # stable so later queries can reuse it as a shuffle — a trade
@@ -119,9 +124,10 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # 9 × 64-task stages at local[32] carrying ~0.3 s of CPU each —
         # task-count ∝ cores, work ~0; guide §2.4/§2.2). With AQE
         # sizing, cached partitions follow bytes at every scale.
-        # Override: SPARK_GRAFT_CACHED_PLAN_AQE=false.
+        # Override: pass
+        # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                os.environ.get("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
+                "true")
         # r13: Hadoop's DEFAULT local filesystem (file:// →
         # ChecksumFileSystem / ChecksumFs) writes a ``.crc`` sidecar for
         # EVERY file it creates and doubles every rename — a THIRD
@@ -137,17 +143,14 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # scheme), and those stores carry their own server-side
         # checksums — which is exactly the redundancy argument. Local
         # deployments on raw disks that want Hadoop-client checksums
-        # back set SPARK_GRAFT_LOCALFS_CRC=true.
+        # back pass both
+        #   spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem
+        #   spark.hadoop.fs.AbstractFileSystem.file.impl=
+        #       org.apache.hadoop.fs.local.LocalFs
         .config("spark.hadoop.fs.file.impl",
-                "org.apache.hadoop.fs.LocalFileSystem"
-                if os.environ.get("SPARK_GRAFT_LOCALFS_CRC", "").lower()
-                in ("1", "true", "yes", "on")
-                else "org.apache.hadoop.fs.RawLocalFileSystem")
+                "org.apache.hadoop.fs.RawLocalFileSystem")
         .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-                "org.apache.hadoop.fs.local.LocalFs"
-                if os.environ.get("SPARK_GRAFT_LOCALFS_CRC", "").lower()
-                in ("1", "true", "yes", "on")
-                else "org.apache.hadoop.fs.local.RawLocalFs")
+                "org.apache.hadoop.fs.local.RawLocalFs")
         # Let the planner pick shuffled-hash join when its size
         # conditions hold instead of always preferring sort-merge
         # (optimization guide §3.1/§9: hash beats sort-merge when one
@@ -158,12 +161,11 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         # condition scales from the same threshold). Interleaved
         # min-of-6 A/B over the join-heavy headline queries: 9.47 s vs
         # 10.01 s total, direction consistent on 5 of 6 queries.
-        # Env-overridable like every other r12 knob: shuffled-hash
-        # cannot spill-sort its build side, so a deployment whose size
-        # estimates misfire reverts with SPARK_GRAFT_PREFER_SMJ=true
-        # instead of a code change.
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"))
+        # Shuffled-hash cannot spill-sort its build side, so a
+        # deployment whose size estimates misfire reverts with
+        # spark.sql.join.preferSortMergeJoin=true instead of a code
+        # change.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Above 32 paths (the default threshold) a file-source read
         # lists its directories in a Spark job, one task per path. The
         # bucketed KG table reads its bucket dirs by explicit path from
@@ -190,7 +192,7 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
     return spark
 
 
-def _worker_preload_confs(master: str | None = None) -> dict[str, str]:
+def _worker_preload_confs(master: str) -> dict[str, str]:
     """Python-worker preload confs (guide §4.5, hoisted one level
     further): the stock pyspark daemon forks workers that each pay the
     pandas+pyarrow import chain on their first Arrow/pandas task
@@ -220,9 +222,6 @@ def _worker_preload_confs(master: str | None = None) -> dict[str, str]:
     flag = os.environ.get("SPARK_GRAFT_WORKER_PRELOAD", "on").lower()
     if flag in ("off", "false", "0", "no"):
         return {}
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-        master = os.environ.get("SPARK_MASTER", f"local[{cpus or '*'}]")
     if not master.startswith("local") and flag != "force":
         return {}
     import importlib.util

@@ -27,11 +27,11 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    os.environ["SPARK_UI"] = "true"
     from dig_etl_engine_spark.session import get_spark
     from dig_etl_engine_spark import queries as registry
 
-    spark = get_spark("profile_query")
+    spark = get_spark("profile_query",
+                      extra_conf={"spark.ui.enabled": "true"})
     qmap = registry.queries()
     fn = qmap[name]
 

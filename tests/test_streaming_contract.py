@@ -113,15 +113,26 @@ def test_dead_process_scratch_roots_are_reaped(tmp_path, monkeypatch):
     assert other_live.exists()        # live pid untouched
 
 
-def test_malformed_stream_parts_env_names_the_variable(spark, monkeypatch):
+def test_stream_parts_scopes_confs_and_restores_them(spark):
+    # inside the scope: the fixture-scale stream partition count and no
+    # checkpoint checksums; on exit, normal or raising, the session's
+    # own values come back
     from dig_etl_engine_spark.queries_io import _stream_parts
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    for bad in ("", "sixteen", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", bad)
-        with pytest.raises(ValueError,
-                           match=f"SPARK_GRAFT_STREAM_PARTS={bad!r}"):
+    sp = "spark.sql.shuffle.partitions"
+    ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    orig = (spark.conf.get(sp), spark.conf.get(ck))
+    spark.conf.set(sp, "5")
+    spark.conf.set(ck, "true")
+    try:
+        with _stream_parts(spark):
+            assert (spark.conf.get(sp), spark.conf.get(ck)) == ("16", "false")
+        assert (spark.conf.get(sp), spark.conf.get(ck)) == ("5", "true")
+        with pytest.raises(RuntimeError, match="stream died"):
             with _stream_parts(spark):
-                pass
-    # refused before the scope touched the session conf
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+                assert spark.conf.get(sp) == "16"
+                raise RuntimeError("stream died")
+        assert (spark.conf.get(sp), spark.conf.get(ck)) == ("5", "true")
+    finally:
+        spark.conf.set(sp, orig[0])
+        spark.conf.set(ck, orig[1])

@@ -36,8 +36,7 @@ REPO = str(Path(__file__).resolve().parent.parent)
 class TestPreloadConfs:
     def test_default_emits_daemon_module_and_pythonpath(self, monkeypatch):
         monkeypatch.delenv("SPARK_GRAFT_WORKER_PRELOAD", raising=False)
-        monkeypatch.delenv("SPARK_MASTER", raising=False)
-        confs = _worker_preload_confs()
+        confs = _worker_preload_confs("local[4]")
         assert confs["spark.python.daemon.module"] == "dig_etl_worker_preload"
         # package parent on the worker path, existing PYTHONPATH kept
         assert REPO in confs["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
