@@ -184,8 +184,8 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
     epoch — writer A's sweep (keeping only A's tokens) deletes B's
     fully-written epoch an instant before B's pointer flip publishes
     it, leaving the pointer naming a deleted directory, and a
-    freshness-marker cache (``queries_corpus._scratch_path``
-    checks ``_CURRENT`` exists) would then treat the wreck as built
+    freshness-marker cache (the ``search_bm25_rank`` fixture checks
+    ``_CURRENT`` exists) would then treat the wreck as built
     forever. With the lock, builders serialize and the loser simply
     rebuilds over the winner's epoch (kept as its grace copy).
     ``refresh_bm25_stats`` already holds the lock and calls the

@@ -265,12 +265,15 @@ _PRIORITY_RECHECK: dict[str, int] = {
     # stream_session_windows, stream_ohlc_rollup,
     # stream_kmv_cardinality, stream_dedup_ingest_oracle) call neither
     # create_table_if_not_exists nor the stateful first-seen kernel, so
-    # no r12 executed-path change reaches them. Flat tables also skip
-    # the round's storage-protocol diff entirely (no pointer, no
-    # manifest, no staged epochs on a flat table; resolve_pointer is
-    # never called there, and its except-clause narrowing is
-    # extensionally identity on every healthy filesystem anyway: a
-    # missing pointer still raises FileNotFoundError → None).
+    # no r12 executed-path change reaches them. The four bootstrapping
+    # queries seed a flat zero-row table, and their first micro-batch
+    # migrates it to the bucketed, manifest-committed layout:
+    # upsert_partitioned is the KG table's one write path, and all four
+    # read back through read_partitioned (stream_file_upsert at the
+    # ingest default of 64 buckets, the other three at
+    # queries_io._FIXTURE_BUCKETS = 4). resolve_pointer's except-clause
+    # narrowing is extensionally identity on every healthy filesystem:
+    # a missing pointer still raises FileNotFoundError → None.
     # coarse_search_rank_materialized reads the _SUCCESS-markered
     # kw_index, not the pointer-epoch stats store. The guard file and
     # swept-gen sidecar are new root-level names no registered query
@@ -281,13 +284,12 @@ _PRIORITY_RECHECK: dict[str, int] = {
     # r11's own driver sweep, both re-verified green, and are subsumed
     # by their r12 entries above)
     # Deliberately NOT listed (r11, cannot move results):
-    # upsert_last_write_wins and the stream_* flat-table queries run
-    # through kg_table.upsert/create_table_if_not_exists, whose only
-    # r11 change is one extra name comparison in the bucketed-layout
-    # guard (f == _MANIFEST — always False on the flat tables those
-    # queries build), extensionally identity for every input they can
-    # see; the stream_* rows are r07-stale and sort into this round's
-    # window regardless.
+    # upsert_last_write_wins calls no kg_table function, and the
+    # stream_* queries that then wrote flat tables did so through a
+    # full-rewrite merge (since retired) whose only r11 change was one
+    # extra name comparison in its bucketed-layout guard — always
+    # False on the flat tables they built; the stream_* rows were
+    # r07-stale and sorted into that round's window regardless.
     # Deliberately NOT listed (r10, cannot move results): the round's
     # perf work rewrote four expression BUILDERS onto bind-once
     # evaluation (`functions/bindings.py`: ngram_hashes, dedup.shingles,

@@ -23,6 +23,8 @@ documented, not silently assumed).
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,19 +41,62 @@ from dig_etl_engine_spark.operators import text_analysis as TA
 from dig_etl_engine_spark.queries import register
 
 
-def _scratch_path(sf_dir: str, name: str, marker: str,
-                  source_table: str = "documents") -> tuple[str, bool]:
-    """(cache_dir, is_fresh) for a build-once index artifact, keyed on
-    the SOURCE table's (basename, mtime, size): rebuild when the corpus
-    regenerates; the marker file gates partial writes. Key on the table the
-    index actually derives from: an embeddings-backed index keyed on
-    documents would go silently stale if only embeddings regenerated."""
+def _scratch_path(sf_dir: str, name: str,
+                  source_table: str = "documents") -> str:
+    """Cache dir for a build-once fixture artifact, keyed on the SOURCE
+    table's (basename, mtime, size): rebuild when the corpus
+    regenerates. Key on the table the artifact actually derives from:
+    an embeddings-backed index keyed on documents would go silently
+    stale if only embeddings regenerated."""
     src = os.path.join(sf_dir, f"{source_table}.parquet")
     st = os.stat(src) if os.path.exists(src) else None
     tag = (f"{os.path.basename(os.path.normpath(sf_dir))}"
            f"-{int(st.st_mtime) if st else 0}-{st.st_size if st else 0}")
-    path = os.path.join("/tmp/spark_graft_io", name, tag)
-    return path, os.path.exists(os.path.join(path, marker))
+    return os.path.join("/tmp/spark_graft_io", name, tag)
+
+
+def _build_once(path: str, marker: str,
+                build: Callable[[str], None]) -> str:
+    """Return ``path``, first building it with ``build(dir)`` unless
+    its ``marker`` file shows a committed build. Safe against
+    concurrent builders and readers: the build goes to a pid-scoped
+    sibling dir and is renamed in, so a reader never sees a half-built
+    cache and a committed (marker-bearing) dir is never deleted or
+    overwritten. The loser of a build race keeps the winner's copy.
+
+    A crashed builder's partial (no marker) is renamed aside, then
+    re-checked before it is deleted: a peer may have renamed its
+    committed copy in between the first check and the rename, and
+    that copy goes back instead of being deleted."""
+    done = os.path.join(path, marker)
+    if os.path.exists(done):
+        return path
+    tmp = f"{path}.build-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    build(tmp)
+    try:
+        if os.path.isdir(path) and not os.path.exists(done):
+            trash = f"{path}.trash-{os.getpid()}"
+            try:
+                os.rename(path, trash)
+            except FileNotFoundError:
+                pass  # another builder already moved the partial
+            else:
+                if not os.path.exists(os.path.join(trash, marker)):
+                    shutil.rmtree(trash, ignore_errors=True)
+                else:
+                    try:
+                        os.rename(trash, path)  # grabbed a commit
+                    except OSError:
+                        # an equivalent committed copy already took the
+                        # slot (content-keyed dir, so identical)
+                        shutil.rmtree(trash, ignore_errors=True)
+        os.rename(tmp, path)
+    except OSError:
+        if not os.path.exists(done):
+            raise
+        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    return path
 
 
 # --- Gopher gates + n-gram repetition ----------------------------------------
@@ -650,10 +695,10 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     EQUIVALENCE contract: a complete minhash pass over corpus ∪ batch,
     restricted to batch-involving pairs and oriented batch-first — the
     same shape `test_incremental_dedup.py` pins."""
-    path, fresh = _scratch_path(sf_dir, "mh_index", "meta/_SUCCESS")
     docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
-    if not fresh:
-        D.materialize_minhash_index(docs, "text", path)
+    path = _build_once(
+        _scratch_path(sf_dir, "mh_index"), "meta/_SUCCESS",
+        lambda p: D.materialize_minhash_index(docs, "text", p))
     b1 = (docs.filter(F.col("doc_id") % 2 == 0)
           .select((F.col("doc_id") + 100000).alias("doc_id"),
                   F.concat("text", F.lit(_SFX)).alias("text")))
@@ -1669,12 +1714,12 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     `knn_ivf_indexed` and `incremental_embedding_dedup` (content-keyed
     scratch cache; the build is `operators/similarity.py:
     materialize_ivf_index` — cells physically partitionBy(cluster))."""
-    path, fresh = _scratch_path(sf_dir, "ivf_index", "centroids/_SUCCESS",
-                                source_table="embeddings")
-    if not fresh:
-        emb = load_tables(spark, sf_dir)["embeddings"]
-        S.materialize_ivf_index(emb, path, k=_IVF_K, iters=_IVF_ITERS)
-    return path
+    return _build_once(
+        _scratch_path(sf_dir, "ivf_index", source_table="embeddings"),
+        "centroids/_SUCCESS",
+        lambda p: S.materialize_ivf_index(
+            load_tables(spark, sf_dir)["embeddings"], p,
+            k=_IVF_K, iters=_IVF_ITERS))
 
 
 def _knn_indexed_sql() -> str:

@@ -100,6 +100,16 @@ _STREAM_CONF_LOCK = threading.Lock()
 # 8-vs-16 interleaved A/B where 16 won both pairs.
 _STREAM_PARTS = 16
 
+# Bucket count of the KG tables the curation stream fixtures write
+# (stream_dedup_ingest, stream_decontaminate_ingest, stream_e2e_curation).
+# Fixture tables hold a few thousand rows, so the ingest default of 64
+# buckets is mostly per-bucket file overhead. Median of 5 runs after a
+# warm-up at sf0.1, local[4] on a 4-core host: stream_e2e_curation
+# 14.73 s at 64 buckets, 9.52 s at 4 (9.72 s on the retired flat
+# full-rewrite merge); stream_decontaminate_ingest 2.46 s / 2.13 s
+# (flat 1.89 s); stream_dedup_ingest 5.62 s / 5.55 s (flat 5.17 s).
+_FIXTURE_BUCKETS = 4
+
 
 @contextmanager
 def _stream_parts(spark: SparkSession):
@@ -758,7 +768,7 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dig_etl_engine_spark.operators.dedup import (
         materialize_minhash_index)
     from dig_etl_engine_spark.sinks.kg_table import (
-        create_table_if_not_exists)
+        create_table_if_not_exists, read_partitioned)
     from dig_etl_engine_spark.streaming.ingest import (
         file_stream_source, run_dedup_ingest)
 
@@ -795,10 +805,9 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             file_stream_source(spark, in_dir, schema),
             target_path=target, quarantine_path=quarantine,
             checkpoint_dir=ckpt, index_path=index, threshold=0.5,
-            buckets=None)
+            buckets=_FIXTURE_BUCKETS)
         q.awaitTermination()
-    return (spark.read.parquet(target)
-            .select(F.col("doc_id")))
+    return read_partitioned(spark, target).select(F.col("doc_id"))
 
 
 @register(
@@ -842,7 +851,7 @@ def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str
     operators; the oracle replays the gram overlap and the anti-join."""
     from dig_etl_engine_spark.operators.text_analysis import decontaminate
     from dig_etl_engine_spark.sinks.kg_table import (
-        create_table_if_not_exists)
+        create_table_if_not_exists, read_partitioned)
     from dig_etl_engine_spark.streaming.ingest import (
         file_stream_source, run_ingest)
 
@@ -870,9 +879,10 @@ def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str
     with _stream_parts(spark):
         q = run_ingest(file_stream_source(spark, in_dir, schema),
                        target_path=target, quarantine_path=quarantine,
-                       checkpoint_dir=ckpt, transform=gate, buckets=None)
+                       checkpoint_dir=ckpt, transform=gate,
+                       buckets=_FIXTURE_BUCKETS)
         q.awaitTermination()
-    return spark.read.parquet(target).select("doc_id")
+    return read_partitioned(spark, target).select("doc_id")
 
 
 @register(
@@ -952,8 +962,10 @@ def stream_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     global min-offset (batch-order nondeterminism excluded); the
     oracle replays all four stages relationally."""
     from dig_etl_engine_spark.operators.text_analysis import decontaminate
+    from dig_etl_engine_spark.queries_corpus import (
+        _build_once, _scratch_path)
     from dig_etl_engine_spark.sinks.kg_table import (
-        create_table_if_not_exists, upsert)
+        create_table_if_not_exists, read_partitioned, upsert_partitioned)
     from dig_etl_engine_spark.streaming.ingest import file_stream_source
     from dig_etl_engine_spark.streaming.stateful import (
         first_seen_dedup_stream)
@@ -977,62 +989,16 @@ def stream_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the content-keyed build-once cache (same contract as the minhash /
     # IVF index fixtures) — the checkpoint and target stay per-call: the
     # stream's STATE must replay fresh each run, only the input bytes
-    # are reusable
-    from dig_etl_engine_spark.queries_corpus import _scratch_path
-    # the cache key carries a fingerprint of the fixture's ANALYZED plan
-    # (attribute ids stripped — they vary per session) so editing the
-    # fixture expression invalidates the cache automatically; the data
-    # dependency is covered by _scratch_path's (mtime, size) key
+    # are reusable. The cache key carries a fingerprint of the fixture's
+    # ANALYZED plan (attribute ids stripped — they vary per session) so
+    # editing the fixture expression invalidates the cache automatically;
+    # the data dependency is covered by _scratch_path's (mtime, size) key
     import hashlib
     import re as _re
     plan = src._jdf.queryExecution().analyzed().toString()
     tag = hashlib.md5(_re.sub(r"#\d+", "", plan).encode()).hexdigest()[:10]
-    in_dir, fresh = _scratch_path(sf_dir, f"e2e_in-{tag}", "_SUCCESS")
-    if not fresh:
-        # build-aside + atomic rename: a concurrent process may be
-        # READING a committed cache dir while this one decides to
-        # (re)build — mode('overwrite') straight onto in_dir would
-        # delete it under the reader. Build into a pid-scoped temp dir
-        # and rename in; the loser of a build race keeps the winner's
-        # committed copy. A committed (_SUCCESS-bearing) dir is never
-        # deleted or overwritten.
-        tmp = in_dir + f".build-{os.getpid()}"
-        src.write.mode("overwrite").json(tmp)
-        try:
-            if os.path.isdir(in_dir) and not os.path.exists(
-                    os.path.join(in_dir, "_SUCCESS")):
-                # crashed partial, never committed — but between the
-                # _SUCCESS check and a direct rmtree a concurrent
-                # builder could rename ITS committed copy into in_dir,
-                # and the rmtree would delete a live committed dir
-                # under its readers (external review r7, TOCTOU).
-                # Rename the suspect aside first (atomic), then RE-CHECK
-                # the renamed dir: if it turned out to be a committed
-                # copy that landed after the first check, put it back
-                # instead of deleting it (the r8 review's completion of
-                # the fix — rename-aside alone only narrowed the window,
-                # it could still grab and destroy a winner's commit).
-                # Only a RE-verified uncommitted partial is deleted.
-                trash = in_dir + f".trash-{os.getpid()}"
-                try:
-                    os.rename(in_dir, trash)
-                except FileNotFoundError:
-                    pass  # another builder already trashed the partial
-                else:
-                    if os.path.exists(os.path.join(trash, "_SUCCESS")):
-                        try:
-                            os.rename(trash, in_dir)  # grabbed a commit
-                        except OSError:
-                            # an equivalent committed copy already took
-                            # the slot (content-keyed dir ⇒ identical)
-                            shutil.rmtree(trash, ignore_errors=True)
-                    else:
-                        shutil.rmtree(trash, ignore_errors=True)
-            os.rename(tmp, in_dir)
-        except OSError:
-            if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    in_dir = _build_once(_scratch_path(sf_dir, f"e2e_in-{tag}"), "_SUCCESS",
+                         lambda p: src.write.mode("overwrite").json(p))
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
@@ -1045,7 +1011,8 @@ def stream_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         survivors = batch.select("doc_id", "text", "kafka_offset")
         clean = survivors.join(decontaminate(survivors, evals, n=13),
                                "doc_id", "left_anti")
-        upsert(batch.sparkSession, target, clean)
+        upsert_partitioned(batch.sparkSession, target, clean,
+                           buckets=_FIXTURE_BUCKETS)
 
     deduped = first_seen_dedup_stream(
         file_stream_source(spark, in_dir, schema),
@@ -1060,7 +1027,7 @@ def stream_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = F.split(F.trim(safe_lower(F.col("text"))), " ")
     nmatch = lambda w: F.size(F.filter(toks, lambda t: t == F.lit(w)))  # noqa: E731
-    return (spark.read.parquet(target)
+    return (read_partitioned(spark, target)
             .select("doc_id",
                     (2 * nmatch("spark") + nmatch("join"))
                     .cast("long").alias("score"))

@@ -9,6 +9,8 @@ restate the weighted-match scoring arithmetic directly in SQL.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,19 +134,17 @@ def coarse_search_rank_materialized(spark: SparkSession,
     then every query's `field IN (fan-out)` pre-filter becomes parquet
     partition pruning, reading only its fields' directories. Same answer
     as `coarse_search_rank`; test_plan_quality pins the pruned scan."""
-    import shutil
-
     from dig_etl_engine_spark.functions.kg import (
         load_index, materialize_index)
-    from dig_etl_engine_spark.queries_corpus import _scratch_path
+    from dig_etl_engine_spark.queries_corpus import (
+        _build_once, _scratch_path)
 
     docs = load_tables(spark, sf_dir)["documents"]
     # build-once semantics, like the production index lifecycle: the
     # corpus build materializes, every query after that only reads.
-    path, fresh = _scratch_path(sf_dir, "kw_index", "_SUCCESS")
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        materialize_index(build_keyword_index(spark, docs), path)
+    path = _build_once(
+        _scratch_path(sf_dir, "kw_index"), "_SUCCESS",
+        lambda p: materialize_index(build_keyword_index(spark, docs), p))
     index = load_index(spark, path)
     query = {
         "clauses": [
@@ -411,8 +411,8 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir)["documents"]
     terms = ["hash", "window"]
-    path, fresh = _scratch_path(sf_dir, "bm25_stats", "_CURRENT")
-    if not fresh:
+    path = _scratch_path(sf_dir, "bm25_stats")
+    if not os.path.exists(os.path.join(path, "_CURRENT")):
         # no pre-wipe: the build is lock-serialized and epoch-committed
         # (a concurrent builder's epoch must not be rmtree'd from under
         # its pointer flip — r11 round-close review); partial litter

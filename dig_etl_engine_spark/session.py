@@ -41,8 +41,11 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
 
     ``extra_conf`` overrides any conf the builder sets below."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if cpus and not (cpus.isdigit() and int(cpus) > 0):
+        raise ValueError(f"SPARK_GRAFT_CPUS={cpus!r} is not a positive "
+                         "integer; set a core count or unset it")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus or '*'}]")
-    cores = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
+    cores = int(cpus) if cpus else (os.cpu_count() or 8)
 
     b = (
         SparkSession.builder.master(master)
@@ -219,7 +222,12 @@ def _worker_preload_confs(master: str) -> dict[str, str]:
     driver ``find_spec`` for an installed copy) protects against an
     un-importable module, which (unlike a failed PRELOAD import,
     swallowed inside the module) would break worker startup outright."""
-    flag = os.environ.get("SPARK_GRAFT_WORKER_PRELOAD", "on").lower()
+    raw = os.environ.get("SPARK_GRAFT_WORKER_PRELOAD", "on")
+    flag = raw.lower()
+    if flag not in ("on", "off", "false", "0", "no", "force"):
+        raise ValueError(
+            f"SPARK_GRAFT_WORKER_PRELOAD={raw!r} is not one of "
+            "on/off/false/0/no/force")
     if flag in ("off", "false", "0", "no"):
         return {}
     if not master.startswith("local") and flag != "force":

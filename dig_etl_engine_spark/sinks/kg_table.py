@@ -12,11 +12,12 @@ Reference:
 
 Design: the KG table is a parquet directory (Delta's ``MERGE INTO`` is the
 drop-in production upgrade — same call shape — but Delta isn't in this
-container, so upsert = read ∪ dedupe ∪ atomic-rename rewrite). Last-write-
-wins ordering uses an explicit ``order_col`` (kafka offset / batch id):
-ES's behavior is "later write replaces earlier", which in a parallel engine
-MUST be made explicit or batch-internal ordering is nondeterministic
-(SURVEY §4 R5; ``etk_worker.py:133-134`` sends synchronously per doc).
+container, so upsert = read touched buckets ∪ dedupe ∪ manifest-committed
+rewrite). Last-write-wins ordering uses an explicit ``order_col`` (kafka
+offset / batch id): ES's behavior is "later write replaces earlier", which
+in a parallel engine MUST be made explicit or batch-internal ordering is
+nondeterministic (SURVEY §4 R5; ``etk_worker.py:133-134`` sends
+synchronously per doc).
 
 On-disk format of the bucketed table (one format; every entry point
 reads and writes only this):
@@ -33,8 +34,10 @@ reads and writes only this):
   * ``.kg_swept_gen`` — the advisory swept-generation sidecar;
   * ``KG_NAIVE_READ_GUARD`` — present while any live dir is hidden.
 
-A table with no manifest is flat (``create_table_if_not_exists`` /
-plain ``upsert``) and migrates on its first ``upsert_partitioned``.
+``upsert_partitioned`` is the only way rows get into a table. A table
+with no manifest is flat — a ``create_table_if_not_exists`` seed, or a
+table an older build wrote with rows — and migrates on its first
+``upsert_partitioned``.
 ``_kb=`` dirs without a manifest, and a manifest that is not v2 with a
 bucket count and the widened hash, are retired formats: every entry
 point refuses them with a ``ValueError`` and leaves their files alone.
@@ -366,8 +369,9 @@ def _write_empty_seed(path: str, schema: T.StructType) -> None:
         {b"org.apache.spark.sql.parquet.row.metadata":
          schema.json().encode()})
     # reclaim crashed predecessors' staging dirs (recomputable garbage;
-    # same entry-time sweep discipline as _recover_upsert's .__tmp__*,
-    # and like that sweep it runs under the table lock)
+    # same entry-time sweep discipline as the bucketed table's
+    # .upsert_tmp_* staging, and like that sweep it runs under the
+    # table lock)
     for stale in glob_mod.glob(glob_mod.escape(path) + ".__seed__*"):
         shutil.rmtree(stale, ignore_errors=True)
     if os.path.isdir(path):
@@ -447,86 +451,21 @@ def dedupe_last_write_wins(df: DataFrame, key_col: str = "doc_id",
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def _recover_upsert(target_path: str) -> None:
-    """Heal the rename-aside swap window (:func:`_swap_upsert`) and
-    sweep its leftovers — called by the plain :func:`upsert`, the flat
-    table's commit protocol. A crash between
-    the two renames leaves ``.__old__`` holding the only complete copy
-    — restore it (the interrupted write replays via foreachBatch / the
-    caller's retry / the next maintenance run). A crash AFTER the
-    second rename but before the final cleanup leaves a committed
-    target plus a stale ``.__old__`` — drop the stale copy here (safe:
-    renames are atomic, so a present target is always complete;
-    without this sweep a consumer that never reaches its next swap —
-    e.g. a stats refresh that keeps finding the snapshot fresh — would
-    leak the full aside copy forever). Orphaned ``.__tmp__*`` write
-    dirs are recomputable and dropped."""
+def _refuse_stranded_aside(target_path: str) -> None:
+    """Refuse a table whose only complete copy sits at
+    ``<table>.__old__``. Older builds committed flat tables with a
+    rename-aside swap (table aside, merged copy in); a crash between
+    the two renames left the aside as the only copy, and nothing heals
+    it any more. Going on would let a writer create a new table from
+    one batch, or a reader serve nothing, while the real table sits
+    ignored beside it. Touches no file."""
     old = target_path + ".__old__"
-    if os.path.isdir(old):
-        if not os.path.isdir(target_path):
-            logger.warning("upsert: restoring %s from interrupted swap",
-                           target_path)
-            os.rename(old, target_path)
-        else:
-            shutil.rmtree(old, ignore_errors=True)
-    for stale in glob_mod.glob(glob_mod.escape(target_path)
-                               + ".__tmp__*"):
-        shutil.rmtree(stale, ignore_errors=True)
-
-
-def upsert(spark: SparkSession, target_path: str, batch: DataFrame, *,
-           key_col: str = "doc_id", order_col: str = "kafka_offset",
-           lock_timeout: float = 300.0) -> None:
-    """K2: MERGE the batch into the parquet KG table by key.
-
-    Existing rows keep their stored ``order_col`` and compete with the
-    batch under the same last-write-wins rule — so the outcome is a pure
-    function of (key, order), independent of how a stream chopped the
-    records into micro-batches, and batch replays are idempotent. The
-    rewrite goes to a temp dir and swaps in rename-aside style (previous
-    table moves to ``.__old__`` BEFORE the new one moves in): no crash
-    point leaves zero complete copies on disk — a delete-then-rename
-    swap has a window where the only table is gone and a replaying
-    stream would silently rebuild from one batch.
-    :func:`_recover_upsert` heals the between-renames window on entry,
-    and the whole read→merge→swap runs under :func:`table_lock` so a
-    second concurrent writer merges against the committed result
-    instead of silently dropping this batch (lost update)."""
-    if os.path.isdir(target_path) and any(
-            f.startswith("_kb=") or f == _MANIFEST
-            for f in os.listdir(target_path)):
+    if not os.path.isdir(target_path) and os.path.isdir(old):
         raise ValueError(
-            f"upsert: {target_path} is a bucket-partitioned table "
-            "(_kg_manifest / _kb= layout) — use upsert_partitioned, which "
-            "preserves the layout and its O(touched) merge; the plain "
-            "upsert would silently flatten it")
-    with table_lock(target_path, timeout=lock_timeout):
-        _recover_upsert(target_path)
-        batch = dedupe_last_write_wins(batch, key_col, order_col)
-        if os.path.isdir(target_path):
-            existing = spark.read.parquet(target_path)
-            merged = dedupe_last_write_wins(
-                existing.unionByName(batch, allowMissingColumns=True),
-                key_col, order_col)
-        else:
-            merged = batch
-        tmp = f"{target_path}.__tmp__{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_upsert(target_path, tmp)
-
-
-def _swap_upsert(target_path: str, tmp: str) -> None:
-    """Pure-filesystem commit of the plain :func:`upsert`: previous
-    table aside to ``.__old__``, merged copy in, aside copy dropped.
-    Module-level (not inline) so the crash-fuzz suite can inject a
-    fault at every single fs op without a Spark write per iteration —
-    the same design as :mod:`webdataset`'s ``_swap_export``."""
-    old = target_path + ".__old__"
-    if os.path.isdir(target_path):
-        shutil.rmtree(old, ignore_errors=True)  # stale committed copy
-        os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old, ignore_errors=True)
+            f"{target_path} does not exist but {old} does: an older "
+            "build crashed mid-swap and the aside holds the only "
+            f"complete copy of the table. Rename {old} back to "
+            f"{target_path}, then retry.")
 
 
 # ---------------------------------------------------------------------------
@@ -877,8 +816,8 @@ def _commit_buckets(target_path: str, new_dirs: dict[int, str], *,
     ``target_path``) with ONE atomic manifest replace, then sweep dirs
     the new manifest no longer references.
 
-    Replaces the per-bucket rename-aside swap (``_swap_upsert_buckets``
-    pre-r11): that protocol had a between-renames instant per bucket
+    Replaces the per-bucket rename-aside swap of the pre-r11
+    bucketed table: that protocol had a between-renames instant per bucket
     where the bucket dir was absent and external readers saw a
     missing root; here data dirs never move after being written, only
     the manifest flips, so every resolve-time view is a complete
@@ -1097,16 +1036,19 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
                        order_col: str = "kafka_offset",
                        buckets: int = 64,
                        lock_timeout: float = 300.0) -> None:
-    """K2 at scale: MERGE into a hash-bucket-partitioned KG table,
-    rewriting ONLY the partitions the batch touches. The whole
-    read→merge→swap runs under :func:`table_lock` (see :func:`upsert`
-    for the lost-update scenario it closes — here the overlap partner
-    is typically a nightly ``compact_partitioned``/
+    """K2: MERGE the batch into the hash-bucket-partitioned KG table by
+    key, rewriting ONLY the partitions the batch touches — the one way
+    rows get into a KG table. Existing rows keep their stored
+    ``order_col`` and compete with the batch under the same
+    last-write-wins rule, so the outcome is a pure function of (key,
+    order), independent of how a stream chopped the records into
+    micro-batches, and batch replays are idempotent. The whole
+    read→merge→swap runs under :func:`table_lock` (see there for the
+    lost-update scenario it closes — the overlap partner is a second
+    ingest or a nightly ``compact_partitioned``/
     ``rebucket_partitioned`` run against a live ingest).
 
-    The plain :func:`upsert` rereads + rewrites the whole table per batch —
-    fine for tests, quadratic over a day of micro-batches at 100 TB. Here
-    rows live in one directory per bucket ``pmod(xxhash64(key),
+    Rows live in one directory per bucket ``pmod(xxhash64(key),
     buckets)`` (uniform — no skewed dirs), named by the table's
     manifest (the on-disk format is in the module docstring), and the
     merge:
@@ -1152,8 +1094,9 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     with :func:`rebucket_partitioned`.
 
     A retired on-disk format (``_kb=`` dirs without a manifest, or a
-    manifest that is not v2 with a bucket count and the widened hash)
-    raises ``ValueError`` before anything on disk changes."""
+    manifest that is not v2 with a bucket count and the widened hash),
+    or a missing table whose ``<table>.__old__`` aside an older build
+    stranded, raises ``ValueError`` before anything on disk changes."""
     with table_lock(target_path, timeout=lock_timeout):
         _upsert_partitioned_locked(spark, target_path, batch,
                                    key_col=key_col, order_col=order_col,
@@ -1205,9 +1148,7 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
     coerce the union up and rewrite those buckets at the wider parquet
     type — the table became cross-bucket schema-inconsistent and
     ``read_partitioned`` failed with PARQUET_COLUMN_DATA_TYPE_MISMATCH
-    on the next read touching both widths. (The plain ``upsert`` is
-    immune: it rewrites the WHOLE table, so its schema evolves
-    atomically.)
+    on the next read touching both widths.
 
     Same-family numeric drift aligns via a GUARDED ``try_cast``: a
     value that does not fit the table's type raises at execution
@@ -1309,6 +1250,7 @@ def _check_key_family(batch_df: DataFrame, table_df: DataFrame,
 def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                                batch: DataFrame, *, key_col: str,
                                order_col: str, buckets: int) -> None:
+    _refuse_stranded_aside(target_path)
     # recovery FIRST: it returns the table's parsed manifest (the one
     # parse this entry pays — the dominant fast-path cost at large
     # bucket counts) plus whether the fast path was taken
@@ -1321,8 +1263,8 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
         buckets = m["buckets"]
 
     # Migration / crash-recovery: flat root *.parquet files exist when the
-    # table is a create_table bootstrap, was built by the plain upsert, OR
-    # a previous migration crashed between its partitioned write and its
+    # table is a create_table bootstrap, was written with rows by an
+    # older build's flat full-rewrite merge, OR a previous migration crashed between its partitioned write and its
     # cleanup (flat files beside a committed manifest). Fold ALL flat
     # rows into this batch BEFORE computing touched buckets — their
     # buckets then rewrite with the merge — and delete the flat files
@@ -1754,18 +1696,18 @@ def read_partitioned(spark: SparkSession, target_path: str) -> DataFrame:
     concurrent upsert/compaction never makes a bucket transiently
     invisible) by explicit path, so stray flat files awaiting the next
     upsert's migration never mix into the read. A table with no
-    manifest is flat and reads as one parquet dir; a table mid-rebucket
-    swap (the whole dir briefly aside) reads from its
-    ``.rebucket_old`` copy, and a flat table mid plain-upsert swap from
-    its ``.__old__`` copy. A retired on-disk format raises
-    ``ValueError`` (see :func:`_load_manifest`)."""
-    if not os.path.isdir(target_path):
-        # mid-swap fallbacks: the retired copy is the only complete
-        # table during the instant between a swap's two renames
-        for aside in (".rebucket_old", ".__old__"):
-            if os.path.isdir(target_path + aside):
-                target_path = target_path + aside
-                break
+    manifest is flat (a seed, or an older build's table awaiting its
+    migration) and reads as one parquet dir; a table mid-rebucket swap
+    (the whole dir briefly aside) reads from its ``.rebucket_old``
+    copy. A retired on-disk format raises ``ValueError`` (see
+    :func:`_load_manifest`), and so does a missing table beside an
+    older build's stranded ``.__old__`` aside."""
+    _refuse_stranded_aside(target_path)
+    if not os.path.isdir(target_path) and \
+            os.path.isdir(target_path + ".rebucket_old"):
+        # mid-swap fallback: the retired copy is the only complete
+        # table during the instant between the swap's two renames
+        target_path += ".rebucket_old"
     dirs = _effective_bucket_dirs(target_path)
     if dirs:
         # explicit per-dir roots (no basePath): no _kb partition column

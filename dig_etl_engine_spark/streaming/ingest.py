@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from dig_etl_engine_spark.sinks.kg_table import upsert, upsert_partitioned
+from dig_etl_engine_spark.sinks.kg_table import upsert_partitioned
 
 
 def kafka_source(spark: SparkSession, *, bootstrap_servers: str,
@@ -101,7 +101,7 @@ def run_ingest(source: DataFrame, *, target_path: str,
                transform: Callable[[DataFrame], DataFrame] | None = None,
                key_col: str = "doc_id", order_col: str = "kafka_offset",
                available_now: bool = True,
-               buckets: int | None = 64) -> StreamingQuery:
+               buckets: int = 64) -> StreamingQuery:
     """The full ingest leg: validate → (optional per-batch transform, i.e.
     the module pipeline) → upsert valid docs / quarantine invalid ones.
 
@@ -109,12 +109,11 @@ def run_ingest(source: DataFrame, *, target_path: str,
     retry: the KG merge is a pure function of (key, order), and the
     quarantine write replaces its own ``_batch_id`` partition.
 
-    ``buckets`` selects the hash-bucket-partitioned merge
-    (:func:`~dig_etl_engine_spark.sinks.kg_table.upsert_partitioned`,
-    O(touched buckets) per batch) — the default, because a streaming table
-    grows unboundedly and the plain full-rewrite :func:`upsert` is
-    O(table) per micro-batch. Pass ``buckets=None`` only for tiny
-    bounded tables.
+    Valid docs merge through the hash-bucket-partitioned
+    :func:`~dig_etl_engine_spark.sinks.kg_table.upsert_partitioned`
+    (O(touched buckets) per batch), the KG table's one write path.
+    ``buckets`` is the bucket count a new table is born with; an
+    existing table keeps the count in its manifest.
     """
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -128,13 +127,9 @@ def run_ingest(source: DataFrame, *, target_path: str,
             valid = batch.filter(valid_pred)
             if transform is not None:
                 valid = transform(valid)
-            if buckets:
-                upsert_partitioned(spark, target_path, valid,
-                                   key_col=key_col, order_col=order_col,
-                                   buckets=buckets)
-            else:
-                upsert(spark, target_path, valid,
-                       key_col=key_col, order_col=order_col)
+            upsert_partitioned(spark, target_path, valid,
+                               key_col=key_col, order_col=order_col,
+                               buckets=buckets)
         finally:
             batch.unpersist()
 
@@ -155,7 +150,7 @@ def run_dedup_ingest(source: DataFrame, *, target_path: str,
                      order_col: str = "kafka_offset",
                      threshold: float = 0.6,
                      max_bucket: int | None = None,
-                     buckets: int | None = 64) -> StreamingQuery:
+                     buckets: int = 64) -> StreamingQuery:
     """Streaming ingest with online NEAR-dup suppression — the
     first-seen-dedup idea (streaming/stateful.py) upgraded from exact
     fingerprints to minhash similarity, backed by the persisted band
@@ -199,13 +194,9 @@ def run_dedup_ingest(source: DataFrame, *, target_path: str,
                         .select(F.col("doc_b").alias(key_col)))
                     .distinct())
             survivors = valid.join(drop, key_col, "left_anti")
-            if buckets:
-                upsert_partitioned(spark, target_path, survivors,
-                                   key_col=key_col, order_col=order_col,
-                                   buckets=buckets)
-            else:
-                upsert(spark, target_path, survivors,
-                       key_col=key_col, order_col=order_col)
+            upsert_partitioned(spark, target_path, survivors,
+                               key_col=key_col, order_col=order_col,
+                               buckets=buckets)
         finally:
             batch.unpersist()
 

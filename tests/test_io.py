@@ -338,10 +338,10 @@ class TestUpsert:
             [("a", 1, "old"), ("b", 2, "keep")], self.SCHEMA)
         b2 = spark.createDataFrame(
             [("a", 10, "new"), ("c", 3, "add")], self.SCHEMA)
-        kg_table.upsert(spark, p, b1)
-        kg_table.upsert(spark, p, b2)
+        kg_table.upsert_partitioned(spark, p, b1, buckets=4)
+        kg_table.upsert_partitioned(spark, p, b2, buckets=4)
         got = {r.doc_id: (r.kafka_offset, r.v)
-               for r in spark.read.parquet(p).collect()}
+               for r in kg_table.read_partitioned(spark, p).collect()}
         assert got == {"a": (10, "new"), "b": (2, "keep"), "c": (3, "add")}
 
     def test_stale_replay_does_not_regress(self, spark, tmp_path):
@@ -350,16 +350,16 @@ class TestUpsert:
         p = str(tmp_path / "t")
         new = spark.createDataFrame([("a", 10, "new")], self.SCHEMA)
         old = spark.createDataFrame([("a", 1, "old")], self.SCHEMA)
-        kg_table.upsert(spark, p, new)
-        kg_table.upsert(spark, p, old)
-        assert spark.read.parquet(p).collect()[0].v == "new"
+        kg_table.upsert_partitioned(spark, p, new, buckets=4)
+        kg_table.upsert_partitioned(spark, p, old, buckets=4)
+        assert kg_table.read_partitioned(spark, p).collect()[0].v == "new"
 
     def test_within_batch_dedupe(self, spark, tmp_path):
         p = str(tmp_path / "t")
         b = spark.createDataFrame(
             [("a", 1, "x"), ("a", 5, "y"), ("a", 3, "z")], self.SCHEMA)
-        kg_table.upsert(spark, p, b)
-        rows = spark.read.parquet(p).collect()
+        kg_table.upsert_partitioned(spark, p, b, buckets=4)
+        rows = kg_table.read_partitioned(spark, p).collect()
         assert len(rows) == 1 and rows[0].v == "y"
 
     def test_partitioned_upsert_mixed_key_widths_merge(
@@ -387,8 +387,9 @@ class TestUpsert:
 
     def test_partitioned_upsert_stray_flat_files_mixed_width(
             self, spark, tmp_path):
-        """Flat bootstrap rows (plain upsert) with INT keys folded into
-        a LONG-keyed partitioned batch: the stray frame must get a
+        """Flat rows (an older build's flat table, written directly
+        here) with INT keys folded into a LONG-keyed partitioned batch:
+        the stray frame must get a
         bucket expression built from ITS OWN dtype (r8 review — the
         batch-derived expression would hash the stray column unwidened
         into the wrong partition), so the same logical key collapses to
@@ -397,7 +398,7 @@ class TestUpsert:
         flat = spark.createDataFrame(
             [(0, 1, "flat"), (7, 1, "flat")],
             "doc_id int, kafka_offset long, v string")
-        kg_table.upsert(spark, p, flat)      # flat root layout
+        flat.write.parquet(p)                # flat root layout
         batch = spark.createDataFrame(
             [(0, 10, "new"), (5, 2, "add")],
             "doc_id long, kafka_offset long, v string")
@@ -523,13 +524,13 @@ class TestStreamingIngest:
         assert spark.read.parquet(qdir).count() == 3
 
     def test_flat_table_migrates_to_bucketed(self, spark, tmp_path):
-        """upsert_partitioned over a flat (bootstrap or plain-upsert)
-        table folds the flat rows in and converges the layout to
-        manifest-routed bucket dirs."""
+        """upsert_partitioned over a flat table that holds rows (an
+        older build's table, written directly here) folds the flat rows
+        in and converges the layout to manifest-routed bucket dirs."""
         p = str(tmp_path / "t")
         schema = TestUpsert.SCHEMA
-        kg_table.upsert(spark, p, spark.createDataFrame(
-            [("a", 1, "old"), ("b", 2, "keep")], schema))
+        spark.createDataFrame(
+            [("a", 1, "old"), ("b", 2, "keep")], schema).write.parquet(p)
         kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
             [("a", 10, "new"), ("c", 3, "add")], schema), buckets=8)
         got = {r.doc_id: (r.kafka_offset, r.v)
@@ -2133,9 +2134,10 @@ class TestDurabilityAndLayoutGuards:
         rep = kg_table.layout_report(p)
         assert rep["era"] == "manifest" and rep["live_hidden"] == 0
         assert rep["findings"] == []
-        # a flat table, and a retired format: classified, never raised
+        # a flat table (an older build's, written directly), and a
+        # retired format: classified, never raised
         flat = str(tmp_path / "flat")
-        kg_table.upsert(spark, flat, self._batch(spark, [(1, "b", 0)]))
+        self._batch(spark, [(1, "b", 0)]).write.parquet(flat)
         rep = kg_table.layout_report(flat)
         assert rep["era"] == "flat" and rep["findings"] == []
         retired = str(tmp_path / "retired")
@@ -2541,10 +2543,10 @@ class TestSwapCrashExhaustive:
 
 
 class TestKgTableCrashSafety:
-    """Crash safety of the KG upsert sinks: rename-aside swap for the
-    plain upsert, the manifest commit for the partitioned merge (no
-    dynamic-overwrite delete window), recovery sweeps, the
-    bucketed-table guard, the already-compact skip, and glob-metachar
+    """Crash safety of the KG table's one write path: the manifest
+    commit for the partitioned merge (no dynamic-overwrite delete
+    window), recovery sweeps, the refusal of an older build's stranded
+    flat-swap aside, the already-compact skip, and glob-metachar
     paths."""
 
     def _batch(self, spark, ids, off=0):
@@ -2552,30 +2554,41 @@ class TestKgTableCrashSafety:
             [(i, f"text {i}", i + off) for i in ids],
             "doc_id LONG, text STRING, kafka_offset LONG")
 
-    def test_plain_upsert_recovers_from_torn_swap(self, spark, tmp_path):
-        from dig_etl_engine_spark.sinks.kg_table import upsert
-        t = str(tmp_path / "kg")
-        upsert(spark, t, self._batch(spark, range(10)))
-        # simulate the between-renames crash: table aside, no new copy
-        os.rename(t, t + ".__old__")
-        # plus an orphaned tmp dir from the dead write
-        os.makedirs(t + ".__tmp__dead")
-        upsert(spark, t, self._batch(spark, [100]))
-        got = {r["doc_id"] for r in
-               spark.read.parquet(t).collect()}
-        assert got == set(range(10)) | {100}  # old rows NOT lost
-        assert not os.path.isdir(t + ".__old__")
-        assert not os.path.isdir(t + ".__tmp__dead")
-
-    def test_plain_upsert_rejects_bucketed_table(self, spark, tmp_path):
-        import pytest as _pytest
+    def test_stranded_old_aside_is_refused_untouched(self, spark,
+                                                     tmp_path):
+        """An older build's flat-table swap could crash between its two
+        renames, leaving <table>.__old__ as the only complete copy.
+        Nothing heals that any more, so the writer must not create a
+        new table from one batch beside it, nor the reader serve an
+        empty result: both raise, name both paths, say how to fix it,
+        and leave every file as it was."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            upsert, upsert_partitioned)
-        t = str(tmp_path / "kgb")
-        upsert_partitioned(spark, t, self._batch(spark, range(5)),
-                           buckets=4)
-        with _pytest.raises(ValueError, match="upsert_partitioned"):
-            upsert(spark, t, self._batch(spark, [9]))
+            read_partitioned, upsert_partitioned)
+        t = str(tmp_path / "kg")
+        self._batch(spark, range(10)).write.parquet(t + ".__old__")
+
+        def snapshot():
+            out = {}
+            for root, dirs, files in os.walk(tmp_path):
+                for d in dirs:
+                    out[os.path.relpath(os.path.join(root, d),
+                                        tmp_path)] = None
+                for f in files:
+                    fp = os.path.join(root, f)
+                    with open(fp, "rb") as fh:
+                        out[os.path.relpath(fp, tmp_path)] = fh.read()
+            return out
+
+        before = snapshot()
+        for call in (lambda: upsert_partitioned(
+                         spark, t, self._batch(spark, [100]), buckets=4),
+                     lambda: read_partitioned(spark, t)):
+            with pytest.raises(ValueError) as ei:
+                call()
+            msg = str(ei.value)
+            assert t + ".__old__" in msg and f"back to {t}" in msg
+            assert "Rename" in msg
+            assert snapshot() == before
 
     def test_partitioned_upsert_recovers_torn_bucket_swap(self, spark,
                                                           tmp_path,
@@ -2674,18 +2687,9 @@ class TestKgTableCrashSafety:
         paths aren't supported end-to-end — but the pure-Python
         recovery/sweep layer must not silently no-op."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            _recover_partitioned_swap, _recover_upsert)
-        # plain upsert: torn swap under a metachar path restores
-        t = str(tmp_path / "kg[prod]")
-        os.makedirs(t + ".__old__")
-        with open(t + ".__old__/x.parquet", "w") as fh:
-            fh.write("x")
-        os.makedirs(t + ".__tmp__dead")
-        _recover_upsert(t)
-        assert os.path.isdir(t)  # restored from .__old__
-        assert not os.path.isdir(t + ".__tmp__dead")
-        # partitioned: a birth that crashed before its flip leaves
-        # staging and orphan epochs under a metachar path — swept
+            _recover_partitioned_swap)
+        # a birth that crashed before its flip leaves staging and
+        # orphan epochs under a metachar path — swept
         t2 = str(tmp_path / "kgp[prod]")
         os.makedirs(os.path.join(t2, ".kbe_3_dead"))
         os.makedirs(os.path.join(t2, ".upsert_tmp_dead"))
@@ -2824,14 +2828,13 @@ class TestManifestRandomCrashReplay:
 
 
 class TestKgSwapCrashExhaustive:
-    """Fault-injection sweep of the KG upsert commits, mirroring
+    """Fault-injection sweep of the KG upsert commit, mirroring
     TestSwapCrashExhaustive for the export sink: crash at EVERY mutating
-    filesystem op inside _swap_upsert / _publish_staged_buckets, run the
-    entry-time recovery, and assert the table is a complete epoch —
-    plain upsert: exactly the old or exactly the new table; partitioned:
-    the touched buckets all pre-merge or all post-merge (one manifest
-    flip — a batch that did not land replays idempotently). Then crash
-    the recovery itself at every op and assert a second, clean recovery
+    filesystem op inside _publish_staged_buckets, run the entry-time
+    recovery, and assert the table is a complete epoch — the touched
+    buckets all pre-merge or all post-merge (one manifest flip — a
+    batch that did not land replays idempotently). Then crash the
+    recovery itself at every op and assert a second, clean recovery
     still converges. Pure filesystem test — no Spark."""
 
     class _Crash(Exception):
@@ -2882,78 +2885,6 @@ class TestKgSwapCrashExhaustive:
         monkeypatch.setattr(mod + ".os.makedirs", fake_makedirs,
                             raising=False)
         return count
-
-    # ---------------- plain upsert ----------------
-
-    def _build_plain(self, root):
-        import shutil as _sh
-        t = os.path.join(root, "kg")
-        for d in (t, t + ".__old__", t + ".__tmp__tok"):
-            _sh.rmtree(d, ignore_errors=True)
-        os.makedirs(t)
-        with open(os.path.join(t, "a.parquet"), "w") as fh:
-            fh.write("old")
-        tmp = t + ".__tmp__tok"
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, "a.parquet"), "w") as fh:
-            fh.write("new")
-        return t, tmp
-
-    def _plain_epoch(self, t):
-        assert os.path.isdir(t), "table vanished"
-        with open(os.path.join(t, "a.parquet")) as fh:
-            c = fh.read()
-        assert c in ("old", "new"), c
-        return c
-
-    def test_plain_swap_crash_everywhere(self, tmp_path, monkeypatch):
-        from dig_etl_engine_spark.sinks.kg_table import (
-            _recover_upsert, _swap_upsert)
-        k, completed_clean = 1, False
-        while not completed_clean and k < 20:
-            t, tmp = self._build_plain(str(tmp_path))
-            with monkeypatch.context() as mp:
-                counter = self._fault_at(mp, k)
-                try:
-                    _swap_upsert(t, tmp)
-                    completed_clean = counter["n"] < k
-                except self._Crash:
-                    pass
-            _recover_upsert(t)
-            epoch = self._plain_epoch(t)
-            # a leftover aside copy is legal ONLY once the new table
-            # committed (the next upsert sweeps it); a torn swap must
-            # have rolled back to the old epoch with no aside left
-            if os.path.isdir(t + ".__old__"):
-                assert epoch == "new"
-            assert not glob.glob(t + ".__tmp__*")
-            k += 1
-        assert completed_clean, "fault budget exhausted before clean run"
-
-    def test_plain_recovery_crash_then_recover(self, tmp_path,
-                                               monkeypatch):
-        from dig_etl_engine_spark.sinks.kg_table import (
-            _recover_upsert, _swap_upsert)
-        for swap_k in range(1, 8):
-            t, tmp = self._build_plain(str(tmp_path))
-            with monkeypatch.context() as mp:
-                self._fault_at(mp, swap_k)
-                try:
-                    _swap_upsert(t, tmp)
-                except self._Crash:
-                    pass
-            for heal_k in range(1, 6):
-                with monkeypatch.context() as mp:
-                    self._fault_at(mp, heal_k)
-                    try:
-                        _recover_upsert(t)
-                    except self._Crash:
-                        pass
-            _recover_upsert(t)  # clean pass
-            self._plain_epoch(t)
-            assert not glob.glob(t + ".__tmp__*")
-
-    # ---------------- partitioned upsert (manifest commit) ----------------
 
     BUCKETS = (0, 1, 2)
     TOUCHED = (0, 1)
@@ -3141,18 +3072,20 @@ class TestTableLock:
         batches into the same table concurrently; without the lock the
         later swap drops the earlier batch, with it both land."""
         import threading
-        from dig_etl_engine_spark.sinks.kg_table import upsert
+        from dig_etl_engine_spark.sinks.kg_table import (
+            read_partitioned, upsert_partitioned)
         t = str(tmp_path / "kg")
-        upsert(spark, t, spark.createDataFrame(
+        upsert_partitioned(spark, t, spark.createDataFrame(
             [(0, "seed", 0)],
-            "doc_id LONG, text STRING, kafka_offset LONG"))
+            "doc_id LONG, text STRING, kafka_offset LONG"), buckets=4)
         errs = []
 
         def run(lo):
             try:
-                upsert(spark, t, spark.createDataFrame(
+                upsert_partitioned(spark, t, spark.createDataFrame(
                     [(i, f"t{i}", i) for i in range(lo, lo + 20)],
-                    "doc_id LONG, text STRING, kafka_offset LONG"))
+                    "doc_id LONG, text STRING, kafka_offset LONG"),
+                    buckets=4)
             except Exception as ex:  # noqa: BLE001
                 errs.append(ex)
 
@@ -3163,7 +3096,7 @@ class TestTableLock:
         for x in th:
             x.join()
         assert not errs, errs
-        got = {r["doc_id"] for r in spark.read.parquet(t).collect()}
+        got = {r["doc_id"] for r in read_partitioned(spark, t).collect()}
         assert got == {0} | set(range(100, 120)) | set(range(200, 220))
 
     def test_heartbeat_prevents_ttl_theft_from_live_owner(self, tmp_path):
@@ -3310,8 +3243,7 @@ class TestReadPartitionedTornView:
     copy: a reader that resolved the live dirs before an upsert's or
     compaction's flip keeps reading complete superseded dirs, and a
     reader resolving after the flip sees only the new live dirs. A
-    table mid-rebucket reads from its .rebucket_old copy, a flat table
-    mid plain-upsert from its .__old__ copy."""
+    table mid-rebucket reads from its .rebucket_old copy."""
 
     def _table(self, spark, tmp_path, name="kgt"):
         from dig_etl_engine_spark.sinks.kg_table import (
@@ -3377,15 +3309,3 @@ class TestReadPartitionedTornView:
         got = {(r["doc_id"], r["kafka_offset"]) for r in
                read_partitioned(spark, t).collect()}
         assert got == rows
-
-    def test_mid_plain_upsert_swap_reads_retired_copy(self, spark,
-                                                      tmp_path):
-        from dig_etl_engine_spark.sinks.kg_table import (
-            read_partitioned, upsert)
-        t = str(tmp_path / "kgpl")
-        upsert(spark, t, spark.createDataFrame(
-            [(i, f"t{i}", i) for i in range(10)],
-            "doc_id LONG, text STRING, kafka_offset LONG"))
-        os.rename(t, t + ".__old__")  # between the swap's two renames
-        got = {r["doc_id"] for r in read_partitioned(spark, t).collect()}
-        assert got == set(range(10))

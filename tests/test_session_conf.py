@@ -5,6 +5,9 @@ Nine environment variables used to set the same confs a second way. They
 are gone; this test sets every one of them to a non-default value and
 checks that a fresh session still reads the engine's constants, then
 passes the same values through ``extra_conf`` and reads them back.
+
+The variables that pick the deployment's shape stay, and a malformed
+value in one of them raises instead of being read as a default.
 """
 
 import json
@@ -12,6 +15,8 @@ import os
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = str(Path(__file__).resolve().parent.parent)
 
@@ -78,3 +83,26 @@ def test_retired_env_variables_have_no_effect_and_extra_conf_overrides():
     asked = {k: v[1] for k, v in CONFS.items()}
     got = _probe(asked)
     assert got == {**asked, "stream": "16"}
+
+
+@pytest.mark.parametrize("var,value", [
+    ("SPARK_GRAFT_CPUS", "abc"),
+    ("SPARK_GRAFT_CPUS", "0"),
+    ("SPARK_GRAFT_CPUS", "-2"),
+    ("SPARK_GRAFT_WORKER_PRELOAD", "offf"),
+    ("SPARK_GRAFT_WORKER_PRELOAD", "true"),
+])
+def test_malformed_deployment_env_names_variable_and_value(
+        monkeypatch, var, value):
+    # a typo must fail loudly: SPARK_GRAFT_CPUS=abc used to fall back to
+    # os.cpu_count() and SPARK_GRAFT_WORKER_PRELOAD=offf to mean "on"
+    from dig_etl_engine_spark.session import (
+        _worker_preload_confs, get_spark)
+
+    monkeypatch.setenv(var, value)
+    with pytest.raises(ValueError) as ei:
+        if var == "SPARK_GRAFT_CPUS":
+            get_spark("malformed-env-probe")   # raises before the builder
+        else:
+            _worker_preload_confs("local[4]")
+    assert var in str(ei.value) and repr(value) in str(ei.value)
