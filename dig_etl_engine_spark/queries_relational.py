@@ -532,10 +532,11 @@ def upsert_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def upsert_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 at 100 TB shape (`sinks/kg_table.py:upsert_partitioned`): the
     events table is split into two halves and merged into a hash-bucket-
-    partitioned KG table in two batches — only the partitions a batch
-    touches are rewritten (dynamic partition overwrite). The final table
-    must equal the one-shot relational last-write-wins, which the oracle
-    states."""
+    partitioned KG table keyed by ``user_id`` in two batches — the first
+    is born as buckets, the second lands as a delta that the read
+    resolves by last-write-wins on the manifest's key and order. The
+    final table must equal the one-shot relational last-write-wins,
+    which the oracle states."""
     import os as _os
     from dig_etl_engine_spark.queries_io import _scratch
     from dig_etl_engine_spark.sinks.kg_table import (

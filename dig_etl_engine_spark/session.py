@@ -25,6 +25,7 @@ Key choices (rationale):
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 import threading
 import zipfile
@@ -44,6 +45,14 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
     if cpus and not (cpus.isdigit() and int(cpus) > 0):
         raise ValueError(f"SPARK_GRAFT_CPUS={cpus!r} is not a positive "
                          "integer; set a core count or unset it")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "") or "16g"
+    # Spark's own size syntax: digits and an optional unit; a bare
+    # number is MiB
+    if not re.fullmatch(r"0*[1-9][0-9]*([kmgtp]b?|b)?", driver_mem,
+                        re.IGNORECASE):
+        raise ValueError(f"SPARK_DRIVER_MEM={driver_mem!r} is not a "
+                         "positive size such as 16g, 2048m or 1t; set "
+                         "one or unset it")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus or '*'}]")
     cores = int(cpus) if cpus else (os.cpu_count() or 8)
 
@@ -70,7 +79,7 @@ def get_spark(app_name: str = "dig_etl_engine_spark",
         .config("spark.ui.enabled", "false")
         # 16g: large heaps (48g+) measurably worsen GC pause variance in
         # local mode; 16g is ample for sf0.1 broadcasts + shuffles.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # r12 (optimization round) — measured knobs; override any of
         # them through extra_conf:
         #

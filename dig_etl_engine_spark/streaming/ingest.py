@@ -111,7 +111,8 @@ def run_ingest(source: DataFrame, *, target_path: str,
 
     Valid docs merge through the hash-bucket-partitioned
     :func:`~dig_etl_engine_spark.sinks.kg_table.upsert_partitioned`
-    (O(touched buckets) per batch), the KG table's one write path.
+    (one delta dir per batch, merged on read), the KG table's one write
+    path.
     ``buckets`` is the bucket count a new table is born with; an
     existing table keeps the count in its manifest.
     """

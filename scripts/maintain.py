@@ -5,8 +5,9 @@ Every incrementally-written layout in this engine decays in a known way,
 and every decay has a sanctioned repair (README §"Persisted state has a
 maintenance story"):
 
-* bucketed KG tables accumulate small files per micro-batch upsert
-  → ``kg_table.compact_partitioned`` (and, when buckets outgrow their
+* bucketed KG tables accumulate one delta dir per micro-batch upsert
+  and small files per fold → ``kg_table.compact_partitioned`` folds
+  the deltas and compacts the files (and, when buckets outgrow their
   birth size, ``kg_table.rebucket_partitioned``);
 * incremental minhash dedup indexes accumulate ``_ab=`` append
   partitions → ``dedup.compact_minhash_index``;
@@ -88,13 +89,14 @@ def main() -> int:
                     default=[],
                     help="read-only layout diagnosis of a KG table "
                          "(kg_table.layout_report; era absent, flat, "
-                         "manifest or retired): flags mixed "
+                         "manifest or retired, and the live delta "
+                         "count): flags mixed "
                          "visible/hidden bucket layouts that a naive "
                          "spark.read.parquet(root) cannot see "
                          "correctly, naming rebucket_partitioned as "
                          "the normalizer, and retired on-disk formats "
                          "(_kb= dirs with no _kg_manifest, a manifest "
-                         "that is not v2) that no entry point reads; "
+                         "that is not v3) that no entry point reads; "
                          "repeatable; exits 1 when any checked table "
                          "has findings; needs no Spark session")
     ap.add_argument("--target-file-bytes", type=int, default=128 << 20,
@@ -136,6 +138,7 @@ def main() -> int:
                 desc += (f" gen={rep['gen']} buckets={rep['buckets']} "
                          f"live={rep['live_visible']}v+"
                          f"{rep['live_hidden']}h "
+                         f"deltas={rep['deltas']} "
                          f"grace={rep['grace_dirs']} "
                          f"guard={'yes' if rep['guard_present'] else 'no'}")
             print(desc)

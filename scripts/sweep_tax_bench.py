@@ -33,6 +33,8 @@ SCRATCH = "/tmp/spark_graft_sweep_tax"
 
 
 def build(root: str, n: int) -> None:
+    from pyspark.sql import types as T
+
     from dig_etl_engine_spark.sinks import kg_table
 
     os.makedirs(root)
@@ -43,8 +45,10 @@ def build(root: str, n: int) -> None:
         with open(os.path.join(root, d, "a.parquet"), "w") as fh:
             fh.write("x")
         live[i] = d
+    m = kg_table._new_manifest(T.StructType(), buckets=n, key="doc_id",
+                               order="kafka_offset")
     kg_table.commit_pointer(root, kg_table._dump_manifest(
-        5, live, {}, buckets=n), name=kg_table._MANIFEST)
+        dict(m, gen=5, live=live)), name=kg_table._MANIFEST)
 
 
 def median_ms(fn, reps: int = 5) -> float:

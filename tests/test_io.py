@@ -433,11 +433,12 @@ class TestUpsert:
             kg_table.upsert_partitioned(spark, p, bad, buckets=4)
 
     def test_partitioned_upsert_touches_only_batch_partitions(
-            self, spark, tmp_path):
-        """upsert_partitioned: merge semantics identical to upsert, but
-        only the hash-bucket partitions containing batch keys are
-        rewritten — untouched partition dirs keep their exact files."""
+            self, spark, tmp_path, monkeypatch):
+        """A fold (here every upsert folds) rewrites only the
+        hash-bucket partitions containing batch keys — untouched
+        partition dirs keep their exact files."""
         import glob
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
         p = str(tmp_path / "t")
         keys = [f"k{i}" for i in range(40)]
         base = spark.createDataFrame(
@@ -446,7 +447,7 @@ class TestUpsert:
 
         # snapshot the manifest's live dir (and its exact files) per
         # bucket before the second batch
-        live_before = dict(kg_table._live_bucket_dirs(p))
+        live_before = dict(kg_table._load_manifest(p)["live"])
         files_before = {n: sorted(glob.glob(f"{p}/{d}/*.parquet"))
                         for n, d in live_before.items()}
         batch = spark.createDataFrame(
@@ -465,7 +466,7 @@ class TestUpsert:
         from pyspark.sql import functions as F
         touched = {r[0] for r in batch.select(
             F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int")).collect()}
-        live_after = kg_table._live_bucket_dirs(p)
+        live_after = kg_table._load_manifest(p)["live"]
         untouched = [n for n in live_before if n not in touched]
         assert untouched, "test needs at least one untouched bucket"
         for n in untouched:
@@ -810,7 +811,7 @@ class TestCompaction:
                   for r in kg_table.read_partitioned(spark, p).collect()}
 
         # fragment one bucket: rewrite its live dir's rows as 3 files
-        live = kg_table._live_bucket_dirs(p)
+        live = kg_table._load_manifest(p)["live"]
         n0 = sorted(live)[0]
         d0 = os.path.join(p, live[n0])
         rows = spark.read.parquet(d0).collect()
@@ -825,7 +826,7 @@ class TestCompaction:
                       for n, d in live.items() if n != n0}
 
         assert kg_table.compact_partitioned(spark, p) == 1
-        live_after = kg_table._live_bucket_dirs(p)
+        live_after = kg_table._load_manifest(p)["live"]
         # the fragmented bucket republished under a NEW epoch dir with
         # one file; tidy buckets keep their exact dirs and files
         assert live_after[n0] != live[n0]
@@ -888,7 +889,7 @@ class TestCompaction:
         kg_table.upsert_partitioned(spark, p, b, buckets=2)
         before = {r.doc_id for r in
                   kg_table.read_partitioned(spark, p).collect()}
-        live = kg_table._live_bucket_dirs(p)
+        live = kg_table._load_manifest(p)["live"]
         d0 = os.path.join(p, live[sorted(live)[0]])
         frag = d0 + "__frag"
         spark.read.parquet(d0).repartition(3).write.parquet(frag)
@@ -904,7 +905,7 @@ class TestCompaction:
             with pytest.raises(RuntimeError, match="manifest flip"):
                 kg_table.compact_partitioned(spark, p, min_files=2)
         assert kg_table._load_manifest(p)["gen"] == gen   # not applied
-        assert kg_table._live_bucket_dirs(p) == live
+        assert kg_table._load_manifest(p)["live"] == live
         orphans = set(os.listdir(p)) - set(live.values()) - {
             kg_table._MANIFEST, kg_table._NAIVE_READ_GUARD}
         assert any(n.startswith(".kbe_") for n in orphans), orphans
@@ -912,10 +913,8 @@ class TestCompaction:
         assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
         assert kg_table._load_manifest(p)["gen"] == gen + 1
         m = kg_table._load_manifest(p)
-        referenced = set(m["live"].values()) | {
-            d for es in m["grace"].values() for d, _, _ in es}
         assert {n for n in os.listdir(p) if n.startswith(".kbe_")} \
-            == referenced                                # orphan swept
+            == kg_table._referenced_dirs(m)              # orphan swept
         after = {r.doc_id for r in
                  kg_table.read_partitioned(spark, p).collect()}
         assert after == before
@@ -1332,7 +1331,7 @@ class TestBucketMetaAndRebucket:
         assert len(rows) == 40                     # no duplicate keys
         assert all(r.v == "new" for r in rows)
         assert kg_table._load_manifest(p)["buckets"] == 8
-        assert set(kg_table._live_bucket_dirs(p)) <= set(range(8))
+        assert set(kg_table._load_manifest(p)["live"]) <= set(range(8))
 
     def test_rebucket_grows_table_layout(self, spark, tmp_path):
         import glob
@@ -1571,21 +1570,22 @@ class TestBucketMetaAndRebucket:
         assert os.stat(stale).st_mtime_ns == stat.st_mtime_ns
 
     def test_placement_violation_refuses_instead_of_dropping_rows(
-            self, spark, tmp_path):
+            self, spark, tmp_path, monkeypatch):
         """Stored rows that hash outside their own directory must
         REFUSE the merge with the rebucket path named — under the
         manifest protocol a silent publish would REPLACE the mis-hashed
         rows' target bucket's live dir and drop its incumbent rows.
         Corruption model: one bucket's parquet file copied by hand into
-        another live epoch dir, then a batch touching that dir."""
+        another live epoch dir, then a batch folded into that dir."""
         import shutil as _sh
 
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
         p = str(tmp_path / "t")
         schema = "doc_id long, v string, kafka_offset long"
         base = spark.createDataFrame(
             [(i, "base", 0) for i in range(40)], schema)
         kg_table.upsert_partitioned(spark, p, base, buckets=4)
-        live = kg_table._live_bucket_dirs(p)
+        live = kg_table._load_manifest(p)["live"]
         src, dst = sorted(live)[:2]
         f = next(n for n in os.listdir(os.path.join(p, live[src]))
                  if n.endswith(".parquet"))
@@ -1604,7 +1604,7 @@ class TestBucketMetaAndRebucket:
             kg_table.upsert_partitioned(spark, p, batch, buckets=4)
         # refused BEFORE any publish: the table is unchanged
         assert kg_table._load_manifest(p)["gen"] == gen
-        assert kg_table._live_bucket_dirs(p) == live
+        assert kg_table._load_manifest(p)["live"] == live
         assert sorted((r.doc_id, r.v) for r in
                       kg_table.read_partitioned(spark, p).collect()) \
             == before
@@ -1648,49 +1648,29 @@ class TestBucketMetaAndRebucket:
             str(tmp_path / "never_written"), name=kg_table._MANIFEST) \
             is None
 
-    def test_schema_probe_falls_back_past_empty_bucket_dir(
-            self, spark, tmp_path):
-        """The O(1) incumbent-schema probe reads the lowest-id live
-        bucket dir; if that dir was hand-emptied the probe must fall
-        back to the next live dir instead of failing the whole upsert
-        at UNABLE_TO_INFER_SCHEMA (r11 external review, low) — and an
-        all-empty layout must refuse with the repair named."""
+    def test_upsert_takes_schema_from_manifest(self, spark, tmp_path):
+        """The table's schema lives in its manifest: an upsert opens no
+        bucket file to learn it (the per-batch footer probe is gone),
+        so bucket files emptied by hand cannot fail the write, and
+        read_partitioned serves the manifest's types."""
         p = str(tmp_path / "t")
         schema = "doc_id long, v string, kafka_offset long"
         kg_table.upsert_partitioned(
             spark, p, spark.createDataFrame(
                 [(i, "base", 0) for i in range(40)], schema), buckets=4)
-        live = kg_table._live_bucket_dirs(p)
+        live = kg_table._load_manifest(p)["live"]
         assert len(live) == 4
-        lowest = live[sorted(live)[0]]
-        for f in os.listdir(os.path.join(p, lowest)):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(p, lowest, f))
-        # a key whose bucket is NOT the emptied one (so the merge never
-        # has to read the damaged dir's data)
-        emptied = sorted(live)[0]
-        cand = next(
-            k for k in range(100, 200)
-            if spark.range(1).select(
-                F.pmod(F.xxhash64(F.lit(k).cast("long")),
-                       F.lit(4)).cast("int").alias("b")
-            ).collect()[0].b != emptied)
-        kg_table.upsert_partitioned(
-            spark, p, spark.createDataFrame(
-                [(cand, "new", 1)], schema), buckets=4)
-        got = {r.doc_id for r in
-               kg_table.read_partitioned(spark, p).collect()}
-        assert cand in got
-        # all live dirs emptied → loud refusal naming the repair
-        live = kg_table._live_bucket_dirs(p)
         for dname in live.values():
             for f in os.listdir(os.path.join(p, dname)):
                 if f.endswith(".parquet"):
                     os.remove(os.path.join(p, dname, f))
-        with pytest.raises(ValueError, match="rebucket_partitioned"):
-            kg_table.upsert_partitioned(
-                spark, p, spark.createDataFrame(
-                    [(1, "x", 2)], schema), buckets=4)
+        kg_table.upsert_partitioned(
+            spark, p, spark.createDataFrame([(1, "x", 2)], schema),
+            buckets=4)
+        table = kg_table.read_partitioned(spark, p)
+        assert table.schema.simpleString() == \
+            "struct<doc_id:bigint,v:string,kafka_offset:bigint>"
+        assert [(r.doc_id, r.v) for r in table.collect()] == [(1, "x")]
 
     def test_rebucket_crash_recovery_states(self, spark, tmp_path):
         import shutil as _sh
@@ -1744,7 +1724,7 @@ class TestDurabilityAndLayoutGuards:
     def test_naive_read_guard_trips_on_migrated_table(
             self, spark, tmp_path):
         """A rebucketed table (visible _kb= dirs) that is upserted again
-        gets hidden epochs beside its visible dirs, and a raw
+        gets a hidden delta beside its visible dirs, and a raw
         spark.read.parquet(root) would silently serve stale/partial
         rows. The guard file must make that
         read FAIL LOUDLY while read_partitioned stays exact."""
@@ -1756,12 +1736,12 @@ class TestDurabilityAndLayoutGuards:
         # table correctly (poisoning it would break external tools)
         assert not os.path.exists(
             os.path.join(p, kg_table._NAIVE_READ_GUARD))
-        # the next upsert publishes hidden epochs → mixed layout
+        # the next upsert commits a hidden delta → mixed layout
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(0, "upd", 1)]), buckets=4)
         m = kg_table._load_manifest(p)
-        assert any(d.startswith(".kbe_") for d in m["live"].values())
-        assert any(d.startswith("_kb=") for d in m["live"].values())
+        assert [d.startswith(".kgd_") for d in m["deltas"]] == [True]
+        assert all(d.startswith("_kb=") for d in m["live"].values())
         assert os.path.exists(
             os.path.join(p, kg_table._NAIVE_READ_GUARD))
         with pytest.raises(Exception, match="KG_NAIVE_READ_GUARD"):
@@ -1783,14 +1763,16 @@ class TestDurabilityAndLayoutGuards:
         """Default retention (1 generation): a superseded dir is
         reclaimed at the NEXT commit. Depth 2: it survives one more
         commit — the knob long lock-free scans need (r11 external
-        review, low)."""
+        review, low). Every upsert folds here, so each commit
+        supersedes the bucket dirs it touches."""
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
         p = str(tmp_path / "t")
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(i, "b", 0) for i in
                                           range(16)]), buckets=2)
 
         def live_dir_of(key_bucket):
-            return kg_table._live_bucket_dirs(p)[key_bucket]
+            return kg_table._load_manifest(p)["live"][key_bucket]
 
         def commit_touching_all(off):
             kg_table.upsert_partitioned(
@@ -1801,7 +1783,7 @@ class TestDurabilityAndLayoutGuards:
         # depth 2: superseded dirs survive the commit AFTER the one
         # that superseded them
         monkeypatch.setattr(kg_table, "GRACE_RETAIN_GENERATIONS", 2)
-        gen1_dirs = set(kg_table._live_bucket_dirs(p).values())
+        gen1_dirs = set(kg_table._load_manifest(p)["live"].values())
         commit_touching_all(1)      # supersedes gen1 dirs
         assert all(os.path.isdir(os.path.join(p, d))
                    for d in gen1_dirs)
@@ -1813,7 +1795,7 @@ class TestDurabilityAndLayoutGuards:
                        for d in gen1_dirs)
         # default depth 1: reclaimed at the very next commit
         monkeypatch.setattr(kg_table, "GRACE_RETAIN_GENERATIONS", 1)
-        cur = set(kg_table._live_bucket_dirs(p).values())
+        cur = set(kg_table._load_manifest(p)["live"].values())
         commit_touching_all(4)      # supersedes cur (kept as grace)
         assert all(os.path.isdir(os.path.join(p, d)) for d in cur)
         commit_touching_all(5)
@@ -1822,13 +1804,15 @@ class TestDurabilityAndLayoutGuards:
     def test_grace_retention_time_window(self, spark, tmp_path,
                                          monkeypatch):
         """A time window keeps superseded dirs across ANY number of
-        quick commits (Delta-VACUUM style retain-until)."""
+        quick commits (Delta-VACUUM style retain-until). Every upsert
+        folds here."""
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
         monkeypatch.setattr(kg_table, "GRACE_RETAIN_SECONDS", 3600.0)
         p = str(tmp_path / "t")
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(i, "b", 0) for i in
                                           range(16)]), buckets=2)
-        gen1_dirs = set(kg_table._live_bucket_dirs(p).values())
+        gen1_dirs = set(kg_table._load_manifest(p)["live"].values())
         for off in range(1, 4):
             kg_table.upsert_partitioned(
                 spark, p, self._batch(
@@ -1838,7 +1822,7 @@ class TestDurabilityAndLayoutGuards:
         assert all(os.path.isdir(os.path.join(p, d))
                    for d in gen1_dirs)
         m = kg_table._load_manifest(p)
-        assert sum(len(es) for es in m["grace"].values()) >= 6
+        assert len(m["grace"]) >= 6
         # window off → the next writer entry's recovery prunes them —
         # WITHOUT hand-invalidating the sidecar: the fast path's pure
         # prune probe must notice releasable entries itself (r12
@@ -1855,19 +1839,20 @@ class TestDurabilityAndLayoutGuards:
         expires by CLOCK — a non-committing writer entry (nightly
         compaction with nothing to do) must reclaim expired dirs even
         though the swept-gen sidecar matches the manifest
-        generation."""
+        generation. Every upsert folds here."""
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
         monkeypatch.setattr(kg_table, "GRACE_RETAIN_SECONDS", 3600.0)
         p = str(tmp_path / "t")
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(i, "b", 0) for i in
                                           range(16)]), buckets=2)
-        gen1_dirs = set(kg_table._live_bucket_dirs(p).values())
+        gen1_dirs = set(kg_table._load_manifest(p)["live"].values())
         for off in (1, 2):       # two more commits: gen1 dirs become
             kg_table.upsert_partitioned(  # GEN-expired, time-retained
                 spark, p, self._batch(
                     spark, [(i, f"u{off}", off) for i in range(16)]),
                 buckets=2)
-        gen3_dirs = set(kg_table._live_bucket_dirs(p).values())
+        gen3_dirs = set(kg_table._load_manifest(p)["live"].values())
         m = kg_table._load_manifest(p)
         assert kg_table._read_swept_gen(p) == m["gen"]
         assert all(os.path.isdir(os.path.join(p, d))
@@ -1932,7 +1917,8 @@ class TestDurabilityAndLayoutGuards:
         os.makedirs(staging)
         with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
             fh.write("")
-        kg_table._publish_staged_buckets(p, staging, "empt", buckets=2)
+        kg_table._publish_staged_buckets(
+            p, staging, "empt", manifest=kg_table._load_manifest(p))
         assert kg_table._read_swept_gen(p) == gen     # re-stamped
         assert not os.path.isdir(staging)
         # and through the real API: an empty batch keeps it stamped
@@ -2096,8 +2082,10 @@ class TestDurabilityAndLayoutGuards:
                        spy_rename)
             mp.setattr("dig_etl_engine_spark.sinks.kg_table.os.replace",
                        spy_replace)
-            kg_table._publish_staged_buckets(t, staging, "tok",
-                                             buckets=2)
+            kg_table._publish_staged_buckets(
+                t, staging, "tok", manifest=kg_table._new_manifest(
+                    T.StructType(), buckets=2, key="doc_id",
+                    order="kafka_offset"))
         kinds = [k for k, _ in events]
         assert kinds.count("fsync_tree") == 2          # both buckets
         last_fsync = max(i for i, k in enumerate(kinds)
@@ -2128,8 +2116,13 @@ class TestDurabilityAndLayoutGuards:
         # a birth-partitioned table is all-hidden → mixed-layout
         # finding present, guard present, rebucket named
         assert rep["era"] == "manifest" and rep["live_hidden"] == 2
-        assert rep["guard_present"]
+        assert rep["guard_present"] and rep["deltas"] == 0
         assert any("rebucket_partitioned" in f for f in rep["findings"])
+        # a crashed writer's delta is flagged as an orphan
+        os.makedirs(os.path.join(p, ".kgd_orphan"))
+        rep = kg_table.layout_report(p)
+        assert any("1 of them .kgd_ delta" in f for f in rep["findings"])
+        os.rmdir(os.path.join(p, ".kgd_orphan"))
         kg_table.rebucket_partitioned(spark, p, 2)
         rep = kg_table.layout_report(p)
         assert rep["era"] == "manifest" and rep["live_hidden"] == 0
@@ -2204,6 +2197,7 @@ class TestOnDiskFormat:
             fh.write("2")
         cases = [(kb_only, "_kb= bucket dir"),
                  doctored("v1", v=1),
+                 doctored("v2", v=2),
                  doctored("no_v", v=None),
                  doctored("no_buckets", buckets=None),
                  doctored("unwidened", widened=False)]
@@ -2228,10 +2222,11 @@ class TestOnDiskFormat:
             assert self._snapshot(p) == before, p
 
     def test_root_names_pinned_through_lifecycle(self, spark, tmp_path):
-        """Birth upsert, second upsert, compaction, rebucket: after each
-        step the table root holds exactly the manifest, the swept-gen
-        sidecar, the naive-read guard while a live dir is hidden, and
-        the live and grace bucket dirs — no second metadata file."""
+        """Birth upsert, a delta upsert, the fold, a compaction, rebucket:
+        after each step the table root holds exactly the manifest, the
+        swept-gen sidecar, the naive-read guard while a live dir or a
+        delta is hidden, and the live, delta and grace dirs — no second
+        metadata file."""
         import shutil as _sh
 
         p = str(tmp_path / "t")
@@ -2239,12 +2234,11 @@ class TestOnDiskFormat:
 
         def expect(extra):
             m = kg_table._load_manifest(p)
-            dirs = set(m["live"].values()) | {
-                d for es in m["grace"].values() for d, _, _ in es}
-            guard = {kg_table._NAIVE_READ_GUARD} if any(
+            guard = {kg_table._NAIVE_READ_GUARD} if m["deltas"] or any(
                 d.startswith(".kbe_") for d in m["live"].values()) \
                 else set()
-            assert set(os.listdir(p)) == extra | dirs | guard
+            assert set(os.listdir(p)) == \
+                extra | kg_table._referenced_dirs(m) | guard
             assert "_kg_buckets" not in os.listdir(p)
             assert m["buckets"] == 4
             return m
@@ -2252,12 +2246,19 @@ class TestOnDiskFormat:
         kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
             [(i, "b", 0) for i in range(16)], self.SCHEMA), buckets=4)
         m = expect(meta)
-        assert not m["grace"]
+        assert not m["grace"] and not m["deltas"]
+        live = m["live"]
         kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
             [(0, "u", 1)], self.SCHEMA), buckets=4)
         m = expect(meta)
-        assert m["grace"]                     # the touched bucket's old dir
-        # fragment one live bucket so the compaction commits
+        # a delta, and no bucket rewritten
+        assert len(m["deltas"]) == 1 and not m["grace"]
+        assert m["live"] == live
+        # compaction folds the delta into key 0's bucket
+        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
+        m = expect(meta)
+        assert not m["deltas"] and len(m["grace"]) == 2
+        # fragment one live bucket so the small-file pass commits
         d0 = os.path.join(p, m["live"][sorted(m["live"])[0]])
         frag = d0 + "__frag"
         spark.read.parquet(d0).repartition(3).write.parquet(frag)
@@ -2559,11 +2560,14 @@ class TestKgTableCrashSafety:
         """An older build's flat-table swap could crash between its two
         renames, leaving <table>.__old__ as the only complete copy.
         Nothing heals that any more, so the writer must not create a
-        new table from one batch beside it, nor the reader serve an
-        empty result: both raise, name both paths, say how to fix it,
-        and leave every file as it was."""
+        new table from one batch beside it, the bootstrap must not seed
+        an empty one over it (after which no refusal would fire), nor
+        the reader serve an empty result: all three raise, name both
+        paths, say how to fix it, and leave every file's bytes and
+        mtime as they were."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            read_partitioned, upsert_partitioned)
+            create_table_if_not_exists, read_partitioned,
+            upsert_partitioned)
         t = str(tmp_path / "kg")
         self._batch(spark, range(10)).write.parquet(t + ".__old__")
 
@@ -2571,17 +2575,21 @@ class TestKgTableCrashSafety:
             out = {}
             for root, dirs, files in os.walk(tmp_path):
                 for d in dirs:
-                    out[os.path.relpath(os.path.join(root, d),
-                                        tmp_path)] = None
+                    dp = os.path.join(root, d)
+                    out[os.path.relpath(dp, tmp_path)] = \
+                        os.stat(dp).st_mtime_ns
                 for f in files:
                     fp = os.path.join(root, f)
                     with open(fp, "rb") as fh:
-                        out[os.path.relpath(fp, tmp_path)] = fh.read()
+                        out[os.path.relpath(fp, tmp_path)] = (
+                            os.stat(fp).st_mtime_ns, fh.read())
             return out
 
         before = snapshot()
         for call in (lambda: upsert_partitioned(
                          spark, t, self._batch(spark, [100]), buckets=4),
+                     lambda: create_table_if_not_exists(
+                         spark, t, self._batch(spark, []).schema),
                      lambda: read_partitioned(spark, t)):
             with pytest.raises(ValueError) as ei:
                 call()
@@ -2593,10 +2601,10 @@ class TestKgTableCrashSafety:
     def test_partitioned_upsert_recovers_torn_bucket_swap(self, spark,
                                                           tmp_path,
                                                           monkeypatch):
-        """An upsert killed at its manifest flip — staged buckets
-        already renamed to their epoch dirs, manifest not replaced —
-        leaves the table serving its previous state. The replayed batch
-        lands exactly once and the next entry sweeps the orphans."""
+        """An upsert killed at its manifest flip — its delta dir already
+        written, manifest not replaced — leaves the table serving its
+        previous state. The replayed batch lands exactly once and the
+        next entry sweeps the orphan."""
         import glob as _glob
         from dig_etl_engine_spark.sinks.kg_table import (
             _load_manifest, read_partitioned, upsert_partitioned)
@@ -2622,11 +2630,13 @@ class TestKgTableCrashSafety:
         after = {(r["doc_id"], r["kafka_offset"]) for r in
                  read_partitioned(spark, t).collect()}
         assert after == (before - {(0, 0)}) | {(0, 1000), (500, 1500)}
+        # the crashed attempt's delta was swept, the replay's is live
         m = _load_manifest(t)
-        referenced = set(m["live"].values()) | {
-            d for es in m["grace"].values() for d, _, _ in es}
+        assert len(m["deltas"]) == 1
         assert {os.path.basename(d) for d in
-                _glob.glob(os.path.join(t, ".kbe_*"))} == referenced
+                _glob.glob(os.path.join(t, ".kbe_*"))
+                + _glob.glob(os.path.join(t, ".kgd_*"))} \
+            == kg_table._referenced_dirs(m)
         assert not _glob.glob(os.path.join(t, ".upsert_tmp_*"))
 
     def test_partitioned_upsert_leaves_no_aside_dirs(self, spark,
@@ -2652,14 +2662,14 @@ class TestKgTableCrashSafety:
         import shutil as _sh
         from dig_etl_engine_spark.sinks.kg_table import (
             compact_partitioned, upsert_partitioned)
-        from dig_etl_engine_spark.sinks.kg_table import _live_bucket_dirs
+        from dig_etl_engine_spark.sinks.kg_table import _load_manifest
         t = str(tmp_path / "kgs")
         upsert_partitioned(spark, t, self._batch(spark, range(30)),
                            buckets=2)
-        # fragment one bucket manually (an upsert REPLACES its touched
-        # buckets, so fragmentation comes from many write tasks — here
+        # fragment one bucket manually (a fold writes one file per
+        # bucket, so fragmentation comes from writes outside it — here
         # we model it directly, inside the bucket's live epoch dir)
-        live = _live_bucket_dirs(t)
+        live = _load_manifest(t)["live"]
         d0 = os.path.join(t, live[sorted(live)[0]])
         frag = d0 + "__frag"
         spark.read.parquet(d0).repartition(3).write.parquet(frag)
@@ -2670,7 +2680,7 @@ class TestKgTableCrashSafety:
 
         def _all_files():
             return sorted(
-                f for d in _live_bucket_dirs(t).values()
+                f for d in _load_manifest(t)["live"].values()
                 for f in _glob.glob(os.path.join(t, d, "*.parquet")))
 
         files_after = _all_files()
@@ -2828,12 +2838,14 @@ class TestManifestRandomCrashReplay:
 
 
 class TestKgSwapCrashExhaustive:
-    """Fault-injection sweep of the KG upsert commit, mirroring
+    """Fault-injection sweep of the KG table's two commits, mirroring
     TestSwapCrashExhaustive for the export sink: crash at EVERY mutating
-    filesystem op inside _publish_staged_buckets, run the entry-time
-    recovery, and assert the table is a complete epoch — the touched
-    buckets all pre-merge or all post-merge (one manifest flip — a
-    batch that did not land replays idempotently). Then crash the
+    filesystem op inside the fold's _publish_staged_buckets (with and
+    without live deltas to retire) and the upsert's _publish_delta, run
+    the entry-time recovery, and assert the table is one committed
+    state — the touched buckets all pre-merge or all post-merge, a
+    delta listed and on disk or unlisted and swept (one manifest flip —
+    a batch that did not land replays idempotently). Then crash the
     recovery itself at every op and assert a second, clean recovery
     still converges. Pure filesystem test — no Spark."""
 
@@ -2888,27 +2900,36 @@ class TestKgSwapCrashExhaustive:
 
     BUCKETS = (0, 1, 2)
     TOUCHED = (0, 1)
+    DELTAS = (".kgd_a", ".kgd_b")
+    NEW_DELTA = ".kgd_new"
 
     def _build_part(self, root):
         """A manifest-born table (gen-1 manifest over one ``.kbe_``
-        epoch dir per bucket) plus a fully-staged upsert batch touching
-        buckets 0 and 1."""
+        epoch dir per bucket, plus the live ``self._deltas``), and
+        either a fully-staged fold touching buckets 0 and 1 or, for the
+        delta tests, a fully-written delta dir not yet committed.
+        Returns (table, staging, manifest)."""
         import shutil as _sh
         from dig_etl_engine_spark.sinks.kg_table import (
-            _MANIFEST, _dump_manifest, commit_pointer)
+            _MANIFEST, _dump_manifest, _new_manifest, commit_pointer)
         t = os.path.join(root, "kgp")
         _sh.rmtree(t, ignore_errors=True)
         os.makedirs(t)
         live = {}
         for kb in self.BUCKETS:
             live[kb] = f".kbe_{kb}_birth"
-            d = os.path.join(t, live[kb])
-            os.makedirs(d)
-            with open(os.path.join(d, "a.parquet"), "w") as fh:
-                fh.write(f"old-{kb}")
-        commit_pointer(t, _dump_manifest(
-            1, live, {}, buckets=len(self.BUCKETS)), name=_MANIFEST)
+        staged_delta = [self.NEW_DELTA] if self._stage_delta else []
+        for d in list(live.values()) + list(self._deltas) + staged_delta:
+            os.makedirs(os.path.join(t, d))
+            with open(os.path.join(t, d, "a.parquet"), "w") as fh:
+                fh.write(f"old-{d.split('_')[1]}")
+        m = dict(_new_manifest(T.StructType(), buckets=len(self.BUCKETS),
+                               key="doc_id", order="kafka_offset"),
+                 gen=1, live=live, deltas=list(self._deltas))
+        commit_pointer(t, _dump_manifest(m), name=_MANIFEST)
         staging = os.path.join(t, ".upsert_tmp_tok")
+        if self._stage_delta:
+            return t, staging, m
         os.makedirs(staging)
         with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
             fh.write("")
@@ -2917,73 +2938,68 @@ class TestKgSwapCrashExhaustive:
             os.makedirs(d)
             with open(os.path.join(d, "a.parquet"), "w") as fh:
                 fh.write(f"new-{kb}")
-        return t, staging
+        return t, staging, m
 
     def _assert_table_is_one_epoch(self, t):
         """The manifest-commit invariant, STRONGER than the old
         per-bucket one: the resolved view is exactly the pre-commit
         table or exactly the post-commit table — the touched buckets
-        flip TOGETHER (one pointer replace), never a mix."""
+        flip TOGETHER (one pointer replace), never a mix. Every dir the
+        manifest references is on disk, and nothing unreferenced
+        survives. Returns (folded, manifest)."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            _effective_bucket_dirs)
-        dirs = _effective_bucket_dirs(t)
-        assert len(dirs) == len(self.BUCKETS), dirs
+            _load_manifest, _referenced_dirs)
+        m = _load_manifest(t)
+        assert sorted(m["live"]) == list(self.BUCKETS), m["live"]
         content = {}
-        for d in dirs:
-            kb = int(os.path.basename(d).split("_")[1])
-            with open(os.path.join(d, "a.parquet")) as fh:
+        for kb, d in m["live"].items():
+            with open(os.path.join(t, d, "a.parquet")) as fh:
                 content[kb] = fh.read()
-        for kb in self.BUCKETS:
-            assert kb in content, (kb, dirs)
         assert content[2] == "old-2", content
         touched_states = {content[kb] == f"new-{kb}"
                           for kb in self.TOUCHED}
         assert len(touched_states) == 1, \
             f"torn commit: touched buckets in mixed epochs: {content}"
-        return touched_states.pop()
+        folded = touched_states.pop()
+        on_disk = {n for n in os.listdir(t)
+                   if n.startswith((".kbe_", ".kgd_"))}
+        assert on_disk == _referenced_dirs(m), (on_disk, m)
+        assert not glob.glob(os.path.join(t, ".upsert_*"))
+        return folded, m
 
-    def test_partitioned_swap_crash_everywhere(self, tmp_path,
-                                               monkeypatch):
+    def _crash_everywhere(self, tmp_path, monkeypatch, publish, check):
+        """Crash ``publish(table, staging, manifest)`` at its k-th
+        filesystem op for k = 1, 2, ... until a run completes without
+        reaching the fault, recovering and checking after each."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            _publish_staged_buckets, _recover_partitioned_swap)
+            _recover_partitioned_swap)
         k, completed_clean = 1, False
-        while not completed_clean and k < 30:
-            t, staging = self._build_part(str(tmp_path))
+        while not completed_clean and k < 40:
+            t, staging, m = self._build_part(str(tmp_path))
             with monkeypatch.context() as mp:
                 counter = self._fault_at(mp, k)
                 try:
-                    _publish_staged_buckets(t, staging, "tok",
-                                            buckets=len(self.BUCKETS))
+                    publish(t, staging, m)
                     completed_clean = counter["n"] < k
                 except self._Crash:
                     pass
             _recover_partitioned_swap(t)
-            committed = self._assert_table_is_one_epoch(t)
-            if completed_clean:
-                assert committed, "clean publish must land the batch"
-            assert not glob.glob(os.path.join(t, ".upsert_*"))
-            # recovery swept every unreferenced staged epoch
-            from dig_etl_engine_spark.sinks.kg_table import (
-                _load_manifest)
-            m = _load_manifest(t)
-            referenced = set(m["live"].values()) | {
-                d for es in m["grace"].values() for d, _, _ in es}
-            for leftover in glob.glob(os.path.join(t, ".kbe_*")):
-                assert os.path.basename(leftover) in referenced, leftover
+            check(t, completed_clean)
             k += 1
         assert completed_clean, "fault budget exhausted before clean run"
 
-    def test_partitioned_recovery_crash_then_recover(self, tmp_path,
-                                                     monkeypatch):
+    def _recovery_crash_then_recover(self, tmp_path, monkeypatch, publish,
+                                     check):
+        """Crash ``publish`` at each op, then crash the entry recovery
+        at each op, then run one clean recovery: it must converge."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            _publish_staged_buckets, _recover_partitioned_swap)
-        for swap_k in range(1, 14):
-            t, staging = self._build_part(str(tmp_path))
+            _recover_partitioned_swap)
+        for swap_k in range(1, 16):
+            t, staging, m = self._build_part(str(tmp_path))
             with monkeypatch.context() as mp:
                 self._fault_at(mp, swap_k)
                 try:
-                    _publish_staged_buckets(t, staging, "tok",
-                                            buckets=len(self.BUCKETS))
+                    publish(t, staging, m)
                 except self._Crash:
                     pass
             for heal_k in range(1, 8):
@@ -2994,8 +3010,72 @@ class TestKgSwapCrashExhaustive:
                     except self._Crash:
                         pass
             _recover_partitioned_swap(t)  # clean pass
-            self._assert_table_is_one_epoch(t)
-            assert not glob.glob(os.path.join(t, ".upsert_*"))
+            check(t, False)
+
+    @staticmethod
+    def _fold(t, staging, m):
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _publish_staged_buckets)
+        _publish_staged_buckets(t, staging, "tok", manifest=m)
+
+    def _check_fold(self, t, completed_clean):
+        folded, m = self._assert_table_is_one_epoch(t)
+        # a fold retires its deltas in the flip that publishes buckets
+        assert m["deltas"] == ([] if folded else list(self._deltas)), m
+        if completed_clean:
+            assert folded, "clean publish must land the batch"
+
+    def _delta(self, t, staging, m):
+        from dig_etl_engine_spark.sinks.kg_table import _publish_delta
+        _publish_delta(t, self.NEW_DELTA, manifest=m)
+
+    def _check_delta(self, t, completed_clean):
+        folded, m = self._assert_table_is_one_epoch(t)
+        assert not folded            # a delta commit rewrites no bucket
+        assert m["deltas"] in (list(self._deltas),
+                               list(self._deltas) + [self.NEW_DELTA])
+        if completed_clean:
+            assert m["deltas"][-1] == self.NEW_DELTA
+
+    _deltas: tuple = ()
+    _stage_delta = False
+
+    def test_partitioned_swap_crash_everywhere(self, tmp_path,
+                                               monkeypatch):
+        self._crash_everywhere(tmp_path, monkeypatch, self._fold,
+                               self._check_fold)
+
+    def test_partitioned_recovery_crash_then_recover(self, tmp_path,
+                                                     monkeypatch):
+        self._recovery_crash_then_recover(tmp_path, monkeypatch,
+                                          self._fold, self._check_fold)
+
+    def test_fold_of_deltas_crash_everywhere(self, tmp_path, monkeypatch):
+        """A fold that also retires two live deltas: the deltas leave
+        the manifest in the same flip that publishes the buckets."""
+        self._deltas = self.DELTAS
+        self._crash_everywhere(tmp_path, monkeypatch, self._fold,
+                               self._check_fold)
+
+    def test_fold_of_deltas_recovery_crash_then_recover(self, tmp_path,
+                                                        monkeypatch):
+        self._deltas = self.DELTAS
+        self._recovery_crash_then_recover(tmp_path, monkeypatch,
+                                          self._fold, self._check_fold)
+
+    def test_delta_commit_crash_everywhere(self, tmp_path, monkeypatch):
+        """The per-batch delta commit: the new delta is either listed
+        and on disk, or unlisted and swept; the live deltas and buckets
+        are never touched."""
+        self._deltas, self._stage_delta = self.DELTAS[:1], True
+        self._crash_everywhere(tmp_path, monkeypatch, self._delta,
+                               self._check_delta)
+
+    def test_delta_recovery_crash_then_recover(self, tmp_path,
+                                               monkeypatch):
+        self._deltas, self._stage_delta = self.DELTAS[:1], True
+        self._recovery_crash_then_recover(tmp_path, monkeypatch,
+                                          self._delta, self._check_delta)
 
 
 class TestTableLock:
@@ -3240,10 +3320,11 @@ class TestManifestReaderDuringSwap:
 class TestReadPartitionedTornView:
     """read_partitioned during a concurrent swap never loses or doubles
     a bucket. For a bucket swap the aside copy is the manifest's grace
-    copy: a reader that resolved the live dirs before an upsert's or
-    compaction's flip keeps reading complete superseded dirs, and a
-    reader resolving after the flip sees only the new live dirs. A
-    table mid-rebucket reads from its .rebucket_old copy."""
+    copy: a reader that resolved the live dirs before a fold's or
+    compaction's flip keeps reading complete superseded dirs and folded
+    deltas, and a reader resolving after the flip sees only the new
+    live dirs. A table mid-rebucket reads from its .rebucket_old
+    copy."""
 
     def _table(self, spark, tmp_path, name="kgt"):
         from dig_etl_engine_spark.sinks.kg_table import (
@@ -3261,42 +3342,79 @@ class TestReadPartitionedTornView:
         return {(r["doc_id"], r["kafka_offset"]) for r in
                 spark.read.parquet(*dirs).collect()}
 
-    def test_upsert_swap_window_reads_aside(self, spark, tmp_path):
-        from dig_etl_engine_spark.sinks.kg_table import (
-            _effective_bucket_dirs, upsert_partitioned)
+    @staticmethod
+    def _bucket_dirs(t):
+        return [os.path.join(t, d) for _, d in
+                sorted(kg_table._load_manifest(t)["live"].items())]
+
+    def test_upsert_swap_window_reads_aside(self, spark, tmp_path,
+                                            monkeypatch):
+        from dig_etl_engine_spark.sinks.kg_table import upsert_partitioned
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)  # upserts fold
         t, rows = self._table(spark, tmp_path)
-        resolved = _effective_bucket_dirs(t)      # a reader mid-flight
+        resolved = self._bucket_dirs(t)           # a reader mid-flight
         upsert_partitioned(spark, t, spark.createDataFrame(
             [(0, "upd", 100), (1, "upd", 101)],
             "doc_id LONG, text STRING, kafka_offset LONG"), buckets=4)
-        assert _effective_bucket_dirs(t) != resolved
+        assert self._bucket_dirs(t) != resolved
         assert self._read(spark, resolved) == rows  # grace copies serve
 
     def test_compact_swap_window_reads_aside(self, spark, tmp_path):
         import shutil as _sh
-        from dig_etl_engine_spark.sinks.kg_table import (
-            _effective_bucket_dirs, compact_partitioned)
+        from dig_etl_engine_spark.sinks.kg_table import compact_partitioned
         t, rows = self._table(spark, tmp_path, "kgc")
-        d0 = _effective_bucket_dirs(t)[0]
+        d0 = self._bucket_dirs(t)[0]
         spark.read.parquet(d0).repartition(3).write.parquet(d0 + "__f")
         _sh.rmtree(d0)
         os.rename(d0 + "__f", d0)
-        resolved = _effective_bucket_dirs(t)
+        resolved = self._bucket_dirs(t)
         assert compact_partitioned(spark, t, min_files=2) == 1
-        assert _effective_bucket_dirs(t) != resolved
+        assert self._bucket_dirs(t) != resolved
         assert self._read(spark, resolved) == rows
 
-    def test_live_bucket_wins_over_aside(self, spark, tmp_path):
+    def test_reader_resolved_before_fold_reads_complete_rows(
+            self, spark, tmp_path):
+        """A lock-free reader that resolved the manifest — and built its
+        scan over the buckets and deltas it named — before a fold still
+        reads the complete, correct table after the fold: the folded
+        deltas and superseded buckets are grace copies."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            compact_partitioned, read_partitioned, upsert_partitioned)
+        t, rows = self._table(spark, tmp_path, "kgf")
+        schema = "doc_id LONG, text STRING, kafka_offset LONG"
+        for off in (100, 200):
+            upsert_partitioned(spark, t, spark.createDataFrame(
+                [(0, "upd", off), (1000 + off, "new", off)], schema))
+        expected = (rows - {(0, 0)}) | {(0, 200), (1100, 100),
+                                        (1200, 200)}
+        m = kg_table._load_manifest(t)
+        assert len(m["deltas"]) == 2
+        early = read_partitioned(spark, t)        # resolved pre-fold
+        assert compact_partitioned(spark, t) >= 1
+        after = kg_table._load_manifest(t)
+        assert not after["deltas"] and after["live"] != m["live"]
+        # a writer entry's full sweep (as after any crashed writer)
+        # keeps what the grace list names
+        kg_table._invalidate_swept_gen(t)
+        kg_table._recover_partitioned_swap(t)
+        assert {(r["doc_id"], r["kafka_offset"])
+                for r in early.collect()} == expected
+        assert {(r["doc_id"], r["kafka_offset"]) for r in
+                read_partitioned(spark, t).collect()} == expected
+
+    def test_live_bucket_wins_over_aside(self, spark, tmp_path,
+                                         monkeypatch):
         """Post-flip, with the superseded dir still on disk as grace:
         the new live dir must win, not duplicate."""
         from dig_etl_engine_spark.sinks.kg_table import (
-            _effective_bucket_dirs, read_partitioned, upsert_partitioned)
+            read_partitioned, upsert_partitioned)
+        monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)  # upserts fold
         t, rows = self._table(spark, tmp_path, "kgw")
-        before = set(_effective_bucket_dirs(t))
+        before = set(self._bucket_dirs(t))
         upsert_partitioned(spark, t, spark.createDataFrame(
             [(0, "upd", 100)],
             "doc_id LONG, text STRING, kafka_offset LONG"), buckets=4)
-        superseded = before - set(_effective_bucket_dirs(t))
+        superseded = before - set(self._bucket_dirs(t))
         assert superseded and all(os.path.isdir(d) for d in superseded)
         got = [(r["doc_id"], r["kafka_offset"]) for r in
                read_partitioned(spark, t).collect()]

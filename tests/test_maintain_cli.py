@@ -121,6 +121,11 @@ def test_maintain_cli_check_layout(spark, tmp_path):
     assert r.returncode == 1, (r.stdout, r.stderr[-1000:])
     assert "rebucket_partitioned" in r.stdout
     assert "era=manifest" in r.stdout and "guard=yes" in r.stdout
+    assert "deltas=0" in r.stdout
+    kg_table.upsert_partitioned(spark, p, docs.limit(2), buckets=4)
+    r = subprocess.run([sys.executable, cli, "--check", p],
+                       capture_output=True, text=True, timeout=120)
+    assert "deltas=1" in r.stdout and "1 hidden delta" in r.stdout
 
     kg_table.rebucket_partitioned(spark, p, 4)
     r = subprocess.run([sys.executable, cli, "--check", p],

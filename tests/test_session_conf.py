@@ -91,17 +91,23 @@ def test_retired_env_variables_have_no_effect_and_extra_conf_overrides():
     ("SPARK_GRAFT_CPUS", "-2"),
     ("SPARK_GRAFT_WORKER_PRELOAD", "offf"),
     ("SPARK_GRAFT_WORKER_PRELOAD", "true"),
+    ("SPARK_DRIVER_MEM", "lots"),
+    ("SPARK_DRIVER_MEM", "0g"),
+    ("SPARK_DRIVER_MEM", "-2g"),
+    ("SPARK_DRIVER_MEM", "1.5g"),
+    ("SPARK_DRIVER_MEM", "16 g"),
 ])
 def test_malformed_deployment_env_names_variable_and_value(
         monkeypatch, var, value):
     # a typo must fail loudly: SPARK_GRAFT_CPUS=abc used to fall back to
-    # os.cpu_count() and SPARK_GRAFT_WORKER_PRELOAD=offf to mean "on"
+    # os.cpu_count(), SPARK_GRAFT_WORKER_PRELOAD=offf to mean "on", and
+    # SPARK_DRIVER_MEM went to Spark unchecked
     from dig_etl_engine_spark.session import (
         _worker_preload_confs, get_spark)
 
     monkeypatch.setenv(var, value)
     with pytest.raises(ValueError) as ei:
-        if var == "SPARK_GRAFT_CPUS":
+        if var != "SPARK_GRAFT_WORKER_PRELOAD":
             get_spark("malformed-env-probe")   # raises before the builder
         else:
             _worker_preload_confs("local[4]")
