@@ -35,9 +35,11 @@ reads and writes only this):
     (JSON), all fixed at birth, so neither a reader nor a writer infers
     anything from parquet footers;
   * live and grace bucket dirs — immutable hidden epochs
-    ``.kbe_<bucket>_<token>`` written by folds and compactions, or
-    visible ``_kb=<bucket>`` dirs on a table born by
-    ``rebucket_partitioned``;
+    ``.kbe_<bucket>_<token>``, written only by the one fold
+    (``_fold_into_buckets``: a birth, every ``_MAX_DELTAS``-th upsert,
+    a compaction, a rebucket). A table an older build rebucketed may
+    still name visible ``_kb=<bucket>`` dirs; they stay readable and
+    writable, and the next fold of their bucket supersedes them;
   * delta dirs — immutable hidden ``.kgd_<token>`` dirs, one per
     upserted micro-batch, listed in commit order under ``deltas`` until
     a fold moves their rows into buckets;
@@ -432,9 +434,10 @@ def create_table_if_not_exists(spark: SparkSession, path: str,
     except-path re-check stays as defense in depth against creators
     that bypass this function.
 
-    A missing table beside an older build's stranded ``<table>.__old__``
-    aside raises ``ValueError`` before anything is created: a seed there
-    would hide the only complete copy from every later refusal."""
+    A missing table beside an older build's stranded aside (see
+    :func:`_refuse_stranded_aside`) raises ``ValueError`` before
+    anything is created: a seed there would hide the only complete copy
+    from every later refusal."""
     if _is_table_dir(path):           # cheap lock-free fast path: the
         return False                  # common case is "already exists"
     _refuse_stranded_aside(path)
@@ -468,20 +471,31 @@ def dedupe_last_write_wins(df: DataFrame, key_col: str = "doc_id",
 
 
 def _refuse_stranded_aside(target_path: str) -> None:
-    """Refuse a table whose only complete copy sits at
-    ``<table>.__old__``. Older builds committed flat tables with a
-    rename-aside swap (table aside, merged copy in); a crash between
-    the two renames left the aside as the only copy, and nothing heals
-    it any more. Going on would let a writer create a new table from
-    one batch, or a reader serve nothing, while the real table sits
-    ignored beside it. Touches no file."""
-    old = target_path + ".__old__"
-    if not os.path.isdir(target_path) and os.path.isdir(old):
+    """Refuse a missing table whose only complete copy sits in a
+    sibling an older build's rename-aside swap left: ``<table>.__old__``
+    (the flat upsert moved the table there), ``<table>.rebucket_old``
+    (the rebucket did), or a ``<table>.rebucket_tmp.*`` staging dir
+    holding its ``_kg_manifest`` (a rebucketed copy that never moved
+    in). A crash between such a swap's two renames left the aside as
+    the only copy, and nothing heals it any more. Going on would let a
+    writer create a new table from one batch, or a reader serve
+    nothing, while the real table sits ignored beside it. Touches no
+    file."""
+    if os.path.isdir(target_path):
+        return
+    asides = [a for a in (target_path + ".__old__",
+                          target_path + ".rebucket_old")
+              if os.path.isdir(a)]
+    asides += sorted(
+        d for d in glob_mod.glob(glob_mod.escape(target_path)
+                                 + ".rebucket_tmp.*")
+        if os.path.exists(os.path.join(d, _MANIFEST)))
+    if asides:
         raise ValueError(
-            f"{target_path} does not exist but {old} does: an older "
-            "build crashed mid-swap and the aside holds the only "
-            f"complete copy of the table. Rename {old} back to "
-            f"{target_path}, then retry.")
+            f"{target_path} does not exist but {', '.join(asides)} "
+            "does: an older build crashed mid-swap and the aside holds "
+            f"the only complete copy of the table. Rename {asides[0]} "
+            f"back to {target_path}, then retry.")
 
 
 # ---------------------------------------------------------------------------
@@ -490,29 +504,31 @@ def _refuse_stranded_aside(target_path: str) -> None:
 # primitive as the BM25 stats epochs, applied per table).
 #
 # Layout contract: table data lives in IMMUTABLE directories — hidden
-# ``.kbe_<bucket>_<token>`` bucket epochs written by folds and
-# compactions, the visible ``_kb=<bucket>`` dirs a
-# ``rebucket_partitioned`` birth references in place, and hidden
-# ``.kgd_<token>`` deltas, one per upserted micro-batch.
-# ``read_partitioned`` is the ONLY read API: a raw
-# ``spark.read.parquet(root)`` cannot see hidden dirs, so it fails
-# loudly on a fully-epoch table and would silently serve stale/partial
-# rows on a rebucketed table with deltas or hidden epochs beside its
-# visible ``_kb=`` dirs (see ``compact_partitioned``'s docstring). The
+# ``.kbe_<bucket>_<token>`` bucket epochs, which only the fold writes
+# (an older build's rebucket left visible ``_kb=<bucket>`` dirs, still
+# read and superseded like epochs), and hidden ``.kgd_<token>`` deltas,
+# one per upserted micro-batch. ``read_partitioned`` is the ONLY read
+# API: a raw ``spark.read.parquet(root)`` cannot see hidden dirs, and
+# the ``KG_NAIVE_READ_GUARD`` tripwire makes it fail loudly. The
 # manifest file ``_kg_manifest`` is the table's ONE metadata file: it
 # maps bucket id → live dir name, lists the deltas in commit order,
 # records the grace copies, and carries what is fixed at birth — the
 # bucket count, the ``widened: true`` hash-version token every reader
 # checks, the key and order columns and the schema. It is replaced
-# atomically by ``commit_pointer``. A delta commit, a fold of many
-# buckets and deltas, or a compaction therefore lands in ONE rename —
-# there is no per-bucket between-renames window where a bucket is
-# missing, and no rollback protocol: a crash before the flip leaves
-# only unreferenced dirs (recomputable, swept at the next writer
-# entry), a crash after leaves the commit fully applied.
+# atomically by ``commit_pointer``. Every writer publishes through
+# that one flip (``_commit_buckets``), and each call commits at most
+# one generation: a delta commit, a fold of many buckets and deltas, a
+# compaction (deltas and fragmented buckets in one fold) and a rebucket
+# (every row under the new count) each land in ONE rename — there is
+# no per-bucket between-renames window where a bucket is missing, no
+# sibling dir beside the table, and no rollback protocol: a crash
+# before the flip leaves only unreferenced dirs (recomputable, swept at
+# the next writer entry), a crash after leaves the commit fully
+# applied.
 #
 # Reader grace: each commit records the dirs it stops referencing — a
-# rewritten bucket's PREVIOUS dir, a folded delta — in the manifest's
+# rewritten bucket's PREVIOUS dir, a folded delta, every old dir of a
+# rebucketed table — in the manifest's
 # ``grace`` list, each entry stamped with the committing generation and
 # wall-clock time. Sweeps keep live ∪ deltas ∪ grace, so an in-flight
 # reader that resolved a pre-flip manifest keeps complete roots until
@@ -536,8 +552,8 @@ GRACE_RETAIN_SECONDS: float = 0.0
 
 _MANIFEST = "_kg_manifest"
 
-# name prefixes of every dir that holds table rows: bucket epochs,
-# rebucketed visible buckets, deltas
+# name prefixes of every dir that holds table rows: bucket epochs, an
+# older build's visible rebucketed buckets, deltas
 _DATA_DIR_PREFIXES = (".kbe_", "_kb=", ".kgd_")
 
 # Swept-generation sidecar (verdict r11 item 4 — the entry-sweep syscall
@@ -557,9 +573,10 @@ _SWEPT_GEN = ".kg_swept_gen"
 
 # Naive-read tripwire (verdict r11 item 3): once any committed bucket
 # lives in a hidden ``.kbe_`` epoch dir, a raw ``spark.read.parquet``
-# at the table root is WRONG — on a rebucketed-then-upserted table
-# (visible ``_kb=`` dirs coexisting with hidden epochs) it silently
-# serves stale/partial rows, indefinitely. This visible non-parquet
+# at the table root is WRONG — on an older build's rebucketed table
+# that was upserted since (visible ``_kb=`` dirs coexisting with hidden
+# epochs or deltas) it silently serves stale/partial rows. This
+# visible non-parquet
 # file makes such a read fail loudly instead (Spark's footer read
 # names the file: CANNOT_READ_FILE_FOOTER .../KG_NAIVE_READ_GUARD),
 # while every sanctioned path ignores it — ``read_partitioned`` reads
@@ -599,7 +616,7 @@ _MAX_DELTAS: int = 16
 def _new_manifest(schema: T.StructType, *, buckets: int, key: str,
                   order: str) -> dict:
     """The in-memory manifest of a table about to be born (generation
-    0, nothing live): what a birth fold or a rebucket commits onto."""
+    0, nothing live): what a birth fold commits onto."""
     return {"gen": 0, "buckets": buckets, "key": key, "order": order,
             "schema": schema, "live": {}, "deltas": [], "grace": []}
 
@@ -662,8 +679,8 @@ def _load_manifest(target_path: str) -> dict | None:
 
 def _dump_manifest(m: dict) -> str:
     """The ONE serializer of the manifest wire format (every writer —
-    commit, recovery's grace prune, rebucket's birth manifest — goes
-    through here, so a format change lands exactly once). ``widened``
+    commit and recovery's grace prune — goes through here, so a
+    format change lands exactly once). ``widened``
     is constant: every table hashes widened keys (see
     :func:`_bucket_expr`), and the token is what a reader checks."""
     import json
@@ -787,8 +804,7 @@ def _write_naive_read_guard(target_path: str, m: dict) -> None:
                 "non-parquet file makes such a read fail loudly "
                 "instead. Read via "
                 "dig_etl_engine_spark.sinks.kg_table.read_partitioned; "
-                "run rebucket_partitioned to normalize the layout for "
-                "external tools; scripts/maintain.py --check <table> "
+                "scripts/maintain.py --check <table> "
                 "reports the layout state.\n")
     except OSError:
         logger.warning("kg_table: could not write naive-read guard "
@@ -917,7 +933,8 @@ def _commit_buckets(target_path: str, m: dict, new_dirs: dict[int, str],
 def _recover_partitioned_swap(target_path: str
                               ) -> tuple[dict | None, bool]:
     """Entry-time recovery for the bucketed table, shared by every
-    mutating entry point (upsert, compaction). There is no rollback
+    mutating entry point (upsert, compaction, rebucket). There is no
+    rollback
     protocol — the manifest flip is the linearization point — so
     recovery only sweeps: crashed writers' ``.upsert_tmp_*`` staging,
     grace entries past the retention window (see the ``_MANIFEST``
@@ -926,8 +943,9 @@ def _recover_partitioned_swap(target_path: str
     alike — and orphaned manifest temp files. With no manifest yet,
     ``.kbe_*`` and ``.kgd_*`` dirs can only be a birth publisher that
     crashed before its flip: recomputable orphans, dropped. A retired
-    format raises from :func:`_load_manifest` before anything is
-    touched.
+    format raises from :func:`_load_manifest`, and a missing table
+    beside a stranded aside from :func:`_refuse_stranded_aside`,
+    before anything is touched.
 
     STEADY-STATE FAST PATH (verdict r11 item 4): when the swept-gen
     sidecar equals the manifest's generation, every commit since the
@@ -937,8 +955,7 @@ def _recover_partitioned_swap(target_path: str
     instead of root listings plus per-dir stats. A crashed writer can
     never leave a matching sidecar; a hand-modified table can
     (documented limitation — the protocol's files are not a defense
-    against out-of-band edits; ``maintain.py --check`` and
-    ``rebucket_partitioned`` are).
+    against out-of-band edits; ``maintain.py --check`` is).
 
     Returns ``(manifest, steady)``: the table's parsed manifest as
     this recovery left it (post-prune; None when there is none) for
@@ -949,6 +966,7 @@ def _recover_partitioned_swap(target_path: str
     migration listdir too).
     """
     if not os.path.isdir(target_path):
+        _refuse_stranded_aside(target_path)
         return None, False
     m = _load_manifest(target_path)
     if m is not None and _read_swept_gen(target_path) == m["gen"] \
@@ -1006,9 +1024,9 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
     replays idempotently). Module-level so the crash-fuzz suite can
     inject faults without a Spark write per iteration.
 
-    ``expected`` (the fold's touched-bucket set) is the
+    ``expected`` (the buckets the fold read back) is the
     placement-invariant tripwire: a staged bucket OUTSIDE it means
-    rows read from a touched directory re-hashed into a bucket whose
+    rows read from a live directory re-hashed into a bucket whose
     incumbent rows were never read — publishing it would REPLACE that
     bucket's live dir and silently drop those rows (reachable only on
     a table whose stored rows violate key↔directory placement, e.g. a
@@ -1025,9 +1043,9 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
         rogue = sorted(set(ids) - set(expected))
         if rogue:
             raise ValueError(
-                f"upsert_partitioned: merged rows hash into bucket(s) "
-                f"{rogue} that this batch never touched — stored rows "
-                f"in the touched directories hash outside their own "
+                f"{target_path}: folded rows hash into bucket(s) "
+                f"{rogue} that the fold never read back — stored rows "
+                f"in the folded directories hash outside their own "
                 f"bucket (placement-invariant violation: a data file "
                 f"was moved or written outside the table protocol). "
                 f"Publishing would silently drop those buckets' "
@@ -1103,8 +1121,9 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     resolves last-write-wins over buckets ∪ deltas. When the table
     already holds ``_MAX_DELTAS - 1`` deltas, the batch is folded into
     the buckets together with them instead (:func:`_fold_into_buckets`
-    — the one code path that merges rows into buckets, shared with the
-    birth write and :func:`compact_partitioned`). Every crash point
+    — the one code path that writes bucket dirs, shared with the birth
+    write, :func:`compact_partitioned` and
+    :func:`rebucket_partitioned`). Every crash point
     leaves the table serving a complete committed state: before the
     flip the batch simply hasn't happened (its staged dirs are
     unreferenced orphans, swept at the next entry) and replays
@@ -1124,8 +1143,9 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
 
     A retired on-disk format (``_kb=`` dirs without a manifest, or a
     manifest that is not v3 with a bucket count and the widened hash),
-    or a missing table whose ``<table>.__old__`` aside an older build
-    stranded, raises ``ValueError`` before anything on disk changes."""
+    or a missing table beside an aside an older build stranded (see
+    :func:`_refuse_stranded_aside`), raises ``ValueError`` before
+    anything on disk changes."""
     with table_lock(target_path, timeout=lock_timeout):
         _upsert_partitioned_locked(spark, target_path, batch,
                                    key_col=key_col, order_col=order_col,
@@ -1297,7 +1317,6 @@ def _check_lww_columns(target_path: str, m: dict, key_col: str,
 def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                                batch: DataFrame, *, key_col: str,
                                order_col: str, buckets: int) -> None:
-    _refuse_stranded_aside(target_path)
     # recovery FIRST: it returns the table's parsed manifest (the one
     # parse this entry pays — the dominant fast-path cost at large
     # bucket counts) plus whether the fast path was taken
@@ -1408,22 +1427,29 @@ def _parquet_rows(path: str) -> int:
 
 
 def _fold_into_buckets(spark: SparkSession, target_path: str, m: dict,
-                       incoming: DataFrame | None = None) -> dict:
-    """The one code path that merges rows into buckets: fold
-    ``incoming`` (a deduplicated batch aligned to the table, or None)
-    and every delta ``m`` lists into the buckets, and return the
-    committed manifest. Callers: the birth or flat-migration write
-    (``m`` a :func:`_new_manifest`), :func:`compact_partitioned`
-    (deltas only), and :func:`upsert_partitioned` once a table holds
-    ``_MAX_DELTAS - 1`` deltas.
+                       incoming: DataFrame | None = None,
+                       rewrite: frozenset[int] = frozenset()) -> dict:
+    """The one code path that writes bucket dirs: fold ``incoming`` (a
+    deduplicated batch aligned to the table, or None) and every delta
+    ``m`` lists into the buckets, rewrite the live buckets ``rewrite``
+    names whether or not a row lands in them, and return the committed
+    manifest. Callers: the birth or flat-migration write (``m`` a
+    :func:`_new_manifest`), :func:`upsert_partitioned` once a table
+    holds ``_MAX_DELTAS - 1`` deltas (``rewrite`` empty),
+    :func:`compact_partitioned` (the deltas, and the fragmented
+    buckets as ``rewrite``) and :func:`rebucket_partitioned` (every
+    old dir as a delta of a table with nothing live).
 
       1. incoming ∪ deltas is bucketed, deduplicated, and its touched
          bucket ids collected (≤ ``buckets`` values — a driver-safe
          list);
-      2. only those buckets' live dirs are read back (the pruning is
-         structural: untouched dirs are never opened), with the
-         manifest's schema rather than one inferred from footers;
-      3. last-write-wins merges them with step 1's rows;
+      2. only the live dirs of those buckets and of ``rewrite`` are
+         read back (the pruning is structural: other dirs are never
+         opened), with the manifest's schema rather than one inferred
+         from footers;
+      3. last-write-wins merges them with step 1's rows (a live dir
+         read back with no incoming row or delta is written as it
+         is: its rows are already unique);
       4. the merged buckets are written to a dot-prefixed staging dir
          inside the table and published by
          :func:`_publish_staged_buckets`: each moves to an immutable
@@ -1443,11 +1469,14 @@ def _fold_into_buckets(spark: SparkSession, target_path: str, m: dict,
             *[os.path.join(target_path, d) for d in m["deltas"]])
         b = deltas if b is None else \
             b.unionByName(deltas, allowMissingColumns=True)
-    b = dedupe_last_write_wins(
-        b.withColumn("_kb", _bucket_expr(b, key, buckets)), key, order)
+    if b is not None:
+        b = dedupe_last_write_wins(
+            b.withColumn("_kb", _bucket_expr(b, key, buckets)), key, order)
     touched = None
     if m["live"]:
-        touched = {r[0] for r in b.select("_kb").distinct().collect()}
+        touched = set(rewrite)
+        if b is not None:
+            touched |= {r[0] for r in b.select("_kb").distinct().collect()}
         touched_dirs = [os.path.join(target_path, m["live"][n])
                         for n in sorted(touched) if n in m["live"]]
         if touched_dirs:
@@ -1455,131 +1484,76 @@ def _fold_into_buckets(spark: SparkSession, target_path: str, m: dict,
                         .parquet(*touched_dirs))
             existing = existing.withColumn(
                 "_kb", _bucket_expr(existing, key, buckets))
-            b = dedupe_last_write_wins(
+            b = existing if b is None else dedupe_last_write_wins(
                 existing.unionByName(b, allowMissingColumns=True),
                 key, order)
     token = uuid.uuid4().hex[:8]
     staging = os.path.join(target_path, f".upsert_tmp_{token}")
     _invalidate_swept_gen(target_path)
     # one task per bucket writes one file per bucket: the dedupe's
-    # shuffle leaves each bucket spread over several tasks, and the
-    # small-file pass of compact_partitioned then rewrote every folded
-    # bucket (a fold of 22 deltas into 64 buckets: 2.5 s, then 13 s of
-    # compaction, 4-core host)
+    # shuffle leaves each bucket spread over several tasks, and every
+    # bucket it wrote would be left fragmented for compaction to
+    # rewrite again
     b.repartition("_kb").write.partitionBy("_kb").parquet(staging)
-    # the tripwire set: every staged bucket must come from step 1's
-    # fold (= touched) — on a birth write there are no incumbents to
-    # protect
+    # the tripwire set: every staged bucket must be one the fold read
+    # back (= touched) — on a birth write or a rebucket nothing is live,
+    # so there are no incumbents to protect
     return _publish_staged_buckets(target_path, staging, token,
                                    manifest=m, expected=touched)
 
 
 def compact_partitioned(spark: SparkSession, target_path: str, *,
-                        target_file_bytes: int = 128 << 20,
-                        min_files: int = 2,
                         lock_timeout: float = 300.0) -> int:
-    """Fold the table's deltas into its buckets, then compact small
-    files. The fold (:func:`_fold_into_buckets`) rewrites the buckets
-    the deltas touch and leaves a table with no deltas, so reads stop
-    paying the last-write-wins shuffle. The small-file pass then
-    rewrites each bucket holding ≥ ``min_files`` files down to
-    ceil(bytes/target) files; untouched buckets keep their exact files.
-    Returns the number of buckets rewritten by either step.
+    """Fold the table's deltas into its buckets and rewrite every live
+    bucket that holds more than one parquet file, in ONE fold
+    (:func:`_fold_into_buckets`, with the fragmented buckets as its
+    ``rewrite`` set): one Spark job chain, however many buckets it
+    rewrites, and one atomic manifest flip (:func:`_commit_buckets`).
+    The fold writes one file per bucket and leaves a table with no
+    deltas, so reads stop paying the last-write-wins shuffle; buckets
+    neither a delta nor fragmentation touches keep their exact dirs.
+    Returns the number of buckets rewritten (0, committing nothing,
+    when there is no delta and no fragmented bucket).
 
-    Each step publishes its rewritten buckets as hidden immutable epoch
-    directories (``.kbe_<n>_<token>`` — never read until referenced)
-    with ONE atomic manifest replace (:func:`_commit_buckets`; verdict
-    r10 item 2 — the ES alias-swap contract: the index never serves a
-    404 mid-reindex). Never reading and overwriting the same path in
-    one job also keeps clear of Spark's self-overwrite guard. There is
-    NO crash window in which a bucket is missing: before a flip the
-    table serves its exact previous state (orphan epochs are swept at
-    the next entry); after it the step is fully applied, with each
-    superseded dir and folded delta retained as a generation-stamped
-    grace copy for in-flight readers.
-
-    Local-FS rename semantics here; on HDFS swap ``os.replace`` for an
-    overwriting FileSystem.rename, on S3 use a manifest-committing
-    table format (Delta's OPTIMIZE is the managed-table equivalent of
-    exactly this commit shape).
+    The rewritten buckets are hidden immutable epoch directories
+    (``.kbe_<n>_<token>`` — never read until referenced), published
+    by the one flip (verdict r10 item 2 — the ES alias-swap contract:
+    the index never serves a 404 mid-reindex). A call commits at most
+    one generation, so each superseded dir and folded delta is a
+    generation-stamped grace copy that a reader resolved before the
+    call keeps for the whole retention window. There is NO crash
+    window in which a bucket is missing: before the flip the table
+    serves its exact previous state (orphan epochs are swept at the
+    next entry); after it the compaction is fully applied.
 
     Writer exclusion is ENFORCED via :func:`table_lock` (a concurrent
     upsert could otherwise commit a delta between this function's read
     and its flip, losing the upsert — with the lock it simply waits).
     Readers need no coordination: :func:`read_partitioned` resolves the
-    manifest in one atomic pointer read. Naive directory listings
-    (``spark.read.parquet`` straight at the table root) are NOT the
-    read API, in EITHER direction: on a table whose buckets all live in
-    hidden epoch dirs such a read fails loudly (no visible data files,
-    plus the ``KG_NAIVE_READ_GUARD`` tripwire), but on a rebucketed
-    table that was upserted or compacted since — visible ``_kb=`` dirs
-    coexisting with hidden deltas or epochs — it would SILENTLY serve
-    stale or partial rows; the tripwire makes that read fail too. Route
-    every reader through :func:`read_partitioned`; a one-shot
-    :func:`rebucket_partitioned` normalizes the layout if it bothers an
-    external tool.
+    manifest in one atomic pointer read. A raw ``spark.read.parquet``
+    at the table root is NOT the read API: it cannot see the hidden
+    dirs, and the ``KG_NAIVE_READ_GUARD`` tripwire makes it fail
+    loudly. Delta's OPTIMIZE is the managed-table equivalent of this
+    commit shape.
 
     A retired on-disk format raises ``ValueError`` before anything on
     disk changes (see :func:`_load_manifest`).
     """
     with table_lock(target_path, timeout=lock_timeout):
-        return _compact_partitioned_locked(
-            spark, target_path, target_file_bytes=target_file_bytes,
-            min_files=min_files)
-
-
-def _compact_partitioned_locked(spark: SparkSession, target_path: str,
-                                *, target_file_bytes: int,
-                                min_files: int) -> int:
-    import glob
-    import math
-
-    # sweep orphans/expired grace — the shared entry recovery (its
-    # parsed manifest is reused below instead of a second parse)
-    m, _steady = _recover_partitioned_swap(target_path)
-    if m is None:
-        return 0
-    rewritten: set[int] = set()
-    if m["deltas"]:
+        # the shared entry recovery sweeps orphans/expired grace; its
+        # parsed manifest is reused instead of a second parse
+        m, _steady = _recover_partitioned_swap(target_path)
+        if m is None:
+            return 0
+        fragmented = frozenset(
+            n for n, d in m["live"].items()
+            if sum(f.endswith(".parquet") for f in
+                   os.listdir(os.path.join(target_path, d))) > 1)
+        if not m["deltas"] and not fragmented:
+            return 0
         before = m["live"]
-        m = _fold_into_buckets(spark, target_path, m)
-        rewritten = {n for n, d in m["live"].items() if before.get(n) != d}
-    todo: list[tuple[int, str, int]] = []
-    for kb, dname in sorted(m["live"].items()):
-        d = os.path.join(target_path, dname)
-        files = glob.glob(os.path.join(glob.escape(d), "*.parquet"))
-        if len(files) >= min_files:
-            nbytes = sum(os.path.getsize(f) for f in files)
-            nfiles = max(1, math.ceil(nbytes / target_file_bytes))
-            # skip buckets already AT the target layout: rewriting 3
-            # ~target-sized files into 3 files pays a full-bucket
-            # rewrite for zero gain, on every nightly run, forever
-            if nfiles < len(files):
-                todo.append((kb, d, nfiles))
-    # write every compacted copy to its (hidden, not-yet-referenced)
-    # epoch dir, then publish them ALL with one atomic manifest flip —
-    # a crash before the flip leaves only recomputable orphan epochs
-    # (swept at the next entry) and the table serving its exact
-    # pre-compaction state; compaction never changes data, so there is
-    # nothing to replay
-    token = uuid.uuid4().hex[:8]
-    new_dirs: dict[int, str] = {}
-    if todo:
-        # new on-disk state follows: invalidate the fast-path sidecar
-        # first so a crash mid-compaction is fully swept at next entry
-        _invalidate_swept_gen(target_path)
-    for kb, d, nfiles in todo:
-        name = f".kbe_{kb}_{token}"
-        (spark.read.parquet(d).coalesce(nfiles)
-         .write.parquet(os.path.join(target_path, name)))
-        _fsync_tree(os.path.join(target_path, name))
-        new_dirs[kb] = name
-    if new_dirs:
-        m, clean = _commit_buckets(target_path, m, new_dirs,
-                                   deltas=m["deltas"])
-        if clean:
-            _stamp_swept_gen(target_path, m["gen"])
-    return len(rewritten | set(new_dirs))
+        m = _fold_into_buckets(spark, target_path, m, rewrite=fragmented)
+        return sum(before.get(n) != d for n, d in m["live"].items())
 
 
 def rebucket_partitioned(spark: SparkSession, target_path: str,
@@ -1590,84 +1564,51 @@ def rebucket_partitioned(spark: SparkSession, target_path: str,
     for a table that outgrew its birth layout. Bucket SIZE, not bucket
     count, is what should stay constant as a table grows: a 64-bucket
     table that was right at 1 TB has 100× oversized buckets at 100 TB
-    (each micro-batch rewrite touches 1/64th of the table), so growth is
-    periodic rebucketing, exactly like re-sharding a key-value store.
+    (each fold rewrites whole buckets), so growth is periodic
+    rebucketing, exactly like re-sharding a key-value store.
 
-    Protocol (single-writer maintenance op, like
-    :func:`compact_partitioned`): read the whole table, rewrite under
-    the new count into a sibling staging dir whose ``_kb=<n>`` dirs its
-    own gen-0 manifest references in place (the manifest is written
-    last, so it marks the staging complete), then swap with two renames
-    — target aside to ``.rebucket_old``, staging in — and drop the old
-    copy. Crash recovery on entry: a staging dir bearing its manifest
-    with the table missing finishes the swap; a missing table with only
-    the old copy restores it; stale staging dirs are swept. Returns the
-    row count of the rebucketed table. Runs under :func:`table_lock`
-    (writer exclusion against live upserts; see
-    :func:`compact_partitioned` for the reader-atomicity caveat that
-    the lock does NOT cover).
+    One fold (:func:`_fold_into_buckets`) inside the table: the live
+    buckets' plain scan and the deltas, read as the deltas of a table
+    with ``new_buckets`` buckets and nothing live, are bucketed under
+    the new count, deduplicated and written to hidden ``.kbe_`` epochs.
+    One manifest flip then publishes them with the new ``buckets``, and
+    every dir the old manifest referenced becomes a grace entry — so a
+    reader that resolved the old manifest keeps complete rows, a crash
+    before the flip leaves the table as it was (orphan epochs are swept
+    at the next entry), and no dir ever sits beside the table. Enters
+    through the shared entry recovery and runs under
+    :func:`table_lock` (writer exclusion against live upserts). Returns
+    the row count of the rebucketed table, read from the new epochs'
+    parquet footers (no Spark job).
 
     The rebucketed table keeps the manifest's key, order and schema and
-    holds no deltas (the read resolves them). A table with no manifest
-    — none yet, or a flat one awaiting its first upsert — raises
-    ``ValueError``, and so does a ``key_col`` that differs from the
-    manifest's.
+    holds no deltas. Every row is rehashed, so this is also the repair
+    for a table whose stored rows violate key↔bucket placement. A table
+    with no manifest — none yet, or a flat one awaiting its first
+    upsert — raises ``ValueError``, and so does a ``key_col`` that
+    differs from the manifest's, and a ``new_buckets`` below 1.
     """
+    if new_buckets < 1:
+        raise ValueError(f"rebucket_partitioned: new_buckets="
+                         f"{new_buckets!r} — a table needs at least one "
+                         "bucket.")
     with table_lock(target_path, timeout=lock_timeout):
-        return _rebucket_partitioned_locked(spark, target_path,
-                                            new_buckets, key_col=key_col)
-
-
-def _rebucket_partitioned_locked(spark: SparkSession, target_path: str,
-                                 new_buckets: int, *,
-                                 key_col: str) -> int:
-    tmp = target_path + f".rebucket_tmp.{os.getpid()}"
-    old = target_path + ".rebucket_old"
-
-    # recovery before new work (states keyed by what survived a crash)
-    for stale in glob_mod.glob(glob_mod.escape(target_path)
-                               + ".rebucket_tmp.*"):
-        if not os.path.isdir(target_path) and \
-                os.path.exists(os.path.join(stale, _MANIFEST)):
-            logger.warning("rebucket_partitioned: finishing interrupted "
-                           "swap from %s", stale)
-            os.rename(stale, target_path)
-        else:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.isdir(target_path) and os.path.isdir(old):
-        logger.warning("rebucket_partitioned: restoring %s from %s",
-                       target_path, old)
-        os.rename(old, target_path)
-    shutil.rmtree(old, ignore_errors=True)
-
-    m = _load_manifest(target_path)
-    if m is None:
-        raise ValueError(
-            f"rebucket_partitioned: {target_path} has no {_MANIFEST} — "
-            "there is no bucketed table to rebucket. upsert_partitioned "
-            "creates one, and migrates a flat table on its first call.")
-    _check_lww_columns(target_path, m, key_col)
-    df = read_partitioned(spark, target_path)
-    kb = _bucket_expr(df, key_col, new_buckets)
-    (df.withColumn("_kb", kb)
-     .write.mode("overwrite").partitionBy("_kb").parquet(tmp))
-    # data durability before the manifest references it (the staging
-    # root is about to become the table — same contract as the
-    # publish path's staged-epoch flush)
-    _fsync_tree(tmp)
-    # a rebucketed table is born manifest-routed: reference the fresh
-    # _kb= dirs in place (gen 0, no grace — the whole root swaps at once)
-    live = {int(n[4:]): n for n in os.listdir(tmp) if n.startswith("_kb=")}
-    born = _new_manifest(m["schema"], buckets=new_buckets, key=m["key"],
-                         order=m["order"])
-    commit_pointer(tmp, _dump_manifest(dict(born, live=live)),
-                   name=_MANIFEST)
-    n = spark.read.option("basePath", tmp) \
-        .parquet(os.path.join(tmp, "_kb=*")).count()
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return n
+        m, _steady = _recover_partitioned_swap(target_path)
+        if m is None:
+            raise ValueError(
+                f"rebucket_partitioned: {target_path} has no {_MANIFEST}"
+                " — there is no bucketed table to rebucket. "
+                "upsert_partitioned creates one, and migrates a flat "
+                "table on its first call.")
+        _check_lww_columns(target_path, m, key_col)
+        # under the new count no old dir is a bucket: each joins the
+        # deltas, so the fold's flip moves every one of them to grace
+        m = _fold_into_buckets(spark, target_path, dict(
+            m, buckets=new_buckets, live={},
+            deltas=[d for _, d in sorted(m["live"].items())]
+            + m["deltas"]))
+        return sum(_parquet_rows(os.path.join(target_path, d))
+                   for d in m["live"].values())
 
 
 def layout_report(target_path: str) -> dict:
@@ -1675,16 +1616,17 @@ def layout_report(target_path: str) -> dict:
     ``scripts/maintain.py --check`` (verdict r11 item 3): classifies
     the table (``absent`` / ``flat`` / ``manifest`` / ``retired``),
     counts visible vs hidden live dirs and live deltas, and returns
-    ``findings`` — human-readable anomaly strings, empty when a naive
-    ``spark.read.parquet(root)`` would be safe. Mixed layouts (hidden
-    ``.kbe_`` epochs or ``.kgd_`` deltas beside visible dirs/files) are
-    flagged with :func:`rebucket_partitioned` named as the normalizer
-    and the guard file's presence reported; unreferenced bucket and
-    delta dirs are flagged; a retired on-disk format is a finding, not
-    an error. Takes no lock and mutates nothing — safe against a live
-    ingest (the counts are a snapshot; only the classification is
-    load-bearing). A torn manifest still raises (the caller reports it
-    as unreadable)."""
+    ``findings`` — human-readable anomaly strings, empty on a healthy
+    table. Hidden epochs and deltas are the layout every writer
+    produces, so they are no finding; these are: a hidden live dir or
+    delta without the naive-read guard file, unreferenced bucket and
+    delta dirs, stray flat parquet files beside a manifest, an older
+    build's ``<table>.rebucket_tmp.*``, ``<table>.rebucket_old`` or
+    ``<table>.__tmp__*`` sibling beside a live table, and a retired
+    on-disk format (a finding, not an error). Takes no lock and
+    mutates nothing — safe against a live ingest (the counts are a
+    snapshot; only the classification is load-bearing). A torn
+    manifest still raises (the caller reports it as unreadable)."""
     import json
 
     report: dict = {"path": target_path, "era": "absent",
@@ -1692,6 +1634,17 @@ def layout_report(target_path: str) -> dict:
     if not os.path.isdir(target_path):
         report["findings"].append("table directory does not exist")
         return report
+    esc = glob_mod.escape(target_path)
+    siblings = sorted(
+        glob_mod.glob(esc + ".rebucket_tmp.*")
+        + glob_mod.glob(esc + ".rebucket_old")
+        + glob_mod.glob(esc + ".__tmp__*"))
+    if siblings:
+        report["findings"].append(
+            f"{len(siblings)} sibling dir(s) an older build's swap left "
+            f"beside the table ({', '.join(siblings[:3])}"
+            f"{', ...' if len(siblings) > 3 else ''}): nothing reads "
+            "or sweeps them; remove them once the table reads correctly")
     names = os.listdir(target_path)
     try:
         m = _load_manifest(target_path)
@@ -1723,19 +1676,14 @@ def layout_report(target_path: str) -> dict:
     report["grace_dirs"] = len(m["grace"])
     guard = _NAIVE_READ_GUARD in names
     report["guard_present"] = guard
-    if hidden or m["deltas"]:
+    if (hidden or m["deltas"]) and not guard:
         report["findings"].append(
-            f"mixed/hidden layout: {len(hidden)} live bucket(s) in "
-            f"hidden epoch dirs, {len(visible)} still visible, "
-            f"{len(m['deltas'])} hidden delta(s) — a "
-            "naive spark.read.parquet(root) CANNOT see this table "
-            "correctly; read via kg_table.read_partitioned, or run "
-            "rebucket_partitioned to normalize the layout for "
-            "external tools"
-            + ("" if guard else
-               " [naive-read guard file MISSING — a raw root read "
-               "would silently serve stale/partial rows; the next "
-               "commit or writer entry restores it]"))
+            f"naive-read guard file {_NAIVE_READ_GUARD} missing beside "
+            f"{len(hidden)} hidden live bucket(s) and "
+            f"{len(m['deltas'])} hidden delta(s): a raw "
+            "spark.read.parquet(root) would silently serve "
+            "stale/partial rows; the next commit or writer entry "
+            "restores it")
     referenced = _referenced_dirs(m)
     orphans = [n for n in names
                if n.startswith(_DATA_DIR_PREFIXES)
@@ -1768,17 +1716,13 @@ def read_partitioned(spark: SparkSession, target_path: str) -> DataFrame:
     the table without deltas).
 
     A table with no manifest is flat (a seed, or an older build's table
-    awaiting its migration) and reads as one parquet dir; a table
-    mid-rebucket swap (the whole dir briefly aside) reads from its
-    ``.rebucket_old`` copy. A retired on-disk format raises
-    ``ValueError`` (see :func:`_load_manifest`), and so does a missing
-    table beside an older build's stranded ``.__old__`` aside."""
+    awaiting its migration) and reads as one parquet dir. Every writer,
+    rebucketing included, publishes by one manifest flip inside the
+    table, so there is no moment at which the table dir is missing. A
+    retired on-disk format raises ``ValueError`` (see
+    :func:`_load_manifest`), and so does a missing table beside an
+    older build's stranded aside (see :func:`_refuse_stranded_aside`)."""
     _refuse_stranded_aside(target_path)
-    if not os.path.isdir(target_path) and \
-            os.path.isdir(target_path + ".rebucket_old"):
-        # mid-swap fallback: the retired copy is the only complete
-        # table during the instant between the swap's two renames
-        target_path += ".rebucket_old"
     m = _load_manifest(target_path)
     if m is None:
         return spark.read.parquet(target_path)

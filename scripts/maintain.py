@@ -6,9 +6,9 @@ and every decay has a sanctioned repair (README §"Persisted state has a
 maintenance story"):
 
 * bucketed KG tables accumulate one delta dir per micro-batch upsert
-  and small files per fold → ``kg_table.compact_partitioned`` folds
-  the deltas and compacts the files (and, when buckets outgrow their
-  birth size, ``kg_table.rebucket_partitioned``);
+  → ``kg_table.compact_partitioned`` folds the deltas and rewrites
+  any fragmented bucket in one fold and one commit (and, when buckets
+  outgrow their birth size, ``kg_table.rebucket_partitioned``);
 * incremental minhash dedup indexes accumulate ``_ab=`` append
   partitions → ``dedup.compact_minhash_index``;
 * incremental IVF ANN indexes accumulate ``(cluster, _ab)`` appends
@@ -90,17 +90,14 @@ def main() -> int:
                     help="read-only layout diagnosis of a KG table "
                          "(kg_table.layout_report; era absent, flat, "
                          "manifest or retired, and the live delta "
-                         "count): flags mixed "
-                         "visible/hidden bucket layouts that a naive "
-                         "spark.read.parquet(root) cannot see "
-                         "correctly, naming rebucket_partitioned as "
-                         "the normalizer, and retired on-disk formats "
+                         "count): flags a missing naive-read guard, "
+                         "unreferenced dirs, stray flat files, an "
+                         "older build's swap siblings beside the "
+                         "table, and retired on-disk formats "
                          "(_kb= dirs with no _kg_manifest, a manifest "
                          "that is not v3) that no entry point reads; "
                          "repeatable; exits 1 when any checked table "
                          "has findings; needs no Spark session")
-    ap.add_argument("--target-file-bytes", type=int, default=128 << 20,
-                    help="KG compaction target file size (default 128 MiB)")
     ap.add_argument("--lock-timeout", type=float, default=1800.0,
                     metavar="SECONDS",
                     help="how long to wait for a layout's writer lock "
@@ -128,9 +125,8 @@ def main() -> int:
                 # FINDING, not a crash
                 print(f"check {path}: UNREADABLE")
                 print(f"  finding: manifest/layout unreadable "
-                      f"({type(ex).__name__}: {ex}) — restore the "
-                      f"table from its bucket dirs with "
-                      f"rebucket_partitioned, or fix permissions")
+                      f"({type(ex).__name__}: {ex}) — fix permissions, "
+                      f"or restore the table's _kg_manifest")
                 rc = 1
                 continue
             desc = f"check {path}: era={rep['era']}"
@@ -172,9 +168,8 @@ def main() -> int:
                                               lock_timeout=args.lock_timeout)
             print(f"kg_table: rebucketed {n} rows "
                   f"to {args.rebucket_kg_to} buckets")
-        n = kg_table.compact_partitioned(
-            spark, args.kg_table, target_file_bytes=args.target_file_bytes,
-            lock_timeout=args.lock_timeout)
+        n = kg_table.compact_partitioned(spark, args.kg_table,
+                                         lock_timeout=args.lock_timeout)
         print(f"kg_table: compacted {n} buckets")
 
     if args.minhash:

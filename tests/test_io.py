@@ -903,14 +903,14 @@ class TestCompaction:
         with monkeypatch.context() as mp:
             mp.setattr(kg_table, "commit_pointer", crash)
             with pytest.raises(RuntimeError, match="manifest flip"):
-                kg_table.compact_partitioned(spark, p, min_files=2)
+                kg_table.compact_partitioned(spark, p)
         assert kg_table._load_manifest(p)["gen"] == gen   # not applied
         assert kg_table._load_manifest(p)["live"] == live
         orphans = set(os.listdir(p)) - set(live.values()) - {
             kg_table._MANIFEST, kg_table._NAIVE_READ_GUARD}
         assert any(n.startswith(".kbe_") for n in orphans), orphans
 
-        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
+        assert kg_table.compact_partitioned(spark, p) == 1
         assert kg_table._load_manifest(p)["gen"] == gen + 1
         m = kg_table._load_manifest(p)
         assert {n for n in os.listdir(p) if n.startswith(".kbe_")} \
@@ -1334,14 +1334,21 @@ class TestBucketMetaAndRebucket:
         assert set(kg_table._load_manifest(p)["live"]) <= set(range(8))
 
     def test_rebucket_grows_table_layout(self, spark, tmp_path):
-        import glob
         p = self._table(spark, tmp_path, buckets=2)
         before = {r.doc_id: (r.kafka_offset, r.v)
                   for r in kg_table.read_partitioned(spark, p).collect()}
+        gen = kg_table._load_manifest(p)["gen"]
         n = kg_table.rebucket_partitioned(spark, p, 8)
         assert n == len(before)
-        kbs = {int(d.rsplit("=", 1)[1]) for d in glob.glob(f"{p}/_kb=*")}
-        assert len(kbs) > 2 and kbs <= set(range(8))
+        # one commit: the new count and hidden epochs inside the table,
+        # nothing beside it
+        m = kg_table._load_manifest(p)
+        assert m["gen"] == gen + 1 and m["buckets"] == 8
+        assert len(m["live"]) > 2 and set(m["live"]) <= set(range(8))
+        assert all(d.startswith(".kbe_") for d in m["live"].values())
+        assert os.listdir(tmp_path) == ["t"]
+        with pytest.raises(ValueError, match="at least one bucket"):
+            kg_table.rebucket_partitioned(spark, p, 0)
         after = {r.doc_id: (r.kafka_offset, r.v)
                  for r in kg_table.read_partitioned(spark, p).collect()}
         assert after == before
@@ -1672,43 +1679,6 @@ class TestBucketMetaAndRebucket:
             "struct<doc_id:bigint,v:string,kafka_offset:bigint>"
         assert [(r.doc_id, r.v) for r in table.collect()] == [(1, "x")]
 
-    def test_rebucket_crash_recovery_states(self, spark, tmp_path):
-        import shutil as _sh
-        p = self._table(spark, tmp_path, buckets=2)
-        before = {r.doc_id: (r.kafka_offset, r.v)
-                  for r in kg_table.read_partitioned(spark, p).collect()}
-
-        # state A: crash between the two swap renames — table dir gone,
-        # complete staging dir present → next run finishes the swap
-        tmp = p + ".rebucket_tmp.999"
-        kg_table.rebucket_partitioned(spark, p, 4)
-        _sh.copytree(p, tmp)                       # complete staged copy
-        _sh.rmtree(p)
-        kg_table.rebucket_partitioned(spark, p, 8)
-        assert {r.doc_id: (r.kafka_offset, r.v)
-                for r in kg_table.read_partitioned(spark, p).collect()} \
-            == before
-
-        # state B: crash mid-staging-write — incomplete staging (no
-        # manifest), table intact → stale staging swept, rebucket proceeds
-        bad = p + ".rebucket_tmp.998"
-        os.makedirs(bad)
-        open(os.path.join(bad, "_SUCCESS"), "w").close()  # no manifest
-        kg_table.rebucket_partitioned(spark, p, 4)
-        assert not os.path.isdir(bad)
-        assert {r.doc_id: (r.kafka_offset, r.v)
-                for r in kg_table.read_partitioned(spark, p).collect()} \
-            == before
-
-        # state C: table gone, only .rebucket_old survives → restored
-        old = p + ".rebucket_old"
-        _sh.copytree(p, old)
-        _sh.rmtree(p)
-        kg_table.rebucket_partitioned(spark, p, 4)
-        assert {r.doc_id: (r.kafka_offset, r.v)
-                for r in kg_table.read_partitioned(spark, p).collect()} \
-            == before
-
 
 class TestDurabilityAndLayoutGuards:
     """r12 protocol hardening: the naive-read tripwire on mixed
@@ -1723,25 +1693,21 @@ class TestDurabilityAndLayoutGuards:
 
     def test_naive_read_guard_trips_on_migrated_table(
             self, spark, tmp_path):
-        """A rebucketed table (visible _kb= dirs) that is upserted again
-        gets a hidden delta beside its visible dirs, and a raw
-        spark.read.parquet(root) would silently serve stale/partial
-        rows. The guard file must make that
-        read FAIL LOUDLY while read_partitioned stays exact."""
+        """Every writer, rebucketing included, leaves the rows in hidden
+        dirs that a raw spark.read.parquet(root) cannot see, so the
+        guard file must make that read FAIL LOUDLY while
+        read_partitioned stays exact — after a delta upsert and after a
+        rebucket alike."""
         p = str(tmp_path / "t")
         base = self._batch(spark, [(i, "base", 0) for i in range(24)])
         kg_table.upsert_partitioned(spark, p, base, buckets=4)
-        kg_table.rebucket_partitioned(spark, p, 4)
-        # all dirs visible: no guard, and a root read resolves the
-        # table correctly (poisoning it would break external tools)
-        assert not os.path.exists(
-            os.path.join(p, kg_table._NAIVE_READ_GUARD))
-        # the next upsert commits a hidden delta → mixed layout
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(0, "upd", 1)]), buckets=4)
+        assert len(kg_table._load_manifest(p)["deltas"]) == 1
+        kg_table.rebucket_partitioned(spark, p, 8)
         m = kg_table._load_manifest(p)
-        assert [d.startswith(".kgd_") for d in m["deltas"]] == [True]
-        assert all(d.startswith("_kb=") for d in m["live"].values())
+        assert m["buckets"] == 8 and not m["deltas"]
+        assert all(d.startswith(".kbe_") for d in m["live"].values())
         assert os.path.exists(
             os.path.join(p, kg_table._NAIVE_READ_GUARD))
         with pytest.raises(Exception, match="KG_NAIVE_READ_GUARD"):
@@ -1749,14 +1715,48 @@ class TestDurabilityAndLayoutGuards:
         got = {r.doc_id: r.v
                for r in kg_table.read_partitioned(spark, p).collect()}
         assert len(got) == 24 and got[0] == "upd"
-        # rebucket normalizes: fresh all-visible layout, no guard, and
-        # a naive root read resolves the full table again
-        kg_table.rebucket_partitioned(spark, p, 4)
-        assert not os.path.exists(
-            os.path.join(p, kg_table._NAIVE_READ_GUARD))
-        naive = {r.doc_id: r.v for r in spark.read.parquet(p)
-                 .select("doc_id", "v").collect()}
-        assert naive == got
+
+    def test_visible_bucket_table_stays_readable_and_writable(
+            self, spark, tmp_path):
+        """An older build's rebucket left v3 tables whose live dirs are
+        visible ``_kb=<n>`` dirs. Nothing writes that layout any more,
+        but such a table reads exactly, takes upserts, and its next
+        fold supersedes the ``_kb=`` dirs it rewrites (they go to grace
+        and are swept like any superseded epoch)."""
+        import json
+
+        p = str(tmp_path / "t")
+        kg_table.upsert_partitioned(spark, p, self._batch(
+            spark, [(i, "base", 0) for i in range(24)]), buckets=4)
+        # rebuild the older layout by hand: each live epoch renamed to
+        # its visible name, the manifest pointing at those, no guard
+        with open(os.path.join(p, kg_table._MANIFEST)) as fh:
+            raw = json.load(fh)
+        for n, d in list(raw["live"].items()):
+            os.rename(os.path.join(p, d), os.path.join(p, f"_kb={n}"))
+            raw["live"][n] = f"_kb={n}"
+        with open(os.path.join(p, kg_table._MANIFEST), "w") as fh:
+            json.dump(raw, fh)
+        os.remove(os.path.join(p, kg_table._NAIVE_READ_GUARD))
+        # the next entry's full sweep must keep the referenced _kb= dirs
+        kg_table._invalidate_swept_gen(p)
+        assert kg_table.layout_report(p)["findings"] == []
+        naive = {r.doc_id for r in spark.read.parquet(p).collect()}
+        assert naive == set(range(24))
+        kg_table.upsert_partitioned(
+            spark, p, self._batch(spark, [(0, "upd", 1)]), buckets=4)
+        assert kg_table.compact_partitioned(spark, p) == 1
+        m = kg_table._load_manifest(p)
+        visible = [d for d in m["live"].values() if d.startswith("_kb=")]
+        assert len(visible) == 3 and not m["deltas"]
+        got = {r.doc_id: r.v
+               for r in kg_table.read_partitioned(spark, p).collect()}
+        assert len(got) == 24 and got[0] == "upd"
+        # one more commit releases the superseded _kb= dir
+        kg_table.upsert_partitioned(
+            spark, p, self._batch(spark, [(1, "upd", 1)]), buckets=4)
+        assert sorted(n for n in os.listdir(p) if n.startswith("_kb=")) \
+            == sorted(visible)
 
     def test_grace_retention_generations(self, spark, tmp_path,
                                          monkeypatch):
@@ -2113,20 +2113,41 @@ class TestDurabilityAndLayoutGuards:
             spark, p, self._batch(spark, [(i, "b", 0) for i in
                                           range(12)]), buckets=2)
         rep = kg_table.layout_report(p)
-        # a birth-partitioned table is all-hidden → mixed-layout
-        # finding present, guard present, rebucket named
+        # a birth-partitioned table is all-hidden with its guard: the
+        # layout every writer produces, so no finding
         assert rep["era"] == "manifest" and rep["live_hidden"] == 2
         assert rep["guard_present"] and rep["deltas"] == 0
-        assert any("rebucket_partitioned" in f for f in rep["findings"])
+        assert rep["findings"] == []
         # a crashed writer's delta is flagged as an orphan
         os.makedirs(os.path.join(p, ".kgd_orphan"))
         rep = kg_table.layout_report(p)
         assert any("1 of them .kgd_ delta" in f for f in rep["findings"])
         os.rmdir(os.path.join(p, ".kgd_orphan"))
-        kg_table.rebucket_partitioned(spark, p, 2)
+        kg_table.rebucket_partitioned(spark, p, 3)
         rep = kg_table.layout_report(p)
-        assert rep["era"] == "manifest" and rep["live_hidden"] == 0
+        assert rep["era"] == "manifest" and rep["buckets"] == 3
+        assert rep["live_hidden"] > 0 and rep["live_visible"] == 0
         assert rep["findings"] == []
+        # a missing guard is a finding
+        guard = os.path.join(p, kg_table._NAIVE_READ_GUARD)
+        os.remove(guard)
+        rep = kg_table.layout_report(p)
+        assert not rep["guard_present"]
+        assert [f for f in rep["findings"] if "missing" in f], rep
+        kg_table._recover_partitioned_swap(p)           # heals it
+        assert os.path.exists(guard)
+        # an older build's swap siblings beside a live table are
+        # findings, listed by path, and left alone
+        sibs = [p + ".rebucket_old", p + ".rebucket_tmp.77",
+                p + ".__tmp__ab12"]
+        for d in sibs:
+            os.makedirs(d)
+        rep = kg_table.layout_report(p)
+        found = [f for f in rep["findings"] if "sibling" in f]
+        assert len(found) == 1 and all(d in found[0] for d in sibs), rep
+        assert all(os.path.isdir(d) for d in sibs)
+        for d in sibs:
+            os.rmdir(d)
         # a flat table (an older build's, written directly), and a
         # retired format: classified, never raised
         flat = str(tmp_path / "flat")
@@ -2255,21 +2276,23 @@ class TestOnDiskFormat:
         assert len(m["deltas"]) == 1 and not m["grace"]
         assert m["live"] == live
         # compaction folds the delta into key 0's bucket
-        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
+        assert kg_table.compact_partitioned(spark, p) == 1
         m = expect(meta)
         assert not m["deltas"] and len(m["grace"]) == 2
-        # fragment one live bucket so the small-file pass commits
+        # fragment one live bucket so the compaction rewrites it
         d0 = os.path.join(p, m["live"][sorted(m["live"])[0]])
         frag = d0 + "__frag"
         spark.read.parquet(d0).repartition(3).write.parquet(frag)
         _sh.rmtree(d0)
         os.rename(frag, d0)
-        assert kg_table.compact_partitioned(spark, p, min_files=2) == 1
-        expect(meta)
+        assert kg_table.compact_partitioned(spark, p) == 1
+        old = set(expect(meta)["live"].values())
         kg_table.rebucket_partitioned(spark, p, 4)
-        # a rebucketed root is Spark's partitioned write plus the manifest
-        m = expect({kg_table._MANIFEST, "_SUCCESS"})
-        assert all(d.startswith("_kb=") for d in m["live"].values())
+        # a rebucket is one more fold: hidden epochs, the old dirs as
+        # grace, nothing else
+        m = expect(meta)
+        assert all(d.startswith(".kbe_") for d in m["live"].values())
+        assert {d for d, _, _ in m["grace"]} == old and not m["deltas"]
         assert len(kg_table.read_partitioned(spark, p).collect()) == 16
 
 
@@ -2598,6 +2621,48 @@ class TestKgTableCrashSafety:
             assert "Rename" in msg
             assert snapshot() == before
 
+    def test_stranded_rebucket_asides_are_refused_untouched(
+            self, spark, tmp_path):
+        """An older build's rebucket swapped the whole table dir with
+        two renames, and a crash between them left either
+        <table>.rebucket_old or a <table>.rebucket_tmp.* staging copy
+        bearing its manifest as the only complete copy. Nothing heals
+        those any more: upsert, compaction, rebucket, create and read
+        all raise naming the aside, and leave every file's bytes and
+        mtime as they were. A staging dir without a manifest was never
+        complete, so it does not block a new table."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            compact_partitioned, create_table_if_not_exists,
+            read_partitioned, rebucket_partitioned, upsert_partitioned)
+
+        def snapshot():
+            return TestOnDiskFormat._snapshot(str(tmp_path))
+
+        for n, suffix in enumerate((".rebucket_old", ".rebucket_tmp.4242")):
+            t = str(tmp_path / f"kg{n}")
+            upsert_partitioned(spark, t, self._batch(spark, range(10)),
+                               buckets=4)
+            os.rename(t, t + suffix)
+            before = snapshot()
+            for call in (
+                    lambda: upsert_partitioned(
+                        spark, t, self._batch(spark, [100]), buckets=4),
+                    lambda: compact_partitioned(spark, t),
+                    lambda: rebucket_partitioned(spark, t, 8),
+                    lambda: create_table_if_not_exists(
+                        spark, t, self._batch(spark, []).schema),
+                    lambda: read_partitioned(spark, t)):
+                with pytest.raises(ValueError) as ei:
+                    call()
+                msg = str(ei.value)
+                assert t + suffix in msg and f"back to {t}" in msg, msg
+                assert snapshot() == before
+        incomplete = str(tmp_path / "kg2")
+        os.makedirs(incomplete + ".rebucket_tmp.7")
+        upsert_partitioned(spark, incomplete, self._batch(spark, [1]),
+                           buckets=4)
+        assert read_partitioned(spark, incomplete).count() == 1
+
     def test_partitioned_upsert_recovers_torn_bucket_swap(self, spark,
                                                           tmp_path,
                                                           monkeypatch):
@@ -2675,7 +2740,7 @@ class TestKgTableCrashSafety:
         spark.read.parquet(d0).repartition(3).write.parquet(frag)
         _sh.rmtree(d0)
         os.rename(frag, d0)
-        n1 = compact_partitioned(spark, t, min_files=2)
+        n1 = compact_partitioned(spark, t)
         assert n1 == 1  # only the fragmented bucket rewrites
 
         def _all_files():
@@ -2685,7 +2750,7 @@ class TestKgTableCrashSafety:
 
         files_after = _all_files()
         # second run: already at target layout → nothing rewritten
-        n2 = compact_partitioned(spark, t, min_files=2)
+        n2 = compact_partitioned(spark, t)
         assert n2 == 0
         assert _all_files() == files_after
 
@@ -2827,27 +2892,28 @@ class TestManifestRandomCrashReplay:
                     with monkeypatch.context() as mp:
                         self._arm(mp, crash_at)
                         try:
-                            kg_table.compact_partitioned(
-                                spark, p, min_files=2)
+                            kg_table.compact_partitioned(spark, p)
                         except self._Crash:
                             crashed = True
                 if crash_at is None or crashed:
-                    kg_table.compact_partitioned(spark, p, min_files=2)
+                    kg_table.compact_partitioned(spark, p)
                 # compaction never changes expected state
             check(step)
 
 
 class TestKgSwapCrashExhaustive:
-    """Fault-injection sweep of the KG table's two commits, mirroring
+    """Fault-injection sweep of the KG table's commits, mirroring
     TestSwapCrashExhaustive for the export sink: crash at EVERY mutating
     filesystem op inside the fold's _publish_staged_buckets (with and
-    without live deltas to retire) and the upsert's _publish_delta, run
-    the entry-time recovery, and assert the table is one committed
-    state — the touched buckets all pre-merge or all post-merge, a
-    delta listed and on disk or unlisted and swept (one manifest flip —
-    a batch that did not land replays idempotently). Then crash the
-    recovery itself at every op and assert a second, clean recovery
-    still converges. Pure filesystem test — no Spark."""
+    without live deltas to retire, as a compaction that also rewrites a
+    fragmented bucket, and as a rebucket that changes the bucket count)
+    and the upsert's _publish_delta, run the entry-time recovery, and
+    assert the table is one committed state — the touched buckets all
+    pre-merge or all post-merge, a delta listed and on disk or unlisted
+    and swept (one manifest flip — a batch that did not land replays
+    idempotently). Then crash the recovery itself at every op and
+    assert a second, clean recovery still converges. Pure filesystem
+    test — no Spark."""
 
     class _Crash(Exception):
         pass
@@ -2898,17 +2964,19 @@ class TestKgSwapCrashExhaustive:
                             raising=False)
         return count
 
-    BUCKETS = (0, 1, 2)
-    TOUCHED = (0, 1)
+    BUCKETS = (0, 1, 2, 3)
     DELTAS = (".kgd_a", ".kgd_b")
     NEW_DELTA = ".kgd_new"
+    REBUCKETS = 5
 
     def _build_part(self, root):
         """A manifest-born table (gen-1 manifest over one ``.kbe_``
         epoch dir per bucket, plus the live ``self._deltas``), and
-        either a fully-staged fold touching buckets 0 and 1 or, for the
-        delta tests, a fully-written delta dir not yet committed.
-        Returns (table, staging, manifest)."""
+        either a fully-staged fold of the buckets ``self._touched`` (a
+        rebucket's: every one of the ``REBUCKETS`` new buckets) or, for
+        the delta
+        tests, a fully-written delta dir not yet committed. Returns
+        (table, staging, manifest)."""
         import shutil as _sh
         from dig_etl_engine_spark.sinks.kg_table import (
             _MANIFEST, _dump_manifest, _new_manifest, commit_pointer)
@@ -2933,7 +3001,7 @@ class TestKgSwapCrashExhaustive:
         os.makedirs(staging)
         with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
             fh.write("")
-        for kb in self.TOUCHED:
+        for kb in self._touched:
             d = os.path.join(staging, f"_kb={kb}")
             os.makedirs(d)
             with open(os.path.join(d, "a.parquet"), "w") as fh:
@@ -2955,9 +3023,10 @@ class TestKgSwapCrashExhaustive:
         for kb, d in m["live"].items():
             with open(os.path.join(t, d, "a.parquet")) as fh:
                 content[kb] = fh.read()
-        assert content[2] == "old-2", content
+        assert all(content[kb] == f"old-{kb}" for kb in self.BUCKETS
+                   if kb not in self._touched), content
         touched_states = {content[kb] == f"new-{kb}"
-                          for kb in self.TOUCHED}
+                          for kb in self._touched}
         assert len(touched_states) == 1, \
             f"torn commit: touched buckets in mixed epochs: {content}"
         folded = touched_states.pop()
@@ -3012,11 +3081,11 @@ class TestKgSwapCrashExhaustive:
             _recover_partitioned_swap(t)  # clean pass
             check(t, False)
 
-    @staticmethod
-    def _fold(t, staging, m):
+    def _fold(self, t, staging, m):
         from dig_etl_engine_spark.sinks.kg_table import (
             _publish_staged_buckets)
-        _publish_staged_buckets(t, staging, "tok", manifest=m)
+        _publish_staged_buckets(t, staging, "tok", manifest=m,
+                                expected=set(self._touched))
 
     def _check_fold(self, t, completed_clean):
         folded, m = self._assert_table_is_one_epoch(t)
@@ -3037,8 +3106,47 @@ class TestKgSwapCrashExhaustive:
         if completed_clean:
             assert m["deltas"][-1] == self.NEW_DELTA
 
+    def _rebucket_fold(self, t, staging, m):
+        """What rebucket_partitioned hands the fold: a table of
+        ``REBUCKETS`` buckets with nothing live, whose deltas are every
+        old live dir and delta."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _publish_staged_buckets)
+        _publish_staged_buckets(t, staging, "tok", manifest=dict(
+            m, buckets=self.REBUCKETS, live={},
+            deltas=[d for _, d in sorted(m["live"].items())]
+            + m["deltas"]))
+
+    def _check_rebucket(self, t, completed_clean):
+        """Either the old table exactly, or the new count with every
+        bucket new and every old dir kept as grace — never a mix."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            _load_manifest, _referenced_dirs)
+        m = _load_manifest(t)
+        old = {f".kbe_{kb}_birth" for kb in self.BUCKETS} \
+            | set(self._deltas)
+        on_disk = {n for n in os.listdir(t)
+                   if n.startswith((".kbe_", ".kgd_"))}
+        assert on_disk == _referenced_dirs(m), (on_disk, m)
+        assert not glob.glob(os.path.join(t, ".upsert_*"))
+        content = {}
+        for kb, d in m["live"].items():
+            with open(os.path.join(t, d, "a.parquet")) as fh:
+                content[kb] = fh.read()
+        if m["buckets"] == len(self.BUCKETS):
+            assert not completed_clean, "clean rebucket must land"
+            assert m["gen"] == 1 and m["deltas"] == list(self._deltas)
+            assert content == {kb: f"old-{kb}" for kb in self.BUCKETS}
+        else:
+            assert m["buckets"] == self.REBUCKETS and m["gen"] == 2
+            assert not m["deltas"]
+            assert content == {kb: f"new-{kb}"
+                               for kb in range(self.REBUCKETS)}
+            assert {d for d, _, _ in m["grace"]} == old
+
     _deltas: tuple = ()
     _stage_delta = False
+    _touched: tuple = (0, 1)
 
     def test_partitioned_swap_crash_everywhere(self, tmp_path,
                                                monkeypatch):
@@ -3062,6 +3170,38 @@ class TestKgSwapCrashExhaustive:
         self._deltas = self.DELTAS
         self._recovery_crash_then_recover(tmp_path, monkeypatch,
                                           self._fold, self._check_fold)
+
+    def test_compaction_fold_crash_everywhere(self, tmp_path,
+                                              monkeypatch):
+        """A compaction: one fold that retires two live deltas touching
+        buckets 0 and 1 and rewrites fragmented bucket 2, which no delta
+        touches — all three buckets and both deltas flip together."""
+        self._deltas, self._touched = self.DELTAS, (0, 1, 2)
+        self._crash_everywhere(tmp_path, monkeypatch, self._fold,
+                               self._check_fold)
+
+    def test_compaction_fold_recovery_crash_then_recover(self, tmp_path,
+                                                         monkeypatch):
+        self._deltas, self._touched = self.DELTAS, (0, 1, 2)
+        self._recovery_crash_then_recover(tmp_path, monkeypatch,
+                                          self._fold, self._check_fold)
+
+    def test_rebucket_crash_everywhere(self, tmp_path, monkeypatch):
+        """A rebucket flip: the bucket count changes, every new bucket
+        goes live and every old live dir and delta goes to grace in the
+        one flip, or nothing changes."""
+        self._deltas = self.DELTAS
+        self._touched = tuple(range(self.REBUCKETS))
+        self._crash_everywhere(tmp_path, monkeypatch, self._rebucket_fold,
+                               self._check_rebucket)
+
+    def test_rebucket_recovery_crash_then_recover(self, tmp_path,
+                                                  monkeypatch):
+        self._deltas = self.DELTAS
+        self._touched = tuple(range(self.REBUCKETS))
+        self._recovery_crash_then_recover(tmp_path, monkeypatch,
+                                          self._rebucket_fold,
+                                          self._check_rebucket)
 
     def test_delta_commit_crash_everywhere(self, tmp_path, monkeypatch):
         """The per-batch delta commit: the new delta is either listed
@@ -3301,7 +3441,7 @@ class TestManifestReaderDuringSwap:
         try:
             for b in batches:
                 upsert_partitioned(spark, p, b, buckets=4)
-            compact_partitioned(spark, p, min_files=2)
+            compact_partitioned(spark, p)
         finally:
             stop.set()
             t.join(timeout=120)
@@ -3320,11 +3460,12 @@ class TestManifestReaderDuringSwap:
 class TestReadPartitionedTornView:
     """read_partitioned during a concurrent swap never loses or doubles
     a bucket. For a bucket swap the aside copy is the manifest's grace
-    copy: a reader that resolved the live dirs before a fold's or
-    compaction's flip keeps reading complete superseded dirs and folded
-    deltas, and a reader resolving after the flip sees only the new
-    live dirs. A table mid-rebucket reads from its .rebucket_old
-    copy."""
+    copy: a reader that resolved the live dirs before a fold's,
+    compaction's or rebucket's flip keeps reading complete superseded
+    dirs and folded deltas, and a reader resolving after the flip sees
+    only the new live dirs. Each maintenance call commits one
+    generation, so the default one-generation grace covers a reader
+    built before it."""
 
     def _table(self, spark, tmp_path, name="kgt"):
         from dig_etl_engine_spark.sinks.kg_table import (
@@ -3368,7 +3509,7 @@ class TestReadPartitionedTornView:
         _sh.rmtree(d0)
         os.rename(d0 + "__f", d0)
         resolved = self._bucket_dirs(t)
-        assert compact_partitioned(spark, t, min_files=2) == 1
+        assert compact_partitioned(spark, t) == 1
         assert self._bucket_dirs(t) != resolved
         assert self._read(spark, resolved) == rows
 
@@ -3420,10 +3561,70 @@ class TestReadPartitionedTornView:
                read_partitioned(spark, t).collect()]
         assert sorted(got) == sorted((rows - {(0, 0)}) | {(0, 100)})
 
-    def test_mid_rebucket_reads_retired_copy(self, spark, tmp_path):
-        from dig_etl_engine_spark.sinks.kg_table import read_partitioned
-        t, rows = self._table(spark, tmp_path, "kgr")
-        os.rename(t, t + ".rebucket_old")
-        got = {(r["doc_id"], r["kafka_offset"]) for r in
-               read_partitioned(spark, t).collect()}
-        assert got == rows
+    def _upd(self, spark, t, off, ids):
+        from dig_etl_engine_spark.sinks.kg_table import upsert_partitioned
+        upsert_partitioned(spark, t, spark.createDataFrame(
+            [(i, "upd", off) for i in ids],
+            "doc_id LONG, text STRING, kafka_offset LONG"))
+
+    def _bucket_of(self, spark, key, buckets=4):
+        return spark.range(1).select(
+            F.pmod(F.xxhash64(F.lit(key).cast("long")),
+                   F.lit(buckets)).cast("int").alias("b")).collect()[0].b
+
+    def test_reader_built_before_compaction_reads_complete_rows(
+            self, spark, tmp_path):
+        """A compaction that folds two deltas AND rewrites a fragmented
+        bucket the deltas do not touch commits one generation, so a
+        reader built before the call keeps every dir it resolved."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            compact_partitioned, read_partitioned)
+        t, rows = self._table(spark, tmp_path, "kgcf")
+        self._upd(spark, t, 100, [0])
+        self._upd(spark, t, 200, [0])
+        live = kg_table._load_manifest(t)["live"]
+        frag = next(n for n in sorted(live)
+                    if n != self._bucket_of(spark, 0))
+        import shutil as _sh
+        d = os.path.join(t, live[frag])
+        spark.read.parquet(d).repartition(3).write.parquet(d + "__f")
+        _sh.rmtree(d)
+        os.rename(d + "__f", d)
+        expected = (rows - {(0, 0)}) | {(0, 200)}
+        m = kg_table._load_manifest(t)
+        assert len(m["deltas"]) == 2
+        early = read_partitioned(spark, t)        # resolved pre-call
+        assert compact_partitioned(spark, t) == 2
+        after = kg_table._load_manifest(t)
+        assert after["gen"] == m["gen"] + 1 and not after["deltas"]
+        assert after["live"][frag] != live[frag]
+        assert {(r["doc_id"], r["kafka_offset"])
+                for r in early.collect()} == expected
+        assert {(r["doc_id"], r["kafka_offset"]) for r in
+                read_partitioned(spark, t).collect()} == expected
+
+    def test_reader_built_before_rebucket_reads_complete_rows(
+            self, spark, tmp_path):
+        """A rebucket commits one generation inside the table: a reader
+        built before it keeps the old live dirs and deltas (now grace),
+        even across a writer entry's full sweep, and nothing is left
+        beside the table."""
+        from dig_etl_engine_spark.sinks.kg_table import (
+            read_partitioned, rebucket_partitioned)
+        t, rows = self._table(spark, tmp_path, "kgrb")
+        self._upd(spark, t, 100, [0, 1])
+        expected = (rows - {(0, 0), (1, 1)}) | {(0, 100), (1, 100)}
+        m = kg_table._load_manifest(t)
+        early = read_partitioned(spark, t)        # resolved pre-call
+        assert rebucket_partitioned(spark, t, 8) == len(expected)
+        after = kg_table._load_manifest(t)
+        assert after["gen"] == m["gen"] + 1 and after["buckets"] == 8
+        assert {d for d, _, _ in after["grace"]} \
+            >= set(m["live"].values()) | set(m["deltas"])
+        assert os.listdir(tmp_path) == ["kgrb"]
+        kg_table._invalidate_swept_gen(t)
+        kg_table._recover_partitioned_swap(t)
+        assert {(r["doc_id"], r["kafka_offset"])
+                for r in early.collect()} == expected
+        assert {(r["doc_id"], r["kafka_offset"]) for r in
+                read_partitioned(spark, t).collect()} == expected

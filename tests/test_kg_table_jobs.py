@@ -1,9 +1,11 @@
-"""Job shape of the bucketed KG table's write and fresh-read path.
+"""Job shape of the bucketed KG table's write, maintenance and
+fresh-read paths.
 
 The table's bucket dirs, deltas and schema are named by the manifest,
 so neither a fold's touched-bucket read nor ``read_partitioned`` may
 launch a Spark listing job for them, even past Spark's default 32-path
-threshold, and a steady-state upsert runs only its delta write.
+threshold, a steady-state upsert runs only its delta write, and
+compaction and rebucketing each run one fold's job chain.
 """
 
 from __future__ import annotations
@@ -76,3 +78,63 @@ def test_steady_upsert_runs_only_its_delta_write(spark, tmp_path):
     got = {r.doc_id: r.kafka_offset for r in df.collect()}
     assert len(got) == 600 + 100
     assert got["k1"] == 10 and got["k0"] == 1 and got["new0"] == 10
+
+
+def _fragment(path, n):
+    """Split the single parquet file of ``n`` live buckets in two, on
+    the driver (pyarrow, no Spark job)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    live = kg_table._load_manifest(path)["live"]
+    for b in sorted(live)[:n]:
+        d = os.path.join(path, live[b])
+        (f,) = [x for x in os.listdir(d) if x.endswith(".parquet")]
+        t = pq.read_table(os.path.join(d, f))
+        half = t.num_rows // 2
+        pq.write_table(t.slice(0, half), os.path.join(d, "frag-a.parquet"))
+        pq.write_table(t.slice(half), os.path.join(d, "frag-b.parquet"))
+        os.remove(os.path.join(d, f))
+
+
+def test_compaction_jobs_do_not_grow_with_fragmented_buckets(
+        spark, tmp_path):
+    """Compaction is one fold: the deltas and every fragmented bucket
+    go through one Spark job chain, so a table with 2 deltas and 4
+    fragmented buckets compacts in as many jobs as one with 2 deltas
+    and 1 fragmented bucket (or none) — no job per bucket."""
+    counts = {}
+    for frag in (0, 1, 4):
+        path = str(tmp_path / f"kg{frag}")
+        _born(spark, path)
+        kg_table.upsert_partitioned(spark, path, _batch(spark, 20, 5))
+        kg_table.upsert_partitioned(spark, path, _batch(spark, 20, 6))
+        _fragment(path, frag)
+        gen = kg_table._load_manifest(path)["gen"]
+        with jobs_in_group(spark, f"kg-compact-{frag}") as jobs:
+            n = kg_table.compact_partitioned(spark, path)
+        m = kg_table._load_manifest(path)
+        assert m["gen"] == gen + 1 and not m["deltas"]
+        assert n >= frag
+        counts[frag] = len(jobs)
+        got = {r.doc_id: r.kafka_offset
+               for r in kg_table.read_partitioned(spark, path).collect()}
+        assert len(got) == 600 + 10
+        assert got["k1"] == 6 and got["k0"] == 1 and got["new0"] == 6
+    assert counts[4] == counts[1] == counts[0], counts
+
+
+def test_rebucket_runs_no_count_job(spark, tmp_path):
+    path = str(tmp_path / "kg")
+    _born(spark, path)
+    kg_table.upsert_partitioned(spark, path, _batch(spark, 20, 5))
+    with jobs_in_group(spark, "kg-rebucket") as jobs:
+        n = kg_table.rebucket_partitioned(spark, path, 16)
+    # one fold and nothing else: the dedupe's shuffle-map stage, the
+    # per-bucket repartition's and the write's result stage, each its
+    # own job under AQE. The row count comes from the new epochs'
+    # parquet footers, so no count job follows
+    assert len(jobs) <= 3, jobs
+    assert n == 600 + 10
+    assert kg_table._load_manifest(path)["buckets"] == 16

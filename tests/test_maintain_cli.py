@@ -101,10 +101,11 @@ def test_maintain_cli_zorder_recluster(spark, tmp_path):
 
 def test_maintain_cli_check_layout(spark, tmp_path):
     """--check (verdict r11 item 3): read-only diagnosis of a KG
-    table's layout — exit 1 naming rebucket_partitioned on a mixed
-    visible/hidden layout a naive root read cannot resolve, exit 0
-    after rebucket normalizes it. Needs no Spark session in the CLI
-    itself (pure filesystem)."""
+    table's layout. Hidden epochs and deltas are the layout every
+    writer produces, so a healthy table exits 0 at birth, with a live
+    delta and after a rebucket; a missing naive-read guard is a finding
+    (exit 1). Needs no Spark session in the CLI itself (pure
+    filesystem)."""
     from dig_etl_engine_spark.sinks import kg_table
 
     p = str(tmp_path / "kg")
@@ -116,22 +117,29 @@ def test_maintain_cli_check_layout(spark, tmp_path):
     cli = os.path.join(os.path.dirname(__file__), "..", "scripts",
                        "maintain.py")
 
-    r = subprocess.run([sys.executable, cli, "--check", p],
-                       capture_output=True, text=True, timeout=120)
-    assert r.returncode == 1, (r.stdout, r.stderr[-1000:])
-    assert "rebucket_partitioned" in r.stdout
-    assert "era=manifest" in r.stdout and "guard=yes" in r.stdout
-    assert "deltas=0" in r.stdout
-    kg_table.upsert_partitioned(spark, p, docs.limit(2), buckets=4)
-    r = subprocess.run([sys.executable, cli, "--check", p],
-                       capture_output=True, text=True, timeout=120)
-    assert "deltas=1" in r.stdout and "1 hidden delta" in r.stdout
+    def check():
+        return subprocess.run([sys.executable, cli, "--check", p],
+                              capture_output=True, text=True, timeout=120)
 
-    kg_table.rebucket_partitioned(spark, p, 4)
-    r = subprocess.run([sys.executable, cli, "--check", p],
-                       capture_output=True, text=True, timeout=120)
+    r = check()
     assert r.returncode == 0, (r.stdout, r.stderr[-1000:])
+    assert "era=manifest" in r.stdout and "guard=yes" in r.stdout
+    assert "deltas=0" in r.stdout and "finding:" not in r.stdout
+    kg_table.upsert_partitioned(spark, p, docs.limit(2), buckets=4)
+    r = check()
+    assert r.returncode == 0, (r.stdout, r.stderr[-1000:])
+    assert "deltas=1" in r.stdout and "finding:" not in r.stdout
+
+    kg_table.rebucket_partitioned(spark, p, 8)
+    r = check()
+    assert r.returncode == 0, (r.stdout, r.stderr[-1000:])
+    assert "buckets=8" in r.stdout and "deltas=0" in r.stdout
     assert "finding:" not in r.stdout
+
+    os.remove(os.path.join(p, kg_table._NAIVE_READ_GUARD))
+    r = check()
+    assert r.returncode == 1, (r.stdout, r.stderr[-1000:])
+    assert "guard=no" in r.stdout and "missing" in r.stdout
 
     # an absent path is a finding, not a crash
     r = subprocess.run(
