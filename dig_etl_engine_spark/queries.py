@@ -181,14 +181,13 @@ _PRIORITY_RECHECK: dict[str, int] = {
     "corpus_curation_full": 12,
     "doc_pagerank": 12,
     "doc_communities": 12,
-    # r12 wave 4: create_table_if_not_exists seeds the empty table on
-    # the driver (sinks/kg_table.py::_write_empty_seed — pyarrow file
-    # carrying the Spark row-metadata footer key) instead of running an
-    # empty-DataFrame Spark write job. Read-back schema is verified
-    # byte-identical across all type families (test_io.py::
-    # test_seed_read_schema_identical_to_spark_write); zero rows either
-    # way — but every stream query's table-bootstrap path changed, so
-    # the two not already re-checking above join the list:
+    # r12 wave 4: create_table_if_not_exists no longer runs an
+    # empty-DataFrame Spark write job (it now commits a generation-0
+    # manifest with nothing live; the read-back schema equals a Spark
+    # write's across all type families, test_io.py::
+    # test_seed_read_schema_identical_to_spark_write); zero rows
+    # either way — but every stream query's table-bootstrap path
+    # changed, so the two not already re-checking above join the list:
     "stream_dedup_ingest": 13,  # r13: minhash-index meta local relation (see r13 block)
     "stream_decontaminate_ingest": 12,
     # r12 wave 6: the search compiler + glossary matcher restructure
@@ -266,19 +265,18 @@ _PRIORITY_RECHECK: dict[str, int] = {
     # stream_kmv_cardinality, stream_dedup_ingest_oracle) call neither
     # create_table_if_not_exists nor the stateful first-seen kernel, so
     # no r12 executed-path change reaches them. The four bootstrapping
-    # queries seed a flat zero-row table, and their first micro-batch
-    # migrates it to the bucketed, manifest-committed layout:
+    # queries create a table with a generation-0 manifest and nothing
+    # live, and their first micro-batch folds into its birth buckets:
     # upsert_partitioned is the KG table's one write path, and all four
-    # read back through read_partitioned (stream_file_upsert at the
-    # ingest default of 64 buckets, the other three at
-    # queries_io._FIXTURE_BUCKETS = 4). resolve_pointer's except-clause
-    # narrowing is extensionally identity on every healthy filesystem:
-    # a missing pointer still raises FileNotFoundError → None.
+    # read back through read_partitioned (stream_file_upsert created at
+    # 64 buckets, the other three at queries_io._FIXTURE_BUCKETS = 4).
+    # resolve_pointer's except-clause narrowing is extensionally
+    # identity on every healthy filesystem: a missing pointer still
+    # raises FileNotFoundError → None.
     # coarse_search_rank_materialized reads the _SUCCESS-markered
     # kw_index, not the pointer-epoch stats store. The guard file and
     # swept-gen sidecar are new root-level names no registered query
-    # ever lists (read_partitioned reads explicit bucket dirs; the
-    # flat-file migration pass matches *.parquet only).
+    # ever lists (read_partitioned reads explicit bucket dirs).
     # (the r11 entries for search_bm25_rank / upsert_partitioned_merge
     # — the pointer-epoch and manifest-protocol migrations — expired at
     # r11's own driver sweep, both re-verified green, and are subsumed

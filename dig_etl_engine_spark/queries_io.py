@@ -100,8 +100,9 @@ _STREAM_CONF_LOCK = threading.Lock()
 # 8-vs-16 interleaved A/B where 16 won both pairs.
 _STREAM_PARTS = 16
 
-# Bucket count of the KG tables the curation stream fixtures write
-# (stream_dedup_ingest, stream_decontaminate_ingest, stream_e2e_curation).
+# Bucket count the curation stream fixtures (stream_dedup_ingest,
+# stream_decontaminate_ingest, stream_e2e_curation) create their KG
+# tables with.
 # Fixture tables hold a few thousand rows, so the ingest default of 64
 # buckets is mostly per-bucket file overhead. Median of 5 runs after a
 # warm-up at sf0.1, local[4] on a 4-core host: stream_e2e_curation
@@ -799,13 +800,13 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("text", T.StringType()),
         T.StructField("kafka_offset", T.LongType()),
     ])
-    create_table_if_not_exists(spark, target, schema)
+    create_table_if_not_exists(spark, target, schema,
+                               buckets=_FIXTURE_BUCKETS)
     with _stream_parts(spark):
         q = run_dedup_ingest(
             file_stream_source(spark, in_dir, schema),
             target_path=target, quarantine_path=quarantine,
-            checkpoint_dir=ckpt, index_path=index, threshold=0.5,
-            buckets=_FIXTURE_BUCKETS)
+            checkpoint_dir=ckpt, index_path=index, threshold=0.5)
         q.awaitTermination()
     return read_partitioned(spark, target).select(F.col("doc_id"))
 
@@ -875,12 +876,12 @@ def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str
         T.StructField("text", T.StringType()),
         T.StructField("kafka_offset", T.LongType()),
     ])
-    create_table_if_not_exists(spark, target, schema)
+    create_table_if_not_exists(spark, target, schema,
+                               buckets=_FIXTURE_BUCKETS)
     with _stream_parts(spark):
         q = run_ingest(file_stream_source(spark, in_dir, schema),
                        target_path=target, quarantine_path=quarantine,
-                       checkpoint_dir=ckpt, transform=gate,
-                       buckets=_FIXTURE_BUCKETS)
+                       checkpoint_dir=ckpt, transform=gate)
         q.awaitTermination()
     return read_partitioned(spark, target).select("doc_id")
 
@@ -1005,14 +1006,14 @@ def stream_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("kafka_offset", T.LongType()),
         T.StructField("fingerprint", T.StringType()),
     ])
-    create_table_if_not_exists(spark, target, T.StructType(schema[:3]))
+    create_table_if_not_exists(spark, target, T.StructType(schema[:3]),
+                               buckets=_FIXTURE_BUCKETS)
 
     def curate(batch: DataFrame, batch_id: int) -> None:
         survivors = batch.select("doc_id", "text", "kafka_offset")
         clean = survivors.join(decontaminate(survivors, evals, n=13),
                                "doc_id", "left_anti")
-        upsert_partitioned(batch.sparkSession, target, clean,
-                           buckets=_FIXTURE_BUCKETS)
+        upsert_partitioned(batch.sparkSession, target, clean)
 
     deduped = first_seen_dedup_stream(
         file_stream_source(spark, in_dir, schema),

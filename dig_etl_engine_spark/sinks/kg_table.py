@@ -48,12 +48,14 @@ reads and writes only this):
     hidden.
 
 ``upsert_partitioned`` is the only way rows get into a table. A table
-with no manifest is flat — a ``create_table_if_not_exists`` seed, or a
-table an older build wrote with rows — and migrates on its first
-``upsert_partitioned``.
-``_kb=`` dirs without a manifest, and a manifest that is not v3 with a
-bucket count and the widened hash, are retired formats: every entry
-point refuses them with a ``ValueError`` and leaves their files alone.
+is born with its manifest: ``create_table_if_not_exists`` commits a
+generation-0 manifest with nothing live, and an ``upsert_partitioned``
+into an absent path commits one with its first batch's buckets.
+Root ``*.parquet`` files without a manifest (an older build's flat
+table or seed), ``_kb=`` dirs without a manifest, and a manifest that
+is not v3 with a bucket count and the widened hash, are retired
+formats: every entry point refuses them with a ``ValueError`` and
+leaves their files alone.
 """
 
 from __future__ import annotations
@@ -320,25 +322,10 @@ def table_lock(target_path: str, *, timeout: float = 300.0,
                            "owner's)", lockd)
 
 
-def _is_table_dir(path: str) -> bool:
-    """True when ``path`` is a directory carrying any committed-table
-    marker — the ONE definition of "a table exists here", shared by the
-    bootstrap existence check and the seed's refuse-to-delete guard so
-    the two can never drift apart (drift would let the seed rmtree a
-    dir the caller considers a committed table)."""
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") or f == "_SUCCESS"
-        or f.startswith("_kb=")       # bucket dirs (even a retired
-        or f == _MANIFEST             # layout) ARE a table: never seed
-        for f in os.listdir(path))
-
-
 def _contains_null_type(dt: T.DataType) -> bool:
     """True when the type (recursively) contains NullType — Spark's
-    parquet writer rejects void columns loudly, and the seed path must
-    not be WIDER than the writer it replaces (pyarrow would happily
-    write a null-typed column, deferring the failure to the first real
-    upsert of a now-committed broken table)."""
+    parquet writer rejects void columns, so a table created with one
+    would fail only at its first upsert, long after the mistake."""
     if isinstance(dt, T.NullType):
         return True
     if isinstance(dt, T.StructType):
@@ -351,112 +338,40 @@ def _contains_null_type(dt: T.DataType) -> bool:
     return False
 
 
-def _write_empty_seed(path: str, schema: T.StructType) -> None:
-    """Driver-side zero-row parquet seed — no Spark job. The footer
-    carries the same ``org.apache.spark.sql.parquet.row.metadata`` key a
-    Spark writer embeds (the catalyst StructType JSON), so a later
-    ``spark.read.parquet`` restores EXACTLY the pinned schema — not the
-    parquet-type fallback conversion — just as if Spark had written the
-    seed itself. Build-aside (uuid-suffixed, module convention) +
-    atomic rename; staged bytes fsynced before the rename via
-    :func:`_fsync_tree` and the parent dirent flushed after it (both
-    gated on ``FSYNC_STAGED_DATA`` — an unflushed dirent orders nothing
-    when the data beneath it was never flushed), the same
-    data-before-publish ordering as the bucketed commit. NullType
-    anywhere in the schema raises up front so the caller's Spark
-    fallback reproduces the old loud bootstrap error.
-
-    Caller contract: runs under ``table_lock`` (the bootstrap in
-    :func:`create_table_if_not_exists` takes it), so the entry-time
-    staging sweep can only ever reclaim a CRASHED predecessor's dir,
-    never a live peer's mid-write staging — all creators serialize on
-    the lock. The marker refusal below stays as defense in depth for
-    any out-of-band caller."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if _contains_null_type(schema):
-        raise ValueError("void column in seed schema — Spark's parquet "
-                         "writer would reject it; let the fallback say so")
-    arrow = to_arrow_schema(schema).with_metadata(
-        {b"org.apache.spark.sql.parquet.row.metadata":
-         schema.json().encode()})
-    # reclaim crashed predecessors' staging dirs (recomputable garbage;
-    # same entry-time sweep discipline as the bucketed table's
-    # .upsert_tmp_* staging, and like that sweep it runs under the
-    # table lock)
-    for stale in glob_mod.glob(glob_mod.escape(path) + ".__seed__*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    if os.path.isdir(path):
-        if _is_table_dir(path):
-            # a committed table is already here (an out-of-band creator,
-            # or a caller that skipped the existence check) — refuse
-            # rather than delete it (the old Spark mode('overwrite')
-            # write WOULD have deleted it; the caller's except path
-            # re-checks and returns False)
-            raise FileExistsError(path)
-        shutil.rmtree(path)          # stray non-table dir: mirror overwrite
-    tmp = path + f".__seed__{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp)
-    try:
-        pq.write_table(arrow.empty_table(),
-                       os.path.join(tmp, "part-00000-seed.snappy.parquet"),
-                       compression="snappy")
-        open(os.path.join(tmp, "_SUCCESS"), "wb").close()
-        _fsync_tree(tmp)
-        os.rename(tmp, path)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)  # don't leak the aside
-        raise
-    if FSYNC_STAGED_DATA:            # order the rename like commit_pointer
-        _fsync_dirent(os.path.dirname(path))
-
-
 def create_table_if_not_exists(spark: SparkSession, path: str,
-                               schema: T.StructType) -> bool:
-    """K3: bootstrap an empty table with a pinned schema; returns True if
-    created. Pinning the schema up front (like the ES mapping PUT) stops
-    the first writer's inferred types from becoming the contract.
+                               schema: T.StructType, *,
+                               buckets: int = 64) -> bool:
+    """K3: create an empty KG table with a pinned schema; returns True
+    if created. Pinning the schema up front (like the ES mapping PUT)
+    stops the first writer's inferred types from becoming the contract:
+    every batch is aligned to it (see :func:`_align_to_table`).
 
-    The seed is written on the driver (:func:`_write_empty_seed`) — an
-    empty-DataFrame Spark write costs a full job (task scheduling + the
-    Hadoop commit protocol, ~0.9 s on the bench host) purely to emit a
-    zero-row file; guide §5 (the driver should do almost no data work —
-    and scheduling a cluster job to write 0 rows is the inverse). Types
-    the Arrow converter cannot express fall back to the Spark write.
+    The table is born with its manifest: one :func:`commit_pointer`
+    publishes a generation-0 manifest with ``buckets`` buckets, the
+    ``doc_id`` key and ``kafka_offset`` order columns, ``schema``,
+    nothing live and no deltas. No Spark job runs and no parquet file
+    is written; the first :func:`upsert_partitioned` folds its batch
+    into the birth buckets exactly as an upsert into an absent path
+    does. A table keyed on other columns is born by its first
+    ``upsert_partitioned`` instead.
 
-    Creation is serialized under :func:`table_lock`, like every other
-    mutating entry point in this module — exclusion closes the
-    concurrent-creation TOCTOU wholesale (the existence re-check, the
-    staging sweep, the seed rename AND the destructive
-    ``mode('overwrite')`` fallback job all run while no peer can
-    mutate the table), instead of point-patching each window. The
-    except-path re-check stays as defense in depth against creators
-    that bypass this function.
-
-    A missing table beside an older build's stranded aside (see
-    :func:`_refuse_stranded_aside`) raises ``ValueError`` before
-    anything is created: a seed there would hide the only complete copy
-    from every later refusal."""
-    if _is_table_dir(path):           # cheap lock-free fast path: the
-        return False                  # common case is "already exists"
-    _refuse_stranded_aside(path)
+    Runs under :func:`table_lock` and enters through the shared entry
+    recovery, so a retired format, or a missing table beside an older
+    build's stranded aside (see :func:`_refuse_stranded_aside`), raises
+    ``ValueError`` before anything is written, and a table that already
+    has a manifest returns False. A schema holding ``NullType``
+    anywhere, and ``buckets`` below 1, raise ``ValueError``."""
     with table_lock(path):
-        if _is_table_dir(path):       # a peer created it while we waited
+        if _recover_partitioned_swap(path) is not None:
             return False
-        try:
-            _write_empty_seed(path, schema)
-        except Exception:
-            if _is_table_dir(path):   # an out-of-band creator won
-                logger.info("create_table_if_not_exists: driver seed "
-                            "lost a creation race at %s; keeping the "
-                            "winner's table", path)
-                return False
-            logger.warning("create_table_if_not_exists: driver-side "
-                           "seed failed at %s; falling back to the "
-                           "Spark write", path, exc_info=True)
-            spark.createDataFrame([], schema).write.mode("overwrite") \
-                .parquet(path)
+        if _contains_null_type(schema):
+            raise ValueError(
+                f"create_table_if_not_exists: {path}: the schema has a "
+                "void column (NullType), which Spark's parquet writer "
+                "rejects — give every column a concrete type.")
+        commit_pointer(path, _dump_manifest(_new_manifest(
+            schema, buckets=buckets, key="doc_id", order="kafka_offset")),
+            name=_MANIFEST)
         return True
 
 
@@ -580,8 +495,7 @@ _SWEPT_GEN = ".kg_swept_gen"
 # file makes such a read fail loudly instead (Spark's footer read
 # names the file: CANNOT_READ_FILE_FOOTER .../KG_NAIVE_READ_GUARD),
 # while every sanctioned path ignores it — ``read_partitioned`` reads
-# explicit bucket dirs, the flat-file migration pass matches only
-# ``*.parquet`` names, and DuckDB-style ``root/*.parquet`` globs never
+# explicit bucket dirs, and DuckDB-style ``root/*.parquet`` globs never
 # see it. ``scripts/maintain.py --check`` reports the layout state.
 _NAIVE_READ_GUARD = "KG_NAIVE_READ_GUARD"
 
@@ -616,14 +530,22 @@ _MAX_DELTAS: int = 16
 def _new_manifest(schema: T.StructType, *, buckets: int, key: str,
                   order: str) -> dict:
     """The in-memory manifest of a table about to be born (generation
-    0, nothing live): what a birth fold commits onto."""
+    0, nothing live): what ``create_table_if_not_exists`` commits and a
+    birth fold commits onto; a rebucket builds its new count's manifest
+    here too. The one check of a bucket count: ``buckets`` below 1
+    raises ``ValueError`` (0 would fail inside the Spark job on a
+    remainder by zero, a negative count would place rows in negative
+    bucket ids)."""
+    if buckets < 1:
+        raise ValueError(f"buckets={buckets!r} — a KG table needs at "
+                         "least one bucket.")
     return {"gen": 0, "buckets": buckets, "key": key, "order": order,
             "schema": schema, "live": {}, "deltas": [], "grace": []}
 
 
 def _load_manifest(target_path: str) -> dict | None:
     """Parse the table's bucket manifest, or None for a table that has
-    none (absent, flat, or a birth that crashed before its flip).
+    none (absent, or a birth that crashed before its flip).
     Returns ``{"gen": int, "buckets": int, "key": str, "order": str,
     "schema": StructType, "live": {bucket: dirname}, "deltas":
     [dirname, ...], "grace": [(dirname, gen_created, ts_created),
@@ -633,26 +555,31 @@ def _load_manifest(target_path: str) -> dict | None:
     whose sweep deletes every committed dir.
 
     Retired formats raise ``ValueError`` naming the path and what was
-    found, for the same reason: ``_kb=`` dirs with no manifest (the
-    pre-manifest layout), and a manifest that is not v3, has no bucket
-    count, or does not declare the widened hash. No entry point reads,
-    heals or rewrites them, so their files stay exactly as found."""
+    found, for the same reason: root ``*.parquet`` files with no
+    manifest (an older build's flat table or empty seed), ``_kb=`` dirs
+    with no manifest (the pre-manifest layout), and a manifest that is
+    not v3, has no bucket count, or does not declare the widened hash.
+    No entry point reads, heals or rewrites them, so their files stay
+    exactly as found."""
     import json
 
     raw = resolve_pointer(target_path, name=_MANIFEST)
     if raw is None:
-        kb = sorted(n for n in (os.listdir(target_path)
-                                if os.path.isdir(target_path) else ())
-                    if n.startswith("_kb="))
-        if kb:
-            raise ValueError(
-                f"{target_path}: {len(kb)} _kb= bucket dir(s) "
-                f"({', '.join(kb[:3])}{', ...' if len(kb) > 3 else ''}) "
-                f"and no {_MANIFEST} — a retired pre-manifest layout "
-                "that no entry point reads or rewrites. It is a plain "
-                "partitioned parquet tree: read it with "
-                "spark.read.parquet(<root>) and upsert_partitioned the "
-                "rows into a fresh table.")
+        names = sorted(os.listdir(target_path)
+                       if os.path.isdir(target_path) else ())
+        flat = [n for n in names if n.endswith(".parquet")]
+        kb = [n for n in names if n.startswith("_kb=")]
+        for found, what in ((flat, "flat parquet file(s)"),
+                            (kb, "_kb= bucket dir(s)")):
+            if found:
+                raise ValueError(
+                    f"{target_path}: {len(found)} {what} "
+                    f"({', '.join(found[:3])}"
+                    f"{', ...' if len(found) > 3 else ''}) and no "
+                    f"{_MANIFEST} — a retired layout that no entry point "
+                    "reads or rewrites. It is plain parquet: read it "
+                    "with spark.read.parquet(<root>) and "
+                    "upsert_partitioned the rows into a fresh table.")
         return None
     m = json.loads(raw)
     if m.get("v") != 3 or m.get("buckets") is None \
@@ -930,15 +857,14 @@ def _commit_buckets(target_path: str, m: dict, new_dirs: dict[int, str],
     return m, clean
 
 
-def _recover_partitioned_swap(target_path: str
-                              ) -> tuple[dict | None, bool]:
+def _recover_partitioned_swap(target_path: str) -> dict | None:
     """Entry-time recovery for the bucketed table, shared by every
-    mutating entry point (upsert, compaction, rebucket). There is no
-    rollback
-    protocol — the manifest flip is the linearization point — so
-    recovery only sweeps: crashed writers' ``.upsert_tmp_*`` staging,
-    grace entries past the retention window (see the ``_MANIFEST``
-    doctrine), every dir the pruned manifest no longer references —
+    mutating entry point (create, upsert, compaction, rebucket). There
+    is no rollback protocol — the manifest flip is the linearization
+    point — so recovery only sweeps: crashed writers' ``.upsert_tmp_*``
+    staging, grace entries past the retention window (see the
+    ``_MANIFEST`` doctrine), every dir the pruned manifest no longer
+    references —
     crashed writers' staged epochs and deltas and expired grace copies
     alike — and orphaned manifest temp files. With no manifest yet,
     ``.kbe_*`` and ``.kgd_*`` dirs can only be a birth publisher that
@@ -957,17 +883,14 @@ def _recover_partitioned_swap(target_path: str
     (documented limitation — the protocol's files are not a defense
     against out-of-band edits; ``maintain.py --check`` is).
 
-    Returns ``(manifest, steady)``: the table's parsed manifest as
-    this recovery left it (post-prune; None when there is none) for
-    the caller to REUSE instead of re-parsing — the parse is the
-    dominant fast-path cost at large bucket counts — and whether the
-    fast path was taken (a steady table provably has no stray flat
-    files except hand-planted ones, so the caller may skip its
-    migration listdir too).
+    Returns the table's parsed manifest as this recovery left it
+    (post-prune; None when there is none) for the caller to REUSE
+    instead of re-parsing — the parse is the dominant fast-path cost at
+    large bucket counts.
     """
     if not os.path.isdir(target_path):
         _refuse_stranded_aside(target_path)
-        return None, False
+        return None
     m = _load_manifest(target_path)
     if m is not None and _read_swept_gen(target_path) == m["gen"] \
             and not _prune_grace(m["grace"], m["gen"])[1]:
@@ -981,7 +904,7 @@ def _recover_partitioned_swap(target_path: str
         # advisory and can be removed out-of-band, and a read-mostly
         # table may see no data commit for a long time.
         _write_naive_read_guard(target_path, m)
-        return m, True
+        return m
     esc = glob_mod.escape(target_path)
     clean = True
     if m is None:
@@ -1004,7 +927,7 @@ def _recover_partitioned_swap(target_path: str
         _write_naive_read_guard(target_path, m)
         if clean:
             _stamp_swept_gen(target_path, m["gen"])
-    return m, False
+    return m
 
 
 def _publish_staged_buckets(target_path: str, staging: str, token: str,
@@ -1098,7 +1021,7 @@ def _publish_delta(target_path: str, name: str, *, manifest: dict) -> None:
 def upsert_partitioned(spark: SparkSession, target_path: str,
                        batch: DataFrame, *, key_col: str = "doc_id",
                        order_col: str = "kafka_offset",
-                       buckets: int = 64,
+                       buckets: int | None = None,
                        lock_timeout: float = 300.0) -> None:
     """K2: MERGE the batch into the hash-bucket-partitioned KG table by
     key — the one way rows get into a KG table. Stored rows keep their
@@ -1119,10 +1042,11 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     (:func:`_publish_delta`). No bucket is read or rewritten, so a
     batch costs O(batch), not O(touched buckets); ``read_partitioned``
     resolves last-write-wins over buckets ∪ deltas. When the table
-    already holds ``_MAX_DELTAS - 1`` deltas, the batch is folded into
-    the buckets together with them instead (:func:`_fold_into_buckets`
-    — the one code path that writes bucket dirs, shared with the birth
-    write, :func:`compact_partitioned` and
+    already holds ``_MAX_DELTAS - 1`` deltas, or nothing live (a birth:
+    an absent path, or a table :func:`create_table_if_not_exists`
+    made), the batch is folded into the buckets together with any
+    deltas instead (:func:`_fold_into_buckets` — the one code path that
+    writes bucket dirs, shared with :func:`compact_partitioned` and
     :func:`rebucket_partitioned`). Every crash point
     leaves the table serving a complete committed state: before the
     flip the batch simply hasn't happened (its staged dirs are
@@ -1132,18 +1056,21 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     MERGE is the production drop-in (same semantics, real commit log).
 
     The bucket count, the key and order columns and the schema are
-    TABLE properties, stamped into the manifest by the birth write.
-    ``buckets`` is only the birth count: later calls use the manifest's
-    value regardless of the argument (merging under a different count
+    TABLE properties, stamped into the manifest at birth (by
+    :func:`create_table_if_not_exists`, or by an upsert into an absent
+    path, which takes the batch's schema). Every batch is aligned to
+    the manifest's schema, and a batch-only new column is refused.
+    ``buckets`` is only the birth count (64 when None): later calls use
+    the manifest's value, and log an explicit argument that differs
+    from it (merging under a different count
     would place the same keys in different buckets and
     ``read_partitioned`` would return duplicate keys; grow an outscaled
     table with :func:`rebucket_partitioned`). A ``key_col`` or
     ``order_col`` that differs from the manifest's raises
-    ``ValueError`` naming both.
+    ``ValueError`` naming both, and so does a birth ``buckets`` below 1.
 
-    A retired on-disk format (``_kb=`` dirs without a manifest, or a
-    manifest that is not v3 with a bucket count and the widened hash),
-    or a missing table beside an aside an older build stranded (see
+    A retired on-disk format (see :func:`_load_manifest`), or a missing
+    table beside an aside an older build stranded (see
     :func:`_refuse_stranded_aside`), raises ``ValueError`` before
     anything on disk changes."""
     with table_lock(target_path, timeout=lock_timeout):
@@ -1186,8 +1113,7 @@ def _num_family(t: str) -> str | None:
 
 
 def _align_to_table(batch: DataFrame, ref_schema, *,
-                    target_path: str, frame: str = "batch",
-                    allow_new: bool = False) -> DataFrame:
+                    target_path: str) -> DataFrame:
     """Cast the batch's common columns to the TABLE's exact types — the
     bucketed table's schema is a cross-bucket contract (r9).
 
@@ -1205,11 +1131,7 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
     ansi=false and throws under ansi=true), everything else lands at
     the table's birth type so every bucket file keeps one schema.
     Cross-family drift and batch-only NEW columns are refused — adding
-    a column to a bucketed table is a full-table rewrite, not a merge —
-    EXCEPT under ``allow_new`` (the flat-bootstrap case, where the
-    caller rewrites every row in one pass anyway, so a new column lands
-    in every bucket atomically and first-upsert schema evolution stays
-    legal).
+    a column to a bucketed table is a full-table rewrite, not a merge.
     Columns MISSING from the batch stay fine (the union fills nulls
     and the rewrite keeps the full table schema). Fractional
     down-casts (double→float) lose precision by construction; the
@@ -1218,16 +1140,13 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
     ±Infinity is a misencoding, not a precision loss, and raises like
     the integral overflow does (``try_cast`` alone cannot see it:
     double→float overflow yields Inf, not NULL — r9 round-close
-    review). ``frame`` names the frame being aligned in every
-    diagnostic ("batch", or the stray flat-file migration frame — a
-    wedged migration must blame the on-disk stray, not the caller's
-    conforming batch)."""
+    review)."""
     ref_types = {f.name: f.dataType.simpleString()
                  for f in ref_schema.fields if f.name != "_kb"}
     extra = [c for c in batch.columns if c not in ref_types]
-    if extra and not allow_new:
+    if extra:
         raise ValueError(
-            f"upsert_partitioned: {frame} adds column(s) {extra} not "
+            f"upsert_partitioned: batch adds column(s) {extra} not "
             f"present in the bucketed table {target_path} — a per-bucket "
             "merge would leave the new column in touched buckets only "
             "(a cross-bucket schema mix read_partitioned cannot "
@@ -1236,10 +1155,6 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
     exprs = []
     drift = False
     for c in batch.columns:
-        if c not in ref_types:          # allow_new: pass through as-is
-            exprs.append(F.col(c))
-            drift = True
-            continue
         t_b = batch.schema[c].dataType.simpleString()
         t_t = ref_types[c]
         if t_b == t_t:
@@ -1247,10 +1162,10 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
             continue
         if _num_family(t_b) is None or _num_family(t_b) != _num_family(t_t):
             raise ValueError(
-                f"upsert_partitioned: {frame} column {c}:{t_b} cannot "
+                f"upsert_partitioned: batch column {c}:{t_b} cannot "
                 f"merge into the table's {c}:{t_t} at {target_path} "
                 "(cross-family or unsupported type drift) — cast the "
-                f"{frame} explicitly to the table's type.")
+                "batch explicitly to the table's type.")
         drift = True
         tc = F.col(c).try_cast(t_t)
         # try_cast yields NULL on integral overflow, but double→float
@@ -1264,7 +1179,7 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
         exprs.append(
             F.when(does_not_fit,
                    F.raise_error(F.lit(
-                       f"upsert_partitioned: a value in {frame} column "
+                       f"upsert_partitioned: a value in batch column "
                        f"{c} ({t_b}) does not fit the table's {t_t} — "
                        f"the bucketed table keeps its birth type; fix "
                        f"the value or rewrite the table at a wider "
@@ -1274,27 +1189,23 @@ def _align_to_table(batch: DataFrame, ref_schema, *,
 
 
 def _check_key_family(batch_schema: T.StructType,
-                      table_schema: T.StructType, key_col: str, *,
-                      frame: str = "batch") -> None:
+                      table_schema: T.StructType, key_col: str) -> None:
     """Reject a batch whose key type cannot hash-agree with the stored
     table's: cross-family (string vs bigint — the union would silently
     coerce to string while the bucket hashes diverge, leaving duplicate
     keys across partitions). Same-family width drift is fine: the
-    widened hash maps both widths to one canonical type. ``frame``
-    names the offending frame in the diagnostic — when the check runs
-    over the on-disk stray migration frame, blaming "the batch" points
-    the operator at data no batch cast can ever fix."""
+    widened hash maps both widths to one canonical type."""
     from dig_etl_engine_spark.functions.hashkey import canonical_hash_type
 
     b_t = batch_schema[key_col].dataType.simpleString()
     t_t = table_schema[key_col].dataType.simpleString()
     if canonical_hash_type(b_t) != canonical_hash_type(t_t):
         raise ValueError(
-            f"upsert_partitioned: {frame} key {key_col}:{b_t} cannot "
+            f"upsert_partitioned: batch key {key_col}:{b_t} cannot "
             f"hash-agree with the table's {key_col}:{t_t} (cross-family)"
             " — the merge would bucket the same logical keys into "
             "different partitions and silently keep duplicates. "
-            f"Cast the {frame} key explicitly.")
+            "Cast the batch key explicitly.")
 
 
 def _check_lww_columns(target_path: str, m: dict, key_col: str,
@@ -1316,79 +1227,36 @@ def _check_lww_columns(target_path: str, m: dict, key_col: str,
 
 def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                                batch: DataFrame, *, key_col: str,
-                               order_col: str, buckets: int) -> None:
+                               order_col: str,
+                               buckets: int | None) -> None:
     # recovery FIRST: it returns the table's parsed manifest (the one
     # parse this entry pays — the dominant fast-path cost at large
-    # bucket counts) plus whether the fast path was taken
-    m, steady = _recover_partitioned_swap(target_path)
+    # bucket counts)
+    m = _recover_partitioned_swap(target_path)
     if m is not None:
         _check_lww_columns(target_path, m, key_col, order_col)
-        if m["buckets"] != buckets:
+        if buckets is not None and buckets != m["buckets"]:
             logger.warning(
                 "upsert_partitioned: table %s is bucketed %d-way; "
                 "ignoring buckets=%d argument (rebucket_partitioned "
                 "changes the count)", target_path, m["buckets"], buckets)
-
-    # Migration / crash-recovery: flat root *.parquet files exist when the
-    # table is a create_table bootstrap, was written with rows by an
-    # older build's flat full-rewrite merge, OR a previous migration
-    # crashed between its commit and its cleanup (flat files beside a
-    # committed manifest). Fold ALL flat rows into this batch — they
-    # land in the birth buckets or in this batch's delta — and delete
-    # the flat files after the commit, so the layout converges to pure
-    # manifest-routed dirs from any starting state. The files are read
-    # by explicit path (a whole-directory read of a mixed layout throws
-    # 'conflicting directory structures'). NOT _SUCCESS: deleting it
-    # would make the table look absent to create_table_if_not_exists.
-    # A STEADY table (sidecar fast path) provably has no strays except
-    # hand-planted ones — every protocol path that can leave a flat
-    # file also leaves the sidecar unlinked — so the migration listdir
-    # is skipped there, keeping the steady-state write path free of
-    # root listings entirely.
-    flat_files: list[str] = []
-    if not steady and os.path.isdir(target_path):
-        flat_files = [f for f in os.listdir(target_path)
-                      if f.endswith(".parquet")]
-    stray = spark.read.parquet(
-        *[os.path.join(target_path, f) for f in flat_files]) \
-        if flat_files else None
-
-    # The INCUMBENT schema (the manifest's, else the flat bootstrap's) is
-    # the table's contract: check the key's hash-compatibility against
-    # it, then align every writer-side frame to its EXACT types (r9,
-    # found by the migration golden): letting a union coerce a wider
-    # batch column up would write parquet files of a different type and
-    # leave the table schema-inconsistent — see _align_to_table. The
-    # alignment also subsumes the r8 stray-width rule (a stray column of
-    # a different width would otherwise hash into the wrong partition):
-    # post-alignment, batch, stray and table hash from one key dtype.
-    _STRAY_FRAME = ("stray flat-file migration frame (on disk at the "
-                    "table root, not this batch)")
-    schema = m["schema"] if m is not None else (
-        stray.schema if stray is not None else None)
-    if schema is not None:
-        _check_key_family(batch.schema, schema, key_col)
-        # batch-only NEW columns are refused once the table has a
-        # manifest (rows already stored would lack the column); in the
-        # flat-bootstrap case every row (stray ∪ batch) is written in
-        # this one pass, so schema evolution on the first partitioned
-        # upsert stays legal (r9 round-close review)
-        batch = _align_to_table(batch, schema, target_path=target_path,
-                                allow_new=m is None)
-        if stray is not None and m is not None:
-            _check_key_family(stray.schema, schema, key_col,
-                              frame=_STRAY_FRAME)
-            stray = _align_to_table(stray, schema,
-                                    target_path=target_path,
-                                    frame=_STRAY_FRAME)
-    if stray is not None:
-        batch = stray.unionByName(batch, allowMissingColumns=True)
+        # The manifest's schema is the table's contract: check the
+        # key's hash-compatibility against it, then align the batch to
+        # its EXACT types (r9, found by the migration golden): letting
+        # a union coerce a wider batch column up would write parquet
+        # files of a different type and leave the table
+        # schema-inconsistent — see _align_to_table. Post-alignment,
+        # batch and table hash from one key dtype.
+        _check_key_family(batch.schema, m["schema"], key_col)
+        batch = _align_to_table(batch, m["schema"],
+                                target_path=target_path)
     b = dedupe_last_write_wins(batch, key_col, order_col)
-
     if m is None:
-        _fold_into_buckets(spark, target_path, _new_manifest(
-            b.schema, buckets=buckets, key=key_col, order=order_col), b)
-    elif len(m["deltas"]) + 1 >= _MAX_DELTAS:
+        m = _new_manifest(b.schema, buckets=64 if buckets is None
+                          else buckets, key=key_col, order=order_col)
+    # a birth (nothing live: an absent path or a created table) lands
+    # its batch in the buckets, like every _MAX_DELTAS-th upsert
+    if not m["live"] or len(m["deltas"]) + 1 >= _MAX_DELTAS:
         _fold_into_buckets(spark, target_path, m, b)
     else:
         name = f".kgd_{uuid.uuid4().hex[:8]}"
@@ -1405,16 +1273,6 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
             # an empty micro-batch commits nothing; re-stamp so an
             # empty-batch stream keeps the fast path
             _stamp_swept_gen(target_path, m["gen"])
-    for f in flat_files:
-        try:
-            os.remove(os.path.join(target_path, f))
-        except OSError:
-            # non-fatal: a stray flat file just gets re-merged (and
-            # re-deleted) by the next upsert's migration pass — but say so,
-            # silent leftovers made one real incident hard to trace
-            logger.warning("upsert_partitioned: could not remove migrated "
-                           "flat file %s", os.path.join(target_path, f),
-                           exc_info=True)
 
 
 def _parquet_rows(path: str) -> int:
@@ -1433,9 +1291,10 @@ def _fold_into_buckets(spark: SparkSession, target_path: str, m: dict,
     deduplicated batch aligned to the table, or None) and every delta
     ``m`` lists into the buckets, rewrite the live buckets ``rewrite``
     names whether or not a row lands in them, and return the committed
-    manifest. Callers: the birth or flat-migration write (``m`` a
-    :func:`_new_manifest`), :func:`upsert_partitioned` once a table
-    holds ``_MAX_DELTAS - 1`` deltas (``rewrite`` empty),
+    manifest. Callers: :func:`upsert_partitioned` at a birth (``m``
+    with nothing live: a :func:`_new_manifest`, or the generation-0
+    manifest :func:`create_table_if_not_exists` committed) and once a
+    table holds ``_MAX_DELTAS - 1`` deltas (``rewrite`` empty),
     :func:`compact_partitioned` (the deltas, and the fragmented
     buckets as ``rewrite``) and :func:`rebucket_partitioned` (every
     old dir as a delta of a table with nothing live).
@@ -1542,7 +1401,7 @@ def compact_partitioned(spark: SparkSession, target_path: str, *,
     with table_lock(target_path, timeout=lock_timeout):
         # the shared entry recovery sweeps orphans/expired grace; its
         # parsed manifest is reused instead of a second parse
-        m, _steady = _recover_partitioned_swap(target_path)
+        m = _recover_partitioned_swap(target_path)
         if m is None:
             return 0
         fragmented = frozenset(
@@ -1583,30 +1442,31 @@ def rebucket_partitioned(spark: SparkSession, target_path: str,
 
     The rebucketed table keeps the manifest's key, order and schema and
     holds no deltas. Every row is rehashed, so this is also the repair
-    for a table whose stored rows violate key↔bucket placement. A table
-    with no manifest — none yet, or a flat one awaiting its first
-    upsert — raises ``ValueError``, and so does a ``key_col`` that
-    differs from the manifest's, and a ``new_buckets`` below 1.
+    for a table whose stored rows violate key↔bucket placement. A
+    created table that holds no row commits just the new count. A table
+    with no manifest raises ``ValueError``, and so does a ``key_col``
+    that differs from the manifest's, and a ``new_buckets`` below 1.
     """
-    if new_buckets < 1:
-        raise ValueError(f"rebucket_partitioned: new_buckets="
-                         f"{new_buckets!r} — a table needs at least one "
-                         "bucket.")
     with table_lock(target_path, timeout=lock_timeout):
-        m, _steady = _recover_partitioned_swap(target_path)
+        m = _recover_partitioned_swap(target_path)
         if m is None:
             raise ValueError(
                 f"rebucket_partitioned: {target_path} has no {_MANIFEST}"
                 " — there is no bucketed table to rebucket. "
-                "upsert_partitioned creates one, and migrates a flat "
-                "table on its first call.")
+                "create_table_if_not_exists or upsert_partitioned "
+                "creates one.")
         _check_lww_columns(target_path, m, key_col)
         # under the new count no old dir is a bucket: each joins the
         # deltas, so the fold's flip moves every one of them to grace
-        m = _fold_into_buckets(spark, target_path, dict(
-            m, buckets=new_buckets, live={},
-            deltas=[d for _, d in sorted(m["live"].items())]
-            + m["deltas"]))
+        old = [d for _, d in sorted(m["live"].items())] + m["deltas"]
+        m = dict(_new_manifest(m["schema"], buckets=new_buckets,
+                               key=m["key"], order=m["order"]),
+                 gen=m["gen"], grace=m["grace"], deltas=old)
+        if not old:
+            # a created table with no row: nothing to fold
+            _commit_buckets(target_path, m, {}, deltas=[])
+            return 0
+        m = _fold_into_buckets(spark, target_path, m)
         return sum(_parquet_rows(os.path.join(target_path, d))
                    for d in m["live"].values())
 
@@ -1614,16 +1474,17 @@ def rebucket_partitioned(spark: SparkSession, target_path: str,
 def layout_report(target_path: str) -> dict:
     """Read-only layout diagnosis of a KG table for
     ``scripts/maintain.py --check`` (verdict r11 item 3): classifies
-    the table (``absent`` / ``flat`` / ``manifest`` / ``retired``),
-    counts visible vs hidden live dirs and live deltas, and returns
-    ``findings`` — human-readable anomaly strings, empty on a healthy
-    table. Hidden epochs and deltas are the layout every writer
-    produces, so they are no finding; these are: a hidden live dir or
+    the table (``absent`` / ``manifest`` / ``retired``), counts visible
+    vs hidden live dirs and live deltas, and returns ``findings`` —
+    human-readable anomaly strings, empty on a healthy table. Hidden
+    epochs and deltas are the layout every writer produces, so they
+    are no finding; these are: a missing table, a hidden live dir or
     delta without the naive-read guard file, unreferenced bucket and
     delta dirs, stray flat parquet files beside a manifest, an older
-    build's ``<table>.rebucket_tmp.*``, ``<table>.rebucket_old`` or
-    ``<table>.__tmp__*`` sibling beside a live table, and a retired
-    on-disk format (a finding, not an error). Takes no lock and
+    build's ``<table>.rebucket_tmp.*``, ``<table>.rebucket_old``,
+    ``<table>.__tmp__*`` or ``<table>.__seed__*`` sibling beside the
+    table, and a retired on-disk format (a finding, not an error).
+    Takes no lock and
     mutates nothing — safe against a live ingest (the counts are a
     snapshot; only the classification is load-bearing). A torn
     manifest still raises (the caller reports it as unreadable)."""
@@ -1638,10 +1499,12 @@ def layout_report(target_path: str) -> dict:
     siblings = sorted(
         glob_mod.glob(esc + ".rebucket_tmp.*")
         + glob_mod.glob(esc + ".rebucket_old")
-        + glob_mod.glob(esc + ".__tmp__*"))
+        + glob_mod.glob(esc + ".__tmp__*")
+        + glob_mod.glob(esc + ".__seed__*"))
     if siblings:
         report["findings"].append(
-            f"{len(siblings)} sibling dir(s) an older build's swap left "
+            f"{len(siblings)} sibling dir(s) an older build's swap or "
+            "seed left "
             f"beside the table ({', '.join(siblings[:3])}"
             f"{', ...' if len(siblings) > 3 else ''}): nothing reads "
             "or sweeps them; remove them once the table reads correctly")
@@ -1654,9 +1517,9 @@ def layout_report(target_path: str) -> dict:
         report["era"] = "retired"
         report["findings"].append(str(ex))
         return report
-    flat = [f for f in names if f.endswith(".parquet")]
     if m is None:
-        report["era"] = "flat"
+        report["findings"].append(
+            f"table directory holds no {_MANIFEST}")
         litter = [n for n in names
                   if n.startswith((".upsert_tmp_", ".kbe_", ".kgd_"))]
         if litter:
@@ -1695,10 +1558,13 @@ def layout_report(target_path: str) -> dict:
             f"{len(orphans)} unreferenced bucket or delta dir(s), "
             f"{n_delta} of them .kgd_ delta(s) (crashed writer's "
             "orphans or expired grace): swept at the next writer entry")
+    flat = [f for f in names if f.endswith(".parquet")]
     if flat:
         report["findings"].append(
             f"{len(flat)} stray flat parquet file(s) at the root of a "
-            "manifest table: folded in by the next upsert_partitioned")
+            "manifest table: an older build's first-upsert migration "
+            "committed their rows and crashed before deleting them; "
+            "nothing reads or folds them in — remove them")
     return report
 
 
@@ -1708,24 +1574,27 @@ def read_partitioned(spark: SparkSession, target_path: str) -> DataFrame:
     and deltas, so a concurrent upsert/compaction never makes rows
     transiently invisible. They are read by explicit path with the
     manifest's schema — no footer inference, no Spark job at
-    construction — so stray flat files awaiting the next upsert's
-    migration never mix into the read. With no deltas this is the plain
+    construction — so nothing else under the table root mixes into
+    the read. With no deltas this is the plain
     scan of the buckets; with deltas it is
     :func:`dedupe_last_write_wins` over buckets ∪ deltas on the
     manifest's key and order columns (a shuffle, until a fold leaves
     the table without deltas).
 
-    A table with no manifest is flat (a seed, or an older build's table
-    awaiting its migration) and reads as one parquet dir. Every writer,
-    rebucketing included, publishes by one manifest flip inside the
-    table, so there is no moment at which the table dir is missing. A
-    retired on-disk format raises ``ValueError`` (see
-    :func:`_load_manifest`), and so does a missing table beside an
-    older build's stranded aside (see :func:`_refuse_stranded_aside`)."""
+    A table :func:`create_table_if_not_exists` made reads as zero rows
+    with the manifest's schema. Every writer, rebucketing included,
+    publishes by one manifest flip inside the table, so there is no
+    moment at which the table dir is missing. A path with no manifest,
+    a retired on-disk format (see :func:`_load_manifest`) and a missing
+    table beside an older build's stranded aside (see
+    :func:`_refuse_stranded_aside`) raise ``ValueError``."""
     _refuse_stranded_aside(target_path)
     m = _load_manifest(target_path)
     if m is None:
-        return spark.read.parquet(target_path)
+        raise ValueError(
+            f"read_partitioned: {target_path} has no {_MANIFEST} — no "
+            "KG table here. create_table_if_not_exists or "
+            "upsert_partitioned creates one.")
     # explicit per-dir roots (no basePath): no _kb partition column is
     # inferred, and hidden dirs read like visible ones
     dirs = [d for _, d in sorted(m["live"].items())] + m["deltas"]

@@ -100,8 +100,7 @@ def run_ingest(source: DataFrame, *, target_path: str,
                quarantine_path: str, checkpoint_dir: str,
                transform: Callable[[DataFrame], DataFrame] | None = None,
                key_col: str = "doc_id", order_col: str = "kafka_offset",
-               available_now: bool = True,
-               buckets: int = 64) -> StreamingQuery:
+               available_now: bool = True) -> StreamingQuery:
     """The full ingest leg: validate → (optional per-batch transform, i.e.
     the module pipeline) → upsert valid docs / quarantine invalid ones.
 
@@ -112,9 +111,9 @@ def run_ingest(source: DataFrame, *, target_path: str,
     Valid docs merge through the hash-bucket-partitioned
     :func:`~dig_etl_engine_spark.sinks.kg_table.upsert_partitioned`
     (one delta dir per batch, merged on read), the KG table's one write
-    path.
-    ``buckets`` is the bucket count a new table is born with; an
-    existing table keeps the count in its manifest.
+    path. A table the first batch creates is born with 64 buckets;
+    create it with ``create_table_if_not_exists(…, buckets=)`` first
+    for another count.
     """
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -129,8 +128,7 @@ def run_ingest(source: DataFrame, *, target_path: str,
             if transform is not None:
                 valid = transform(valid)
             upsert_partitioned(spark, target_path, valid,
-                               key_col=key_col, order_col=order_col,
-                               buckets=buckets)
+                               key_col=key_col, order_col=order_col)
         finally:
             batch.unpersist()
 
@@ -150,8 +148,7 @@ def run_dedup_ingest(source: DataFrame, *, target_path: str,
                      key_col: str = "doc_id",
                      order_col: str = "kafka_offset",
                      threshold: float = 0.6,
-                     max_bucket: int | None = None,
-                     buckets: int = 64) -> StreamingQuery:
+                     max_bucket: int | None = None) -> StreamingQuery:
     """Streaming ingest with online NEAR-dup suppression — the
     first-seen-dedup idea (streaming/stateful.py) upgraded from exact
     fingerprints to minhash similarity, backed by the persisted band
@@ -196,8 +193,7 @@ def run_dedup_ingest(source: DataFrame, *, target_path: str,
                     .distinct())
             survivors = valid.join(drop, key_col, "left_anti")
             upsert_partitioned(spark, target_path, survivors,
-                               key_col=key_col, order_col=order_col,
-                               buckets=buckets)
+                               key_col=key_col, order_col=order_col)
         finally:
             batch.unpersist()
 

@@ -88,14 +88,16 @@ def main() -> int:
     ap.add_argument("--check", metavar="PATH", action="append",
                     default=[],
                     help="read-only layout diagnosis of a KG table "
-                         "(kg_table.layout_report; era absent, flat, "
+                         "(kg_table.layout_report; era absent, "
                          "manifest or retired, and the live delta "
-                         "count): flags a missing naive-read guard, "
-                         "unreferenced dirs, stray flat files, an "
-                         "older build's swap siblings beside the "
-                         "table, and retired on-disk formats "
-                         "(_kb= dirs with no _kg_manifest, a manifest "
-                         "that is not v3) that no entry point reads; "
+                         "count): flags a missing table, a missing "
+                         "naive-read guard, unreferenced dirs, stray "
+                         "flat files beside a manifest, an older "
+                         "build's swap or seed siblings beside the "
+                         "table, and retired on-disk formats (root "
+                         "parquet files or _kb= dirs with no "
+                         "_kg_manifest, a manifest that is not v3) "
+                         "that no entry point reads; "
                          "repeatable; exits 1 when any checked table "
                          "has findings; needs no Spark session")
     ap.add_argument("--lock-timeout", type=float, default=1800.0,

@@ -215,16 +215,15 @@ class TestUpsert:
         p = str(tmp_path / "t")
         assert kg_table.create_table_if_not_exists(spark, p, self.SCHEMA)
         assert not kg_table.create_table_if_not_exists(spark, p, self.SCHEMA)
-        assert spark.read.parquet(p).count() == 0
+        assert kg_table.read_partitioned(spark, p).count() == 0
 
     def test_seed_read_schema_identical_to_spark_write(
             self, spark, tmp_path):
-        """r12: the bootstrap seed is written on the driver (pyarrow +
-        the Spark row-metadata footer key), not by a Spark job. The
-        contract that makes that safe: reading the seeded table must
-        restore EXACTLY the schema an empty-DataFrame Spark write would
-        have pinned — across nullability, nested and temporal/decimal
-        types — because the first upsert aligns batches to it."""
+        """A created table holds no parquet file, only its manifest, so
+        its read schema comes from the manifest. The contract: reading
+        it returns EXACTLY the schema a Spark write of that schema reads
+        back as — across nullability, nested and temporal/decimal types
+        — because the first upsert aligns batches to it."""
         cases = {
             "flat": self.SCHEMA,
             "nonnull": T.StructType([
@@ -246,25 +245,20 @@ class TestUpsert:
                 T.StructField("bo", T.BooleanType())]),
         }
         for name, sch in cases.items():
-            seeded = str(tmp_path / f"{name}_seed")
+            created = str(tmp_path / f"{name}_created")
             sparkw = str(tmp_path / f"{name}_spark")
-            assert kg_table.create_table_if_not_exists(spark, seeded, sch)
-            # the DRIVER path must have run, not the Spark fallback —
-            # otherwise this test compares a Spark write against a Spark
-            # write and the optimization it pins could be silently dead
-            # (e.g. a pyarrow upgrade breaking to_arrow_schema)
-            assert os.path.exists(os.path.join(
-                seeded, "part-00000-seed.snappy.parquet")), name
+            assert kg_table.create_table_if_not_exists(spark, created, sch)
+            assert os.listdir(created) == [kg_table._MANIFEST], name
             spark.createDataFrame([], sch).write.parquet(sparkw)
-            got = spark.read.parquet(seeded)
+            got = kg_table.read_partitioned(spark, created)
             assert got.schema == spark.read.parquet(sparkw).schema, name
             assert got.count() == 0, name
 
     def test_seed_rejects_null_type_up_front(self, spark, tmp_path):
-        """The seed must not be WIDER than the Spark writer it replaces:
-        pyarrow happily writes a void column Spark can never write to,
-        so NullType anywhere in the schema must raise before anything
-        touches disk — recursively, including nested positions."""
+        """A table whose schema holds a void column could never take a
+        row (Spark's parquet writer rejects NullType), so NullType
+        anywhere in the schema must raise before anything touches disk
+        — recursively, including nested positions."""
         nested_nulls = [
             T.StructType([T.StructField("x", T.NullType())]),
             T.StructType([T.StructField(
@@ -277,60 +271,10 @@ class TestUpsert:
         for sch in nested_nulls:
             assert kg_table._contains_null_type(sch), sch
             with pytest.raises(ValueError, match="void column"):
-                kg_table._write_empty_seed(str(tmp_path / "void"), sch)
-            assert not os.path.exists(str(tmp_path / "void"))
+                kg_table.create_table_if_not_exists(
+                    spark, str(tmp_path / "void"), sch)
+            assert os.listdir(tmp_path) == []
         assert not kg_table._contains_null_type(self.SCHEMA)
-
-    def test_seed_refuses_to_delete_marker_dirs(self, tmp_path):
-        """_write_empty_seed must never rmtree a dir carrying any
-        committed-table marker — the refusal that keeps a creation race
-        from destroying the winner's table."""
-        for marker, is_dir in [("x.parquet", False), ("_SUCCESS", False),
-                               ("_kb=00000", True),
-                               (kg_table._MANIFEST, False)]:
-            p = str(tmp_path / f"t_{marker.replace('=', '_')}")
-            os.makedirs(p)
-            if is_dir:
-                os.makedirs(os.path.join(p, marker))
-            else:
-                with open(os.path.join(p, marker), "w") as fh:
-                    fh.write("keep me")
-            with pytest.raises(FileExistsError):
-                kg_table._write_empty_seed(p, self.SCHEMA)
-            assert os.path.exists(os.path.join(p, marker)), marker
-
-    def test_seed_lost_race_returns_false_keeps_winner(
-            self, spark, tmp_path, monkeypatch):
-        """If the seed fails AND a table now exists (an out-of-band
-        creator won), create_table_if_not_exists must report 'not
-        created' and leave the winner's table alone — never fall into
-        the destructive Spark overwrite."""
-        p = str(tmp_path / "t")
-
-        def winner_then_fail(path, schema):
-            os.makedirs(path)
-            with open(os.path.join(path, "part-w.parquet"), "w") as fh:
-                fh.write("winner's data")
-            raise RuntimeError("simulated lost race")
-
-        monkeypatch.setattr(kg_table, "_write_empty_seed",
-                            winner_then_fail)
-        assert not kg_table.create_table_if_not_exists(
-            spark, p, self.SCHEMA)
-        with open(os.path.join(p, "part-w.parquet")) as fh:
-            assert fh.read() == "winner's data"
-
-    def test_seed_sweeps_stale_staging(self, spark, tmp_path):
-        """A crashed predecessor's .__seed__* staging dir is reclaimed
-        at entry (under the table lock) instead of leaking forever."""
-        p = str(tmp_path / "t")
-        stale = p + ".__seed__deadbeef"
-        os.makedirs(stale)
-        with open(os.path.join(stale, "junk.parquet"), "w") as fh:
-            fh.write("junk")
-        assert kg_table.create_table_if_not_exists(spark, p, self.SCHEMA)
-        assert not os.path.exists(stale)
-        assert spark.read.parquet(p).count() == 0
 
     def test_last_write_wins_across_batches(self, spark, tmp_path):
         p = str(tmp_path / "t")
@@ -384,38 +328,6 @@ class TestUpsert:
         assert got[0] == (10, "new")     # updated, not duplicated
         assert got[99] == (2, "add")
         assert len(got) == 41
-
-    def test_partitioned_upsert_stray_flat_files_mixed_width(
-            self, spark, tmp_path):
-        """Flat rows (an older build's flat table, written directly
-        here) with INT keys folded into a LONG-keyed partitioned batch:
-        the stray frame must get a
-        bucket expression built from ITS OWN dtype (r8 review — the
-        batch-derived expression would hash the stray column unwidened
-        into the wrong partition), so the same logical key collapses to
-        one row."""
-        p = str(tmp_path / "t")
-        flat = spark.createDataFrame(
-            [(0, 1, "flat"), (7, 1, "flat")],
-            "doc_id int, kafka_offset long, v string")
-        flat.write.parquet(p)                # flat root layout
-        batch = spark.createDataFrame(
-            [(0, 10, "new"), (5, 2, "add")],
-            "doc_id long, kafka_offset long, v string")
-        kg_table.upsert_partitioned(spark, p, batch, buckets=8)
-        got = {r.doc_id: (r.kafka_offset, r.v)
-               for r in kg_table.read_partitioned(spark, p).collect()}
-        assert got[0] == (10, "new")     # migrated + updated, one row
-        assert got[7] == (1, "flat")     # migrated untouched
-        assert got[5] == (2, "add")
-        assert len(got) == 3
-        # and a later NARROW batch still merges against the same layout
-        b2 = spark.createDataFrame(
-            [(7, 9, "upd")], "doc_id int, kafka_offset long, v string")
-        kg_table.upsert_partitioned(spark, p, b2, buckets=8)
-        got2 = {r.doc_id: r.v
-                for r in kg_table.read_partitioned(spark, p).collect()}
-        assert got2[7] == "upd" and len(got2) == 3
 
     def test_partitioned_upsert_rejects_cross_family_keys(
             self, spark, tmp_path):
@@ -524,21 +436,6 @@ class TestStreamingIngest:
         write_quarantine(bad.limit(1), 8, qdir)  # a different batch appends
         assert spark.read.parquet(qdir).count() == 3
 
-    def test_flat_table_migrates_to_bucketed(self, spark, tmp_path):
-        """upsert_partitioned over a flat table that holds rows (an
-        older build's table, written directly here) folds the flat rows
-        in and converges the layout to manifest-routed bucket dirs."""
-        p = str(tmp_path / "t")
-        schema = TestUpsert.SCHEMA
-        spark.createDataFrame(
-            [("a", 1, "old"), ("b", 2, "keep")], schema).write.parquet(p)
-        kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
-            [("a", 10, "new"), ("c", 3, "add")], schema), buckets=8)
-        got = {r.doc_id: (r.kafka_offset, r.v)
-               for r in kg_table.read_partitioned(spark, p).collect()}
-        assert got == {"a": (10, "new"), "b": (2, "keep"), "c": (3, "add")}
-        assert not any(f.endswith(".parquet") for f in os.listdir(p))
-
     def test_stateful_first_seen_dedup_across_runs(self, spark, tmp_path):
         """applyInPandasWithState first-seen dedup: within a run the
         min-order row per fingerprint wins; a second run against the same
@@ -641,7 +538,8 @@ class TestStreamingIngest:
         from pyspark.sql import types as T
         from dig_etl_engine_spark.operators.dedup import (
             materialize_minhash_index)
-        from dig_etl_engine_spark.sinks.kg_table import read_partitioned
+        from dig_etl_engine_spark.sinks.kg_table import (
+            create_table_if_not_exists, read_partitioned)
         from dig_etl_engine_spark.streaming.ingest import (
             file_stream_source, run_dedup_ingest)
 
@@ -658,6 +556,7 @@ class TestStreamingIngest:
         target, quarantine = str(tmp_path / "kg"), str(tmp_path / "q")
         ckpt, idx = str(tmp_path / "ckpt"), str(tmp_path / "mh")
 
+        create_table_if_not_exists(spark, target, schema, buckets=4)
         # cold start: index materialized over an EMPTY corpus
         materialize_minhash_index(
             spark.createDataFrame([], "doc_id string, text string"),
@@ -673,8 +572,7 @@ class TestStreamingIngest:
             q = run_dedup_ingest(
                 file_stream_source(spark, str(src), schema),
                 target_path=target, quarantine_path=quarantine,
-                checkpoint_dir=ckpt, index_path=idx,
-                threshold=0.5, buckets=4)
+                checkpoint_dir=ckpt, index_path=idx, threshold=0.5)
             q.awaitTermination()
 
         drop("a.json", [("a", 1, base),
@@ -1360,6 +1258,69 @@ class TestBucketMetaAndRebucket:
                for r in kg_table.read_partitioned(spark, p).collect()}
         assert got["k0"] == "post" and len(got) == len(before)
 
+    @pytest.mark.parametrize("n", [0, -3])
+    @pytest.mark.parametrize("entry", ["create", "upsert", "rebucket"])
+    def test_bucket_count_checked_at_every_birth(self, spark, tmp_path,
+                                                 entry, n):
+        """A bucket count below 1 is refused with a ValueError naming
+        ``buckets`` wherever a count is set — creating a table, an
+        upsert's birth into an absent path, a rebucket — and nothing on
+        disk changes (0 used to fail inside the Spark job on a remainder
+        by zero; -3 committed a table with negative bucket ids)."""
+        p = self._table(spark, tmp_path, buckets=2) \
+            if entry == "rebucket" else str(tmp_path / "t")
+        calls = {
+            "create": lambda: kg_table.create_table_if_not_exists(
+                spark, p, T.StructType.fromDDL(
+                    "doc_id string, kafka_offset long, v string"),
+                buckets=n),
+            "upsert": lambda: kg_table.upsert_partitioned(
+                spark, p, spark.createDataFrame(
+                    [("k0", 1, "x")], self.SCHEMA), buckets=n),
+            "rebucket": lambda: kg_table.rebucket_partitioned(spark, p, n),
+        }
+        before = TestOnDiskFormat._snapshot(str(tmp_path))
+        with pytest.raises(ValueError, match="buckets"):
+            calls[entry]()
+        assert TestOnDiskFormat._snapshot(str(tmp_path)) == before
+
+    def test_rowless_created_table_at_every_entry_point(self, spark,
+                                                        tmp_path):
+        """Only create_table_if_not_exists makes a manifest with nothing
+        live and no delta. Every entry point takes it: a read is empty
+        with the manifest's schema, compaction and an empty batch commit
+        nothing, a rebucket commits just the new count, the layout
+        report finds nothing, and the first rows land in birth
+        buckets."""
+        p = str(tmp_path / "t")
+        schema = T.StructType.fromDDL(
+            "doc_id string, kafka_offset bigint, v string")
+        assert kg_table.create_table_if_not_exists(spark, p, schema,
+                                                   buckets=4)
+        m0 = kg_table._load_manifest(p)
+        assert m0["gen"] == 0 and m0["buckets"] == 4
+        assert not m0["live"] and not m0["deltas"]
+        df = kg_table.read_partitioned(spark, p)
+        assert df.schema == schema and df.count() == 0
+        assert kg_table.compact_partitioned(spark, p) == 0
+        kg_table.upsert_partitioned(
+            spark, p, spark.createDataFrame([], self.SCHEMA))
+        assert kg_table._load_manifest(p) == m0
+        assert not [n for n in os.listdir(p)
+                    if n.startswith(kg_table._DATA_DIR_PREFIXES)]
+        rep = kg_table.layout_report(p)
+        assert rep["era"] == "manifest" and rep["findings"] == []
+        assert kg_table.rebucket_partitioned(spark, p, 8) == 0
+        m1 = kg_table._load_manifest(p)
+        assert m1 == dict(m0, gen=1, buckets=8)
+        assert kg_table.layout_report(p)["findings"] == []
+        kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
+            [(f"k{i}", 1, "x") for i in range(20)], self.SCHEMA))
+        m2 = kg_table._load_manifest(p)
+        assert m2["gen"] == 2 and m2["buckets"] == 8 and m2["live"]
+        assert not m2["deltas"]
+        assert kg_table.read_partitioned(spark, p).count() == 20
+
     def test_int_table_aligns_wider_batches_down(self, spark, tmp_path):
         """An INT-keyed table is the birth-type contract: a wider
         (BIGINT) batch merges aligned DOWN to INT (the schema is a
@@ -1410,41 +1371,28 @@ class TestBucketMetaAndRebucket:
         with pytest.raises(ValueError, match="cross-family"):
             kg_table.upsert_partitioned(spark, p, b_cross, buckets=4)
 
-    def test_flat_bootstrap_first_upsert_schema_evolution(self, spark,
-                                                          tmp_path):
-        """r9 round-close review regression: a batch-only NEW column is
-        legal on the FIRST partitioned upsert after a flat
-        create_table bootstrap — every row (stray ∪ batch) is rewritten
-        in that one pass, so the column lands in every bucket
-        atomically (this worked before _align_to_table landed and must
-        keep working). Once bucketed dirs exist, a further new column
-        refuses as before."""
-        from dig_etl_engine_spark.sinks.kg_table import (
-            read_partitioned, upsert_partitioned)
-
+    def test_created_table_refuses_added_column(self, spark, tmp_path):
+        """The schema a table is created with is its contract from the
+        first batch on: a batch-only new column is refused even while
+        the table holds no row, and the table is left untouched."""
         p = str(tmp_path / "t")
-        boot = spark.createDataFrame(
-            [(i, 1, "base") for i in range(10)],
-            "doc_id long, kafka_offset long, v string")
-        boot.write.parquet(p)          # flat root layout = the bootstrap
-
+        kg_table.create_table_if_not_exists(
+            spark, p, T.StructType.fromDDL(
+                "doc_id long, kafka_offset long, v string"), buckets=2)
+        before = kg_table.resolve_pointer(p, name=kg_table._MANIFEST)
         b1 = spark.createDataFrame(
             [(3, 2, "upd", 0.5)],
             "doc_id long, kafka_offset long, v string, extra double")
-        upsert_partitioned(spark, p, b1, buckets=2)
-        table = read_partitioned(spark, p)
-        assert "extra" in table.columns
-        got = {r.doc_id: (r.v, r.extra) for r in table.collect()}
-        assert got[3] == ("upd", 0.5) and got[0] == ("base", None)
-        assert len(got) == 10
-
-        # bucketed dirs now exist: a second new column refuses
-        b2 = spark.createDataFrame(
-            [(4, 3, "x", 1.0, 7)],
-            "doc_id long, kafka_offset long, v string, extra double, "
-            "more int")
         with pytest.raises(ValueError, match="adds column"):
-            upsert_partitioned(spark, p, b2, buckets=2)
+            kg_table.upsert_partitioned(spark, p, b1)
+        # the entry recovery may stamp the swept-gen sidecar; nothing
+        # else is written and the manifest is unchanged
+        assert set(os.listdir(p)) <= {kg_table._MANIFEST,
+                                      kg_table._SWEPT_GEN}
+        assert kg_table.resolve_pointer(p, name=kg_table._MANIFEST) \
+            == before
+        assert kg_table.read_partitioned(spark, p).columns == \
+            ["doc_id", "kafka_offset", "v"]
 
     def test_align_to_table_width_matrix(self, spark):
         """_align_to_table unit battery over the full integral width
@@ -2015,8 +1963,10 @@ class TestDurabilityAndLayoutGuards:
         guard = os.path.join(p, kg_table._NAIVE_READ_GUARD)
         assert os.path.exists(guard)
         os.remove(guard)
-        m, steady = kg_table._recover_partitioned_swap(p)
-        assert steady                                  # fast path...
+        orphan = os.path.join(p, ".kbe_0_orphantok")
+        os.makedirs(orphan)
+        kg_table._recover_partitioned_swap(p)
+        assert os.path.isdir(orphan)                   # fast path...
         assert os.path.exists(guard)                   # ...healed it
 
     def test_swept_gen_fast_path_and_invalidation(self, spark,
@@ -2148,17 +2098,42 @@ class TestDurabilityAndLayoutGuards:
         assert all(os.path.isdir(d) for d in sibs)
         for d in sibs:
             os.rmdir(d)
-        # a flat table (an older build's, written directly), and a
-        # retired format: classified, never raised
+        # stray flat files an older build's migration left beside the
+        # manifest are a finding, and left alone
+        stray = os.path.join(p, "part-00000-stray.parquet")
+        open(stray, "wb").close()
+        rep = kg_table.layout_report(p)
+        assert [f for f in rep["findings"]
+                if "1 stray flat parquet file" in f
+                and "nothing reads" in f], rep
+        assert os.path.exists(stray)
+        os.remove(stray)
+        # a created table holds no row and nothing hidden: no finding
+        created = str(tmp_path / "created")
+        kg_table.create_table_if_not_exists(
+            spark, created, T.StructType.fromDDL(self.SCHEMA), buckets=2)
+        rep = kg_table.layout_report(created)
+        assert rep["era"] == "manifest" and rep["gen"] == 0, rep
+        assert rep["findings"] == []
+        # a flat table (an older build's table or seed, written
+        # directly) and the pre-manifest layout are retired formats:
+        # classified, never raised
         flat = str(tmp_path / "flat")
         self._batch(spark, [(1, "b", 0)]).write.parquet(flat)
-        rep = kg_table.layout_report(flat)
-        assert rep["era"] == "flat" and rep["findings"] == []
         retired = str(tmp_path / "retired")
         os.makedirs(os.path.join(retired, "_kb=0"))
-        rep = kg_table.layout_report(retired)
-        assert rep["era"] == "retired"
-        assert any("_kb=" in f and retired in f for f in rep["findings"])
+        for t, found in ((flat, "flat parquet file"),
+                         (retired, "_kb= bucket dir")):
+            rep = kg_table.layout_report(t)
+            assert rep["era"] == "retired", rep
+            assert any(found in f and t in f for f in rep["findings"])
+        # an older build's seed staging dir beside the table is a
+        # sibling finding too
+        seed = flat + ".__seed__1a2b3c4d"
+        os.makedirs(seed)
+        rep = kg_table.layout_report(flat)
+        assert any("sibling" in f and seed in f for f in rep["findings"])
+        assert os.path.isdir(seed)
 
 
 class TestOnDiskFormat:
@@ -2216,7 +2191,12 @@ class TestOnDiskFormat:
                 fh.write(b"rows placed by an older build")
         with open(os.path.join(kb_only, "_kg_buckets"), "w") as fh:
             fh.write("2")
+        # a flat table: root parquet files, no manifest (an older
+        # build's seed or flat table with rows)
+        flat = str(tmp_path / "flat")
+        batch.write.parquet(flat)
         cases = [(kb_only, "_kb= bucket dir"),
+                 (flat, "flat parquet file"),
                  doctored("v1", v=1),
                  doctored("v2", v=2),
                  doctored("no_v", v=None),
@@ -2228,6 +2208,8 @@ class TestOnDiskFormat:
             lambda p: kg_table.compact_partitioned(spark, p),
             lambda p: kg_table.rebucket_partitioned(spark, p, 4),
             lambda p: kg_table.read_partitioned(spark, p),
+            lambda p: kg_table.create_table_if_not_exists(
+                spark, p, batch.schema),
         ]
         for p, found in cases:
             before = self._snapshot(p)

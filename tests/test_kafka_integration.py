@@ -59,7 +59,8 @@ def test_produce_consume_upsert_and_reset(kspark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from dig_etl_engine_spark.sinks.kg_table import read_partitioned
+    from dig_etl_engine_spark.sinks.kg_table import (
+        create_table_if_not_exists, read_partitioned)
     from dig_etl_engine_spark.streaming.ingest import kafka_source, run_ingest
 
     topic = f"it_{uuid.uuid4().hex[:8]}_in"
@@ -67,6 +68,9 @@ def test_produce_consume_upsert_and_reset(kspark, tmp_path):
     target = str(tmp_path / "kg")
     quarantine = str(tmp_path / "quarantine")
     checkpoint = str(tmp_path / "ckpt")
+    create_table_if_not_exists(
+        kspark, target,
+        T.StructType.fromDDL(f"kafka_offset long, {DOC_SCHEMA}"), buckets=4)
 
     # K1: publish batch 1 — includes an invalid doc (null doc_id)
     _produce(kspark, topic, [
@@ -76,7 +80,7 @@ def test_produce_consume_upsert_and_reset(kspark, tmp_path):
         src = kafka_source(kspark, bootstrap_servers=BOOTSTRAP, topic=topic,
                            value_schema=schema)
         q = run_ingest(src, target_path=target, quarantine_path=quarantine,
-                       checkpoint_dir=checkpoint, buckets=4)
+                       checkpoint_dir=checkpoint)
         q.awaitTermination()
 
     drain()

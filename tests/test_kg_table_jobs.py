@@ -5,12 +5,16 @@ The table's bucket dirs, deltas and schema are named by the manifest,
 so neither a fold's touched-bucket read nor ``read_partitioned`` may
 launch a Spark listing job for them, even past Spark's default 32-path
 threshold, a steady-state upsert runs only its delta write, and
-compaction and rebucketing each run one fold's job chain.
+compaction and rebucketing each run one fold's job chain. Creating a
+table runs no job, and its first upsert is a plain birth.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dig_etl_engine_spark.functions.localdf import local_df
 from dig_etl_engine_spark.sinks import kg_table
@@ -36,6 +40,30 @@ def _batch(spark, n, off):
     # half updates, half inserts
     return local_df(spark, [(f"k{i}" if i % 2 else f"new{i}", off, "upd")
                             for i in range(n)], SCHEMA)
+
+
+def test_create_runs_no_job_and_first_upsert_is_a_birth(spark, tmp_path):
+    created, absent = str(tmp_path / "created"), str(tmp_path / "absent")
+    with jobs_in_group(spark, "kg-create") as jobs:
+        assert kg_table.create_table_if_not_exists(
+            spark, created, T.StructType.fromDDL(SCHEMA), buckets=BUCKETS)
+    assert jobs == []
+    assert os.listdir(created) == [kg_table._MANIFEST]
+    rows = [(f"k{i}", 1, "base") for i in range(600)]
+    with jobs_in_group(spark, "kg-birth-absent") as absent_jobs:
+        kg_table.upsert_partitioned(spark, absent,
+                                    local_df(spark, rows, SCHEMA),
+                                    buckets=BUCKETS)
+    with jobs_in_group(spark, "kg-birth-created") as created_jobs:
+        kg_table.upsert_partitioned(spark, created,
+                                    local_df(spark, rows, SCHEMA))
+    # the same fold into birth buckets: no extra job reads anything
+    # the table held before its first batch
+    assert created_jobs == absent_jobs, (created_jobs, absent_jobs)
+    for path in (created, absent):
+        m = kg_table._load_manifest(path)
+        assert len(m["live"]) == BUCKETS and not m["deltas"]
+        assert kg_table.read_partitioned(spark, path).count() == 600
 
 
 def test_upsert_and_fresh_read_list_on_driver(spark, tmp_path, monkeypatch):
@@ -83,8 +111,6 @@ def test_steady_upsert_runs_only_its_delta_write(spark, tmp_path):
 def _fragment(path, n):
     """Split the single parquet file of ``n`` live buckets in two, on
     the driver (pyarrow, no Spark job)."""
-    import os
-
     import pyarrow.parquet as pq
 
     live = kg_table._load_manifest(path)["live"]

@@ -29,10 +29,9 @@ def test_maintain_cli_end_to_end(spark, tmp_path):
         "doc_id", "text", F.col("doc_id").alias("kafka_offset"))
     emb = t["embeddings"]
 
-    create_table_if_not_exists(spark, kg, docs.schema)
+    create_table_if_not_exists(spark, kg, docs.schema, buckets=4)
     for i in range(3):  # three micro-batch upserts → small files
-        upsert_partitioned(spark, kg, docs.filter(F.col("doc_id") % 3 == i),
-                           buckets=4)
+        upsert_partitioned(spark, kg, docs.filter(F.col("doc_id") % 3 == i))
     before_kg = sorted(tuple(r) for r in read_partitioned(spark, kg).collect())
 
     materialize_minhash_index(docs.filter("doc_id % 2 = 0"), "text", mh)
