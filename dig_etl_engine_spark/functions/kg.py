@@ -145,9 +145,11 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
     tables:
 
     * ``term_df`` — ``(term, df)`` for EVERY distinct token: one
-      tokenize → per-doc distinct → explode → groupBy pass. Query time
-      reads only the query's terms (parquet predicate pushdown on
-      ``term``), so a 2-term query touches 2 row groups, not the corpus.
+      tokenize → per-doc distinct → explode → groupBy pass, each file
+      sorted by ``term`` (a local sort, no extra job). Query time reads
+      only the query's terms on the driver (:func:`load_bm25_stats`),
+      and the sorted files' row-group min/max statistics let that
+      ``term`` filter skip every row group that cannot hold a term.
     * ``corpus`` — a single row ``(n_docs, avgdl)``.
 
     Tokenization matches ``plans.weights.bm25_score_column`` (lower,
@@ -210,6 +212,7 @@ def _materialize_bm25_stats_locked(docs: DataFrame, path: str, *,
     toks = F.split(F.trim(safe_lower(F.col(text_col))), r"\s+")
     (docs.select(F.explode(F.array_distinct(toks)).alias("term"))
          .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+         .sortWithinPartitions("term")
          .write.mode("overwrite").parquet(f"{root}/term_df"))
     (docs.agg(F.count(F.lit(1)).alias("n_docs"),
               F.avg(F.size(toks)).alias("avgdl"),
@@ -247,21 +250,15 @@ def bm25_stats_stale(docs: DataFrame, path: str, *,
     """True when the persisted BM25 stats no longer describe ``docs``
     (see the staleness contract on :func:`materialize_bm25_stats`), or
     were never built. O(corpus) scan; maintenance-time only."""
-    from pyspark.errors import AnalysisException
-
-    spark = docs.sparkSession
-    root = _stats_root(path)
-    if root is None:
-        return True
     try:
-        row = spark.read.parquet(f"{root}/corpus").head()
-    except AnalysisException:
+        epoch = _stats_epoch(path)
+    except FileNotFoundError:
         return True
-    if row is None:
+    if epoch is None or epoch[0] is None:
         return True
     cur = docs.agg(
         _corpus_signature(id_col, text_col).alias("sig")).head()["sig"]
-    return (cur or 0) != (row["corpus_sig"] or 0)
+    return (cur or 0) != (epoch[0]["corpus_sig"] or 0)
 
 
 def refresh_bm25_stats(docs: DataFrame, path: str, *,
@@ -316,12 +313,44 @@ def refresh_bm25_stats(docs: DataFrame, path: str, *,
     return True
 
 
+# store path -> (epoch root, corpus row, term_df dataset) of the epoch
+# last read there
+_epoch_cache: dict[str, tuple] = {}
+
+
+def _stats_epoch(path: str) -> tuple | None:
+    """``(corpus row, term_df dataset)`` of the live epoch under
+    ``path``, read on the driver with ``pyarrow.dataset`` (no Spark
+    job), or None when no pointer names an epoch. The row is a dict, or
+    None when ``corpus`` holds no row; a missing table raises
+    ``FileNotFoundError``. The pointer is resolved on every call and the
+    reads are cached per ``path`` under the resolved root: epoch dirs
+    are immutable and every build publishes a new root, so the cache
+    needs no invalidation."""
+    root = _stats_root(path)
+    if root is None:
+        return None
+    hit = _epoch_cache.get(path)
+    if hit is None or hit[0] != root:
+        import pyarrow.dataset as ds
+
+        rows = ds.dataset(f"{root}/corpus", format="parquet") \
+            .to_table().to_pylist()
+        hit = (root, rows[0] if rows else None,
+               ds.dataset(f"{root}/term_df", format="parquet"))
+        _epoch_cache[path] = hit
+    return hit[1:]
+
+
 def load_bm25_stats(spark, path: str, terms: list[str]) -> tuple:
     """Read ``(n_docs, avgdl, {term: df})`` for the query's terms.
 
-    Bounded driver transfer: one scalar row plus ``len(terms)`` rows via
-    a pushdown ``term IN (...)`` filter on the term_df table. Terms
+    Driver-side and job-free (:func:`_stats_epoch`): the corpus row is
+    read once per epoch, and each call filters the cached ``term_df``
+    dataset to ``term IN (terms)``, which the file-sorted ``term``
+    column lets pyarrow answer from the matching row groups. Terms
     absent from the corpus get df=0 (scores 0, same as the inline agg).
+    ``spark`` is unused; it stays so callers need not change.
 
     Lock-free epoch consistency: the pointer is resolved ONCE and both
     tables are read from that one immutable epoch root, so a refresh
@@ -331,17 +360,22 @@ def load_bm25_stats(spark, path: str, terms: list[str]) -> tuple:
     grace copy) never exposes a missing root. With no pointer naming
     an epoch, raises ``ValueError`` naming ``path``.
     """
-    root = _stats_root(path)
-    if root is None:
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    epoch = _stats_epoch(path)
+    if epoch is None:
         raise ValueError(
             f"load_bm25_stats: no committed stats under {path} (no "
             "_CURRENT pointer naming an epoch_<token>/ dir) — build them "
             "with materialize_bm25_stats")
-    row = spark.read.parquet(f"{root}/corpus").head()
-    hits = (spark.read.parquet(f"{root}/term_df")
-            .filter(F.col("term").isin(list(terms))).collect())
+    row, term_df = epoch
+    # a typed value set: pyarrow cannot bind an empty untyped list
+    hits = term_df.to_table(columns=["term", "df"], filter=pc.field(
+        "term").isin(pa.array(list(terms), pa.string())))
     df_counts = {t: 0 for t in terms}
-    df_counts.update({r["term"]: r["df"] for r in hits})
+    df_counts.update(zip(hits.column("term").to_pylist(),
+                         hits.column("df").to_pylist()))
     # an empty-corpus build writes n_docs=0 with a null avgdl (and a
     # pathological build could write zero rows) — degrade to zero stats
     # instead of a TypeError deep in the query path

@@ -16,25 +16,28 @@ deterministic weighted-match sum — `score = Σ weight(field,method,segment) ×
 match(field, clause)` — not BM25×boost; ordering is made total with a doc_id
 tie-break so golden tests are stable.
 
-Physical shape (the part that must survive 100 TB): clause probes are a
-tiny literal DataFrame **broadcast** against the long index table; the index
-scan is pre-filtered with `field IN (fan-out set)` — on a field-partitioned
-index table that's partition pruning, so a query touches only its fields'
-partitions. Per-doc dedup + score aggregation is one shuffle keyed by
-doc_id; the join back to the doc table for projection is the same key.
+Physical shape (the part that must survive 100 TB): clause probes are
+driver-side literals compiled into predicates over the long index table and
+matched by one narrow generator — no probe relation, no broadcast, no Spark
+job spent on the query's own constants. The index scan is pre-filtered with
+`field IN (fan-out set)` — on a field-partitioned index table that's
+partition pruning, so a query touches only its fields' partitions. Per-doc
+dedup + score aggregation is one shuffle keyed by doc_id; the join back to
+the doc table for projection is the same key.
 Config expressions are NEVER eval'd (risk R4) — transforms are a named
 registry.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from dig_etl_engine_spark.functions.casefold import safe_lower
-from dig_etl_engine_spark.functions.localdf import local_df
 
 from dig_etl_engine_spark.plans.weights import WeightTree
 
@@ -116,20 +119,20 @@ def preprocess(query: dict[str, Any], cfg: EngineConfig) -> list[CompiledClause]
     return out
 
 
-def _key_match(key_padded: Column, value: Column,
-               phrase: Column | bool) -> Column:
-    """The key half of the probe join condition — ONE definition shared
-    by the join itself (``phrase`` = the ``p_kind`` comparison Column)
-    and the implied single-side pre-filter (``phrase`` = the literal
-    kind, known driver-side). Keeping both callers on this helper is
-    what makes the pre-filter provably implied by the join: the two can
-    never drift apart (r12 wave-6 review finding 1)."""
-    phrase_pred = key_padded.contains(
-        F.concat(F.lit(" "), value, F.lit(" "))) | (F.col("key") == value)
-    eq_pred = F.col("key") == value
-    if isinstance(phrase, bool):
-        return phrase_pred if phrase else eq_pred
-    return F.when(phrase, phrase_pred).otherwise(eq_pred)
+def _any(preds) -> Column:
+    """OR of ``preds``; False when there are none."""
+    return reduce(operator.or_, preds, F.lit(False))
+
+
+def _key_match(key_padded: Column, value: str, kind: str) -> Column:
+    """Whether an index row's ``key`` matches the probe ``value``:
+    'match_phrase' → the value is a token-boundary phrase of the key (or
+    the whole key); 'match' → the key equals the value. ONE definition
+    shared by the key pre-filter and the probe predicates, so the
+    pre-filter stays implied by them."""
+    if kind == "match_phrase":
+        return key_padded.contains(f" {value} ") | (F.col("key") == value)
+    return F.col("key") == value
 
 
 def _text_match(doc_col: Column, values: list[str], kind: str) -> Column:
@@ -163,62 +166,64 @@ def compile_query(
     Semantics: each clause must match in ≥1 of its fan-out fields (Q5
     AtLeastOneFieldCombination, AND across clauses); score = Σ over
     (clause, physical field) matches of the resolved field weight.
+    ``spark`` is unused; it stays so callers need not change.
     """
     clauses = preprocess(query, cfg)
     if not clauses:
         raise ValueError("query has no clauses")
 
-    # ---- index-zone matching: broadcast probe join --------------------------
-    probe_rows = []
-    fanout_fields: set[str] = set()
+    # ---- index-zone matching: literal probe predicates ----------------------
+    # (clause, field, method, segment, weight) -> the distinct (value,
+    # kind) pairs whose key match puts an index row in that target
+    targets: dict[tuple, dict[tuple[str, str], None]] = {}
     for c in clauses:
         for r in c.index_refs:
-            w = cfg.weights.resolve(r.field, r.method, r.segment)
-            for v in c.values:
-                probe_rows.append((c.clause_id, r.field, r.method, r.segment,
-                                   v, c.kind, float(w)))
-                fanout_fields.add(r.field)
+            w = float(cfg.weights.resolve(r.field, r.method, r.segment))
+            targets.setdefault(
+                (c.clause_id, r.field, r.method, r.segment, w), {}
+            ).update(dict.fromkeys((v, c.kind) for v in c.values))
 
     per_doc_index = None
-    if probe_rows:
-        probes = local_df(
-            spark, probe_rows,
-            "clause_id int, p_field string, p_method string, p_segment string,"
-            " p_value string, p_kind string, p_weight double",
-        )
+    if targets:
         # Explicit field-set pre-filter: partition pruning on a
         # field-partitioned index table; Catalyst pushes the IN to parquet.
-        idx = index.filter(F.col("field").isin(sorted(fanout_fields)))
+        idx = index.filter(F.col("field").isin(
+            sorted({t[1] for t in targets})))
         key_padded = F.concat(F.lit(" "), F.col("key"), F.lit(" "))
-        # Probe-value pre-filter on `key` (r12, guide §2.4/§3.2): the
-        # probes are driver-side literals, so the key half of the join
-        # condition — OR'd across probe rows — is a plain single-side
-        # predicate. It is IMPLIED by the join (any row surviving the
-        # join satisfies at least one disjunct), so results are
-        # untouched, but Catalyst can push it through the index's
-        # dedup aggregate and, for inline index builds, into the
+        # one key match per distinct (value, kind): a clause fanning out
+        # to k index fields names each value k times, and k identical
+        # OR-disjuncts would evaluate k× per row
+        key_match = {vk: _key_match(key_padded, *vk)
+                     for pairs in targets.values() for vk in pairs}
+        # Key pre-filter: the key matches OR'd across probes are a plain
+        # single-side predicate, implied by every target predicate below,
+        # so results are untouched, but Catalyst can push it through the
+        # index's dedup aggregate and, for inline index builds, into the
         # glossary broadcast side of the contains join — the docs ×
         # glossary nested-loop then tests only probe-relevant terms
         # instead of the whole glossary. On a materialized index it
-        # prunes the scan's output before anything joins.
-        key_pre: Column | None = None
-        # dedup (value, kind) pairs: a clause fanning out to k index
-        # fields repeats each value k times in probe_rows; k identical
-        # OR-disjuncts would evaluate k× per row (wave-6 review
-        # finding 3)
-        for v, kind in dict.fromkeys(
-                (r[4], r[5]) for r in probe_rows):
-            p = _key_match(key_padded, F.lit(v), kind == "match_phrase")
-            key_pre = p if key_pre is None else (key_pre | p)
-        idx = idx.filter(key_pre)
-        cond = (
-            (F.col("field") == F.col("p_field"))
-            & ((F.col("p_method") == "*") | (F.col("method") == F.col("p_method")))
-            & ((F.col("p_segment") == "*") | (F.col("segment") == F.col("p_segment")))
-            & _key_match(key_padded, F.col("p_value"),
-                         F.col("p_kind") == "match_phrase")
-        )
-        matched = idx.join(F.broadcast(probes), cond)
+        # prunes the scan's output before anything is generated.
+        idx = idx.filter(_any(key_match.values()))
+        # The probes are driver-side literals, so matching them is a
+        # narrow generator, not a join: one struct per target a row hits
+        # (field, method and segment equal, `*` matching any, and one of
+        # the target's key matches), null for the rest, nulls dropped.
+        hits = []
+        for (cid, f, m, sg, w), pairs in targets.items():
+            pred = F.col("field") == f
+            if m != "*":
+                pred = pred & (F.col("method") == m)
+            if sg != "*":
+                pred = pred & (F.col("segment") == sg)
+            hits.append(F.when(
+                pred & _any(key_match[vk] for vk in pairs),
+                F.struct(F.lit(cid).alias("clause_id"),
+                         F.lit(f).alias("p_field"),
+                         F.lit(m).alias("p_method"),
+                         F.lit(sg).alias("p_segment"),
+                         F.lit(w).alias("p_weight"))))
+        matched = (idx.select("doc_id", F.explode(F.array(*hits)).alias("_p"))
+                   .filter(F.col("_p").isNotNull()))
         # Boolean match per (doc, clause, physical field): dedup before
         # summing so duplicate extractions don't double-count (ES indicator
         # semantics), then one aggregation keyed by doc.
@@ -232,8 +237,7 @@ def compile_query(
         # path stays at one matched-set shuffle while a materialized
         # field-partitioned index drops from two to one.
         per_doc_index = (
-            matched.select("doc_id", "clause_id", "p_field", "p_method",
-                           "p_segment", "p_weight")
+            matched.select("doc_id", "_p.*")
             .repartition(F.col("doc_id"))
             .distinct()
             .groupBy("doc_id")

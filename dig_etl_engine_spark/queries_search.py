@@ -399,7 +399,8 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERSISTED at corpus-build time (`functions/kg.py:
     materialize_bm25_stats`) — the reference's ES builds df into its
     inverted index at ingest the same way. Query time reads one scalar
-    row plus len(terms) rows via a pushdown `term IN` filter, folds them
+    row plus len(terms) rows on the driver, with no Spark job and once
+    per stats epoch for the scalar (`load_bm25_stats`), folds them
     into the scoring expression as literals
     (`plans/weights.py:bm25_score_column`), and scores with pure column
     math over the scan — no full-corpus aggregation in the query path.

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -62,7 +63,7 @@ class TestEtkRuleCompile:
     """Parity: compile the reference's actual shipped spacy-rule files
     (museum tarball spacy_rules/*.json) and check matches on texts the
     rules were built for. The tarball is read as DATA (rule configs), not
-    code."""
+    code; the tests that need it skip when it is absent."""
 
     TARBALL = ("/root/reference/sample-projects/museum/"
                "museum_20180202192943.tar.gz")
@@ -71,6 +72,10 @@ class TestEtkRuleCompile:
     def rule_docs(self):
         import json
         import tarfile
+        if not os.path.exists(self.TARBALL):
+            pytest.skip(f"reference museum tarball absent ({self.TARBALL})"
+                        " — its spacy_rules/*.json are the data these "
+                        "parity checks compile")
         docs = {}
         with tarfile.open(self.TARBALL) as tf:
             for name in ("phone", "stock_ticker", "date_birth"):
