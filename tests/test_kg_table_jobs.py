@@ -86,12 +86,29 @@ def test_upsert_and_fresh_read_list_on_driver(spark, tmp_path, monkeypatch):
     assert got["k1"] == 10 and got["k0"] == 1 and got["new0"] == 10
 
 
+def _live_files(path):
+    """The manifest's live map, and each live dir's files with their
+    mtimes."""
+    live = kg_table._load_manifest(path)["live"]
+    return live, {d: sorted(
+        (f, os.stat(os.path.join(path, d, f)).st_mtime_ns)
+        for f in os.listdir(os.path.join(path, d)))
+        for d in live.values()}
+
+
 def test_steady_upsert_runs_only_its_delta_write(spark, tmp_path):
     path = str(tmp_path / "kg")
     _born(spark, path)
     kg_table.upsert_partitioned(spark, path, _batch(spark, 20, 5))
+    before = _live_files(path)
+    deltas = {n for n in os.listdir(path) if n.startswith(".kgd_")}
     with jobs_in_group(spark, "kg-steady-upsert") as jobs:
         kg_table.upsert_partitioned(spark, path, _batch(spark, 200, 10))
+    # on disk, where AQE's job names cannot hide a write: no bucket dir
+    # was rewritten or touched, and the batch became one new delta
+    assert _live_files(path) == before
+    new = {n for n in os.listdir(path) if n.startswith(".kgd_")} - deltas
+    assert new == {kg_table._load_manifest(path)["deltas"][-1]}
     # only the delta write: the batch dedupe's shuffle-map stage and the
     # write's result stage, each submitted as its own job under AQE —
     # no listing job, no footer-inference job ("parquet at ..."), no
