@@ -779,22 +779,22 @@ def _recover_partitioned_swap(target_path: str) -> dict | None:
         return None
     m = _load_manifest(target_path)
     esc = glob_mod.escape(target_path)
+    for stale in glob_mod.glob(os.path.join(esc, ".upsert_tmp_*")):
+        shutil.rmtree(stale, ignore_errors=True)
     if m is None:
         for prefix in (".kbe_", ".kgd_"):
             for orphan in glob_mod.glob(os.path.join(esc, prefix + "*")):
                 shutil.rmtree(orphan, ignore_errors=True)
-    for stale in glob_mod.glob(os.path.join(esc, ".upsert_tmp_*")):
-        shutil.rmtree(stale, ignore_errors=True)
+        return None
     # prune expired grace (the rewrite keeps the generation — only data
     # commits advance it), then sweep what the pruned manifest no
     # longer references
-    if m is not None:
-        grace, _released = _prune_grace(m["grace"], m["gen"])
-        if grace != m["grace"]:
-            m["grace"] = grace
-            commit_pointer(target_path, _dump_manifest(m), name=_MANIFEST)
-        _sweep_unreferenced_buckets(target_path, m)
-        _write_naive_read_guard(target_path, m)
+    grace, _released = _prune_grace(m["grace"], m["gen"])
+    if grace != m["grace"]:
+        m["grace"] = grace
+        commit_pointer(target_path, _dump_manifest(m), name=_MANIFEST)
+    _sweep_unreferenced_buckets(target_path, m)
+    _write_naive_read_guard(target_path, m)
     return m
 
 
