@@ -21,7 +21,7 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from dig_etl_engine_spark.functions.casefold import safe_lower
+from dig_etl_engine_spark.plans.weights import bm25_analyze
 
 
 def kg_build(df: DataFrame, field_extractors: Mapping[str, Column],
@@ -209,7 +209,7 @@ def _materialize_bm25_stats_locked(docs: DataFrame, path: str, *,
     prev = _stats_root(path)
     tok = f"epoch_{uuid.uuid4().hex[:8]}"
     root = f"{path}/{tok}"
-    toks = F.split(F.trim(safe_lower(F.col(text_col))), r"\s+")
+    toks = bm25_analyze(F.col(text_col))
     (docs.select(F.explode(F.array_distinct(toks)).alias("term"))
          .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
          .sortWithinPartitions("term")
@@ -370,12 +370,15 @@ def load_bm25_stats(spark, path: str, terms: list[str]) -> tuple:
             "_CURRENT pointer naming an epoch_<token>/ dir) — build them "
             "with materialize_bm25_stats")
     row, term_df = epoch
+    # the file holds analyzed tokens: look each term up under the
+    # scorer's normalization, keyed by the caller's own spelling
+    keys = {t: bm25_analyze(t) for t in terms}
     # a typed value set: pyarrow cannot bind an empty untyped list
     hits = term_df.to_table(columns=["term", "df"], filter=pc.field(
-        "term").isin(pa.array(list(terms), pa.string())))
-    df_counts = {t: 0 for t in terms}
-    df_counts.update(zip(hits.column("term").to_pylist(),
-                         hits.column("df").to_pylist()))
+        "term").isin(pa.array(sorted(set(keys.values())), pa.string())))
+    found = dict(zip(hits.column("term").to_pylist(),
+                     hits.column("df").to_pylist()))
+    df_counts = {t: found.get(k, 0) for t, k in keys.items()}
     # an empty-corpus build writes n_docs=0 with a null avgdl (and a
     # pathological build could write zero rows) — degrade to zero stats
     # instead of a TypeError deep in the query path

@@ -139,17 +139,9 @@ def _text_match(doc_col: Column, values: list[str], kind: str) -> Column:
     """Match indicator on a full-text zone. 'match_phrase' → contiguous
     token-boundary phrase; 'match' → any constraint token present."""
     padded = F.concat(F.lit(" "), safe_lower(doc_col), F.lit(" "))
-    preds: list[Column] = []
-    for v in values:
-        if kind == "match_phrase":
-            preds.append(padded.contains(f" {v} "))
-        else:
-            for tok in v.split():
-                preds.append(padded.contains(f" {tok} "))
-    out = F.lit(False)
-    for p in preds:
-        out = out | p
-    return out
+    needles = (values if kind == "match_phrase"
+               else [tok for v in values for tok in v.split()])
+    return _any(padded.contains(f" {n} ") for n in needles)
 
 
 def compile_query(

@@ -53,6 +53,21 @@ def _match(pattern: str, value: str) -> bool:
     return pattern == "*" or value == "*" or pattern == value
 
 
+def bm25_analyze(text):
+    """The BM25 analyzer, shared by the stats build, the stats lookup
+    and the scorer so that a query term and the corpus tokens it must
+    equal are normalized alike. A text ``Column`` becomes its token
+    array: trimmed, lowercased locale-independently, split on
+    whitespace. A query term ``str`` becomes its lowercase form."""
+    if isinstance(text, str):
+        return text.lower()
+    from pyspark.sql import functions as F
+
+    from dig_etl_engine_spark.functions.casefold import safe_lower
+
+    return F.split(F.trim(safe_lower(text)), r"\s+")
+
+
 def bm25_score_column(text_col, terms: list[str], *, df_counts: dict,
                       n_docs: int, avgdl: float, k1: float = 1.2,
                       b: float = 0.75):
@@ -73,19 +88,17 @@ def bm25_score_column(text_col, terms: list[str], *, df_counts: dict,
 
     from pyspark.sql import functions as F
 
-    from dig_etl_engine_spark.functions.casefold import safe_lower
-
-    toks = F.split(F.trim(safe_lower(text_col)), r"\s+")
+    toks = bm25_analyze(text_col)
     dl = F.size(toks).cast("double")
     score = F.lit(0.0)
-    # tokens are lowercased above — lowercase the terms (and their df
-    # keys) too, or an uppercase query term would silently score tf=0;
-    # dedupe terms after lowering (no double-scoring of 'Foo'+'foo') and
-    # merge colliding df keys with max (deterministic, not dict-order)
-    terms = list(dict.fromkeys(t.lower() for t in terms))
+    # normalize the terms (and their df keys) as the tokens are, or an
+    # uppercase query term would silently score tf=0; dedupe terms after
+    # normalizing (no double-scoring of 'Foo'+'foo') and merge colliding
+    # df keys with max (deterministic, not dict-order)
+    terms = list(dict.fromkeys(bm25_analyze(t) for t in terms))
     merged: dict = {}
     for k, v in df_counts.items():
-        lk = k.lower()
+        lk = bm25_analyze(k)
         merged[lk] = max(merged.get(lk, 0), v)
     df_counts = merged
     for t in terms:

@@ -115,31 +115,13 @@ def run_ingest(source: DataFrame, *, target_path: str,
     create it with ``create_table_if_not_exists(…, buckets=)`` first
     for another count.
     """
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        valid_pred = (F.col(key_col).isNotNull()
-                      & (F.length(F.trim(F.col(key_col))) > 0))
-        batch = batch.persist()
-        try:
-            invalid = batch.filter(~valid_pred)
-            if invalid.limit(1).count():
-                write_quarantine(invalid, batch_id, quarantine_path)
-            valid = batch.filter(valid_pred)
-            if transform is not None:
-                valid = transform(valid)
-            upsert_partitioned(spark, target_path, valid,
-                               key_col=key_col, order_col=order_col)
-        finally:
-            batch.unpersist()
+    def survivors(valid: DataFrame, batch_id: int) -> DataFrame:
+        return valid if transform is None else transform(valid)
 
-    writer = (source.writeStream
-              .option("checkpointLocation", checkpoint_dir)
-              .foreachBatch(process_batch))
-    if available_now:
-        # C4: drain everything queued, then stop — the worker's
-        # idle-timeout exit without the polling loop.
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_upsert_stream(
+        source, survivors, target_path=target_path,
+        quarantine_path=quarantine_path, checkpoint_dir=checkpoint_dir,
+        key_col=key_col, order_col=order_col, available_now=available_now)
 
 
 def run_dedup_ingest(source: DataFrame, *, target_path: str,
@@ -171,6 +153,34 @@ def run_dedup_ingest(source: DataFrame, *, target_path: str,
     ``materialize_minhash_index`` (empty corpus is fine)."""
     from dig_etl_engine_spark.operators.dedup import incremental_minhash_dedup
 
+    def survivors(valid: DataFrame, batch_id: int) -> DataFrame:
+        dups = incremental_minhash_dedup(
+            valid, index_path, content_col=content_col,
+            id_col=key_col, threshold=threshold,
+            max_bucket=max_bucket, append=True, batch_id=batch_id)
+        drop = (dups.filter(F.col("origin") == "corpus")
+                .select(F.col("doc_a").alias(key_col))
+                .unionByName(
+                    dups.filter(F.col("origin") == "batch")
+                    .select(F.col("doc_b").alias(key_col)))
+                .distinct())
+        return valid.join(drop, key_col, "left_anti")
+
+    return _start_upsert_stream(
+        source, survivors, target_path=target_path,
+        quarantine_path=quarantine_path, checkpoint_dir=checkpoint_dir,
+        key_col=key_col, order_col=order_col, available_now=True)
+
+
+def _start_upsert_stream(
+        source: DataFrame,
+        survivors: Callable[[DataFrame, int], DataFrame], *,
+        target_path: str, quarantine_path: str, checkpoint_dir: str,
+        key_col: str, order_col: str,
+        available_now: bool) -> StreamingQuery:
+    """The micro-batch skeleton both ingest legs share: validate →
+    quarantine invalid rows → ``survivors(valid, batch_id)`` → upsert
+    the survivors, with the batch persisted across its two reads."""
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         valid_pred = (F.col(key_col).isNotNull()
@@ -180,27 +190,20 @@ def run_dedup_ingest(source: DataFrame, *, target_path: str,
             invalid = batch.filter(~valid_pred)
             if invalid.limit(1).count():
                 write_quarantine(invalid, batch_id, quarantine_path)
-            valid = batch.filter(valid_pred)
-            dups = incremental_minhash_dedup(
-                valid, index_path, content_col=content_col,
-                id_col=key_col, threshold=threshold,
-                max_bucket=max_bucket, append=True, batch_id=batch_id)
-            drop = (dups.filter(F.col("origin") == "corpus")
-                    .select(F.col("doc_a").alias(key_col))
-                    .unionByName(
-                        dups.filter(F.col("origin") == "batch")
-                        .select(F.col("doc_b").alias(key_col)))
-                    .distinct())
-            survivors = valid.join(drop, key_col, "left_anti")
-            upsert_partitioned(spark, target_path, survivors,
+            upsert_partitioned(spark, target_path,
+                               survivors(batch.filter(valid_pred), batch_id),
                                key_col=key_col, order_col=order_col)
         finally:
             batch.unpersist()
 
-    return (source.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(process_batch)
-            .trigger(availableNow=True).start())
+    writer = (source.writeStream
+              .option("checkpointLocation", checkpoint_dir)
+              .foreachBatch(process_batch))
+    if available_now:
+        # C4: drain everything queued, then stop — the worker's
+        # idle-timeout exit without the polling loop.
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def run_windowed_counts(source: DataFrame, *, target_path: str,

@@ -6,28 +6,19 @@ at a given SF dir (defaults to sf0.001 for speed). Usage:
 Prints MATCH/MISMATCH per query with first differing rows.
 """
 
-import glob
-import os
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from robustness_matrix import split_sf_arg  # noqa: E402
 from dig_etl_engine_spark import queries as registry  # noqa: E402
 from dig_etl_engine_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare  # noqa: E402
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    sf = "/root/testdata/sf0.001"
-    # a relative sf_dir must not be misread as a query name — and a
-    # bare dir sharing a query's name must not eat the query arg, so a
-    # dataset dir is one that CONTAINS parquet tables
-    if args and (args[0].startswith("/")
-                 or (os.path.isdir(args[0])
-                     and glob.glob(os.path.join(args[0], "*.parquet")))):
-        sf, args = os.path.abspath(args[0]), args[1:]
+    sf, args = split_sf_arg(sys.argv[1:])
     spark = get_spark("check")
     spark.sparkContext.setLogLevel("ERROR")
     q, o = registry.queries(), registry.oracle_sql()

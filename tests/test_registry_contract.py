@@ -562,12 +562,9 @@ def test_generator_cse_lint_catches_violations(spark):
 def test_registry_orders_least_recently_verified_first():
     """The driver walks `queries()` in iteration order and time/count-boxes
     the sweep, so the registry must present (1) never-verified queries,
-    (2) the explicit code-changed-since-verdict recheck set, then (3) the
-    stalest verdicts, in that order. Recompute the expected key from the
-    CORRECTNESS_r*.json files and assert the registry's actual order is
-    sorted by it."""
-    from dig_etl_engine_spark.queries import _PRIORITY_RECHECK
-
+    then (2) the stalest verdicts, in that order. Recompute each query's
+    latest green round from the CORRECTNESS_r*.json files and assert the
+    registry's actual order is sorted by it."""
     root = Path(__file__).resolve().parent.parent
     last: dict[str, int] = {}
     for path in sorted(root.glob("CORRECTNESS_r*.json")):
@@ -581,39 +578,11 @@ def test_registry_orders_least_recently_verified_first():
                     and v.get("schema_match") and v.get("hash_match"):
                 last[n] = max(last.get(n, -1), rnd)
     names = _names()
-    # the recheck set must name real queries and stay small (each LIVE
-    # entry displaces one staleness-window slot in the driver's sweep);
-    # entries expire by themselves once re-verified at/after their
-    # recorded change round
-    assert set(_PRIORITY_RECHECK) <= set(names), (
-        sorted(set(_PRIORITY_RECHECK) - set(names)))
-    live = {n for n, rnd in _PRIORITY_RECHECK.items()
-            if last.get(n, -1) < rnd}
-    # 38 = the r12 optimization-round high-water mark: an optimization
-    # round's whole job is rewriting executed paths while proving
-    # results identical, and the round rules make a _PRIORITY_RECHECK
-    # entry MANDATORY for every touched path — r12's waves (dsir
-    # restructure, stateful-dedup argmin, trigram SQL parse, pin
-    # fusion across the CC/pagerank consumers, dropped sanity asserts,
-    # driver-side table seed, the wave-6 search-compiler/glossary
-    # expression-motion that reaches all 12 compile_query/
-    # glossary_matches consumers, and the wave-7 k-means-trainer
-    # update fusion + carry_vec that reaches all 7 trainer consumers)
-    # legitimately touched 38 queries.
-    # The optimization round's driver re-verifies EVERY declared query
-    # against the oracle regardless, so no staleness slot is displaced
-    # this round; these entries self-expire at the r12 sweep — shrink
-    # this back toward 8 in feature rounds, where growing it starves
-    # the 50-slot staleness window.
-    assert len(live) <= 38, "keep the live recheck set small"
-    keys = [(0 if last.get(n, -1) < 0 else
-             1 if last[n] < _PRIORITY_RECHECK.get(n, -1) else 2,
-             last.get(n, -1))
-            for n in names]
+    # -1 (never verified) sorts ahead of every recorded round
+    keys = [last.get(n, -1) for n in names]
     assert keys == sorted(keys), (
-        "registry iteration order violates the never/recheck/stalest "
-        f"policy; first entries: "
-        f"{[(n, k) for n, k in zip(names, keys)][:60]}"
+        "registry iteration order violates the never/stalest policy; "
+        f"first entries: {[(n, k) for n, k in zip(names, keys)][:60]}"
     )
 
 

@@ -72,6 +72,31 @@ def test_load_bm25_stats_runs_no_job(spark, tmp_path):
     assert kg.load_bm25_stats(spark, path, []) == (2, 2.5, {})
 
 
+def test_bm25_term_casing_reaches_stats_and_score(spark, tmp_path):
+    """A query term is looked up and scored under the tokenizer's own
+    normalization: 'Fast' and 'fast' are one term."""
+    from pyspark.sql import functions as F
+
+    from dig_etl_engine_spark.plans.weights import bm25_score_column
+
+    docs = spark.createDataFrame(
+        [(1, "Fast spark query"), (2, "slow scan"), (3, "fast FAST")],
+        "doc_id long, text string")
+    path = str(tmp_path / "bm25")
+    kg.materialize_bm25_stats(docs, path)
+
+    def scored(terms):
+        n_docs, avgdl, df_counts = kg.load_bm25_stats(spark, path, terms)
+        score = bm25_score_column(F.col("text"), terms, df_counts=df_counts,
+                                  n_docs=n_docs, avgdl=avgdl)
+        rows = docs.select("doc_id", score.alias("s")).orderBy("doc_id")
+        return (n_docs, avgdl, list(df_counts.values())), rows.collect()
+
+    assert kg.load_bm25_stats(spark, path, ["Fast"]) == (
+        3, 7 / 3, {"Fast": 2})
+    assert scored(["Fast"]) == scored(["fast"])
+
+
 def _two_corpora(spark):
     a = spark.createDataFrame(
         [(1, "fast spark query"), (2, "slow scan")],
