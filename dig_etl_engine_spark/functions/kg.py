@@ -82,54 +82,6 @@ def load_index(df_or_spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _stats_root(path: str) -> str | None:
-    """Resolve the live stats epoch under ``path``, or None when no
-    pointer names an existing epoch dir (the stats were never built).
-
-    The store's one on-disk format: ``path/_CURRENT`` holds ``<live>
-    [<grace>]`` — the first token names the immutable
-    ``epoch_<token>/`` directory holding BOTH tables (``term_df/`` and
-    ``corpus/``), the optional second token is the previous epoch kept
-    for in-flight readers. Because the two tables live under ONE
-    immutable epoch root and the pointer is read ONCE, a reader can
-    never mix ``corpus`` from one build with ``term_df`` from another
-    and never observes a missing root mid-refresh (the pointer flip is
-    a single ``os.replace`` — see ``sinks/kg_table.commit_pointer``)."""
-    import os
-
-    from dig_etl_engine_spark.sinks.kg_table import resolve_pointer
-
-    payload = resolve_pointer(path)
-    tok = payload.split()[0] if payload and payload.split() else None
-    if tok and os.path.isdir(os.path.join(path, tok)):
-        return os.path.join(path, tok)
-    return None
-
-
-def _sweep_stats_epochs(path: str, keep: set[str]) -> None:
-    """Drop superseded epoch roots and pointer temp files. Called by the
-    writer right after its pointer commit (under the table lock when the
-    caller holds it). ``keep`` always contains the just-committed epoch
-    AND its immediate predecessor — both recorded IN the pointer
-    payload (``<live> [<grace>]``), so every sweep, including a
-    back-to-back refresh entry's orphan sweep, can tell the grace copy
-    from a crashed build's orphan: orphans are epochs named by NO
-    pointer token. An in-flight reader that resolved the pre-flip
-    pointer keeps a complete root until two further builds land."""
-    import os
-    import shutil
-
-    from dig_etl_engine_spark.sinks.kg_table import sweep_pointer_tmps
-
-    sweep_pointer_tmps(path)
-    epochs = [n for n in os.listdir(path)
-              if n.startswith("epoch_")
-              and os.path.isdir(os.path.join(path, n))]
-    for n in epochs:
-        if n not in keep:
-            shutil.rmtree(os.path.join(path, n), ignore_errors=True)
-
-
 def materialize_bm25_stats(docs: DataFrame, path: str, *,
                            text_col: str = "text",
                            id_col: str = "doc_id") -> None:
@@ -137,12 +89,9 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
     at corpus-build time, the way the reference's Elasticsearch keeps df
     and field-length norms inside the inverted index it builds at ingest.
 
-    The store's one on-disk format: two tables under one immutable
-    epoch root ``path/epoch_<token>/``, published by a pointer flip
-    (``path/_CURRENT`` — ``sinks/kg_table.commit_pointer``, ONE atomic
-    ``os.replace``; the ES-alias-swap analog, `manager.py:237-255`);
-    nothing else lives under ``path`` but pointer temp files. The two
-    tables:
+    The store's one on-disk format: two tables under one epoch root,
+    published by ``sinks/kg_table.publish_epoch`` (the ES-alias-swap
+    analog, `manager.py:237-255`). The two tables:
 
     * ``term_df`` — ``(term, df)`` for EVERY distinct token: one
       tokenize → per-doc distinct → explode → groupBy pass, each file
@@ -155,16 +104,9 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
     Tokenization matches ``plans.weights.bm25_score_column`` (lower,
     trim, whitespace split) so build-time df and query-time tf agree.
 
-    COMMIT CONTRACT: the epoch dir is fully written BEFORE the pointer
-    moves, and epochs are immutable after publication — so readers that
-    resolve the pointer (:func:`load_bm25_stats`,
-    :func:`bm25_stats_stale`) always see one complete, internally
-    consistent build: no missing-root window, no mixed-epoch tear. A
-    crash before the flip leaves the old pointer serving the old epoch
-    (the orphan epoch is swept on the next build); a crash after the
-    flip leaves the new build committed. The previous epoch survives, pointer-recorded as
-    the grace copy, until two further builds land (see
-    :func:`_sweep_stats_epochs`).
+    COMMIT CONTRACT: readers that resolve the live epoch
+    (:func:`load_bm25_stats`, :func:`bm25_stats_stale`) always see one
+    complete, internally consistent build — see ``publish_epoch``.
 
     STALENESS CONTRACT: these stats are a build-time snapshot. An
     incremental doc_id upsert (``sinks/kg_table.py:upsert_*`` — K2)
@@ -181,17 +123,13 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
     materialization.
 
     WRITER EXCLUSION: the build-and-flip runs under the store's
-    advisory ``table_lock`` (r11 round-close review): two unlocked
-    concurrent builders could each sweep the other's just-committed
-    epoch — writer A's sweep (keeping only A's tokens) deletes B's
-    fully-written epoch an instant before B's pointer flip publishes
-    it, leaving the pointer naming a deleted directory, and a
-    freshness-marker cache (the ``search_bm25_rank`` fixture checks
-    ``_CURRENT`` exists) would then treat the wreck as built
-    forever. With the lock, builders serialize and the loser simply
-    rebuilds over the winner's epoch (kept as its grace copy).
-    ``refresh_bm25_stats`` already holds the lock and calls the
-    unlocked internal (the mkdir lock is not reentrant).
+    advisory ``table_lock``: two unlocked concurrent builders could each
+    sweep the other's fully-written epoch an instant before its pointer
+    flip publishes it, leaving the pointer naming a deleted directory.
+    With the lock, builders serialize and the loser simply rebuilds over
+    the winner's epoch (kept as its grace copy). ``refresh_bm25_stats``
+    already holds the lock and calls the unlocked internal (the mkdir
+    lock is not reentrant).
     """
     from dig_etl_engine_spark.sinks.kg_table import table_lock
 
@@ -202,36 +140,21 @@ def materialize_bm25_stats(docs: DataFrame, path: str, *,
 
 def _materialize_bm25_stats_locked(docs: DataFrame, path: str, *,
                                    text_col: str, id_col: str) -> None:
-    import uuid
+    from dig_etl_engine_spark.sinks.kg_table import publish_epoch
 
-    from dig_etl_engine_spark.sinks.kg_table import commit_pointer
-
-    prev = _stats_root(path)
-    tok = f"epoch_{uuid.uuid4().hex[:8]}"
-    root = f"{path}/{tok}"
     toks = bm25_analyze(F.col(text_col))
-    (docs.select(F.explode(F.array_distinct(toks)).alias("term"))
-         .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-         .sortWithinPartitions("term")
-         .write.mode("overwrite").parquet(f"{root}/term_df"))
-    (docs.agg(F.count(F.lit(1)).alias("n_docs"),
-              F.avg(F.size(toks)).alias("avgdl"),
-              _corpus_signature(id_col, text_col).alias("corpus_sig"))
-         .write.mode("overwrite").parquet(f"{root}/corpus"))
-    import os
 
-    from dig_etl_engine_spark.sinks.kg_table import _fsync_tree
+    def write(root: str) -> None:
+        (docs.select(F.explode(F.array_distinct(toks)).alias("term"))
+             .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+             .sortWithinPartitions("term")
+             .write.mode("overwrite").parquet(f"{root}/term_df"))
+        (docs.agg(F.count(F.lit(1)).alias("n_docs"),
+                  F.avg(F.size(toks)).alias("avgdl"),
+                  _corpus_signature(id_col, text_col).alias("corpus_sig"))
+             .write.mode("overwrite").parquet(f"{root}/corpus"))
 
-    # data durability before the pointer may reference it: Spark wrote
-    # the epoch's parquet without fsync, and the fsynced pointer must
-    # never name torn files after a power loss (same contract as the
-    # KG table's staged-epoch flush — see kg_table._fsync_tree)
-    _fsync_tree(root)
-    payload = tok
-    if prev:
-        payload = f"{tok} {os.path.basename(prev)}"
-    commit_pointer(path, payload)
-    _sweep_stats_epochs(path, set(payload.split()))
+    publish_epoch(path, write)
 
 
 def _corpus_signature(id_col: str, text_col: str):
@@ -279,32 +202,20 @@ def refresh_bm25_stats(docs: DataFrame, path: str, *,
 
     Returns True when a rebuild happened (False = stats already fresh
     and ``force`` unset — the no-op costs one signature pass, never a
-    rebuild). The rebuild writes a fresh immutable epoch root and
-    publishes it with ONE atomic pointer rename
-    (``sinks/kg_table.commit_pointer`` — the shared publication
-    primitive; see :func:`materialize_bm25_stats` for the commit
-    contract). Reader contract: ``load_bm25_stats`` takes NO lock and
-    needs none — it resolves the pointer once and reads both tables
-    from that one immutable epoch, so a concurrent refresh can neither
-    show it a missing root (the old epoch keeps serving until the flip,
-    and survives, pointer-recorded, until two further builds land) nor
-    mix stats from two corpus builds. The check→build→flip runs under the
+    rebuild). The rebuild publishes a fresh epoch (see
+    :func:`materialize_bm25_stats` for the commit contract). Reader
+    contract: ``load_bm25_stats`` takes NO lock and needs none — it
+    resolves the live epoch once and reads both tables from it, so a
+    concurrent refresh can neither show it a missing root nor mix stats
+    from two corpus builds. The check→build→flip runs under the
     layouts' shared advisory ``table_lock`` so two overlapping
     maintenance runs serialize instead of racing the flip; entry time
-    sweeps orphaned pointer temps and unreferenced epochs.
+    sweeps a crashed build's orphans.
     """
-    import os
-
-    from dig_etl_engine_spark.sinks.kg_table import (
-        resolve_pointer, table_lock)
+    from dig_etl_engine_spark.sinks.kg_table import sweep_epochs, table_lock
 
     with table_lock(path, timeout=lock_timeout):
-        # drop orphaned epochs/pointer temps from a crashed build
-        if os.path.isdir(path):
-            payload = resolve_pointer(path) or ""
-            # keep every pointer-named epoch (live + grace) — only a
-            # crashed build's orphans are unreferenced
-            _sweep_stats_epochs(path, set(payload.split()))
+        sweep_epochs(path)
         if not force and not bm25_stats_stale(
                 docs, path, id_col=id_col, text_col=text_col):
             return False
@@ -327,7 +238,9 @@ def _stats_epoch(path: str) -> tuple | None:
     reads are cached per ``path`` under the resolved root: epoch dirs
     are immutable and every build publishes a new root, so the cache
     needs no invalidation."""
-    root = _stats_root(path)
+    from dig_etl_engine_spark.sinks.kg_table import live_epoch
+
+    root = live_epoch(path)
     if root is None:
         return None
     hit = _epoch_cache.get(path)
@@ -366,9 +279,8 @@ def load_bm25_stats(spark, path: str, terms: list[str]) -> tuple:
     epoch = _stats_epoch(path)
     if epoch is None:
         raise ValueError(
-            f"load_bm25_stats: no committed stats under {path} (no "
-            "_CURRENT pointer naming an epoch_<token>/ dir) — build them "
-            "with materialize_bm25_stats")
+            f"load_bm25_stats: no committed stats under {path} (no live "
+            "epoch) — build them with materialize_bm25_stats")
     row, term_df = epoch
     # the file holds analyzed tokens: look each term up under the
     # scorer's normalization, keyed by the caller's own spelling

@@ -436,42 +436,58 @@ def compact_minhash_index(spark, index_path: str, *,
 
     out = {"partitions_before": 0, "epoch": None}
     with table_lock(index_path, timeout=lock_timeout):
-        _compact_minhash_locked(spark, index_path, out)
+        for sub, keys, cluster_by in (("bands", ["id", "band"], "band"),
+                                      ("shingles", ["id"], None)):
+            n, epoch = compact_ab_partitions(
+                spark, f"{index_path}/{sub}", keys, cluster_by=cluster_by)
+            out["partitions_before"] = max(out["partitions_before"], n)
+            if epoch is not None:
+                out["epoch"] = epoch
     return out
 
 
-def _compact_minhash_locked(spark, index_path: str, out: dict) -> None:
+def compact_ab_partitions(spark, tpath: str, keys: list[str], *,
+                          cells: tuple[str, ...] = (),
+                          cluster_by: str | None = None
+                          ) -> tuple[int, int | None]:
+    """Steps 1-3 of :func:`compact_minhash_index`'s protocol for the
+    one table at ``tpath``, shared by ``similarity.compact_ivf_index``:
+    fold its ``_ab`` append partitions into one fresh epoch, deduped on
+    the natural ``keys``. ``cells`` are partition columns above ``_ab``
+    (``cluster=*/_ab=<id>`` dirs); ``cluster_by`` re-clusters the rows
+    by that column on the way. The caller holds the index's
+    ``table_lock``. Returns the number of ``_ab`` values found and the
+    new epoch (None when at most one was found: nothing to fold)."""
+    import glob
     import os
     import shutil
 
     from pyspark.errors import AnalysisException
 
-    for sub, keys in (("bands", ["id", "band"]), ("shingles", ["id"])):
-        tpath = f"{index_path}/{sub}"
-        try:
-            df = spark.read.parquet(tpath)
-        except AnalysisException:
-            continue
-        if "_ab" not in df.columns:
-            continue
-        # bounded collect: one row per append partition — the thing
-        # being compacted away
-        abs_ = sorted(r["_ab"] for r in df.select("_ab").distinct().collect())
-        out["partitions_before"] = max(out["partitions_before"], len(abs_))
-        if len(abs_) <= 1:
-            continue
-        epoch = min(abs_[0], 0) - 1
-        out["epoch"] = epoch
-        merged = df.drop("_ab").dropDuplicates(keys)
-        if sub == "bands":
-            merged = (merged.repartition(F.col("band"))
-                      .sortWithinPartitions("band"))
-        (merged.withColumn("_ab", F.lit(epoch))
-         .write.mode("append").partitionBy("_ab").parquet(tpath))
-        for ab in abs_:
-            shutil.rmtree(os.path.join(tpath, f"_ab={ab}"),
-                          ignore_errors=True)
-    return out
+    try:
+        df = spark.read.parquet(tpath)
+    except AnalysisException:
+        return 0, None
+    if "_ab" not in df.columns:
+        return 0, None
+    # bounded collect: one row per append partition — the thing being
+    # compacted away
+    abs_ = sorted(r["_ab"] for r in df.select("_ab").distinct().collect())
+    if len(abs_) <= 1:
+        return len(abs_), None
+    epoch = min(abs_[0], 0) - 1
+    merged = df.drop("_ab").dropDuplicates(keys)
+    if cluster_by:
+        merged = (merged.repartition(F.col(cluster_by))
+                  .sortWithinPartitions(cluster_by))
+    (merged.withColumn("_ab", F.lit(epoch))
+     .write.mode("append").partitionBy(*cells, "_ab").parquet(tpath))
+    for ab in abs_:
+        for d in glob.glob(os.path.join(glob.escape(tpath),
+                                        *(f"{c}=*" for c in cells),
+                                        f"_ab={ab}")):
+            shutil.rmtree(d, ignore_errors=True)
+    return len(abs_), epoch
 
 
 def incremental_minhash_dedup(batch: DataFrame, index_path: str, *,

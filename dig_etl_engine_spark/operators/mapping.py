@@ -27,32 +27,21 @@ so a thousand datasets with a thousand specs run through one code path.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_TEMPLATE_KEY = re.compile(r"\{([^\}]+)\}")
+from dig_etl_engine_spark.operators.projections import (
+    as_text, template_parts)
 
 
 def template_column(template: str, available: set[str]) -> Column:
     """P2: compile ``"xxx {col} yyy"`` to a concat expression; missing
     columns substitute '' (`dig_tabular_import.py:320-342`), result
     trimmed."""
-    parts: list[Column] = []
-    pos = 0
-    for m in _TEMPLATE_KEY.finditer(template):
-        if m.start() > pos:
-            parts.append(F.lit(template[pos:m.start()]))
-        key = m.group(1)
-        if key in available:
-            parts.append(F.coalesce(F.col(key).cast("string"), F.lit("")))
-        else:
-            parts.append(F.lit(""))
-        pos = m.end()
-    if pos < len(template):
-        parts.append(F.lit(template[pos:]))
+    parts = template_parts(
+        template, lambda k: as_text(k) if k in available else F.lit(""))
     return F.trim(F.concat(*parts)) if parts else F.lit("")
 
 

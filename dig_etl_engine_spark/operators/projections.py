@@ -24,7 +24,7 @@ the driver; the generated expression is JVM-codegen'd per row. No UDFs.
 from __future__ import annotations
 
 import re
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,22 +37,36 @@ def apply_rules(df: DataFrame, rules: Sequence[Mapping[str, str]]) -> DataFrame:
     return df.select(*[F.col(r["path"]).alias(r["field"]) for r in rules])
 
 
-def template_column(template: str) -> Column:
-    """P2: compile `"{Date}: breach in {Location}"` into a concat expression.
-
-    Missing/NULL keys render as '' (reference uses a defaulting formatter,
-    `dig_tabular_import.py:331-340`). Parsed once driver-side; the result is
-    a pure `concat` — whole-stage codegen keeps it JVM-side.
-    """
+def template_parts(template: str,
+                   field: Callable[[str], Column]) -> list[Column]:
+    """The P2 placeholder parse: ``template``'s literal runs as
+    literals and each ``{key}`` as ``field(key)``, in order. Parsed
+    once driver-side."""
     parts: list[Column] = []
     pos = 0
     for m in _PLACEHOLDER.finditer(template):
         if m.start() > pos:
             parts.append(F.lit(template[pos:m.start()]))
-        parts.append(F.coalesce(F.col(m.group(1)).cast("string"), F.lit("")))
+        parts.append(field(m.group(1)))
         pos = m.end()
     if pos < len(template):
         parts.append(F.lit(template[pos:]))
+    return parts
+
+
+def as_text(key: str) -> Column:
+    """Column ``key`` as a string, NULL rendered as ''."""
+    return F.coalesce(F.col(key).cast("string"), F.lit(""))
+
+
+def template_column(template: str) -> Column:
+    """P2: compile `"{Date}: breach in {Location}"` into a concat expression.
+
+    Missing/NULL keys render as '' (reference uses a defaulting formatter,
+    `dig_tabular_import.py:331-340`). The result is a pure `concat` —
+    whole-stage codegen keeps it JVM-side.
+    """
+    parts = template_parts(template, as_text)
     return F.concat(*parts) if parts else F.lit("")
 
 

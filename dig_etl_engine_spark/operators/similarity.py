@@ -667,40 +667,14 @@ def compact_ivf_index(spark, index_path: str, *,
     Returns ``{"partitions_before": n, "epoch": e}`` where ``n`` counts
     distinct ``_ab`` values (one per append batch + the base build).
     """
-    import glob as _glob
-    import os
-    import shutil
-
-    from pyspark.errors import AnalysisException
-
+    from dig_etl_engine_spark.operators.dedup import compact_ab_partitions
     from dig_etl_engine_spark.sinks.kg_table import table_lock
 
-    out = {"partitions_before": 0, "epoch": None}
-    tpath = f"{index_path}/cells"
     with table_lock(index_path, timeout=lock_timeout):
-        try:
-            df = spark.read.parquet(tpath)
-        except AnalysisException:
-            return out
-        if "_ab" not in df.columns:
-            return out
-        # bounded collect: one row per append batch
-        abs_ = sorted(r["_ab"]
-                      for r in df.select("_ab").distinct().collect())
-        out["partitions_before"] = len(abs_)
-        if len(abs_) <= 1:
-            return out
-        epoch = min(abs_[0], 0) - 1
-        out["epoch"] = epoch
-        merged = df.drop("_ab").dropDuplicates(["id", "cluster"])
-        (merged.withColumn("_ab", F.lit(epoch))
-         .write.mode("append").partitionBy("cluster", "_ab")
-         .parquet(tpath))
-        for ab in abs_:
-            for d in _glob.glob(os.path.join(tpath, "cluster=*",
-                                             f"_ab={ab}")):
-                shutil.rmtree(d, ignore_errors=True)
-    return out
+        n, epoch = compact_ab_partitions(
+            spark, f"{index_path}/cells", ["id", "cluster"],
+            cells=("cluster",))
+    return {"partitions_before": n, "epoch": epoch}
 
 
 def incremental_embedding_dedup(batch: DataFrame, index_path: str, *,

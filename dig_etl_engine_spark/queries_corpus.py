@@ -23,7 +23,6 @@ documented, not silently assumed).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,8 @@ from dig_etl_engine_spark.operators import dedup as D
 from dig_etl_engine_spark.operators import similarity as S
 from dig_etl_engine_spark.operators import text_analysis as TA
 from dig_etl_engine_spark.queries import register
+from dig_etl_engine_spark.sinks.kg_table import (
+    live_epoch, publish_epoch, table_lock)
 
 
 def _scratch_path(sf_dir: str, name: str,
@@ -47,56 +48,29 @@ def _scratch_path(sf_dir: str, name: str,
     table's (basename, mtime, size): rebuild when the corpus
     regenerates. Key on the table the artifact actually derives from:
     an embeddings-backed index keyed on documents would go silently
-    stale if only embeddings regenerated."""
+    stale if only embeddings regenerated. The root is not the older
+    marker-file cache's ``/tmp/spark_graft_io``: a checkout of that
+    cache deletes any dir whose marker is not at its top level, which
+    an epoch store's never is."""
     src = os.path.join(sf_dir, f"{source_table}.parquet")
     st = os.stat(src) if os.path.exists(src) else None
     tag = (f"{os.path.basename(os.path.normpath(sf_dir))}"
            f"-{int(st.st_mtime) if st else 0}-{st.st_size if st else 0}")
-    return os.path.join("/tmp/spark_graft_io", name, tag)
+    return os.path.join("/tmp/spark_graft_cache", name, tag)
 
 
-def _build_once(path: str, marker: str,
-                build: Callable[[str], None]) -> str:
-    """Return ``path``, first building it with ``build(dir)`` unless
-    its ``marker`` file shows a committed build. Safe against
-    concurrent builders and readers: the build goes to a pid-scoped
-    sibling dir and is renamed in, so a reader never sees a half-built
-    cache and a committed (marker-bearing) dir is never deleted or
-    overwritten. The loser of a build race keeps the winner's copy.
-
-    A crashed builder's partial (no marker) is renamed aside, then
-    re-checked before it is deleted: a peer may have renamed its
-    committed copy in between the first check and the rename, and
-    that copy goes back instead of being deleted."""
-    done = os.path.join(path, marker)
-    if os.path.exists(done):
-        return path
-    tmp = f"{path}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    build(tmp)
-    try:
-        if os.path.isdir(path) and not os.path.exists(done):
-            trash = f"{path}.trash-{os.getpid()}"
-            try:
-                os.rename(path, trash)
-            except FileNotFoundError:
-                pass  # another builder already moved the partial
-            else:
-                if not os.path.exists(os.path.join(trash, marker)):
-                    shutil.rmtree(trash, ignore_errors=True)
-                else:
-                    try:
-                        os.rename(trash, path)  # grabbed a commit
-                    except OSError:
-                        # an equivalent committed copy already took the
-                        # slot (content-keyed dir, so identical)
-                        shutil.rmtree(trash, ignore_errors=True)
-        os.rename(tmp, path)
-    except OSError:
-        if not os.path.exists(done):
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return path
+def _build_once(path: str, build: Callable[[str], None]) -> str:
+    """Return the live root of the epoch store ``path`` (see
+    ``sinks/kg_table.publish_epoch``), first publishing ``build(root)``
+    when nothing is live. Builders serialize on ``table_lock(path)`` and
+    re-check under it, so concurrent callers (threads or processes) run
+    one build and all get its root; a reader never sees a half-built
+    cache, and a crashed build's partial is swept by the next publish."""
+    root = live_epoch(path)
+    if root is None:
+        with table_lock(path):
+            root = live_epoch(path) or publish_epoch(path, build)
+    return root
 
 
 # --- Gopher gates + n-gram repetition ----------------------------------------
@@ -697,7 +671,7 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape `test_incremental_dedup.py` pins."""
     docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
     path = _build_once(
-        _scratch_path(sf_dir, "mh_index"), "meta/_SUCCESS",
+        _scratch_path(sf_dir, "mh_index"),
         lambda p: D.materialize_minhash_index(docs, "text", p))
     b1 = (docs.filter(F.col("doc_id") % 2 == 0)
           .select((F.col("doc_id") + 100000).alias("doc_id"),
@@ -1716,7 +1690,6 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     materialize_ivf_index` — cells physically partitionBy(cluster))."""
     return _build_once(
         _scratch_path(sf_dir, "ivf_index", source_table="embeddings"),
-        "centroids/_SUCCESS",
         lambda p: S.materialize_ivf_index(
             load_tables(spark, sf_dir)["embeddings"], p,
             k=_IVF_K, iters=_IVF_ITERS))

@@ -22,6 +22,7 @@ from dig_etl_engine_spark.functions.exact import fixed, round_fixed
 from dig_etl_engine_spark.functions.casefold import safe_lower
 from dig_etl_engine_spark.operators import text_analysis as TA
 from dig_etl_engine_spark.queries import register
+from dig_etl_engine_spark.sinks.kg_table import live_epoch, publish_epoch
 
 # Engine-identical rounded bucket mean (wobble lint): one canonical
 # definition, next to the Spark expression it mirrors.
@@ -998,7 +999,7 @@ def stream_e2e_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re as _re
     plan = src._jdf.queryExecution().analyzed().toString()
     tag = hashlib.md5(_re.sub(r"#\d+", "", plan).encode()).hexdigest()[:10]
-    in_dir = _build_once(_scratch_path(sf_dir, f"e2e_in-{tag}"), "_SUCCESS",
+    in_dir = _build_once(_scratch_path(sf_dir, f"e2e_in-{tag}"),
                          lambda p: src.write.mode("overwrite").json(p))
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -1150,52 +1151,35 @@ def sink_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta["lang"].alias("lang"), meta["source"].alias("source"))
 
 
-def _recover_state(target: str) -> None:
-    """Heal the one non-atomic window in :func:`_swap_state`: a crash
-    between its two renames leaves ``<target>.old`` holding the only
-    copy of the state. Restore it before anything reads ``target``."""
-    old = target + ".old"
-    if not os.path.isdir(target) and os.path.isdir(old):
-        os.rename(old, target)
-
-
 def _batch_already_applied(target: str, bid: int) -> bool:
     """foreachBatch is at-least-once: after a failure Spark replays the
     last micro-batch, so a non-idempotent fold double-counts it. The
-    last-applied batch id is persisted INSIDE the state directory (an
-    underscore-prefixed file, invisible to the parquet reader, swapped
-    together with the state itself), so replay detection survives
-    crashes — the standard foreachBatch idempotence pattern."""
-    _recover_state(target)
+    last-applied batch id is published INSIDE the state's epoch (an
+    underscore-prefixed file, invisible to the parquet reader — see
+    :func:`_publish_fold`), so replay detection survives crashes — the
+    standard foreachBatch idempotence pattern."""
+    root = live_epoch(target)
+    if root is None:
+        return False
     try:
-        with open(os.path.join(target, "_LAST_BATCH_ID"),
+        with open(os.path.join(root, "_LAST_BATCH_ID"),
                   encoding="utf-8") as fh:
             return bid <= int(fh.read().strip())
     except (OSError, ValueError):
         return False
 
 
-def _swap_state(folded: DataFrame, target: str, bid: int) -> None:
-    """Write the folded state to ``<target>.next`` (with the applied
-    batch id), then swap via rename-aside: the previous state moves to
-    ``<target>.old`` BEFORE the new one moves in, so no crash point
-    ever leaves zero copies on disk (an rmtree-then-rename swap has a
-    window where the only state is gone — the failure class flagged in
-    the round-4 tar-sink review). :func:`_recover_state` heals the
-    between-renames window on the next call."""
-    import shutil
+def _publish_fold(folded: DataFrame, target: str, bid: int) -> None:
+    """Publish the folded state and the applied batch id as one epoch of
+    the store ``target`` (``sinks/kg_table.publish_epoch``): a crash at
+    any point leaves the previous fold's rows and batch id live."""
+    def write(root: str) -> None:
+        folded.write.parquet(root)
+        with open(os.path.join(root, "_LAST_BATCH_ID"), "w",
+                  encoding="utf-8") as fh:
+            fh.write(str(bid))
 
-    nxt = target + ".next"
-    folded.write.mode("overwrite").parquet(nxt)
-    with open(os.path.join(nxt, "_LAST_BATCH_ID"), "w",
-              encoding="utf-8") as fh:
-        fh.write(str(bid))
-    old = target + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(target):
-        os.rename(target, old)
-    os.rename(nxt, target)
-    shutil.rmtree(old, ignore_errors=True)
+    publish_epoch(target, write)
 
 
 @register(
@@ -1218,7 +1202,7 @@ def stream_ohlc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch computes per-batch MERGEABLE partials — (min/max
     ``struct(ts, id, value)`` for open/close, min/low/max/high, count,
     sum) — and folds them into the persisted rollup via re-aggregation
-    + atomic directory swap. The oracle is the GLOBAL one-shot rollup
+    + one epoch publish. The oracle is the GLOBAL one-shot rollup
     (same as `ts_downsample_ohlc`), so the hash match proves the
     incremental merge is batch-boundary-invariant: any micro-batching
     of the stream yields byte-identical dashboards — and the
@@ -1259,14 +1243,14 @@ def stream_ohlc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.min("value").alias("low"), F.max("value").alias("high"),
                  F.count(F.lit(1)).alias("n"),
                  F.sum(fixed(F.col("value"), 2)).alias("s")))
-        if os.path.exists(os.path.join(target, "_SUCCESS")):
-            part = batch.sparkSession.read.parquet(target) \
-                .unionByName(part)
+        prev = live_epoch(target)
+        if prev:
+            part = batch.sparkSession.read.parquet(prev).unionByName(part)
         folded = part.groupBy(*keys).agg(
             F.min("omin").alias("omin"), F.max("omax").alias("omax"),
             F.min("low").alias("low"), F.max("high").alias("high"),
             F.sum("n").alias("n"), F.sum("s").alias("s"))
-        _swap_state(folded, target, bid)
+        _publish_fold(folded, target, bid)
 
     # maxFilesPerTrigger=1 → four real micro-batches, so the
     # cross-batch fold (the point of the query) actually executes;
@@ -1278,7 +1262,7 @@ def stream_ohlc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination()
-    r = spark.read.parquet(target)
+    r = spark.read.parquet(live_epoch(target))
     rd = lambda c: F.round(c, 4)  # noqa: E731
     return r.select(
         "user_id", "bucket",
@@ -1315,7 +1299,7 @@ def stream_ohlc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming distinct-count via MERGEABLE KMV sketches: each
     micro-batch's per-source bottom-16 md5 hashes fold into the
-    persisted sketch (union → re-rank → atomic swap — bottom-k of a
+    persisted sketch (union → re-rank → epoch publish — bottom-k of a
     union IS the union of bottom-ks, the mergeability that makes KMV a
     streaming sketch), then the k-th-smallest-hash estimator
     ``n̂ = (k−1)/U₍ₖ₎`` (Bar-Yossef et al. 2002) reads cardinality off
@@ -1348,14 +1332,14 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = batch.select(
             "source", F.substring(F.md5("text"), 1, 16).alias("h")) \
             .distinct()
-        if os.path.exists(os.path.join(target, "_SUCCESS")):
-            part = batch.sparkSession.read.parquet(target) \
-                .unionByName(part)
+        prev = live_epoch(target)
+        if prev:
+            part = batch.sparkSession.read.parquet(prev).unionByName(part)
         rn = F.row_number().over(
             W.partitionBy("source").orderBy("h"))
         folded = (part.distinct().withColumn("rn", rn)
                   .filter(F.col("rn") <= K).drop("rn"))
-        _swap_state(folded, target, bid)
+        _publish_fold(folded, target, bid)
 
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).json(in_dir))
@@ -1364,7 +1348,7 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination()
-    sk = spark.read.parquet(target)
+    sk = spark.read.parquet(live_epoch(target))
     frac = (F.conv(F.max("h"), 16, 10).cast("decimal(20,0)")
             .cast("double") / F.lit(float(2 ** 64)))
     return (sk.groupBy("source")

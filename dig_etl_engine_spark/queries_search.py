@@ -9,8 +9,6 @@ restate the weighted-match scoring arithmetic directly in SQL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,7 +141,7 @@ def coarse_search_rank_materialized(spark: SparkSession,
     # build-once semantics, like the production index lifecycle: the
     # corpus build materializes, every query after that only reads.
     path = _build_once(
-        _scratch_path(sf_dir, "kw_index"), "_SUCCESS",
+        _scratch_path(sf_dir, "kw_index"),
         lambda p: materialize_index(build_keyword_index(spark, docs), p))
     index = load_index(spark, path)
     query = {
@@ -409,15 +407,14 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_bm25_stats, materialize_bm25_stats)
     from dig_etl_engine_spark.plans.weights import bm25_score_column
     from dig_etl_engine_spark.queries_corpus import _scratch_path
+    from dig_etl_engine_spark.sinks.kg_table import live_epoch
 
     docs = load_tables(spark, sf_dir)["documents"]
     terms = ["hash", "window"]
     path = _scratch_path(sf_dir, "bm25_stats")
-    if not os.path.exists(os.path.join(path, "_CURRENT")):
-        # no pre-wipe: the build is lock-serialized and epoch-committed
-        # (a concurrent builder's epoch must not be rmtree'd from under
-        # its pointer flip — r11 round-close review); partial litter
-        # from a crashed build is swept by the build's own epoch sweep
+    if live_epoch(path) is None:
+        # the build is lock-serialized and publishes an epoch, so a
+        # concurrent builder at worst rebuilds over this one
         materialize_bm25_stats(docs, path)
     n_docs, avgdl, df_counts = load_bm25_stats(spark, path, terms)
     score = bm25_score_column(

@@ -68,6 +68,7 @@ import socket
 import threading
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -83,8 +84,8 @@ class TableLockTimeout(RuntimeError):
 
 # --------------------------------------------------------------------------
 # Pointer-file commit — the one-rename publication primitive shared by every
-# multi-file swap in the engine (BM25 stats epochs in ``functions/kg.py``,
-# the bucketed table's manifest below). The ES-alias-swap analog
+# multi-file swap in the engine (the epoch stores of ``publish_epoch``, the
+# bucketed table's manifest below). The ES-alias-swap analog
 # (`manager.py:237-255` bootstrap pattern under /root/reference): the index
 # never serves a 404 mid-reindex because readers resolve an alias, and the
 # alias flip is a single atomic metadata write. Here the alias is a small
@@ -179,6 +180,66 @@ def sweep_pointer_tmps(root: str, *, name: str = "_CURRENT") -> None:
             os.remove(stale)
         except OSError:
             pass
+
+
+# --------------------------------------------------------------------------
+# Epoch stores — the one way to publish a directory that is rebuilt
+# wholesale (the BM25 stats, the build-once fixture cache, streaming rollup
+# state). ``path/_CURRENT`` holds ``<live> [<grace>]``: the first token
+# names the immutable ``epoch_<token>/`` dir readers use, the second the
+# previous one, kept for readers that resolved the pointer before the last
+# flip. Nothing else lives under ``path`` but pointer temp files. A reader
+# resolves the pointer once and reads one complete build; it never sees a
+# missing root or a mix of two builds.
+
+def live_epoch(path: str) -> str | None:
+    """The root the pointer under ``path`` names, or None when no
+    pointer names an existing epoch dir (never published)."""
+    toks = (resolve_pointer(path) or "").split()
+    if toks and os.path.isdir(os.path.join(path, toks[0])):
+        return os.path.join(path, toks[0])
+    return None
+
+
+def sweep_epochs(path: str) -> None:
+    """Drop pointer temps and every ``epoch_*`` dir the pointer does not
+    name: a crashed publish's orphan or a superseded grace copy. The
+    live and grace epochs are never touched, so a crash at any point of
+    the sweep leaves both readable; a dir that cannot be removed now is
+    retried by the next sweep."""
+    sweep_pointer_tmps(path)
+    keep = set((resolve_pointer(path) or "").split())
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return
+    for n in names:
+        if n.startswith("epoch_") and n not in keep \
+                and os.path.isdir(os.path.join(path, n)):
+            shutil.rmtree(os.path.join(path, n), ignore_errors=True)
+
+
+def publish_epoch(path: str, write: Callable[[str], None]) -> str:
+    """Publish a new build under ``path`` and return its root.
+
+    ``write(root)`` fills a fresh ``path/epoch_<token>/``; then the
+    files are made durable (:func:`_fsync_tree`), the pointer flips to
+    ``<new> <previous>`` in one :func:`commit_pointer`, and
+    :func:`sweep_epochs` drops everything else. A crash before the flip
+    leaves the previous build live and an orphan the next sweep drops;
+    a crash after it leaves the new build live. Takes no lock: callers
+    whose writers can race hold :func:`table_lock` (it is not
+    reentrant, so the lock stays with the caller)."""
+    prev = live_epoch(path)
+    tok = f"epoch_{uuid.uuid4().hex[:8]}"
+    root = os.path.join(path, tok)
+    write(root)
+    # data before the pointer: the writer's files are not fsynced, and
+    # the fsynced pointer must never name torn files after a power loss
+    _fsync_tree(root)
+    commit_pointer(path, f"{tok} {os.path.basename(prev)}" if prev else tok)
+    sweep_epochs(path)
+    return root
 
 
 def _pid_alive(pid: int) -> bool:

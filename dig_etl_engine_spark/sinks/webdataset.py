@@ -18,7 +18,7 @@ bit-reproducible for identical input.
 Write safety: the export is EAGER and staged — shards are written
 under a hidden ``.staging-*`` directory inside the target path, and
 only after the whole job succeeds does the swap run, rename-aside
-style (the ``queries_io._swap_state`` pattern): the previous export's
+style (:func:`_swap_export`): the previous export's
 ``shard-*.tar`` files are RETIRED into a hidden ``.old`` directory, a
 ``_RETIRED`` commit marker is written, the staged set moves in via
 per-file atomic renames, and only then is ``.old`` dropped. No crash

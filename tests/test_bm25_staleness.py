@@ -6,6 +6,8 @@ fresh otherwise (so maintenance jobs don't rebuild needlessly)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -69,18 +71,17 @@ def test_refresh_closes_staleness_loop(spark, corpus, tmp_path):
     from-scratch build over the post-upsert corpus (verdict r9 item 5 —
     the reference's ES never serves stale term stats)."""
     from dig_etl_engine_spark.functions.kg import refresh_bm25_stats
-
-    from dig_etl_engine_spark.functions.kg import _stats_root
+    from dig_etl_engine_spark.sinks.kg_table import live_epoch
 
     path = str(tmp_path / "bm25")
     materialize_bm25_stats(corpus, path)
     # fresh snapshot: refresh is a provable no-op (signature pass only —
     # the live epoch root does not move)
-    root_before = _stats_root(path)
+    root_before = live_epoch(path)
     sig_before = spark.read.parquet(
         f"{root_before}/corpus").head()["corpus_sig"]
     assert refresh_bm25_stats(corpus, path) is False
-    assert _stats_root(path) == root_before
+    assert live_epoch(path) == root_before
     assert spark.read.parquet(
         f"{root_before}/corpus").head()["corpus_sig"] == sig_before
 
@@ -184,115 +185,74 @@ def test_reader_never_sees_missing_or_mixed_epoch(spark, corpus, tmp_path):
 
 
 class TestPointerCommitCrashFuzz:
-    """Fault-injection sweep of the pointer-commit primitive itself
-    (verdict r10 item 2: "crash-fuzz extended to the pointer write"):
-    crash at every filesystem op inside ``commit_pointer`` and the
-    epoch sweep, then assert the resolve invariant — the pointer is
-    never missing, never torn, and always names a complete root (old
-    or new). Pure filesystem test, no Spark."""
+    """Fault-injection sweep of ``sinks/kg_table.publish_epoch``, the
+    one publication protocol of every epoch store: crash at every
+    ``os.fsync``, ``os.replace`` and ``shutil.rmtree`` it makes, then
+    assert the resolve invariant — the live epoch is the old or the new
+    complete root, and every dir the pointer names exists — and that one
+    more publish converges to exactly the live and grace epoch dirs.
+    Pure filesystem test, no Spark."""
 
     @staticmethod
-    def _mk_epoch(path, name):
-        import os
-        d = os.path.join(path, name)
-        os.makedirs(os.path.join(d, "corpus"), exist_ok=True)
-        os.makedirs(os.path.join(d, "term_df"), exist_ok=True)
-        return name
+    def _write(tag):
+        def write(root):
+            os.makedirs(os.path.join(root, "corpus"))
+            with open(os.path.join(root, "corpus", "tag"), "w",
+                      encoding="utf-8") as fh:
+                fh.write(tag)
+        return write
+
+    @staticmethod
+    def _tag(root):
+        with open(os.path.join(root, "corpus", "tag"),
+                  encoding="utf-8") as fh:
+            return fh.read()
 
     def test_crash_at_every_pointer_op(self, tmp_path, monkeypatch):
-        import os
-
-        from dig_etl_engine_spark.sinks import kg_table as kt
-
-        class Crash(RuntimeError):
-            pass
-
-        real_replace, real_fsync = os.replace, os.fsync
-        completed_clean = False
-        for k in range(1, 8):
-            path = str(tmp_path / f"t{k}")
-            os.makedirs(path)
-            self._mk_epoch(path, "epoch_old")
-            kt.commit_pointer(path, "epoch_old")
-            self._mk_epoch(path, "epoch_new")
-
-            calls = {"n": 0}
-
-            def fail(*a, _real=None, **kw):
-                calls["n"] += 1
-                if calls["n"] >= k:
-                    raise Crash()
-                return _real(*a, **kw)
-
-            with monkeypatch.context() as mp:
-                mp.setattr(os, "fsync",
-                           lambda *a, **kw: fail(*a, _real=real_fsync, **kw))
-                mp.setattr(os, "replace",
-                           lambda *a, **kw: fail(*a, _real=real_replace, **kw))
-                try:
-                    kt.commit_pointer(path, "epoch_new")
-                    completed_clean = True
-                except Crash:
-                    pass
-            # invariant: pointer resolvable, names a complete root
-            tok = kt.resolve_pointer(path)
-            assert tok in ("epoch_old", "epoch_new")
-            assert os.path.isdir(os.path.join(path, tok, "corpus"))
-            # recovery replay: sweep temps + re-commit converges
-            kt.sweep_pointer_tmps(path)
-            assert not [n for n in os.listdir(path)
-                        if n.startswith("._CURRENT.tmp.")]
-            kt.commit_pointer(path, "epoch_new")
-            assert kt.resolve_pointer(path) == "epoch_new"
-            if completed_clean:
-                break
-        assert completed_clean, "fault budget exhausted before clean run"
-
-    def test_sweep_never_drops_kept_epochs(self, tmp_path, monkeypatch):
-        """Crash inside the epoch sweep at every rmtree: the kept epochs
-        (live + grace) must survive every prefix of the sweep."""
-        import os
         import shutil
 
-        from dig_etl_engine_spark.functions.kg import _sweep_stats_epochs
         from dig_etl_engine_spark.sinks import kg_table as kt
 
         class Crash(RuntimeError):
             pass
 
-        real_rmtree = shutil.rmtree
+        real = {(os, "fsync"): os.fsync, (os, "replace"): os.replace,
+                (shutil, "rmtree"): shutil.rmtree}
         completed_clean = False
-        for k in range(1, 8):
-            path = str(tmp_path / f"s{k}")
-            os.makedirs(path)
-            for n in ("epoch_live", "epoch_grace", "epoch_orphan1",
-                      "epoch_orphan2"):
-                self._mk_epoch(path, n)
-            kt.commit_pointer(path, "epoch_live")
+        for k in range(1, 60):
+            path = str(tmp_path / f"t{k}")
+            kt.publish_epoch(path, self._write("grace"))
+            kt.publish_epoch(path, self._write("old"))
+            # a crashed build's orphan, for the sweep to trip over
+            os.makedirs(os.path.join(path, "epoch_orphan", "corpus"))
 
             calls = {"n": 0}
 
-            def fail(*a, **kw):
-                calls["n"] += 1
-                if calls["n"] >= k:
-                    raise Crash()
-                return real_rmtree(*a, **kw)
+            def crashing(fn):
+                def f(*a, **kw):
+                    calls["n"] += 1
+                    if calls["n"] >= k:
+                        raise Crash()
+                    return fn(*a, **kw)
+                return f
 
             with monkeypatch.context() as mp:
-                mp.setattr(shutil, "rmtree", fail)
+                for (mod, name), fn in real.items():
+                    mp.setattr(mod, name, crashing(fn))
                 try:
-                    _sweep_stats_epochs(
-                        path, {"epoch_live", "epoch_grace"})
+                    kt.publish_epoch(path, self._write("new"))
                     completed_clean = True
                 except Crash:
                     pass
-            assert os.path.isdir(os.path.join(path, "epoch_live"))
-            assert os.path.isdir(os.path.join(path, "epoch_grace"))
-            assert kt.resolve_pointer(path) == "epoch_live"
-            # replay converges: orphans gone, kept epochs intact
-            _sweep_stats_epochs(path, {"epoch_live", "epoch_grace"})
-            assert not os.path.isdir(os.path.join(path, "epoch_orphan1"))
-            assert not os.path.isdir(os.path.join(path, "epoch_orphan2"))
+            assert self._tag(kt.live_epoch(path)) in ("old", "new")
+            for tok in kt.resolve_pointer(path).split():
+                assert os.path.isdir(os.path.join(path, tok, "corpus"))
+            # one more publish converges: live + grace, nothing else
+            root = kt.publish_epoch(path, self._write("next"))
+            live, grace = kt.resolve_pointer(path).split()
+            assert root == os.path.join(path, live)
+            assert sorted(os.listdir(path)) == sorted(
+                ["_CURRENT", live, grace])
             if completed_clean:
                 break
         assert completed_clean, "fault budget exhausted before clean run"

@@ -1,11 +1,16 @@
 """``queries_corpus._build_once``: the one build-once cache behind the
 fixtures that persist an index or an input drop (``kw_index``,
-``mh_index``, ``ivf_index``, the e2e stream input). A crashed build's
-partial is replaced, a committed dir is never deleted or overwritten,
-and the loser of a build race keeps the winner's copy. Pure filesystem
-test — no Spark."""
+``mh_index``, ``ivf_index``, the e2e stream input). Each cache is an
+epoch store (``sinks/kg_table.publish_epoch``): a committed build is
+never rebuilt or deleted, a crashed build's partial is swept by the
+next publish, and concurrent builders run one build and share its
+root. Pure filesystem test — no Spark."""
 
 import os
+import threading
+import time
+
+import pytest
 
 from dig_etl_engine_spark.queries_corpus import _build_once
 
@@ -13,76 +18,78 @@ from dig_etl_engine_spark.queries_corpus import _build_once
 def _writer(tag, calls):
     def build(d):
         calls.append(d)
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "data"), "w") as fh:
+        os.makedirs(d)
+        with open(os.path.join(d, "data"), "w", encoding="utf-8") as fh:
             fh.write(tag)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
     return build
 
 
-def _read(path):
-    with open(os.path.join(path, "data")) as fh:
+def _read(root):
+    with open(os.path.join(root, "data"), encoding="utf-8") as fh:
         return fh.read()
 
 
-def _no_leftovers(path):
-    parent, name = os.path.split(path)
-    return sorted(os.listdir(parent)) == [name]
+def _only_live(path, root):
+    """Nothing under ``path`` but the pointer and the live root, and
+    nothing beside ``path`` (the lock is released)."""
+    return (sorted(os.listdir(path)) == sorted(
+        ["_CURRENT", os.path.basename(root)])
+        and os.listdir(os.path.dirname(path)) == [os.path.basename(path)])
 
 
 def test_crashed_partial_is_replaced(tmp_path):
     path = str(tmp_path / "idx")
-    os.makedirs(path)
-    with open(os.path.join(path, "data"), "w") as fh:
-        fh.write("partial")           # a crashed build: no marker
+
+    def crash(d):
+        _writer("partial", [])(d)
+        raise RuntimeError("builder died")
+
+    with pytest.raises(RuntimeError):
+        _build_once(path, crash)
     calls = []
-    assert _build_once(path, "_SUCCESS", _writer("built", calls)) == path
-    assert _read(path) == "built" and len(calls) == 1
-    assert calls[0] != path           # built aside, then renamed in
-    assert _no_leftovers(path)
+    root = _build_once(path, _writer("built", calls))
+    assert _read(root) == "built" and calls == [root]
+    assert _only_live(path, root)
 
 
 def test_committed_dir_is_never_rebuilt_or_deleted(tmp_path):
     path = str(tmp_path / "idx")
-    _writer("committed", [])(path)
+    root = _build_once(path, _writer("committed", []))
     calls = []
-    assert _build_once(path, "_SUCCESS", _writer("other", calls)) == path
-    assert calls == [] and _read(path) == "committed"
+    assert _build_once(path, _writer("other", calls)) == root
+    assert calls == [] and _read(root) == "committed"
+    assert _only_live(path, root)
 
 
 def test_race_loser_keeps_winners_copy(tmp_path):
-    """A peer commits while this builder is still writing: the rename
-    in fails, the winner's copy stays, and the loser's build is
-    dropped."""
+    """Two threads of one process build the same path: the second
+    arrives while the first's build is half-written. It waits for the
+    first's publish instead of building beside it, so one build runs
+    and both callers get its root."""
     path = str(tmp_path / "idx")
+    calls, started = [], threading.Event()
 
     def build(d):
-        _writer("loser", [])(d)
-        _writer("winner", [])(path)   # the peer commits meanwhile
+        calls.append(d)
+        os.makedirs(d)
+        with open(os.path.join(d, "data"), "w", encoding="utf-8") as fh:
+            fh.write("half")
+        started.set()
+        time.sleep(0.5)          # the peer arrives meanwhile
+        with open(os.path.join(d, "data"), "a", encoding="utf-8") as fh:
+            fh.write(" done")
 
-    assert _build_once(path, "_SUCCESS", build) == path
-    assert _read(path) == "winner"
-    assert _no_leftovers(path)
+    roots = {}
 
+    def run(name):
+        roots[name] = _build_once(path, build)
 
-def test_commit_landing_on_partial_mid_check_is_put_back(
-        tmp_path, monkeypatch):
-    """A peer renames its committed copy over an empty partial after
-    this builder found the partial uncommitted but before it moved the
-    partial aside: the aside copy is re-checked, found committed, and
-    put back instead of deleted."""
-    path = str(tmp_path / "idx")
-    os.makedirs(path)                 # an empty crashed partial
-    real_rename = os.rename
-
-    def rename(src, dst):
-        if src == path and ".trash-" in dst:
-            peer = path + ".build-peer"
-            _writer("winner", [])(peer)
-            real_rename(peer, path)   # the peer commits just in time
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", rename)
-    assert _build_once(path, "_SUCCESS", _writer("loser", [])) == path
-    assert _read(path) == "winner"
-    assert _no_leftovers(path)
+    first = threading.Thread(target=run, args=("first",))
+    first.start()
+    assert started.wait(10)
+    run("second")
+    first.join(10)
+    assert len(calls) == 1
+    assert roots["first"] == roots["second"] == calls[0]
+    assert _read(roots["first"]) == "half done"
+    assert _only_live(path, roots["first"])

@@ -1043,33 +1043,77 @@ class TestWebdataset:
 class TestForeachBatchIdempotence:
     """The streaming rollup folds must skip replayed micro-batches —
     foreachBatch is at-least-once (`queries_io._batch_already_applied`
-    + `_swap_state`)."""
+    + `_publish_fold`)."""
 
     def test_replayed_batch_is_skipped(self, spark, tmp_path):
         from dig_etl_engine_spark.queries_io import (
-            _batch_already_applied, _swap_state)
+            _batch_already_applied, _publish_fold)
+        from dig_etl_engine_spark.sinks.kg_table import live_epoch
         target = str(tmp_path / "state")
         s0 = spark.createDataFrame([(1, 10)], "k LONG, n LONG")
         assert not _batch_already_applied(target, 0)
-        _swap_state(s0, target, 0)
+        _publish_fold(s0, target, 0)
         # same bid again → replay detected, fold must be skipped
         assert _batch_already_applied(target, 0)
         assert not _batch_already_applied(target, 1)
         s1 = spark.createDataFrame([(1, 30)], "k LONG, n LONG")
-        _swap_state(s1, target, 1)
+        _publish_fold(s1, target, 1)
         assert _batch_already_applied(target, 1)
-        rows = spark.read.parquet(target).collect()
+        rows = spark.read.parquet(live_epoch(target)).collect()
         assert [(r["k"], r["n"]) for r in rows] == [(1, 30)]
 
     def test_batch_id_survives_swap_atomically(self, spark, tmp_path):
-        """The id file lives INSIDE the state dir and is `_`-prefixed:
-        swapped with the data, invisible to the parquet reader."""
-        from dig_etl_engine_spark.queries_io import _swap_state
+        """The id file lives INSIDE the state's epoch and is
+        `_`-prefixed: published with the data, invisible to the parquet
+        reader."""
+        from dig_etl_engine_spark.queries_io import _publish_fold
+        from dig_etl_engine_spark.sinks.kg_table import live_epoch
         target = str(tmp_path / "state")
         df = spark.createDataFrame([(1, 1)], "k LONG, n LONG")
-        _swap_state(df, target, 7)
-        assert open(os.path.join(target, "_LAST_BATCH_ID")).read() == "7"
-        assert spark.read.parquet(target).count() == 1
+        _publish_fold(df, target, 7)
+        root = live_epoch(target)
+        assert open(os.path.join(root, "_LAST_BATCH_ID"),
+                    encoding="utf-8").read() == "7"
+        assert spark.read.parquet(root).count() == 1
+
+    def test_crash_inside_fold_publish_keeps_previous_fold(
+            self, spark, tmp_path, monkeypatch):
+        """A fold that dies inside its publish — in the state write job,
+        in the fsync walk, or at the pointer flip — leaves the previous
+        fold's rows and batch id live, so the replayed batch folds
+        again from them; the replay's publish sweeps the dead fold's
+        leftovers."""
+        from dig_etl_engine_spark.queries_io import (
+            _batch_already_applied, _publish_fold)
+        from dig_etl_engine_spark.sinks.kg_table import (
+            live_epoch, resolve_pointer)
+
+        def boom(*a, **kw):
+            raise OSError("injected crash")
+
+        s0 = spark.createDataFrame([(1, 10)], "k LONG, n LONG")
+        s1 = spark.createDataFrame([(1, 30)], "k LONG, n LONG")
+        failing_job = s1.select(
+            "k", F.raise_error(F.lit("injected")).cast("long").alias("n"))
+        for crash in ("job", "fsync", "replace"):
+            target = str(tmp_path / crash)
+            _publish_fold(s0, target, 0)
+            with monkeypatch.context() as mp:
+                if crash != "job":
+                    mp.setattr(os, crash, boom)
+                with pytest.raises(Exception):
+                    _publish_fold(failing_job if crash == "job" else s1,
+                                  target, 1)
+            rows = spark.read.parquet(live_epoch(target)).collect()
+            assert [(r["k"], r["n"]) for r in rows] == [(1, 10)], crash
+            assert _batch_already_applied(target, 0)
+            assert not _batch_already_applied(target, 1), crash
+            _publish_fold(s1, target, 1)
+            assert _batch_already_applied(target, 1)
+            assert spark.read.parquet(live_epoch(target)).head()["n"] == 30
+            assert sorted(n for n in os.listdir(target)
+                          if n != "_CURRENT") \
+                == sorted(resolve_pointer(target).split()), crash
 
 
 class TestMultimodalNullPayloads:
@@ -1087,38 +1131,6 @@ class TestMultimodalNullPayloads:
         assert rows[2]["n_bytes"] is None
         assert rows[2]["header_hex"] is None
         assert rows[2]["feature_md5"] is None
-
-
-class TestSwapStateCrashWindows:
-    def test_recover_from_between_renames_crash(self, spark, tmp_path):
-        """Simulate a crash between _swap_state's two renames: target
-        gone, .old holds the only state — the next call must restore it
-        and still fold the replayed batch from the OLD state."""
-        from dig_etl_engine_spark.queries_io import (
-            _batch_already_applied, _swap_state)
-        target = str(tmp_path / "state")
-        _swap_state(spark.createDataFrame([(1, 10)], "k LONG, n LONG"),
-                    target, 0)
-        # crash simulation: state renamed aside, new state never moved in
-        os.rename(target, target + ".old")
-        assert not os.path.isdir(target)
-        assert not _batch_already_applied(target, 1)   # heals + allows
-        assert os.path.isdir(target)                   # restored
-        rows = spark.read.parquet(target).collect()
-        assert [(r["k"], r["n"]) for r in rows] == [(1, 10)]
-        # batch 0 is still recorded as applied in the restored state
-        assert _batch_already_applied(target, 0)
-
-    def test_leftover_old_dir_is_swept(self, spark, tmp_path):
-        from dig_etl_engine_spark.queries_io import _swap_state
-        target = str(tmp_path / "state")
-        _swap_state(spark.createDataFrame([(1, 1)], "k LONG, n LONG"),
-                    target, 0)
-        _swap_state(spark.createDataFrame([(1, 2)], "k LONG, n LONG"),
-                    target, 1)
-        assert not os.path.isdir(target + ".old")
-        assert not os.path.isdir(target + ".next")
-        assert spark.read.parquet(target).head()["n"] == 2
 
 
 class TestIterSamplesProperty:

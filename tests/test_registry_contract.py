@@ -1286,3 +1286,129 @@ def test_default_encoding_lint_catches_violations(tmp_path):
     hits = _default_encoding_sites(mod)
     assert len([h for h in hits if "bad.py" in h]) == 6, hits
     assert not [h for h in hits if "good.py" in h], hits
+
+
+# --- lint: directory publication only at the sanctioned sites ----------------
+#
+# A directory a reader may open mid-write is published by one of three
+# mechanisms: the KG table's manifest, the epoch stores of
+# ``kg_table.publish_epoch``, and the staged exports' rename-aside swap
+# (external readers glob their top-level files). A rename or a pointer
+# commit anywhere else is a fourth hand-written protocol, with its own
+# crash windows and no fault-injection test. The allowlist names each
+# permitted (package-relative file, enclosing function).
+
+_PUBLICATION_ALLOWED = {
+    # the pointer primitive and the epoch helper
+    ("sinks/kg_table.py", "commit_pointer"),
+    ("sinks/kg_table.py", "publish_epoch"),
+    # the KG table's manifest commits and staged-bucket publish
+    ("sinks/kg_table.py", "create_table_if_not_exists"),
+    ("sinks/kg_table.py", "_commit_buckets"),
+    ("sinks/kg_table.py", "_recover_partitioned_swap"),
+    ("sinks/kg_table.py", "_publish_staged_buckets"),
+    # the table lock's stale-lock break (rename-aside of the lock dir)
+    ("sinks/kg_table.py", "table_lock"),
+    # the staged exports' swap and its heal
+    ("sinks/webdataset.py", "_swap_export"),
+    ("sinks/webdataset.py", "_heal_export"),
+    # per-task tmp-file renames (one file, atomic on its own)
+    ("sinks/webdataset.py", "_close_current"),
+    ("sources/avro.py", "write_partition"),
+    # the shipped package zip and the per-process scratch reap
+    ("session.py", "ship_package"),
+    ("queries_io.py", "_scratch"),
+}
+
+
+def _publication_sites(pkg_root: Path) -> list[str]:
+    """``os.rename``/``os.replace``/``os.renames``, ``shutil.move`` and
+    ``commit_pointer`` calls (and ``from os import`` of the renames)
+    outside :data:`_PUBLICATION_ALLOWED`. Known blind spot, accepted:
+    ``Path.rename``/``Path.replace`` (``.replace`` is indistinguishable
+    from ``str.replace`` without types; the package has no such site)."""
+    import ast
+
+    RENAMES = ("rename", "replace", "renames")
+    hits = []
+    for path in sorted(pkg_root.rglob("*.py")):
+        rel_pkg = path.relative_to(pkg_root).as_posix()
+        rel = path.relative_to(pkg_root.parent).as_posix()
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        os_names = {"os"} | {
+            a.asname for n in ast.walk(tree) if isinstance(n, ast.Import)
+            for a in n.names if a.name == "os" and a.asname}
+
+        def visit(node, fn):
+            for ch in ast.iter_child_nodes(node):
+                inner = ch.name if isinstance(
+                    ch, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+                what = None
+                if isinstance(ch, ast.ImportFrom) and ch.module == "os":
+                    bad = [a.name for a in ch.names if a.name in RENAMES]
+                    what = bad and f"from os import {', '.join(bad)}"
+                elif isinstance(ch, ast.Call):
+                    f = ch.func
+                    if isinstance(f, ast.Attribute) \
+                            and isinstance(f.value, ast.Name):
+                        if f.value.id in os_names and f.attr in RENAMES:
+                            what = f"os.{f.attr}()"
+                        elif f.value.id == "shutil" and f.attr == "move":
+                            what = "shutil.move()"
+                    name = (f.attr if isinstance(f, ast.Attribute)
+                            else f.id if isinstance(f, ast.Name) else None)
+                    if name == "commit_pointer":
+                        what = "commit_pointer()"
+                if what and (rel_pkg, inner) not in _PUBLICATION_ALLOWED:
+                    hits.append(f"{rel}:{ch.lineno} {what} in {inner}")
+                visit(ch, inner)
+
+        visit(tree, None)
+    return hits
+
+
+def test_no_directory_publication_outside_allowlist():
+    pkg = Path(__file__).resolve().parent.parent / "dig_etl_engine_spark"
+    hits = _publication_sites(pkg)
+    assert not hits, (
+        "a rename or pointer commit outside the sanctioned publication "
+        "sites — publish a rebuilt directory with "
+        "sinks/kg_table.publish_epoch (or add the site to "
+        "_PUBLICATION_ALLOWED with the mechanism it belongs to):\n  "
+        + "\n  ".join(hits))
+
+
+def test_publication_lint_catches_violations(tmp_path):
+    """Self-test: flags every door outside the allowlist, including an
+    allowlisted function NAME in another file (the exemption is the
+    package-relative path plus the function); passes ``str.replace``
+    and the allowlisted sites themselves."""
+    mod = tmp_path / "dig_etl_engine_spark"
+    (mod / "sinks").mkdir(parents=True)
+    (mod / "bad.py").write_text(
+        "import os\n"
+        "import os as _os\n"
+        "import shutil\n"
+        "from os import replace\n"                     # import door
+        "from dig_etl_engine_spark.sinks import kg_table as kt\n"
+        "def swap(a, b):\n"
+        "    os.rename(a, b)\n"
+        "    _os.replace(a, b)\n"                      # aliased module
+        "    shutil.move(a, b)\n"
+        "    kt.commit_pointer(a, 'x')\n"
+        "def publish_epoch(a, b):\n"                   # name, wrong file
+        "    os.replace(a, b)\n"
+        "os.renames('a', 'b')\n", encoding="utf-8")    # module level
+    (mod / "good.py").write_text(
+        "def f(s):\n"
+        "    return s.replace('a', 'b').rename\n", encoding="utf-8")
+    (mod / "sinks" / "kg_table.py").write_text(
+        "import os\n"
+        "def commit_pointer(root, payload):\n"
+        "    os.replace(root, payload)\n"
+        "def publish_epoch(path, write):\n"
+        "    commit_pointer(path, 'x')\n", encoding="utf-8")
+    hits = _publication_sites(mod)
+    assert len([h for h in hits if "bad.py" in h]) == 7, hits
+    assert not [h for h in hits if "good.py" in h], hits
+    assert not [h for h in hits if "kg_table.py" in h], hits

@@ -17,6 +17,7 @@ from dig_etl_engine_spark.functions import kg
 from dig_etl_engine_spark.plans.query_compiler import (
     EngineConfig, FieldRef, compile_query)
 from dig_etl_engine_spark.plans.weights import WeightRule, WeightTree
+from dig_etl_engine_spark.sinks.kg_table import live_epoch
 
 from .conftest import SF_UNIT, jobs_in_group
 
@@ -47,7 +48,7 @@ def test_term_df_is_sorted_within_files(spark, tmp_path):
     # a shuffle map job and a write job per table: the in-file sort adds
     # no sampling job and no exchange
     assert len(jobs) == 4, jobs
-    term_df = os.path.join(kg._stats_root(path), "term_df")
+    term_df = os.path.join(live_epoch(path), "term_df")
     sizes = []
     for f in os.listdir(term_df):
         if f.endswith(".parquet"):
@@ -145,7 +146,7 @@ def test_stats_cache_holds_one_entry_per_store(spark, tmp_path):
     mine = [k for k, (root, *_) in kg._epoch_cache.items()
             if k == path or root.startswith(path + os.sep)]
     assert mine == [path]
-    assert kg._epoch_cache[path][0] == kg._stats_root(path)
+    assert kg._epoch_cache[path][0] == live_epoch(path)
     assert kg.load_bm25_stats(spark, path, _TERMS) == _STATS_B
 
 
@@ -158,7 +159,7 @@ def test_missing_or_empty_corpus_reads_stale(spark, tmp_path):
     for name in ("missing", "empty"):
         path = str(tmp_path / name)
         kg.materialize_bm25_stats(a, path)
-        corpus = os.path.join(kg._stats_root(path), "corpus")
+        corpus = os.path.join(live_epoch(path), "corpus")
         empty = pq.read_table(corpus).slice(0, 0)
         shutil.rmtree(corpus)
         if name == "empty":
