@@ -257,6 +257,53 @@ class TestPointerCommitCrashFuzz:
                 break
         assert completed_clean, "fault budget exhausted before clean run"
 
+    def test_sweep_never_drops_kept_epochs(self, tmp_path, monkeypatch):
+        """Crash inside ``sweep_epochs`` at every rmtree: the epochs the
+        pointer names (live + grace) must survive every prefix of the
+        sweep, and a replay drops the orphans."""
+        import shutil
+
+        from dig_etl_engine_spark.sinks import kg_table as kt
+
+        class Crash(RuntimeError):
+            pass
+
+        real_rmtree = shutil.rmtree
+        completed_clean = False
+        for k in range(1, 8):
+            path = str(tmp_path / f"s{k}")
+            for n in ("epoch_live", "epoch_grace", "epoch_orphan1",
+                      "epoch_orphan2"):
+                self._write(n)(os.path.join(path, n))
+            kt.commit_pointer(path, "epoch_live epoch_grace")
+
+            calls = {"n": 0}
+
+            def fail(*a, **kw):
+                calls["n"] += 1
+                if calls["n"] >= k:
+                    raise Crash()
+                return real_rmtree(*a, **kw)
+
+            with monkeypatch.context() as mp:
+                mp.setattr(shutil, "rmtree", fail)
+                try:
+                    kt.sweep_epochs(path)
+                    completed_clean = True
+                except Crash:
+                    pass
+            assert self._tag(os.path.join(path, "epoch_live")) == "epoch_live"
+            assert self._tag(
+                os.path.join(path, "epoch_grace")) == "epoch_grace"
+            assert kt.live_epoch(path) == os.path.join(path, "epoch_live")
+            # replay converges: orphans gone, kept epochs intact
+            kt.sweep_epochs(path)
+            assert sorted(os.listdir(path)) == [
+                "_CURRENT", "epoch_grace", "epoch_live"]
+            if completed_clean:
+                break
+        assert completed_clean, "fault budget exhausted before clean run"
+
 
 def test_load_path_unchanged(spark, corpus, tmp_path):
     path = str(tmp_path / "bm25")
